@@ -605,7 +605,7 @@ class Graph:
 
     def aggregate_messages(
         self,
-        agg: Sequence[Column],
+        agg: Sequence[Column] | None,
         msg_to_dst: Column | None = None,
         msg_to_src: Column | None = None,
         vertices: DataFrame | None = None,
@@ -624,6 +624,9 @@ class Graph:
 
         ``vertices`` overrides the vertex frame joined in (used by the
         Pregel loop to pass the current state without rebuilding a Graph).
+        ``agg=None`` returns the raw message rows ``(id, __msg)``
+        ungrouped, one per sent message: the Pregel loop folds them into
+        its own grouping with the vertex state.
 
         ``msg_to_dst_reads`` / ``msg_to_src_reads`` declare which
         endpoint states (``"src"``/``"dst"``) the message expression
@@ -709,7 +712,7 @@ class Graph:
         if msg_to_src is not None:
             msgs.append(inbox_side(msg_to_src, "src", msg_to_src_reads))
         inbox = msgs[0] if len(msgs) == 1 else msgs[0].unionByName(msgs[1])
-        return inbox.groupBy("id").agg(*agg)
+        return inbox if agg is None else inbox.groupBy("id").agg(*agg)
 
     def triplets(self) -> DataFrame:
         """edge ⋈ both endpoint values (the workhorse two-hash-join

@@ -73,8 +73,10 @@ def connected_components(
         check_convergence=check_convergence,
     )
     if ue is not None:
-        # delta-mode pregel materialized the final state via its count
-        # job; nothing downstream reads the loop-scoped symmetrized table
+        # safe because every pregel superstep (delta=True above or not)
+        # ends in an eager localCheckpoint: the returned state reads
+        # that checkpoint (with max_iter=0, only the vertex frame),
+        # never the loop-scoped symmetrized table
         ue.unpersist()
     return res.vertices
 

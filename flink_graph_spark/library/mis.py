@@ -11,11 +11,17 @@ deterministic and the unrolled DuckDB oracle (``oracle_ctes``)
 replays them exactly.
 
 Scale: each round is one message aggregation (min neighbor priority
-over the undecided subgraph, a single shuffle), one filter, and one
-semi-join removal; the undecided set shrinks geometrically (Luby:
-expected O(log n) rounds), so like k-core the early rounds dominate.
-Lineage is truncated per round with localCheckpoint; convergence
-early-stops on an ``isEmpty`` of the undecided frame.
+over the undecided subgraph, a single shuffle), one filter for the
+round's winners, and one anti-join removing winners and their
+neighbors from the undecided set; the undecided set shrinks
+geometrically (Luby: expected O(log n) rounds), so like k-core the
+early rounds dominate. Only the undecided set is checkpointed per
+round (its survivor count doubles as the next round's emptiness
+check). The winner frames stay lazy over their round's undecided
+checkpoint and are unioned into ONE materialization after the loop,
+so every round's undecided checkpoint stays resident until then:
+checkpoint storage is O(max_iter) rounds, bounded by the geometric
+shrink, and all of it is released once the result is materialized.
 """
 
 from __future__ import annotations
@@ -111,7 +117,7 @@ def maximal_independent_set(graph: Graph, max_iter: int = 6) -> DataFrame:
         )
         # LAZY checkpoint materialized by the survivor count — the count
         # doubles as next round's emptiness check, one action instead of
-        # eager-checkpoint + isEmpty (same fusion as the Pregel superstep)
+        # eager-checkpoint + isEmpty
         und = und.join(removed, "id", "left_anti").localCheckpoint(eager=False)
         n_und = und.count()
         und_ckpts.append(und)

@@ -77,12 +77,6 @@ def _fwd_bwd_labels(
         ),
         max_iter=max_iter,
         delta=delta,
-        # NOT higher: each lazy superstep references the previous state
-        # twice (message join + update join), so k unmaterialized
-        # supersteps duplicate the subplan 2^k times — every-3 keeps the
-        # blowup at ≤8 copies of a tiny frame, while sweeping it to
-        # max_iter=5 measured 4x slower on the fixture
-        checkpoint_every=3,
     )
     return res.vertices.select(
         "id", F.col("state.f").alias("fwd"), F.col("state.b").alias("bwd")
@@ -108,11 +102,12 @@ def scc(
     job saved.
 
     ``delta=True`` (the scale default) messages only changed vertices
-    and exits each fixpoint early, at the cost of one materialize + one
-    frontier check PER superstep. For small/shallow graphs where
-    ``max_iter`` is sized to the known label depth, ``delta=False``
-    runs the fixed supersteps lazily (one job per 3 via the checkpoint
-    cadence) — measured 2x fewer jobs on the 11-vertex fixture."""
+    and exits each fixpoint early (the frontier count rides each
+    superstep's checkpoint job as an observed metric), at the cost of
+    an emptiness check and three checkpoints per peel round. For
+    small/shallow graphs where ``max_iter`` is sized to the known label
+    depth, ``delta=False`` runs exactly the budgeted supersteps and
+    leaves the peel frames lazy, saving those per-round jobs."""
     v = graph.vertices.select("id")
     e = graph.edges.select("src", "dst")
     done: DataFrame | None = None

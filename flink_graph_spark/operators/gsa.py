@@ -15,12 +15,14 @@ Semantics (one superstep):
            ``state``/``__agg``; ``__agg`` is null when nothing gathered)
 
 On Spark this compiles to EXACTLY the same physical loop as the
-vertex-centric operator — one edges⋈states join + hash agg + state
-join per superstep, edges shuffled once for the whole loop — so GSA is
+vertex-centric operator — one edges⋈states join, then one aggregation
+grouping the gathered values together with the vertex states per
+superstep, edges shuffled once for the whole loop — so GSA is
 a thin, documented re-skin of ``pregel`` with gather fixed to the
 in-edge direction (PowerGraph's canonical formulation). The value is
 API parity + algorithm readability, not a different engine path; both
-surfaces share the delta/workset optimization and checkpoint cadence.
+surfaces share the delta/workset optimization and the per-superstep
+checkpoint.
 """
 
 from __future__ import annotations
@@ -39,7 +41,6 @@ def gather_sum_apply(
     apply: Column,
     max_iter: int = 10,
     state_col: str = "state",
-    checkpoint_every: int = 3,
     delta: bool = False,
     gather_reads: tuple[str, ...] | None = None,
 ) -> PregelResult:
@@ -52,7 +53,6 @@ def gather_sum_apply(
         msg_to_dst=gather,
         max_iter=max_iter,
         state_col=state_col,
-        checkpoint_every=checkpoint_every,
         delta=delta,
         msg_to_dst_reads=gather_reads,
     )

@@ -4,29 +4,31 @@ lacks natively (SURVEY.md §4.3).
 Reference: Graph.runVertexCentricIteration (Graph.java ~L895-930)
 delegating to flink-spargel's VertexCentricIteration (a Flink delta
 iteration of two coGroups). Spark has no in-dataflow iteration, so the
-superstep loop lives in the Python driver; each superstep is one
-join+agg (messages) and one left-outer join (update) — both
-Catalyst-planned.
+superstep loop lives in the Python driver. Each superstep is the
+reference's coGroup of messages with vertex state, written as ONE
+grouping: the frontier⋈edges join emits raw message rows, which are
+unioned with the state rows and grouped by id once, carrying the state
+and aggregating the inbox in the same aggregate. A superstep thus
+costs one exchange, not a message exchange plus an update join.
 
 Scale design:
 * Edges are persisted once (caller may pre-partition by src via
   ``Graph.partition_by_src``) so the loop-invariant side is never
   rescanned from parquet nor reshuffled.
-* ``localCheckpoint(eager=True)`` every ``checkpoint_every`` supersteps
-  truncates the exponentially growing lineage — without it Catalyst
-  analysis time blows up around iteration ~20. Cadence 3 measured best
-  for the 1-join-per-superstep loop at sf0.1 (PageRank 4.8s at 2 vs
-  4.1s at 3; 4-5 plateau within noise but lengthen the analyzed chain
-  for more complex update expressions) — same sweet spot HITS measured
-  for its 2-join loop. NOT universal: loops whose per-iteration plan
-  re-references the state twice with heavy aggregates between
-  checkpoints (community detection, most-frequent-label LPA) measured
-  ~2x SLOWER at 3 — they pin cadence 2 locally.
-* Convergence (optional) is checked with an aggregate on the delta
-  frame (count of changed rows), never a collect of the state — and
-  the count job doubles as the materializer of that superstep's LAZY
-  localCheckpoint, so convergence-checked supersteps cost ONE driver
-  job, not an eager-checkpoint job plus an isEmpty job.
+* Every superstep ends in ``localCheckpoint(eager=True)``. The next
+  superstep reads the state twice (the message join and the grouping's
+  state rows), and the two reads prune different state columns (an
+  update may read only part of a struct state), so AQE cannot serve
+  both from one exchange: a lazy chain of k supersteps recomputes the
+  oldest one ~2^k times. Measured at sf0.1 on ``local[4]``: PageRank
+  with a checkpoint every 3 supersteps spent ~17 s of executor time,
+  with one every superstep 1.8 s (33 jobs).
+* Convergence (optional) is counted inside the dataflow: the changed-
+  row count is a ``DataFrame.observe`` metric on the superstep's
+  checkpoint, so the job that materializes the new state also returns
+  the convergence signal. A superstep is the frontier broadcast, the
+  grouping's map stage and the checkpoint job: no separate count job,
+  never a collect of the state.
 * No per-row Python: message/update expressions are Spark Columns, so
   every superstep stays inside whole-stage codegen.
 """
@@ -35,8 +37,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..graph import Graph
 from ..plans.checkpoints import release_local_checkpoint
@@ -49,6 +52,32 @@ class PregelResult:
     converged: bool
 
 
+def _carry_state(state_col: str, dtype: T.DataType) -> tuple[list[Column], Column]:
+    """The aggregates carrying each id's one state row through the
+    superstep grouping (every other row of the id is a message with a
+    NULL state), and the Column rebuilding the state from them.
+
+    A struct state (PageRank's (rank, od), SCC's (f, b)) is carried
+    field by field, its own NULL riding as bit 4 of the state row's
+    ``__tag``: an aggregation buffer holding a whole struct is not
+    fixed-width, which turns the grouping, message rows included, from
+    a hash into a sort aggregate (pagerank_cs at sf0.1 on ``local[4]``:
+    ~3x the executor time). Any other state is carried whole.
+    """
+    if not isinstance(dtype, T.StructType):
+        return [F.any_value(state_col, ignoreNulls=True).alias(state_col)], F.col(state_col)
+    parts = [f"__carry{i}" for i in range(len(dtype.fields))]
+    carry = [
+        F.any_value(F.col(state_col).getField(f.name), ignoreNulls=True).alias(p)
+        for f, p in zip(dtype.fields, parts)
+    ]
+    rebuilt = F.when(
+        F.col("__tag").bitwiseAND(4) == 0,
+        F.struct(*[F.col(p).alias(f.name) for f, p in zip(dtype.fields, parts)]),
+    )
+    return carry, rebuilt
+
+
 def pregel(
     graph: Graph,
     initial: Column,
@@ -58,7 +87,6 @@ def pregel(
     msg_to_src: Column | None = None,
     max_iter: int = 10,
     state_col: str = "state",
-    checkpoint_every: int = 3,
     check_convergence: bool = False,
     delta: bool = False,
     msg_to_dst_reads: tuple[str, ...] | None = None,
@@ -73,9 +101,13 @@ def pregel(
                        the source. Null messages are dropped by the agg.
     ``agg``          — aggregate Column over ``__msg`` (must alias to
                        ``__agg``), e.g. ``F.min("__msg").alias("__agg")``.
+                       It must ignore NULL ``__msg``: the loop groups the
+                       state rows together with the messages, each state
+                       row carrying a NULL message.
     ``update``       — Column over (``id``, ``<state_col>``, ``__agg``)
-                       → new state. ``__agg`` is null for vertices with
-                       an empty inbox.
+                       → new state. ``__agg`` is null for every vertex
+                       that received no non-null message (an empty
+                       inbox, or one holding only null messages).
 
     With ``check_convergence`` the loop stops early when no vertex state
     changed (exact equality, null-safe); otherwise runs ``max_iter``
@@ -103,7 +135,11 @@ def pregel(
     if owns_edge_cache:
         graph = graph.partition_by_src()
     edges = graph.edges
-    v = graph.vertices.select("id", initial.alias(state_col)).localCheckpoint(eager=True)
+    # LAZY checkpoint of the initial state: it costs no job of its own
+    # (the first superstep's first read writes its blocks), yet a
+    # caller's uncached vertex frame (incremental SSSP's join, an SCC
+    # peel round) is computed once, not once per read in superstep 1
+    v = graph.vertices.select("id", initial.alias(state_col)).localCheckpoint(eager=False)
     active = v if delta else None
     # the checkpoint the CURRENT state still reads; released (blocks
     # unpersisted) the moment a newer one is materialized — see
@@ -113,8 +149,8 @@ def pregel(
     it = 0
     converged = False
     for it in range(1, max_iter + 1):
-        inbox = graph.aggregate_messages(
-            [agg],
+        msgs = graph.aggregate_messages(
+            None,
             msg_to_dst=msg_to_dst,
             msg_to_src=msg_to_src,
             vertices=v,
@@ -122,41 +158,65 @@ def pregel(
             msg_to_dst_reads=msg_to_dst_reads,
             msg_to_src_reads=msg_to_src_reads,
         )
-        v_new = (
-            v.join(inbox, "id", "left")
-            .select("id", update.alias(state_col), F.col(state_col).alias("__old"))
-        )
-        if delta or check_convergence:
-            # ONE driver job per superstep instead of two: the
-            # checkpoint is LAZY and the changed-count job materializes
-            # it as a side effect (count scans every partition of the
-            # marked RDD, storing each block) while returning the
-            # convergence signal. The old eager-checkpoint + isEmpty
-            # pair cost two scheduler round-trips per superstep — pure
-            # driver-barrier overhead at cluster scale (and 2x the
-            # per-job latency floor on a degraded box, see BASELINE.md).
-            v_new = v_new.localCheckpoint(eager=False)
-            changed = v_new.filter(
-                ~F.col(state_col).eqNullSafe(F.col("__old"))
+        # The update join folded into the message grouping: state rows
+        # tag 1 (plus 4 for a NULL state), non-null message rows tag 2,
+        # one groupBy("id") carrying the state (exactly one state row
+        # per id), aggregating the inbox (the state rows' NULL __msg is
+        # dropped by the agg, per the contract above) and OR-ing the
+        # tags. Bit 1 keeps real vertices only — messages to ids outside
+        # the vertex frame drop, as under the old left join — and bit 2
+        # marks a non-empty inbox, so an empty one still yields a NULL
+        # __agg even for aggregates that never return NULL themselves
+        # (struct(min, min)).
+        carry, state = _carry_state(state_col, v.schema[state_col].dataType)
+        folded = (
+            v.select(
+                "id",
+                state_col,
+                F.when(F.col(state_col).isNull(), 5).otherwise(1).alias("__tag"),
             )
-            n_changed = changed.count()
-            # release only after the count materialized the new blocks —
-            # computing v_new reads the previous checkpoint
-            release_local_checkpoint(live_ckpt)
-            live_ckpt = v_new
+            .unionByName(
+                # tag by projection, not a NULL filter: Catalyst would
+                # push isnotnull(<message expr>) below the join, onto
+                # vertices that send nothing (PageRank's rank / outdeg
+                # then divides by zero for sinks under ANSI mode)
+                msgs.select(
+                    "id", "__msg", F.when(F.col("__msg").isNotNull(), 2).alias("__tag")
+                ),
+                allowMissingColumns=True,
+            )
+            .groupBy("id")
+            .agg(*carry, agg, F.bit_or("__tag").alias("__tag"))
+            .where(F.col("__tag").bitwiseAND(1) == 1)
+            .select(
+                "id",
+                state.alias(state_col),
+                F.when(F.col("__tag").bitwiseAND(2) == 2, F.col("__agg")).alias("__agg"),
+            )
+        )
+        v_new = folded.select(
+            "id", update.alias(state_col), F.col(state_col).alias("__old")
+        )
+        counted = delta or check_convergence
+        if counted:
+            changed_col = ~F.col(state_col).eqNullSafe(F.col("__old"))
+            # the changed-row count rides the checkpoint job as an
+            # observed metric: one job materializes the new state AND
+            # returns the convergence signal
+            obs = Observation()
+            v_new = v_new.observe(obs, F.count_if(changed_col).alias("n_changed"))
+        v_new = v_new.localCheckpoint(eager=True)
+        # release only after the new blocks are materialized — computing
+        # v_new reads the previous checkpoint
+        release_local_checkpoint(live_ckpt)
+        live_ckpt = v_new
+        v = v_new.select("id", state_col)
+        if counted:
             if delta:
-                active = changed.select("id", state_col)
-            v = v_new.select("id", state_col)
-            if n_changed == 0:
+                active = v_new.filter(changed_col).select("id", state_col)
+            if obs.get["n_changed"] == 0:
                 converged = True
                 break
-            continue
-        if it % checkpoint_every == 0 or it == max_iter:
-            v_new = v_new.localCheckpoint(eager=True)
-            release_local_checkpoint(live_ckpt)
-            live_ckpt = v_new
-        v = v_new.select("id", state_col)
     if owns_edge_cache:
         edges.unpersist()
-    v = v.select("id", state_col)
     return PregelResult(vertices=v, iterations=it, converged=converged)

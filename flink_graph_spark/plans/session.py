@@ -14,6 +14,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+# RAM left outside the driver heap when it is sized from the machine:
+# local-mode Python workers, Arrow and Netty off-heap buffers, the OS
+# page cache that shuffle files go through
+_DRIVER_MEM_HEADROOM_MB = 8 * 1024
+_DRIVER_MEM_MAX_MB = 48 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Driver heap for ``get_spark`` when ``SPARK_GRAFT_DRIVER_MEM`` is
+    unset: physical RAM minus a fixed headroom, between 1g and 48g.
+
+    In local mode the driver JVM is the only executor. Machines with at
+    least 56 GB keep the 48g heap (room for the ~35 GB live set noted in
+    ``get_spark``); smaller ones get every byte but the headroom instead
+    of a heap larger than the machine."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):
+        return "4g"
+    heap_mb = min(_DRIVER_MEM_MAX_MB, ram_mb - _DRIVER_MEM_HEADROOM_MB)
+    return f"{max(1024, heap_mb)}m"
+
+
 def get_spark(
     app_name: str = "flink-graph-spark",
     master: str | None = None,
@@ -84,7 +107,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # GC/stall survivability: a shuffle-heavy query over a hundred-
         # million-row intermediate can hold a ~35 GB live set (measured:
         # triangle counting on a 12M-edge dense graph), and a multi-

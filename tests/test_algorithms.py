@@ -211,6 +211,146 @@ def test_graph_pregel_method(golden):
     assert res.vertices.count() == 5
 
 
+def test_pregel_superstep_job_shape(spark, golden):
+    # A delta superstep is the frontier broadcast, the one exchange of
+    # the state+message grouping and the checkpoint job that also
+    # returns the changed count: ≤ 3 jobs, and none before superstep 1
+    g = golden.get_undirected()
+    ue = g.edges.repartition("src").persist()
+    ue.count()
+    g = Graph(g.vertices, ue, src_partitioned=True)
+    sc = spark.sparkContext
+    try:
+        for max_iter in (1, 2):
+            group = f"test-pregel-superstep-shape-{max_iter}"
+            sc.setJobGroup(group, group)
+            try:
+                comps = connected_components(
+                    g, max_iter=max_iter, symmetrized_edges=True
+                )
+            finally:
+                sc.setJobGroup("", "")
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert 0 < len(jobs) <= 3 * max_iter, (max_iter, len(jobs))
+        assert rows_as_dict(comps, "id", "comp") == {i: 1 for i in range(1, 6)}
+    finally:
+        ue.unpersist()
+
+
+def _min_label_pregel(graph, **kw):
+    return pregel(
+        graph,
+        initial=F.col("id"),
+        msg_to_dst=F.col("src_state"),
+        msg_to_dst_reads=("src",),
+        agg=F.min("__msg").alias("__agg"),
+        update=F.least(F.col("state"), F.col("__agg")),
+        **kw,
+    )
+
+
+@pytest.mark.parametrize("delta", [False, True])
+def test_pregel_drops_messages_to_missing_vertices(spark, delta):
+    # edge 1→3 points at an id absent from the vertex frame: its message
+    # must not create a row, exactly as under a left join from the state
+    v = spark.createDataFrame([(1, 0), (2, 0)], "id long, value long")
+    e = spark.createDataFrame([(1, 2, 0), (1, 3, 0)], "src long, dst long, value long")
+    res = _min_label_pregel(Graph(v, e), max_iter=2, delta=delta)
+    assert rows_as_dict(res.vertices, "id", "state") == {1: 1, 2: 1}
+
+
+def test_pregel_struct_agg_is_null_on_empty_inbox(spark):
+    # struct(min, min) over no messages is a non-NULL struct of NULLs in
+    # a plain aggregate; the loop must still hand update a NULL __agg
+    # for a vertex nobody messages (vertex 1 has no in-edge)
+    v = spark.createDataFrame([(1, 0), (2, 0)], "id long, value long")
+    e = spark.createDataFrame([(1, 2, 0)], "src long, dst long, value long")
+    res = pregel(
+        Graph(v, e),
+        initial=F.col("id"),
+        msg_to_dst=F.struct(
+            F.col("src_state").alias("f"), F.lit(None).cast("long").alias("b")
+        ),
+        msg_to_dst_reads=("src",),
+        agg=F.struct(
+            F.min("__msg.f").alias("f"), F.min("__msg.b").alias("b")
+        ).alias("__agg"),
+        update=F.when(F.col("__agg").isNull(), F.lit(-1).cast("long")).otherwise(
+            F.col("__agg.f")
+        ),
+        max_iter=1,
+    )
+    assert rows_as_dict(res.vertices, "id", "state") == {1: -1, 2: 1}
+
+
+def test_pregel_struct_state_keeps_null_struct_and_null_fields(spark):
+    # a struct state is carried through the grouping field by field: a
+    # NULL struct and a struct holding a NULL field must both survive
+    v = spark.createDataFrame([(1, 0), (2, 0), (3, 0)], "id long, value long")
+    e = spark.createDataFrame([(1, 2, 0), (2, 3, 0)], "src long, dst long, value long")
+    res = pregel(
+        Graph(v, e),
+        initial=F.when(
+            F.col("id") != 3,
+            F.struct(
+                F.col("id").alias("a"),
+                F.when(F.col("id") == 1, F.lit(0.5)).alias("b"),
+            ),
+        ),
+        msg_to_dst=F.col("src_state.a"),
+        msg_to_dst_reads=("src",),
+        agg=F.sum("__msg").alias("__agg"),
+        update=F.col("state"),
+        max_iter=2,
+    )
+    got = {r["id"]: r["state"] for r in res.vertices.collect()}
+    assert got[3] is None
+    assert (got[1]["a"], got[1]["b"]) == (1, 0.5)
+    assert (got[2]["a"], got[2]["b"]) == (2, None)
+
+
+def test_pregel_struct_state_carry_is_a_hash_aggregate(spark):
+    # the reason the struct is carried field by field: a whole-struct
+    # buffer would turn the superstep grouping into a sort aggregate
+    from flink_graph_spark.operators.pregel import _carry_state
+
+    rows = spark.createDataFrame(
+        [(1, (0.5, 2), 1), (1, None, 2)],
+        "id long, state struct<rank: double, od: long>, __tag int",
+    )
+    carry, state = _carry_state("state", rows.schema["state"].dataType)
+    df = rows.groupBy("id").agg(*carry, F.bit_or("__tag").alias("__tag"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+    assert df.select(state.alias("state")).first()["state"] == (0.5, 2)
+
+
+@pytest.mark.parametrize("delta", [False, True])
+def test_pregel_empty_graph_converges(spark, delta):
+    # the observed changed-count must arrive (not block) when the
+    # checkpoint job has no rows at all
+    import threading
+
+    v = spark.createDataFrame([], "id long, value long")
+    e = spark.createDataFrame([], "src long, dst long, value long")
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(
+            res=_min_label_pregel(
+                Graph(v, e), max_iter=5, check_convergence=True, delta=delta
+            )
+        ),
+        daemon=True,
+    )
+    t.start()
+    t.join(300)
+    assert not t.is_alive(), "pregel hung on an empty graph"
+    res = out["res"]
+    assert res.converged
+    assert res.iterations == 1
+    assert res.vertices.count() == 0
+
+
 def test_hits_matches_numpy_twin(golden):
     import numpy as np
 

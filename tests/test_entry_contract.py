@@ -52,3 +52,25 @@ def test_every_batch_query_plan_analyzes(spark):
         except Exception as exc:  # noqa: BLE001 - collect all, report once
             failures[name] = repr(exc)[:200]
     assert not failures, failures
+
+
+def test_default_driver_memory_fits_the_machine(monkeypatch):
+    # without SPARK_GRAFT_DRIVER_MEM the heap leaves a fixed headroom of
+    # the physical RAM free and never exceeds the old fixed 48g
+    from flink_graph_spark.plans import session
+
+    def heap_gb(ram_gb):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": ram_gb * (1 << 30) // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        got = session._default_driver_memory()
+        assert got.endswith("m")
+        return int(got[:-1]) / 1024
+
+    # large machines keep the 48g heap; 56 GB is the smallest that does
+    assert heap_gb(1024) == heap_gb(64) == heap_gb(56) == 48
+    # smaller machines: heap plus headroom never exceeds the RAM
+    for ram_gb in (55, 32, 16, 12):
+        assert heap_gb(ram_gb) <= ram_gb - 8
+        assert heap_gb(ram_gb) > ram_gb - 9
+    # tiny machines get the 1g floor, never a zero or negative heap
+    assert heap_gb(4) == heap_gb(8) == 1

@@ -39,6 +39,9 @@ registry.EXTERNAL_JVM_GC = True
 
 
 def main() -> int:
+    if len(sys.argv) < 3:
+        print(__doc__)
+        return 2
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
 
