@@ -329,10 +329,11 @@ ANN_SIG_PLANES: list[tuple[list[int], list[float]]] = [
 def ann_cut_for(n_rows: int) -> int:
     """Adaptive Hamming cut from the corpus row count — integer-exact,
     mirrored by the ann_cut CASE in :func:`ann_topk_lsh_sql`. The rule
-    keys on the RAW table count (both engines): a parquet COUNT(*) is
-    metadata-only in Spark, where counting the norm-filtered frame
-    would cost a full scan per query, and zero-norm rows are a
-    vanishing correction to a log-scale tier rule."""
+    keys on the RAW table count (both engines): registry callers pass
+    ``sources.tables.table_rows``'s count, memoized per version of the
+    table's files, where counting the norm-filtered frame would cost a
+    full scan per query, and zero-norm rows are a vanishing correction
+    to a log-scale tier rule."""
     for cap, cut in ANN_CUT_TIERS:
         if n_rows <= cap:
             return cut
@@ -396,7 +397,12 @@ def with_sig(emb: DataFrame) -> DataFrame:
     multiply-adds per row; a per-plane zip_with/aggregate expression
     forest would allocate per row and per plane). Zero-norm rows are
     dropped AFTER the kernel — same frame the twin's emb_norm filter
-    produces."""
+    produces.
+
+    sig0/sig1 are non-nullable (coalesced to 0; the kernel never returns
+    NULL): a nullable signature lets InferFiltersFromConstraints push an
+    ``isnotnull(__sig[i])`` from the Hamming join below this projection,
+    and the plan then runs the Arrow kernel twice per row."""
     return (
         emb.select(
             "vec_id",
@@ -409,8 +415,8 @@ def with_sig(emb: DataFrame) -> DataFrame:
             "vec_id",
             "e",
             "nrm",
-            F.col("__sig").getItem(0).alias("sig0"),
-            F.col("__sig").getItem(1).alias("sig1"),
+            F.coalesce(F.col("__sig").getItem(0), F.lit(0)).alias("sig0"),
+            F.coalesce(F.col("__sig").getItem(1), F.lit(0)).alias("sig1"),
         )
     )
 
@@ -713,8 +719,14 @@ def assign_lists(
         return pd.Series(lids[part[np.arange(len(mat)), best]])
 
     udf = F.pandas_udf(_assign_pandas, "long")
+    # non-nullable list_id (the kernel never returns NULL): a nullable
+    # one lets the probe join's inferred isnotnull(list_id) be pushed
+    # below this projection, which runs the kernel twice per row
     return n.select(
-        "vec_id", "e", "nrm", udf("e", "nrm").alias("list_id")
+        "vec_id",
+        "e",
+        "nrm",
+        F.coalesce(udf("e", "nrm"), F.lit(-1)).alias("list_id"),
     )
 
 
@@ -980,9 +992,14 @@ def _banded_bucket_frame(n: DataFrame, bits: int) -> DataFrame:
     bucket_udf = F.pandas_udf(
         _dedup_bucket_kernel(bits), ArrayType(LongType())
     )
+    # posexplode over an expression, not the bare UDF column: over a
+    # column, InferFiltersFromGenerate adds size(__bk) > 0 AND
+    # isnotnull(__bk), which is pushed below the projection and runs
+    # the kernel twice per row (it never returns NULL or an empty array)
+    empty = F.array().cast(ArrayType(LongType()))
     return n.select("vec_id", bucket_udf("e").alias("__bk")).select(
         "vec_id",
-        F.posexplode("__bk").alias("table", "bucket"),
+        F.posexplode(F.coalesce("__bk", empty)).alias("table", "bucket"),
     )
 
 
@@ -1385,8 +1402,8 @@ def ann_topk_ivf_sql(n_queries: int = 5, k: int = 10) -> str:
     top-k ranks bit-identical doubles. nlist/nprobe are the adaptive
     :func:`ivf_params_for` integers, recomputed here from COUNT(*) of
     the RAW embeddings table — deliberately, because the Spark side
-    sizes them from ``emb.count()`` on the raw table too (metadata-only
-    on parquet; see :func:`ann_cut_for`). Do not "fix" the CASE to
+    sizes them from the raw table's row count too (see
+    :func:`ann_cut_for`). Do not "fix" the CASE to
     count emb_norm: it would diverge from the Spark integers on any
     corpus with zero-norm rows. The trained (``train_iters>0``)
     variant stays rows-only: Lloyd means are float partial sums whose

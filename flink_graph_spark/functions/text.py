@@ -204,27 +204,36 @@ LANG_MARKERS = {
 def lang_id(spark, docs: DataFrame) -> DataFrame:
     """n-gram-heuristic language ID: count marker-word hits per language,
     argmax with (count DESC, lang ASC) tie-break, 'und' when no marker
-    matches. The marker dictionary is broadcast (tiny dim table).
-    """
-    rows = [(w, lang) for lang, ws in LANG_MARKERS.items() for w in ws]
-    dic = spark.createDataFrame(rows, "word string, lang string")
-    toks = docs.select("doc_id", F.explode(_tokens()).alias("word"))
-    counts = (
-        toks.join(F.broadcast(dic), "word")
-        .groupBy("doc_id", "lang")
-        .agg(F.count("*").alias("cnt"))
-    )
-    from pyspark.sql import Window
+    matches (also for NULL and empty text).
 
-    w = Window.partitionBy("doc_id").orderBy(F.desc("cnt"), F.asc("lang"))
-    best = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("lang").alias("pred"))
+    One map-side projection per row: bind the token array once, count
+    each language's marker occurrences with ``size(filter(t, ...))``,
+    and take the argmax over the per-language counts. No explode, join,
+    aggregate or window, so no shuffle at any scale. Exact against the
+    DuckDB twin's explode + group by (doc_id, lang) + row_number because
+    ``doc_id`` is the key of ``documents`` (unique at every scale factor
+    and in every fuzz corpus): per row is per document. ``spark`` is
+    unused and kept for the call signature.
+    """
+    langs = sorted(LANG_MARKERS)  # alphabetical: ties go to the first
+    bound = docs.select("doc_id", _tokens().alias("t"))
+    # size(NULL) is -1 outside ANSI mode and NULL inside it: coalesce
+    # the NULL, and the `<= 0` test below treats -1 as no marker
+    counts = bound.select(
+        "doc_id",
+        *(
+            F.coalesce(
+                F.size(F.filter("t", lambda x: x.isin(*LANG_MARKERS[lang]))),
+                F.lit(0),
+            ).alias(f"__n_{lang}")
+            for lang in langs
+        ),
     )
-    return docs.select("doc_id").join(best, "doc_id", "left").select(
-        "doc_id", F.coalesce("pred", F.lit("und")).alias("pred_lang")
-    )
+    best = F.greatest(*(F.col(f"__n_{lang}") for lang in langs))
+    pred = F.when(best <= 0, F.lit("und"))
+    for lang in langs:
+        pred = pred.when(F.col(f"__n_{lang}") == best, F.lit(lang))
+    return counts.select("doc_id", pred.alias("pred_lang"))
 
 
 def lang_id_sql() -> tuple[str, str]:

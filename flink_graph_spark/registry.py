@@ -1282,7 +1282,7 @@ from .functions import similarity as sim_mod  # noqa: E402
 from .functions import text as text_mod  # noqa: E402
 from .functions import bpe as bpe_mod  # noqa: E402
 from .functions import entity as ent_mod  # noqa: E402
-from .sources.tables import load_table  # noqa: E402
+from .sources.tables import load_table, table_rows  # noqa: E402
 
 
 def _docs(spark, sf_dir):
@@ -1470,7 +1470,9 @@ def ann_topk_lsh(spark, sf_dir):
     replayed by the DuckDB twin, so the whole sketch-prefilter
     pipeline is hash-checked (functions/similarity.py section
     comment has the design + measured recall/cost)."""
-    return sim_mod.ann_topk_lsh(_emb(spark, sf_dir), 64, 10)
+    emb = _emb(spark, sf_dir)
+    cut = sim_mod.ann_cut_for(table_rows(spark, sf_dir, "embeddings"))
+    return sim_mod.ann_topk_lsh(emb, 64, 10, cut=cut)
 
 
 @_register("ann_topk_ivf", sim_mod.ann_topk_ivf_sql(64, 10))
@@ -1479,9 +1481,15 @@ def ann_topk_ivf(spark, sf_dir):
     in itself at the registered train_iters=0: the centroids are the
     seed vectors, so the DuckDB twin replays assignment, probing and
     ranking bit-identically — the whole IVF pipeline is hash-checked."""
-    return sim_mod.ann_topk_ivf(_emb(spark, sf_dir), 64, 10)
+    emb = _emb(spark, sf_dir)
+    nlist, nprobe = sim_mod.ivf_params_for(table_rows(spark, sf_dir, "embeddings"))
+    return sim_mod.ann_topk_ivf(emb, 64, 10, nlist=nlist, nprobe=nprobe)
 
 
+# (applicationId, sf tag) -> _ann_at_rest_tables' tuple. Its sig_count
+# assumes the at-rest tables are never rewritten within a session: a
+# refresh path that rewrites them must drop the entry, or the dedup
+# funnel sizes its banding from a stale count.
 _ANN_AT_REST_MEMO: dict[tuple, tuple] = {}
 
 
@@ -1505,7 +1513,8 @@ def _ann_at_rest_tables(spark, sf_dir):
             path_prefix=f"/tmp/spark_graft_bucketed/ann_{tag}",
         )
         _ANN_AT_REST_MEMO[key] = (
-            sig_t, vec_t, emb.count(), spark.table(sig_t).count()
+            sig_t, vec_t, table_rows(spark, sf_dir, "embeddings"),
+            spark.table(sig_t).count(),
         )
     return _ANN_AT_REST_MEMO[key]
 

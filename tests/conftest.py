@@ -6,10 +6,11 @@ TestGraphUtils.java ~L20-60).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_graph_spark.plans.session import get_spark  # noqa: E402
 from flink_graph_spark.sources.graphs import golden_graph  # noqa: E402

@@ -77,10 +77,48 @@ def test_doc_fingerprint_matches_for_equal_text(docs):
 
 
 def test_lang_id_sf(spark):
+    # the per-row projection is exact because doc_id is the table's key:
+    # check that, then every prediction against the DuckDB twin
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
     docs = load_table(spark, SF_DIR, "documents")
     out = text_mod.lang_id(spark, docs)
-    assert {"doc_id", "pred_lang"} <= set(out.columns)
-    assert out.count() == docs.count()
+    assert out.columns == ["doc_id", "pred_lang"]
+    n = docs.count()
+    assert docs.select("doc_id").distinct().count() == n
+    got = rows_as_dict(out, "doc_id", "pred_lang")
+    assert len(got) == n
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/documents.parquet')"
+    )
+    want = dict(con.execute(entrymod.oracle_sql()["lang_id"]).fetchall())
+    assert got == want
+    assert len(set(got.values())) > 1
+
+
+def test_lang_id_edge_cases(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "no marker words here"),
+            (4, "the el"),            # en/es tie -> alphabetically first
+            (5, "the der"),           # de/en tie -> de
+            (6, "el la the"),         # es 2 > en 1
+            (7, "the the the la y"),  # repeated markers count: en 3 > es 2
+            (8, "der die und das ist le les et des un"),  # de 5 = fr 5
+        ],
+        "doc_id long, text string",
+    )
+    got = rows_as_dict(text_mod.lang_id(spark, docs), "doc_id", "pred_lang")
+    assert got == {
+        1: "und", 2: "und", 3: "und", 4: "en",
+        5: "de", 6: "es", 7: "en", 8: "de",
+    }
 
 
 def test_repetition_ratio(spark):

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import datetime
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
@@ -24,7 +25,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 import check_correctness as cc  # noqa: E402  (canonicalize / value_hash)
 
 # randomized-redundancy tier: the real driver gate (sf0.001/sf0.01 vs

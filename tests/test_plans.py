@@ -79,6 +79,49 @@ def test_ann_lsh_hamming_filter_is_codegen_hash_join(spark, queries):
     assert "bit_count" in plan
 
 
+def _executed_final(df) -> str:
+    """The executed physical plan after a run, without AQE's initial
+    plan (which would repeat every node)."""
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_ann_lsh_runs_signature_kernel_once_per_side(spark, queries):
+    # sig0/sig1 are non-nullable: a nullable signature lets the
+    # Hamming join's inferred isnotnull(__sig[i]) be pushed below the
+    # kernel's projection, and the plan evaluates the Arrow kernel twice
+    # per row (two ArrowEvalPython nodes per join side)
+    plan = _executed_final(queries["ann_topk_lsh"](spark, SF_DIR))
+    assert plan.count("ArrowEvalPython") == 2, plan
+
+
+def test_other_arrow_kernels_run_once_per_side(spark):
+    # The same duplication at the two other Arrow kernel sites: a join
+    # on the vectorized IVF assignment's list_id, and the banded
+    # semantic-dedup bucket self-join (posexplode's inferred
+    # size(__bk) > 0 filter)
+    from flink_graph_spark.functions import similarity as sim_mod
+    from flink_graph_spark.sources.tables import load_table
+
+    n = sim_mod.with_norm(load_table(spark, SF_DIR, "embeddings"))
+    cent, _ = sim_mod.ivf_build(n, 16, 0)
+    lists = sim_mod.assign_lists(n, cent, vectorized=True)
+    probe = lists.join(lists.select("list_id").distinct(), "list_id")
+    assert _executed_final(probe).count("ArrowEvalPython") == 2
+    b = sim_mod._banded_bucket_frame(n, 8)
+    pairs = b.join(b.withColumnRenamed("vec_id", "v2"), ["table", "bucket"])
+    assert _executed_final(pairs).count("ArrowEvalPython") == 2
+
+
+def test_lang_id_is_one_map_side_projection(spark, queries):
+    # per-row marker counts + argmax: no explode/join/aggregate/window
+    plan = _executed_final(queries["lang_id"](spark, SF_DIR))
+    for node in ("Exchange", "Window", "Join", "Generate", "Aggregate"):
+        assert node not in plan, (node, plan)
+    assert "FileScan parquet" in plan
+
+
 def test_bucketed_graph_feeds_superstep_join_without_edge_exchange(spark):
     # The bucketed-at-rest posture must hold THROUGH an algorithm: the
     # src-keyed shapes page_rank runs every superstep — the out-degree

@@ -16,7 +16,7 @@ from flink_graph_spark.sources.sinks import (
     write_graph_csv,
     write_graph_parquet,
 )
-from flink_graph_spark.sources.tables import load_table, read_csv_edges
+from flink_graph_spark.sources.tables import load_table, read_csv_edges, table_rows
 from flink_graph_spark.streaming.events import read_events_stream, run_available_now
 from flink_graph_spark.streaming.stateful import running_user_totals
 
@@ -36,6 +36,43 @@ def test_csv_sink_and_source_roundtrip(spark, golden):
         # header=true on write; schema-based read skips malformed header row
         got = {t for t in rows_as_set(edges) if t[0] is not None}
         assert got == rows_as_set(golden.edges)
+
+
+def test_load_table_repeat_read_runs_no_job(spark):
+    # schema inference and the raw count run once per table version
+    load_table(spark, SF_DIR, "documents")
+    table_rows(spark, SF_DIR, "documents")
+    sc = spark.sparkContext
+    group = "test-load-table-repeat"
+    sc.setJobGroup(group, group)
+    try:
+        docs = load_table(spark, SF_DIR, "documents")
+        assert "doc_id" in docs.columns
+        n = table_rows(spark, SF_DIR, "documents")
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert n == docs.count()
+
+
+def test_rewritten_table_is_reinferred_and_recounted(spark, tmp_path):
+    d = str(tmp_path)
+    path = f"{d}/t.parquet"
+    spark.range(5).write.parquet(path)
+    assert load_table(spark, d, "t").columns == ["id"]
+    assert table_rows(spark, d, "t") == 5
+    spark.range(7).withColumn("x", F.lit("a")).write.mode("overwrite").parquet(path)
+    df = load_table(spark, d, "t")
+    assert df.columns == ["id", "x"]
+    assert df.count() == 7
+    assert table_rows(spark, d, "t") == 7
+
+
+def test_load_table_missing_path_raises_spark_error(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path), "absent")
 
 
 def test_ann_topk_ivf_consistent_with_exact(spark):

@@ -14,11 +14,12 @@ import hashlib
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_graph_spark.plans.session import get_spark  # noqa: E402
 

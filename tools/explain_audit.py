@@ -10,8 +10,9 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_graph_spark.plans.session import get_spark  # noqa: E402
 
