@@ -5,8 +5,9 @@ Scale design (100 TB posture):
 * Everything is inverted-index shaped: explode shingles → hash-join on
   shingle/bucket → aggregate. Never an O(n²) cross join — candidate
   pairs only ever come from shared buckets.
-* MinHash signatures are computed in ONE hash-aggregate pass (16
-  min-aggs over the exploded shingle frame), then banded into b=4
+* MinHash signatures are computed per row from each doc's shingle set
+  after the one ``collect_set`` shuffle (16 ``array_min`` over the
+  hashed set, ``minhash_sets``), then banded into b=4
   bands of r=4 rows (tunable): the bucket key is the band index plus
   the band's r-minhash array, so a candidate pair must agree on ALL r
   hashes of some band — P(candidate) = 1-(1-s^r)^b, the standard LSH
@@ -22,10 +23,17 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import MINHASH_A, MINHASH_B, MINHASH_P, NUM_MINHASHES, h32
+from .hashing import (
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_P,
+    NUM_MINHASHES,
+    h32,
+    minhash_expr,
+)
 from .text import (
     DOC_SHINGLES_SQL,
     DOC_TOK_SQL,
@@ -328,38 +336,53 @@ LSH_BANDS = 4
 LSH_ROWS = 4  # LSH_BANDS * LSH_ROWS == NUM_MINHASHES
 
 
-def minhash_wide(sh: DataFrame) -> DataFrame:
-    """(doc_id, mh_0..mh_{K-1}): K min-hashes in a single hash-aggregate
-    pass over the exploded shingle frame — K fixed-width long slots in
-    the agg buffer, map-side combined before the one shuffle.
+def _permutation(k: int):
+    # a fresh closure per k: F.transform reads the lambda's arity, so k
+    # cannot ride along as a default argument
+    return lambda h: minhash_expr(k, h)
+
+
+def minhash_sets(sh: DataFrame) -> DataFrame:
+    """(doc_id, ss, mh_0..mh_{K-1}): each doc's distinct shingle set and
+    its K min-hashes, from (doc_id, s) shingle rows.
+
+    The ``collect_set`` grouping is the one shuffle; the signature is
+    computed from the set after it, per row. The hashed array ``hs`` is
+    bound in a lower projection so the K ``array_min(transform(...))``
+    lambdas index it instead of re-hashing every shingle K times
+    (SCALING.md §11). Docs with no shingle (NULL, empty, < 3 tokens)
+    have no row.
     """
-    hashed = sh.select("doc_id", h32(F.col("s")).alias("h"))
-    aggs = [
-        F.min(
-            (F.lit(MINHASH_A[k]) * F.col("h") + F.lit(MINHASH_B[k]))
-            % F.lit(MINHASH_P)
-        ).alias(f"mh_{k}")
-        for k in range(NUM_MINHASHES)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    per_doc = sh.groupBy("doc_id").agg(F.collect_set("s").alias("ss"))
+    hashed = per_doc.select("doc_id", "ss", F.transform("ss", h32).alias("hs"))
+    return hashed.select(
+        "doc_id",
+        "ss",
+        *[
+            F.array_min(F.transform("hs", _permutation(k))).alias(f"mh_{k}")
+            for k in range(NUM_MINHASHES)
+        ],
+    )
 
 
 def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """(doc_id, k, mh): the wide signature unpivoted (one row per
+    """(doc_id, k, mh): the signature unpivoted (one row per
     permutation) — the r=1 bucketing view, kept for tests/inspection.
     """
     stack = ", ".join(f"{k}, mh_{k}" for k in range(NUM_MINHASHES))
-    return minhash_wide(sh).selectExpr(
+    return minhash_sets(sh).selectExpr(
         "doc_id", f"stack({NUM_MINHASHES}, {stack}) AS (k, mh)"
     )
 
 
-def minhash_bands(
-    sh: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
+def _bucket_pairs(
+    sigs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:
-    """(doc_id, band, sig): banded LSH keys — ``sig`` is the array of
-    the band's ``rows`` consecutive minhashes, so bucket equality means
-    all r hashes agree (P = s^r per band).
+    """Distinct (da < db) pairs sharing a banded LSH bucket of the
+    ``minhash_sets`` frame ``sigs``. The bucket key is (band, sig) with
+    ``sig`` the band's ``rows`` consecutive min-hashes, so bucket
+    equality means all r hashes agree (P = s^r per band). The self-join
+    is on (band, sig), never all-pairs, and carries doc ids only.
     """
     if bands * rows != NUM_MINHASHES:
         raise ValueError(
@@ -369,8 +392,14 @@ def minhash_bands(
         f"{i}, array({', '.join(f'mh_{i * rows + j}' for j in range(rows))})"
         for i in range(bands)
     )
-    return minhash_wide(sh).selectExpr(
-        "doc_id", f"stack({bands}, {entries}) AS (band, sig)"
+    keys = sigs.selectExpr("doc_id", f"stack({bands}, {entries}) AS (band, sig)")
+    a = keys.select(F.col("doc_id").alias("da"), "band", "sig")
+    b = keys.select(F.col("doc_id").alias("db"), "band", "sig")
+    return (
+        a.join(b, ["band", "sig"])
+        .filter(F.col("da") < F.col("db"))
+        .select("da", "db")
+        .distinct()
     )
 
 
@@ -378,16 +407,25 @@ def minhash_candidates(
     sh: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:
     """Distinct candidate pairs (da < db) sharing at least one banded
-    LSH bucket — the self-join is on (band, sig), never all-pairs.
-    """
-    sigs = minhash_bands(sh, bands, rows)
-    a = sigs.select(F.col("doc_id").alias("da"), "band", "sig")
-    b = sigs.select(F.col("doc_id").alias("db"), "band", "sig")
-    return (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-        .distinct()
+    LSH bucket, from (doc_id, s) shingle rows."""
+    return _bucket_pairs(minhash_sets(sh), bands, rows)
+
+
+def _side(sets: DataFrame, side: str, signature: bool = False) -> DataFrame:
+    """``sets`` renamed as one side of a pair: doc_id → d<side>, ss →
+    s<side> and, with ``signature``, each mh_k → <side>_k."""
+    mhs = range(NUM_MINHASHES) if signature else ()
+    return sets.select(
+        F.col("doc_id").alias(f"d{side}"),
+        F.col("ss").alias(f"s{side}"),
+        *[F.col(f"mh_{k}").alias(f"{side}_{k}") for k in mhs],
+    )
+
+
+def _exact_jaccard() -> Column:
+    inter = F.size(F.array_intersect("sa", "sb"))
+    return F.round(
+        inter.cast("double") / (F.size("sa") + F.size("sb") - inter), 6
     )
 
 
@@ -408,44 +446,24 @@ def dedup_minhash_lsh(
     quadratic, while the banded candidate set stays ~linear in the
     number of true near-dups (P(candidate) = 1-(1-s^r)^b).
 
-    Scratch lifecycle (owned by the operator): the per-doc shingle-set
-    frame feeds FOUR plan subtrees (both LSH self-join sides, both
-    confirm joins), and ReuseExchange does NOT deduplicate them
-    (verified on the final AQE plan — the scan+explode+collect_set
-    pipeline appears once per consumer), so without caching the corpus
-    would be re-scanned 4×. It is persisted for the duration of this
-    call only: the (small, ~linear in true near-dups) result is
-    materialized eagerly via localCheckpoint, then the scratch is
-    unpersisted before returning — no cached blocks outlive the call.
-    On a real cluster swap localCheckpoint for a store-backed
-    checkpoint (same note as the Pregel loop, SCALING.md §7).
+    One lazy plan, nothing cached: the per-doc shingle sets
+    (``minhash_sets``) are the only full-corpus shuffle. Both sides of
+    the bucket self-join and both confirm joins read that one exchange
+    (Spark reuses it), and the bucket join and candidate ``distinct``
+    carry doc ids only — the sets are attached to the candidate list,
+    never to the bucket rows. Carrying the sets through the bucket join
+    instead would shuffle every doc's set once per band. A caller that
+    reads the result more than once materializes it itself
+    (``dedup_clusters``).
     """
-    arrs = (
-        exploded_shingles(docs)
-        .groupBy("doc_id")
-        .agg(F.collect_set("s").alias("ss"))
-        .persist()
-    )
-    # exploded distinct-shingle view derived narrowly from the arrays
-    sh = arrs.select("doc_id", F.explode("ss").alias("s"))
-    cand = minhash_candidates(sh, bands, rows)
-    confirmed = (
-        cand.join(arrs.select(F.col("doc_id").alias("da"), F.col("ss").alias("sa")), "da")
-        .join(arrs.select(F.col("doc_id").alias("db"), F.col("ss").alias("sb")), "db")
-        .withColumn("inter", F.size(F.array_intersect("sa", "sb")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.size("sa") + F.size("sb") - F.col("inter")),
-                6,
-            ),
-        )
+    sets = minhash_sets(exploded_shingles(docs))
+    return (
+        _bucket_pairs(sets, bands, rows)
+        .join(_side(sets, "a"), "da")
+        .join(_side(sets, "b"), "db")
+        .select("da", "db", _exact_jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    out = confirmed.select("da", "db", "jaccard").localCheckpoint(eager=True)
-    arrs.unpersist()
-    return out
 
 
 def minhash_sql_parts(bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> str:
@@ -509,7 +527,14 @@ def dedup_clusters(
     from ..graph import Graph
     from ..library.connected_components import connected_components
 
-    pairs = dedup_minhash_lsh(docs, threshold, bands, rows)
+    # connected_components reads its edge frame twice (vertices and
+    # edges), and the pair list is a lazy plan over the whole corpus:
+    # without this checkpoint the shingle-set shuffle and bucket join run
+    # twice. The only caller that reuses the pairs, so the only one that
+    # materializes them.
+    pairs = dedup_minhash_lsh(docs, threshold, bands, rows).localCheckpoint(
+        eager=True
+    )
     edges = pairs.select(F.col("da").alias("src"), F.col("db").alias("dst"))
     comps = connected_components(Graph.from_edges(edges), max_iter=max_iter)
     return comps.select(
@@ -854,8 +879,7 @@ def winnow_dup_pairs(
     # The fingerprint frame feeds three consumers (df count + both pair
     # sides); unpersisted that is three full corpus scans + three
     # winnowing passes. Persist for the duration of the call only —
-    # result is materialized eagerly, then the scratch is released
-    # (same lifecycle as the MinHash scratch above).
+    # result is materialized eagerly, then the scratch is released.
     fps = winnow_fingerprints(docs_with_dups, k, w).persist()
     try:
         dfreq = fps.groupBy("fp").agg(F.count("*").alias("df"))
@@ -1087,23 +1111,7 @@ def minhash_calibration(
     Same exact-vs-sketch pairing policy as two_hop vs HLL: measure the
     estimator against ground truth on the candidate set instead of
     assuming the textbook bound. Candidates only — never all pairs."""
-    arrs = (
-        exploded_shingles(docs)
-        .groupBy("doc_id")
-        .agg(F.collect_set("s").alias("ss"))
-        .persist()
-    )
-    sh = arrs.select("doc_id", F.explode("ss").alias("s"))
-    wide = minhash_wide(sh)
-    cand = minhash_candidates(sh, bands, rows)
-    wa = wide.select(
-        F.col("doc_id").alias("da"),
-        *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(NUM_MINHASHES)],
-    )
-    wb = wide.select(
-        F.col("doc_id").alias("db"),
-        *[F.col(f"mh_{k}").alias(f"b_{k}") for k in range(NUM_MINHASHES)],
-    )
+    sets = minhash_sets(exploded_shingles(docs))
     match = sum(
         (
             F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
@@ -1111,43 +1119,23 @@ def minhash_calibration(
         ),
         start=F.when(F.col("a_0") == F.col("b_0"), 1).otherwise(0),
     )
-    est = match.cast("double") / F.lit(float(NUM_MINHASHES))
     paired = (
-        cand.join(wa, "da")
-        .join(wb, "db")
-        .withColumn("est", est)
-        .join(
-            arrs.select(F.col("doc_id").alias("da"), F.col("ss").alias("sa")),
-            "da",
-        )
-        .join(
-            arrs.select(F.col("doc_id").alias("db"), F.col("ss").alias("sb")),
-            "db",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sa", "sb")))
-        .withColumn(
-            "exact",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.size("sa") + F.size("sb") - F.col("inter")),
-                6,
-            ),
+        _bucket_pairs(sets, bands, rows)
+        .join(_side(sets, "a", signature=True), "da")
+        .join(_side(sets, "b", signature=True), "db")
+        .select(
+            (match.cast("double") / F.lit(float(NUM_MINHASHES))).alias("est"),
+            _exact_jaccard().alias("exact"),
         )
     )
     bucket = F.least(
         F.floor(F.abs(F.col("est") - F.col("exact")) * 10), F.lit(9)
     )
-    out = (
-        paired.groupBy(bucket.cast("long").alias("err_bucket"))
-        .agg(
-            F.count("*").cast("long").alias("n_pairs"),
-            F.round(F.avg("est"), 6).alias("mean_est"),
-            F.round(F.avg("exact"), 6).alias("mean_exact"),
-        )
-        .localCheckpoint(eager=True)
+    return paired.groupBy(bucket.cast("long").alias("err_bucket")).agg(
+        F.count("*").cast("long").alias("n_pairs"),
+        F.round(F.avg("est"), 6).alias("mean_est"),
+        F.round(F.avg("exact"), 6).alias("mean_exact"),
     )
-    arrs.unpersist()
-    return out
 
 
 # composes after DOC_TOK_SQL + DOC_SHINGLES_SQL + minhash_sql_parts()

@@ -39,7 +39,3 @@ def h32_sql(expr: str) -> str:
 def minhash_expr(k: int, hcol: Column) -> Column:
     """k-th MinHash permutation of a pre-hashed value (Spark side)."""
     return (F.lit(MINHASH_A[k]) * hcol + F.lit(MINHASH_B[k])) % F.lit(MINHASH_P)
-
-
-def minhash_sql(k: int, hexpr: str) -> str:
-    return f"(({MINHASH_A[k]} * {hexpr} + {MINHASH_B[k]}) % {MINHASH_P})"

@@ -6,10 +6,13 @@ measurements while no SWEEP_r07.json existed in the tree — the sweep
 ran but its artifact was never written/committed, so three headline
 scale claims were unverifiable. This test makes that class of error
 structurally impossible: any token shaped like SWEEP_rN / BENCH_rN /
-CORRECTNESS_rN in SCALING.md, COVERAGE.md, BASELINE.md, README.md or a
-flink_graph_spark/tools/bench docstring must have the matching .json
-at the repo root. Slash shorthand ("SWEEP_r06/r07") expands to every
-member.
+CORRECTNESS_rN in SCALING.md, COVERAGE.md, BASELINE.md, README.md, an
+OPTIMIZATION_rN.md round report or a flink_graph_spark/tools/bench
+docstring must have the matching .json at the repo root. Slash
+shorthand ("SWEEP_r06/r07") expands to every member.
+
+VERDICT.md is deliberately not scanned: it is the review record, and it
+names a missing artifact on purpose when it reports one as missing.
 """
 
 from __future__ import annotations
@@ -24,6 +27,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _TOKEN = re.compile(r"\b(SWEEP|BENCH|CORRECTNESS)_r(\d+)((?:/r\d+)+)?\b")
 
 _DOC_FILES = ["SCALING.md", "COVERAGE.md", "BASELINE.md", "README.md"]
+
+
+def _doc_paths() -> list[str]:
+    """The scanned evidence docs: the fixed set plus every round's
+    OPTIMIZATION_rN.md report."""
+    paths = [os.path.join(REPO, f) for f in _DOC_FILES]
+    return paths + sorted(glob.glob(os.path.join(REPO, "OPTIMIZATION_r*.md")))
 
 
 def _tracked_root_files() -> set[str] | None:
@@ -93,10 +103,10 @@ def test_cited_sweep_rows_exist():
         return art_cache[artifact]
 
     bad = []
-    for doc in _DOC_FILES:
-        p = os.path.join(REPO, doc)
+    for p in _doc_paths():
         if not os.path.exists(p):
             continue
+        doc = os.path.relpath(p, REPO)
         with open(p, encoding="utf-8") as fh:
             for lineno, line in enumerate(fh, 1):
                 arts = sweep_tok.findall(line)
@@ -117,7 +127,7 @@ def test_cited_sweep_rows_exist():
 
 
 def test_every_cited_artifact_is_committed():
-    paths = [os.path.join(REPO, f) for f in _DOC_FILES]
+    paths = _doc_paths()
     paths += glob.glob(os.path.join(REPO, "flink_graph_spark/**/*.py"),
                        recursive=True)
     paths += glob.glob(os.path.join(REPO, "tools/*.py"))

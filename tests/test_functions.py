@@ -199,6 +199,77 @@ def test_minhash_similar_docs_share_buckets(docs):
     assert (1, 4) in got  # identical docs always collide
 
 
+def test_dedup_minhash_lsh_four_jobs_no_scratch(spark, docs):
+    # one lazy plan: the shingle-set shuffle, the bucket join and the
+    # confirm joins run in at most 4 jobs, and nothing is left persisted
+    # or checkpointed once the result has been read
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    group = "test-dedup-minhash-lsh-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = dedup_mod.dedup_minhash_lsh(docs).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert {(r["da"], r["db"]) for r in got} == {(1, 2), (1, 4), (2, 4)}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 4, len(jobs)
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_dedup_minhash_lsh_one_shingle_set_exchange(docs):
+    # every consumer of the per-doc shingle sets (both bucket-join sides,
+    # both confirm sides) reads ONE collect_set exchange; the others are
+    # ReusedExchange, and no cached frame stands in for the reuse
+    out = dedup_mod.dedup_minhash_lsh(docs)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    set_exchanges = [
+        line
+        for line, below in zip(final, final[1:])
+        if "Exchange hashpartitioning" in line
+        and "ReusedExchange" not in line
+        and "partial_collect_set" in below
+    ]
+    assert len(set_exchanges) == 1, plan
+
+
+def test_dedup_minhash_lsh_edge_cases(spark):
+    # lazy (no job until read); docs with no shingle (NULL, empty, < 3
+    # tokens) never pair, even as exact copies of each other; an exact
+    # copy pairs at Jaccard 1.0, and the pair collides in every band yet
+    # is listed once
+    base = "alpha beta gamma delta epsilon zeta eta theta"
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "two words"),
+            (4, "two words"),
+            (5, base),
+            (6, base),
+            (7, base.replace("theta", "iota")),
+            (8, "nothing here is shared with any other document"),
+        ],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    group = "test-dedup-minhash-lsh-lazy"
+    sc.setJobGroup(group, group)
+    try:
+        pairs = dedup_mod.dedup_minhash_lsh(docs)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    got = [(r["da"], r["db"], r["jaccard"]) for r in pairs.collect()]
+    ids = {d for da, db, _ in got for d in (da, db)}
+    assert ids <= {5, 6, 7}
+    assert len({(da, db) for da, db, _ in got}) == len(got)
+    assert (5, 6, 1.0) in got
+
+
 def test_minhash_banding_shrinks_candidates(spark):
     # r=4 banding must produce strictly fewer candidate pairs than r=1
     # (any-single-hash) banding on the synthetic-dup corpus, while still
