@@ -295,6 +295,19 @@ class Graph:
             Graph(self._vertices, self._edges.unionByName(self.reverse().edges))
         )
 
+    def symmetrized_edges(self) -> DataFrame:
+        """(src, dst): both directions of every edge, duplicates dropped."""
+        e = self._edges.select("src", "dst")
+        return e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct()
+
+    def simple_undirected_edges(self) -> DataFrame:
+        """``symmetrized_edges`` without self-loops: the neighbor table of
+        the simple undirected view. The loop filter follows the union, so
+        it drops both directions of a loop."""
+        return self.symmetrized_edges().where(F.col("src") != F.col("dst"))
+
     # ------------------------------------------------------------------
     # §2.3 filters / subgraph
     # ------------------------------------------------------------------

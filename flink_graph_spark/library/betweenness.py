@@ -40,16 +40,7 @@ def betweenness(
     ``seeds`` restricts sources for the sampled estimator (None = all
     vertices = exact).
     """
-    sym = (
-        graph.edges.select("src", "dst")
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = graph.symmetrized_edges().localCheckpoint(eager=True)
     v = graph.vertices.select("id")
     if seeds is None:
         seed_df = v

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h32, h32_sql
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 
 PRIO_SHIFT = 1 << 20
@@ -39,26 +40,17 @@ def color_graph(graph: Graph, max_rounds: int) -> DataFrame:
     """(id, color) — color r assigned in round r (1-based); NULL if
     still uncolored after ``max_rounds``. Proper on the undirected
     view: adjacent vertices never share a color."""
-    sym = (
-        graph.edges.select("src", "dst")
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        # a self-loop would make its vertex permanently uncolorable
-        # (it can never beat its own priority); proper coloring is
-        # conventionally defined on loop-free graphs, so drop loops
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # a self-loop would make its vertex permanently uncolorable (it can
+    # never beat its own priority); proper coloring is conventionally
+    # defined on loop-free graphs, so the neighbor table drops loops
+    sym = graph.simple_undirected_edges().localCheckpoint(eager=True)
     state = graph.vertices.select(
         "id",
         _priority(F.col("id")).alias("p"),
         F.lit(None).cast("long").alias("color"),
     ).localCheckpoint(eager=True)
-    for r in range(1, max_rounds + 1):
+
+    def round_(state: DataFrame, r: int) -> DataFrame:
         unc = state.filter(F.col("color").isNull())
         nbr_max = (
             sym.join(
@@ -69,23 +61,19 @@ def color_graph(graph: Graph, max_rounds: int) -> DataFrame:
             .agg(F.max("np").alias("m"))
             .withColumnRenamed("src", "id")
         )
-        prev = state
-        state = (
-            state.join(nbr_max, "id", "left")
-            .select(
-                "id",
-                "p",
-                F.coalesce(
-                    F.col("color"),
-                    F.when(
-                        F.col("p") > F.coalesce(F.col("m"), F.lit(-1)),
-                        F.lit(r).cast("long"),
-                    ),
-                ).alias("color"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(nbr_max, "id", "left").select(
+            "id",
+            "p",
+            F.coalesce(
+                F.col("color"),
+                F.when(
+                    F.col("p") > F.coalesce(F.col("m"), F.lit(-1)),
+                    F.lit(r).cast("long"),
+                ),
+            ).alias("color"),
         )
-        release_local_checkpoint(prev)
+
+    state, _, _ = iterate(state, round_, max_rounds)
     release_local_checkpoint(sym)
     return state.select("id", "color")
 

@@ -39,8 +39,8 @@ every superstep) and paid a second full exchange between the two aggs
 ((id,label) → (id)); per superstep that was 3 edge-sized exchanges
 against this plan's 1. Regrouping is exact: every score is a dyadic
 rational (see above), so sums are order-independent bit-for-bit. All
-expressions stay in whole-stage codegen; lineage is truncated on the
-shared checkpoint cadence.
+expressions stay in whole-stage codegen; lineage is truncated by the
+``operators.iterate`` kernel every 2 supersteps.
 """
 
 from __future__ import annotations
@@ -49,22 +49,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, GraphAlgorithm
-from ..plans.checkpoints import release_local_checkpoint
+from ..operators.iterate import iterate
 
 DELTA = 0.5  # hop attenuation; keep k/2-exact (see module docstring)
+CHECKPOINT_EVERY = 2  # see the cadence table in operators/iterate.py
 
 
-def community_detection(
-    graph: Graph, max_iter: int = 4, checkpoint_every: int = 2
-) -> DataFrame:
-    """(id, label, score) after ``max_iter`` supersteps.
-
-    Cadence note: stays at checkpoint_every=2 — each iteration
-    references ``v`` twice (state attach + update join) and runs a
-    heavy two-stage per-label aggregate, so an unchecked
-    chain re-executes those legs ~2^k-fold: measured at sf0.1 uu,
-    cadence 2 = 6.1s vs cadence 3 = 10.8s. Same for both LPA variants.
-    """
+def community_detection(graph: Graph, max_iter: int = 4) -> DataFrame:
+    """(id, label, score) after ``max_iter`` supersteps."""
     e = graph.edges.select("src", "dst", F.col("value").cast("double").alias("w"))
     # Symmetrize ONCE for the whole loop: every stored row {u, v}
     # delivers u's state to v AND v's state to u each superstep (the
@@ -85,12 +77,8 @@ def community_detection(
         .repartition("src")
         .persist()
     )
-    v = graph.vertices.select(
-        "id", F.col("id").alias("label"), F.lit(1.0).alias("score")
-    ).localCheckpoint(eager=True)
-    live_ckpt = v
 
-    for it in range(1, max_iter + 1):
+    def superstep(v: DataFrame, _it: int) -> DataFrame:
         st = v.select(
             F.col("id").alias("__sid"), F.col("label").alias("l"),
             F.col("score").alias("sc"),
@@ -113,22 +101,18 @@ def community_detection(
         pick = per_label.groupBy("id").agg(
             F.max(F.struct("s", "label", "mx")).alias("p")
         )
-        v = (
-            v.join(pick, "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("p.label"), F.col("label")).alias("label"),
-                F.coalesce(F.col("p.mx") - F.lit(DELTA), F.col("score")).alias(
-                    "score"
-                ),
-            )
+        return v.join(pick, "id", "left").select(
+            "id",
+            F.coalesce(F.col("p.label"), F.col("label")).alias("label"),
+            F.coalesce(F.col("p.mx") - F.lit(DELTA), F.col("score")).alias("score"),
         )
-        if it % checkpoint_every == 0 or it == max_iter:
-            v = v.localCheckpoint(eager=True)
-            release_local_checkpoint(live_ckpt)
-            live_ckpt = v
-    # the final state is always checkpoint-materialized (it == max_iter
-    # above), so the loop-scoped symmetrized cache can go immediately
+
+    v0 = graph.vertices.select(
+        "id", F.col("id").alias("label"), F.lit(1.0).alias("score")
+    ).localCheckpoint(eager=True)
+    v, _, _ = iterate(v0, superstep, max_iter, CHECKPOINT_EVERY)
+    # the kernel checkpoints the final superstep, so the loop-scoped
+    # symmetrized cache can go immediately
     ue.unpersist()
     return v
 

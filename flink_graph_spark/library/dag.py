@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 from ..sources.generators import grid_graph
 
@@ -57,7 +58,8 @@ def dag_longest_path(graph: Graph, max_rounds: int) -> DataFrame:
         F.lit(0).cast("long").alias("level"),
         F.lit(0).cast("long").alias("longest"),
     ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    def round_(state: DataFrame, _it: int) -> DataFrame:
         msgs = state.join(e, state["id"] == e["src"]).select(
             F.col("dst").alias("id"),
             (F.col("level") + 1).alias("lvl_m"),
@@ -66,22 +68,15 @@ def dag_longest_path(graph: Graph, max_rounds: int) -> DataFrame:
         agg = msgs.groupBy("id").agg(
             F.max("lvl_m").alias("lvl_m"), F.max("lng_m").alias("lng_m")
         )
-        prev = state
-        state = (
-            state.join(agg, "id", "left")
-            .select(
-                "id",
-                F.greatest(
-                    F.col("level"), F.coalesce("lvl_m", F.lit(0))
-                ).alias("level"),
-                F.greatest(
-                    F.col("longest"),
-                    F.coalesce("lng_m", F.lit(0).cast("long")),
-                ).alias("longest"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(agg, "id", "left").select(
+            "id",
+            F.greatest(F.col("level"), F.coalesce("lvl_m", F.lit(0))).alias("level"),
+            F.greatest(
+                F.col("longest"), F.coalesce("lng_m", F.lit(0).cast("long"))
+            ).alias("longest"),
         )
-        release_local_checkpoint(prev)
+
+    state, _, _ = iterate(state, round_, max_rounds)
     # result reads only the final state checkpoint; drop the edge scratch
     release_local_checkpoint(e)
     return state.select(

@@ -20,9 +20,12 @@ Fixed iteration count → DuckDB-oracle-able via unrolled CTEs
 Scale: each iteration is two aggregate_messages passes (single-sided
 reads → one vertex join each); the edge table is used untouched, so a
 builder's shared src-partitioned cache serves every iteration; lineage
-is truncated with localCheckpoint each iteration (two joins/iter grows
-lineage twice as fast as PageRank's one). The final totals are 1-row
-aggregates broadcast back into the plan — never a driver collect.
+(two joins/iter, growing twice as fast as PageRank's one) is truncated
+with an eager localCheckpoint every 3rd iteration, never after the last
+one: the caller's action evaluates the final lineage directly. This loop
+stays off the ``operators.iterate`` kernel, whose trailing checkpoint
+would add a job; see the kernel's cadence table. The final totals are
+1-row aggregates broadcast back into the plan — never a driver collect.
 """
 
 from __future__ import annotations

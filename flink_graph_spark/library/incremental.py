@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..operators.pregel import pregel
 from ..plans.checkpoints import release_local_checkpoint
 
@@ -140,30 +141,24 @@ def incremental_pagerank(
         # ranking; no resume phase to run (1/n teleport is undefined)
         release_local_checkpoint(e2)
         return r.select("id", F.round("rank", round_to).alias("rank"))
-    for _ in range(post_iter):
+
+    def superstep(r: DataFrame, _it: int) -> DataFrame:
         contrib = (
             r.join(deg2, "id")
             .join(e2.select(F.col("src").alias("id"), "dst"), "id")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("s"))
         )
-        prev = r
-        r = (
-            graph.vertices.select("id")
-            .join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - beta) / n)
-                    + F.lit(beta) * F.coalesce("s", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+        return graph.vertices.select("id").join(contrib, "id", "left").select(
+            "id",
+            (
+                F.lit((1.0 - beta) / n) + F.lit(beta) * F.coalesce("s", F.lit(0.0))
+            ).alias("rank"),
         )
-        # no-op for the first prev (page_rank's select wrapper — its own
-        # final checkpoint is not directly releasable here), real for
-        # every superseded loop checkpoint
-        release_local_checkpoint(prev)
+
+    # the first superseded state is page_rank's select wrapper, which the
+    # kernel leaves alone (its own final checkpoint is not releasable here)
+    r, _, _ = iterate(r, superstep, post_iter)
     release_local_checkpoint(e2)
     return r.select("id", F.round("rank", round_to).alias("rank"))
 

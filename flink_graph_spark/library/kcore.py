@@ -25,17 +25,7 @@ def k_core(graph: Graph, k: int = 3, max_iter: int = 8) -> DataFrame:
     """Returns (id, core_deg) — vertices of the k-core and their degree
     WITHIN the core (the converged subgraph), over the undirected view
     with self-loop-free distinct neighbor edges."""
-    e = (
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = graph.simple_undirected_edges().localCheckpoint(eager=True)
     for _ in range(max_iter):
         # LAZY checkpoint + removed-count in one action: the count job
         # materializes the degree table, so the keep-side semi-joins

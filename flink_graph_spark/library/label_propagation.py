@@ -4,10 +4,10 @@ and adopts the most frequent incoming label (ties → max label), keeping
 its own label when its inbox is empty.
 
 The mode aggregation needs a two-level plan (count per (vertex,label)
-then rank) so it doesn't fit the single-agg pregel kernel — it gets its
-own synchronous loop with the same lineage-checkpoint policy. Integer
-counts + deterministic (count DESC, label DESC) tie-break → exact
-oracle parity at fixed iteration counts.
+then rank) so it doesn't fit the single-agg pregel superstep — it runs
+its own superstep on the ``operators.iterate`` kernel, shared with
+``label_spread``. Integer counts + deterministic (count DESC, label
+DESC) tie-break → exact oracle parity at fixed iteration counts.
 
 For undirected behavior (the common use), pass ``graph.get_undirected()``
 — mirroring the reference, which expects a symmetrized input graph.
@@ -15,33 +15,40 @@ For undirected behavior (the common use), pass ``graph.get_undirected()``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, GraphAlgorithm
-from ..plans.checkpoints import release_local_checkpoint
+from ..operators.iterate import iterate
+
+CHECKPOINT_EVERY = 2  # see the cadence table in operators/iterate.py
 
 
-def label_propagation(
-    graph: Graph, max_iter: int = 10, label_col: str = "value", checkpoint_every: int = 2
+def _mode_vote_loop(
+    graph: Graph,
+    labels: DataFrame,
+    max_iter: int,
+    update: Column,
+    sender_filter: Column | None = None,
 ) -> DataFrame:
-    """Returns (id, label). Initial label = vertex value."""
+    """The mode-vote loop label_propagation and label_spread share.
+    ``labels`` is (id, label, ...). Each superstep, every row passing
+    ``sender_filter`` sends its label to its out-neighbors; ``update``,
+    a Column over ``label`` and the vote ``new_label`` (NULL for an
+    empty inbox), sets the label, and the other columns ride along."""
     # Loop-invariant edges: project, pre-partition by the join key (src)
     # and persist ONCE — every superstep's message join then reuses the
     # cached partitioning and only the small label frame shuffles. A
     # graph already src-partitioned + cached (builder posture) is used
     # as-is; its shared cache must survive this call.
     owns_edge_cache = not graph.src_partitioned
+    edges = graph.edges.select("src", "dst")
     if owns_edge_cache:
-        edges = graph.edges.select("src", "dst").repartition("src").persist()
-    else:
-        edges = graph.edges.select("src", "dst")
-    labels = graph.vertices.select(
-        "id", F.col(label_col).alias("label")
-    ).localCheckpoint(eager=True)
-    live_ckpt = labels
+        edges = edges.repartition("src").persist()
+    rest = [c for c in labels.columns if c not in ("id", "label")]
 
-    for it in range(1, max_iter + 1):
+    def superstep(labels: DataFrame, _it: int) -> DataFrame:
+        senders = labels if sender_filter is None else labels.filter(sender_filter)
         # r10 (guide §2.4): ONE exchange per superstep carries the raw
         # message stream hashed by id — hash(id) satisfies the
         # clustering requirement of groupBy(id,label), of groupBy(id)
@@ -50,7 +57,7 @@ def label_propagation(
         # shape paid two full exchanges (partial counts by (id,label),
         # then counts again by id). Regrouping integer counts is exact.
         msgs = (
-            edges.join(labels, edges["src"] == labels["id"])
+            edges.join(senders, edges["src"] == senders["id"])
             .select(F.col("dst").alias("id"), "label")
             .repartition("id")
         )
@@ -61,16 +68,26 @@ def label_propagation(
         picked = counts.groupBy("id").agg(
             F.max(F.struct("cnt", "label"))["label"].alias("new_label")
         )
-        labels = labels.join(picked, "id", "left").select(
-            "id", F.coalesce("new_label", "label").alias("label")
+        return labels.join(picked, "id", "left").select(
+            "id", update.alias("label"), *rest
         )
-        if it % checkpoint_every == 0 or it == max_iter:
-            labels = labels.localCheckpoint(eager=True)
-            release_local_checkpoint(live_ckpt)
-            live_ckpt = labels
+
+    labels, _, _ = iterate(
+        labels.localCheckpoint(eager=True), superstep, max_iter, CHECKPOINT_EVERY
+    )
     if owns_edge_cache:
         edges.unpersist()
     return labels
+
+
+def label_propagation(graph: Graph, max_iter: int = 10, label_col: str = "value") -> DataFrame:
+    """Returns (id, label). Initial label = vertex value."""
+    return _mode_vote_loop(
+        graph,
+        graph.vertices.select("id", F.col(label_col).alias("label")),
+        max_iter,
+        F.coalesce("new_label", "label"),
+    )
 
 
 def oracle_ctes(
@@ -115,7 +132,6 @@ def label_spread(
     label_col: str = "value",
     seed_col: str = "seed",
     unlabeled: int = -1,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Semi-supervised label SPREADING (Zhu & Ghahramani-style, mode
     vote): seed vertices are CLAMPED to their label; unlabeled vertices
@@ -123,44 +139,18 @@ def label_spread(
     LABELED in-neighbors each round (ties → max label), keeping
     ``unlabeled`` while no labeled neighbor exists. The sparse-labels →
     similarity-graph → full-labels pattern used to extend a small
-    human-labeled set over a corpus. Same plan shape as
-    ``label_propagation`` — the labeled-sender filter only shrinks the
-    message frame."""
-    owns_edge_cache = not graph.src_partitioned
-    if owns_edge_cache:
-        edges = graph.edges.select("src", "dst").repartition("src").persist()
-    else:
-        edges = graph.edges.select("src", "dst")
-    labels = graph.vertices.select(
-        "id", F.col(label_col).alias("label"), F.col(seed_col).alias("seed")
-    ).localCheckpoint(eager=True)
-    live_ckpt = labels
-
-    for it in range(1, max_iter + 1):
-        senders = labels.filter(F.col("label") != unlabeled)
-        # same single-exchange message spine as label_propagation (§2.4)
-        msgs = (
-            edges.join(senders, edges["src"] == senders["id"])
-            .select(F.col("dst").alias("id"), "label")
-            .repartition("id")
-        )
-        counts = msgs.groupBy("id", "label").agg(F.count("*").alias("cnt"))
-        picked = counts.groupBy("id").agg(
-            F.max(F.struct("cnt", "label"))["label"].alias("new_label")
-        )
-        labels = labels.join(picked, "id", "left").select(
-            "id",
-            F.when(F.col("seed"), F.col("label"))
-            .otherwise(F.coalesce("new_label", "label"))
-            .alias("label"),
-            "seed",
-        )
-        if it % checkpoint_every == 0 or it == max_iter:
-            labels = labels.localCheckpoint(eager=True)
-            release_local_checkpoint(live_ckpt)
-            live_ckpt = labels
-    if owns_edge_cache:
-        edges.unpersist()
+    human-labeled set over a corpus. The ``label_propagation`` superstep
+    with a labeled-sender filter (it only shrinks the message frame) and
+    the seed clamp."""
+    labels = _mode_vote_loop(
+        graph,
+        graph.vertices.select(
+            "id", F.col(label_col).alias("label"), F.col(seed_col).alias("seed")
+        ),
+        max_iter,
+        F.when(F.col("seed"), F.col("label")).otherwise(F.coalesce("new_label", "label")),
+        sender_filter=F.col("label") != unlabeled,
+    )
     return labels.select("id", "label")
 
 

@@ -47,17 +47,7 @@ def maximal_independent_set(graph: Graph, max_iter: int = 6) -> DataFrame:
     """Returns (id,) — the MIS members, sorted. ``max_iter`` bounds the
     rounds (mirrored by the oracle); Luby converges in O(log n)
     expected rounds, and on convergence extra rounds are no-ops."""
-    edges = (
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = graph.simple_undirected_edges().localCheckpoint(eager=True)
     und = graph.vertices.select(
         "id", priority_col("id").alias("p")
     ).localCheckpoint(eager=True)

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h32, h32_sql
 from ..graph import Graph
-from ..plans.checkpoints import release_local_checkpoint
+from ..operators.iterate import iterate
 
 NF_M = 16  # registers per vertex (2^4 buckets)
 NF_REST_BITS = 28  # 32-bit hash minus 4 bucket bits
@@ -207,15 +207,7 @@ def two_hop_balls(graph: Graph) -> DataFrame:
     Σ deg² — the true two-hop workload; cap or sample hubs first on
     power-law graphs, same policy as the uu builder's cell cap), one
     (v, w)-keyed min-radius aggregate, one bounded count."""
-    sym = (
-        graph.edges.select("src", "dst")
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-    )
+    sym = graph.symmetrized_edges()
     self_rows = graph.vertices.select(
         F.col("id").alias("v"), F.col("id").alias("w"), F.lit(0).alias("r")
     )
@@ -282,20 +274,12 @@ def spectral_radius(
     eigenspaces and never converges; the shift makes the top eigenpair
     strictly dominant and leaves the eigenvector unchanged. The
     Rayleigh readout is on A itself. Engine-replayable throughout."""
-    sym = (
-        graph.edges.select("src", "dst")
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = graph.symmetrized_edges().localCheckpoint(eager=True)
     x = graph.vertices.select("id", F.lit(1.0).alias("x")).localCheckpoint(
         eager=True
     )
-    for _ in range(rounds):
+
+    def round_(x: DataFrame, _it: int) -> DataFrame:
         nbr = (
             sym.join(
                 x.select(F.col("id").alias("dst"), F.col("x").alias("xd")),
@@ -308,14 +292,12 @@ def spectral_radius(
             "id", (F.col("x") + F.coalesce("ny", F.lit(0.0))).alias("y")
         )
         nrm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("n"))
-        x_prev = x
-        x = (
-            y.crossJoin(F.broadcast(nrm))
-            .select("id", (F.col("y") / F.col("n")).alias("x"))
-            .localCheckpoint(eager=True)
+        return y.crossJoin(F.broadcast(nrm)).select(
+            "id", (F.col("y") / F.col("n")).alias("x")
         )
-        # sym stays — the lazy Rayleigh readout below still reads it
-        release_local_checkpoint(x_prev)
+
+    # sym stays past the loop — the lazy Rayleigh readout below reads it
+    x, _, _ = iterate(x, round_, rounds)
     # Rayleigh quotient x'Ax / x'x (x already unit-norm up to the
     # isolated-vertex zeros)
     ax = (

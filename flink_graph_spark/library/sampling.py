@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 
 W_MULT_C = 2654435761
@@ -45,21 +46,9 @@ def _hop_hash(cur: str, step: int, nbr: str) -> F.Column:
 def random_walks(graph: Graph, length: int = 3) -> DataFrame:
     """(start_id, v1, .., vL) — one deterministic walk per start vertex
     (NULL-padded at dead ends)."""
-    adj = (
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    walks = graph.vertices.select(
-        F.col("id").alias("start_id"), F.col("id").alias("__cur")
-    )
-    for s in range(1, length + 1):
+    adj = graph.simple_undirected_edges().localCheckpoint(eager=True)
+
+    def step(walks: DataFrame, s: int) -> DataFrame:
         hop = (
             walks.join(
                 adj.select(F.col("src").alias("__cur"), F.col("dst").alias("__n")),
@@ -69,18 +58,17 @@ def random_walks(graph: Graph, length: int = 3) -> DataFrame:
             .agg(F.min(_hop_hash("__cur", s, "__n")).alias("__h"))
             .select("start_id", (F.col("__h") % W_SHIFT).alias(f"v{s}"))
         )
-        prev = walks
-        walks = (
-            walks.join(hop, "start_id", "left")
-            .select(
-                "start_id",
-                *[f"v{i}" for i in range(1, s)],
-                F.col(f"v{s}"),
-                F.col(f"v{s}").alias("__cur"),
-            )
-            .localCheckpoint(eager=True)
+        return walks.join(hop, "start_id", "left").select(
+            "start_id",
+            *[f"v{i}" for i in range(1, s)],
+            F.col(f"v{s}"),
+            F.col(f"v{s}").alias("__cur"),
         )
-        release_local_checkpoint(prev)
+
+    walks = graph.vertices.select(
+        F.col("id").alias("start_id"), F.col("id").alias("__cur")
+    )
+    walks, _, _ = iterate(walks, step, length)
     release_local_checkpoint(adj)
     return walks.drop("__cur").orderBy("start_id")
 

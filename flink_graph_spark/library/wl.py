@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h32, h32_sql
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 
 
@@ -30,16 +31,7 @@ def wl_color_classes(graph: Graph, rounds: int = 3) -> DataFrame:
     """(color, n) — 1-WL color-class histogram after ``rounds``
     refinement rounds over the undirected view (initial color =
     degree)."""
-    sym = (
-        graph.edges.select("src", "dst")
-        .unionByName(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = graph.symmetrized_edges().localCheckpoint(eager=True)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("c")
     )
@@ -49,7 +41,8 @@ def wl_color_classes(graph: Graph, rounds: int = 3) -> DataFrame:
         .select("id", F.coalesce("c", F.lit(0)).cast("long").alias("c"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
+
+    def round_(state: DataFrame, _it: int) -> DataFrame:
         nbr = (
             sym.join(
                 state.select(F.col("id").alias("dst"), F.col("c").alias("nc")),
@@ -62,22 +55,18 @@ def wl_color_classes(graph: Graph, rounds: int = 3) -> DataFrame:
                 ).alias("sig")
             )
         )
-        prev = state
-        state = (
-            state.join(nbr, "id", "left")
-            .select(
-                "id",
-                h32(
-                    F.concat(
-                        F.col("c").cast("string"),
-                        F.lit("|"),
-                        F.coalesce("sig", F.lit("")),
-                    )
-                ).alias("c"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(nbr, "id", "left").select(
+            "id",
+            h32(
+                F.concat(
+                    F.col("c").cast("string"),
+                    F.lit("|"),
+                    F.coalesce("sig", F.lit("")),
+                )
+            ).alias("c"),
         )
-        release_local_checkpoint(prev)
+
+    state, _, _ = iterate(state, round_, rounds)
     # the result reads only the FINAL state checkpoint (its lineage is
     # truncated), so the scratch symmetric-edge checkpoint can go too
     release_local_checkpoint(sym)

@@ -15,20 +15,16 @@ Scale design:
 * Edges are persisted once (caller may pre-partition by src via
   ``Graph.partition_by_src``) so the loop-invariant side is never
   rescanned from parquet nor reshuffled.
-* Every superstep ends in ``localCheckpoint(eager=True)``. The next
-  superstep reads the state twice (the message join and the grouping's
-  state rows), and the two reads prune different state columns (an
-  update may read only part of a struct state), so AQE cannot serve
-  both from one exchange: a lazy chain of k supersteps recomputes the
-  oldest one ~2^k times. Measured at sf0.1 on ``local[4]``: PageRank
-  with a checkpoint every 3 supersteps spent ~17 s of executor time,
-  with one every superstep 1.8 s (33 jobs).
-* Convergence (optional) is counted inside the dataflow: the changed-
-  row count is a ``DataFrame.observe`` metric on the superstep's
-  checkpoint, so the job that materializes the new state also returns
-  the convergence signal. A superstep is the frontier broadcast, the
-  grouping's map stage and the checkpoint job: no separate count job,
-  never a collect of the state.
+* The superstep loop is ``operators.iterate.iterate``, which owns the
+  checkpoint, its release and the convergence count. Every superstep
+  ends in an eager checkpoint (cadence 1 in the kernel's table): the
+  next superstep reads the state twice (the message join and the
+  grouping's state rows) with different column pruning, so a lazy
+  chain of k supersteps would recompute the oldest one ~2^k times.
+* Convergence (optional) is the kernel's ``changed`` count, an
+  observed metric on the checkpoint job, so a superstep is the
+  frontier broadcast, the grouping's map stage and the checkpoint job:
+  no separate count job, never a collect of the state.
 * No per-row Python: message/update expressions are Spark Columns, so
   every superstep stays inside whole-stage codegen.
 """
@@ -37,12 +33,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..graph import Graph
-from ..plans.checkpoints import release_local_checkpoint
+from .iterate import iterate
 
 
 @dataclass
@@ -139,16 +135,15 @@ def pregel(
     # (the first superstep's first read writes its blocks), yet a
     # caller's uncached vertex frame (incremental SSSP's join, an SCC
     # peel round) is computed once, not once per read in superstep 1
-    v = graph.vertices.select("id", initial.alias(state_col)).localCheckpoint(eager=False)
-    active = v if delta else None
-    # the checkpoint the CURRENT state still reads; released (blocks
-    # unpersisted) the moment a newer one is materialized — see
-    # plans/checkpoints.py for why Spark won't do this for us
-    live_ckpt = v
+    v0 = graph.vertices.select("id", initial.alias(state_col)).localCheckpoint(eager=False)
+    counted = delta or check_convergence
+    changed_col = ~F.col(state_col).eqNullSafe(F.col("__old"))
 
-    it = 0
-    converged = False
-    for it in range(1, max_iter + 1):
+    def superstep(cur: DataFrame, it: int) -> DataFrame:
+        v = cur.select("id", state_col)
+        active = None
+        if delta:
+            active = v if it == 1 else cur.filter(changed_col).select("id", state_col)
         msgs = graph.aggregate_messages(
             None,
             msg_to_dst=msg_to_dst,
@@ -194,29 +189,13 @@ def pregel(
                 F.when(F.col("__tag").bitwiseAND(2) == 2, F.col("__agg")).alias("__agg"),
             )
         )
-        v_new = folded.select(
-            "id", update.alias(state_col), F.col(state_col).alias("__old")
-        )
-        counted = delta or check_convergence
-        if counted:
-            changed_col = ~F.col(state_col).eqNullSafe(F.col("__old"))
-            # the changed-row count rides the checkpoint job as an
-            # observed metric: one job materializes the new state AND
-            # returns the convergence signal
-            obs = Observation()
-            v_new = v_new.observe(obs, F.count_if(changed_col).alias("n_changed"))
-        v_new = v_new.localCheckpoint(eager=True)
-        # release only after the new blocks are materialized — computing
-        # v_new reads the previous checkpoint
-        release_local_checkpoint(live_ckpt)
-        live_ckpt = v_new
-        v = v_new.select("id", state_col)
-        if counted:
-            if delta:
-                active = v_new.filter(changed_col).select("id", state_col)
-            if obs.get["n_changed"] == 0:
-                converged = True
-                break
+        return folded.select("id", update.alias(state_col), F.col(state_col).alias("__old"))
+
+    # with delta, the changed rows are also next superstep's frontier
+    # (an empty one ends the loop)
+    v, it, converged = iterate(
+        v0, superstep, max_iter, changed=changed_col if counted else None
+    )
     if owns_edge_cache:
         edges.unpersist()
-    return PregelResult(vertices=v, iterations=it, converged=converged)
+    return PregelResult(vertices=v.select("id", state_col), iterations=it, converged=converged)

@@ -447,6 +447,41 @@ def test_k_core_peels_tail(spark):
     assert core3 == []                   # no 3-core in a triangle+tail
 
 
+def test_self_loops_match_duckdb_twins(spark):
+    """k-core, MIS and random walks build their neighbor table from
+    ``Graph.simple_undirected_edges``, which drops a self-loop in both
+    directions — as their DuckDB twins do."""
+    import duckdb
+    import pandas as pd
+
+    from flink_graph_spark.library import kcore, mis, sampling
+
+    edges = [(1, 2), (2, 3), (1, 3), (3, 4), (1, 1), (4, 4)]
+    g = Graph.from_collection(
+        spark, [(i, i) for i in range(1, 5)], [(s, d, 0) for s, d in edges]
+    )
+    con = duckdb.connect()
+    con.register("e", pd.DataFrame(edges, columns=["src", "dst"]))
+    con.register("v", pd.DataFrame({"id": range(1, 5)}))
+
+    def oracle(ctes_final):
+        ctes, final = ctes_final
+        return [tuple(r) for r in con.execute(f"WITH {ctes}\n{final}").fetchall()]
+
+    def spark_rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    assert spark_rows(kcore.k_core(g, k=2, max_iter=4)) == oracle(
+        kcore.oracle_ctes("e", k=2, max_iter=4)
+    )
+    assert spark_rows(mis.maximal_independent_set(g, max_iter=4)) == oracle(
+        mis.oracle_ctes("e", "v", max_iter=4)
+    )
+    assert spark_rows(sampling.random_walks(g, length=3)) == oracle(
+        sampling.oracle_ctes("e", "v", length=3)
+    )
+
+
 def test_weighted_pagerank_matches_numpy_twin(golden):
     import numpy as np
 

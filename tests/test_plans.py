@@ -336,6 +336,75 @@ def test_release_local_checkpoint_contract(spark):
     assert census() == base
 
 
+def test_iterate_kernel_contract(spark):
+    """operators/iterate.py: the cadence (every ``checkpoint_every``
+    supersteps and always the last), the release (only the returned
+    checkpoint outlives the call, the initial state included) and the
+    convergence count riding the checkpoint job."""
+    from pyspark.sql import functions as F
+
+    from flink_graph_spark.operators.iterate import iterate
+
+    sc = spark.sparkContext
+
+    def persisted() -> set[int]:
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    def rdd_id(df) -> int:
+        return int(df._jdf.queryExecution().analyzed().rdd().id())
+
+    def jobs(group: str) -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def bump(s, _it):
+        return s.select("id", (F.col("x") + 1).alias("x"))
+
+    s0 = spark.range(8).select("id", F.lit(0).alias("x")).localCheckpoint(eager=True)
+    out, n, converged = iterate(s0, bump, 0)
+    assert (out, n, converged) == (s0, 0, False)
+
+    group = "iterate-cadence"
+    seen = []  # jobs finished when each superstep starts, then at exit
+
+    def counted_bump(s, it):
+        seen.append(jobs(group))
+        return bump(s, it)
+
+    before = persisted()
+    sc.setJobGroup(group, group)
+    try:
+        s0 = spark.range(8).select("id", F.lit(0).alias("x")).localCheckpoint(eager=False)
+        out, n, converged = iterate(s0, counted_bump, 3, checkpoint_every=2)
+        seen.append(jobs(group))
+    finally:
+        sc.setJobGroup("", "")
+    # checkpoint jobs at supersteps 2 and 3, none at 1
+    assert seen == [0, 0, 1, 2]
+    assert (n, converged) == (3, False)
+    assert [r["x"] for r in out.collect()] == [3] * 8
+    assert persisted() - before == {rdd_id(out)}
+
+    group = "iterate-converge"
+
+    def saturate(s, _it):
+        return s.select(
+            "id", F.least(F.col("x") + 1, F.lit(3)).alias("x"), F.col("x").alias("__old")
+        )
+
+    s0 = spark.range(8).select("id", F.lit(0).alias("x")).localCheckpoint(eager=True)
+    sc.setJobGroup(group, group)
+    try:
+        out, n, converged = iterate(
+            s0, saturate, 10, changed=F.col("x") != F.col("__old")
+        )
+        n_jobs = jobs(group)
+    finally:
+        sc.setJobGroup("", "")
+    # x reaches 3 at superstep 3; superstep 4 changes nothing
+    assert (n, converged) == (4, True)
+    assert n_jobs == 4  # one checkpoint job per superstep, no count job
+
+
 def test_drain_engage_predicate():
     """plans/checkpoints.py drain_shuffle_scratch: the r9 engage
     contract. SWEEP_r08 measured the old engage-on-free-space-alone
@@ -566,13 +635,13 @@ def test_cached_repartition_coalesces_at_small_scale(spark):
 
 
 def test_mode_agg_loops_single_exchange_spine(spark, monkeypatch):
-    """r10 (guide §2.4): the two-level mode/argmax loops (LPA,
-    community detection) hash the raw message stream by ``id`` ONCE per
-    superstep; hash(id) satisfies the clustering requirement of
-    groupBy(id,label), of groupBy(id) AND of the update join, so both
-    aggregates and the join must plan with NO further Exchange. The r9
-    shape paid a second full exchange between the aggregates — and
-    community detection additionally shuffled the whole edge×state
+    """r10 (guide §2.4): the two-level mode/argmax loops (LPA, label
+    spreading, community detection) hash the raw message stream by
+    ``id`` ONCE per superstep; hash(id) satisfies the clustering
+    requirement of groupBy(id,label), of groupBy(id) AND of the update
+    join, so both aggregates and the join must plan with NO further
+    Exchange. The r9 shape paid a second full exchange between the
+    aggregates — and community detection additionally shuffled the whole edge×state
     triplet by dst (a second edge-sized exchange per superstep), now
     replaced by a loop-scoped persisted symmetrized edge table.
     Checkpoints are patched to identity so the superstep plan stays
@@ -581,13 +650,13 @@ def test_mode_agg_loops_single_exchange_spine(spark, monkeypatch):
 
     import flink_graph_spark.library.community as cmod
     import flink_graph_spark.library.label_propagation as lmod
+    import flink_graph_spark.operators.iterate as imod
     from flink_graph_spark.graph import Graph
 
     monkeypatch.setattr(
         CDF, "localCheckpoint", lambda self, eager=True: self
     )
-    monkeypatch.setattr(cmod, "release_local_checkpoint", lambda df: None)
-    monkeypatch.setattr(lmod, "release_local_checkpoint", lambda df: None)
+    monkeypatch.setattr(imod, "release_local_checkpoint", lambda df: None)
 
     e = spark.createDataFrame(
         [(1, 2, 1), (2, 3, 2), (1, 3, 1)], "src long, dst long, value long"
@@ -607,13 +676,19 @@ def test_mode_agg_loops_single_exchange_spine(spark, monkeypatch):
             Graph(g.vertices.selectExpr("id", "id AS value"), e), max_iter=1
         )
     )
+    spread = fmt(
+        lmod.label_spread(
+            Graph(g.vertices.selectExpr("id", "id AS value", "id = 1 AS seed"), e),
+            max_iter=1,
+        )
+    )
     import re
 
     spine = re.compile(
         r"HashAggregate \(\d+\)\n\s*[:+]?\s*\+- HashAggregate \(\d+\)\n"
         r"\s*[:+]?\s*\+- Exchange \(\d+\)"
     )
-    for name, plan in (("community", comm), ("lpa", lpa)):
+    for name, plan in (("community", comm), ("lpa", lpa), ("spread", spread)):
         # the two-level aggregate sits DIRECTLY on one exchange
         assert spine.search(plan), f"{name}: agg spine re-shuffled:\n{plan}"
     # whole-superstep exchange budget (tiny ad-hoc graph, includes the
@@ -623,3 +698,4 @@ def test_mode_agg_loops_single_exchange_spine(spark, monkeypatch):
     # exchange pushes these up.
     assert comm.count("Exchange (") <= 4, comm
     assert lpa.count("Exchange (") <= 4, lpa
+    assert spread.count("Exchange (") <= 4, spread
