@@ -17,16 +17,23 @@ small frame. Every round:
    (aa)(aa), exactly the sequential greedy result);
 4. renumber positions.
 
-Steps 1–4 are the same SQL in Spark and DuckDB, so the oracle replays
+Steps 1–4 are ``_bpe_round``, the one round body; ``_train`` drives it
+with ``operators.iterate`` (one state checkpoint per round) for both
+``bpe_merges`` and ``bpe_compression``.
+
+They are the same SQL in Spark and DuckDB, so the oracle replays
 the whole training loop — merge table parity is exact, not just
 plausible.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 
 BPE_ROUNDS = 4
@@ -34,37 +41,97 @@ BPE_ROUNDS = 4
 _CHARS_T = "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
 
 
-def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
-    """(round, left, right, merged, pair_count) — the first ``rounds``
-    learned BPE merges over the corpus word-frequency table."""
+def _bpe_round(state: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One training round over (w, cnt, rn, sym): returns ``(best,
+    applied)``. ``best`` (bsym, bnxt, pcnt) is the argmax pair, an
+    eager checkpoint (steps 1–2 of the module docstring); ``applied``
+    is the lazy next state with that merge applied and positions
+    renumbered (steps 3–4), so a caller that never reads it pays
+    nothing for it."""
+    wlead = Window.partitionBy("w").orderBy("rn")
+    paired = state.withColumn("nxt", F.lead("sym").over(wlead))
+    pairs = paired.filter(F.col("nxt").isNotNull())
+    best = (
+        pairs.groupBy("sym", "nxt")
+        .agg(F.sum("cnt").alias("pcnt"))
+        .orderBy(F.desc("pcnt"), F.asc("sym"), F.asc("nxt"))
+        .limit(1)
+        .select(F.col("sym").alias("bsym"), F.col("nxt").alias("bnxt"), "pcnt")
+        .localCheckpoint(eager=True)
+    )
+    cand = pairs.join(
+        F.broadcast(best.select("bsym", "bnxt")),
+        (F.col("sym") == F.col("bsym")) & (F.col("nxt") == F.col("bnxt")),
+    ).select("w", "rn")
+    isl = cand.withColumn("isl", F.col("rn") - F.row_number().over(wlead))
+    keep = (
+        isl.withColumn("mn", F.min("rn").over(Window.partitionBy("w", "isl")))
+        .filter(((F.col("rn") - F.col("mn")) % 2) == 0)
+        .select("w", "rn", F.lit(1).alias("k"))
+    )
+    applied = (
+        paired.join(keep, ["w", "rn"], "left")
+        .join(
+            keep.select("w", (F.col("rn") + 1).alias("rn"), F.lit(1).alias("d")),
+            ["w", "rn"],
+            "left",
+        )
+        .filter(F.col("d").isNull())
+        .select(
+            "w",
+            "cnt",
+            "rn",
+            F.when(F.col("k") == 1, F.concat("sym", "nxt"))
+            .otherwise(F.col("sym"))
+            .alias("sym"),
+        )
+        .select("w", "cnt", F.row_number().over(wlead).alias("rn"), "sym")
+    )
+    return best, applied
+
+
+def _train(docs: DataFrame, rounds: int) -> tuple[DataFrame, list[DataFrame]]:
+    """Run ``rounds`` applied BPE rounds on ``iterate``; returns the
+    final state checkpoint and every round's ``best`` checkpoint. The
+    initial state splits every word of the frequency table into its
+    characters."""
     words = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
     )
-    state = words.select(
-        "w", "cnt", F.posexplode(F.expr(_CHARS_T)).alias("p", "sym")
-    ).select("w", "cnt", (F.col("p") + 1).alias("rn"), "sym")
-    state = state.localCheckpoint(eager=True)
-    out = []
-    wlead = Window.partitionBy("w").orderBy("rn")
-    for r in range(1, rounds + 1):
-        paired = state.withColumn("nxt", F.lead("sym").over(wlead))
-        pairs = paired.filter(F.col("nxt").isNotNull())
-        best = (
-            pairs.groupBy("sym", "nxt")
-            .agg(F.sum("cnt").alias("pcnt"))
-            .orderBy(F.desc("pcnt"), F.asc("sym"), F.asc("nxt"))
-            .limit(1)
-            .select(
-                F.col("sym").alias("bsym"),
-                F.col("nxt").alias("bnxt"),
-                "pcnt",
-            )
-            .localCheckpoint(eager=True)
+    state = (
+        words.select(
+            "w", "cnt", F.posexplode(F.expr(_CHARS_T)).alias("p", "sym")
         )
-        out.append(
+        .select("w", "cnt", (F.col("p") + 1).alias("rn"), "sym")
+        .localCheckpoint(eager=True)
+    )
+    bests = []
+
+    def round_(state: DataFrame, _it: int) -> DataFrame:
+        best, applied = _bpe_round(state)
+        bests.append(best)
+        return applied
+
+    state, _, _ = iterate(state, round_, rounds)
+    return state, bests
+
+
+def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
+    """(round, left, right, merged, pair_count) — the first ``rounds``
+    learned BPE merges over the corpus word-frequency table. Keeps
+    every round's ``best`` checkpoint: the result reads them."""
+    state, bests = _train(docs, rounds - 1)
+    # the last learned merge is never APPLIED for the merge table
+    # readout: its round stops at the best pair (the oracle's unrolled
+    # chain stops at the same point), and the state it read is dead
+    bests.append(_bpe_round(state)[0])
+    release_local_checkpoint(state)
+    return reduce(
+        DataFrame.unionByName,
+        (
             best.select(
                 F.lit(r).cast("long").alias("round"),
                 F.col("bsym").alias("left"),
@@ -72,60 +139,9 @@ def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
                 F.concat("bsym", "bnxt").alias("merged"),
                 F.col("pcnt").cast("long").alias("pair_count"),
             )
-        )
-        if r == rounds:
-            # the last learned merge is never APPLIED for the merge
-            # table readout — skip the apply/renumber stage (the
-            # oracle's unrolled chain stops at the same point)
-            break
-        cand = (
-            pairs.join(F.broadcast(best.select("bsym", "bnxt")),
-                       (F.col("sym") == F.col("bsym"))
-                       & (F.col("nxt") == F.col("bnxt")))
-            .select("w", "rn")
-        )
-        wc = Window.partitionBy("w").orderBy("rn")
-        isl = cand.withColumn(
-            "isl", F.col("rn") - F.row_number().over(wc)
-        )
-        keep = (
-            isl.withColumn(
-                "mn", F.min("rn").over(Window.partitionBy("w", "isl"))
-            )
-            .filter(((F.col("rn") - F.col("mn")) % 2) == 0)
-            .select("w", "rn", F.lit(1).alias("k"))
-        )
-        applied = (
-            paired.join(keep, ["w", "rn"], "left")
-            .join(
-                keep.select(
-                    "w", (F.col("rn") + 1).alias("rn"),
-                    F.lit(1).alias("d"),
-                ),
-                ["w", "rn"],
-                "left",
-            )
-            .filter(F.col("d").isNull())
-            .select(
-                "w",
-                "cnt",
-                "rn",
-                F.when(
-                    F.col("k") == 1, F.concat("sym", "nxt")
-                ).otherwise(F.col("sym")).alias("sym"),
-            )
-        )
-        state_prev = state
-        state = applied.select(
-            "w", "cnt", F.row_number().over(wlead).alias("rn"), "sym"
-        ).localCheckpoint(eager=True)
-        release_local_checkpoint(state_prev)
-    # the result reads only the per-round `best` checkpoints
-    release_local_checkpoint(state)
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
+            for r, best in enumerate(bests, 1)
+        ),
+    )
 
 
 def _bpe_train_ctes(rounds: int, final_state: bool = True) -> list[str]:
@@ -204,73 +220,11 @@ FROM bpe_b{r}"""
 
 
 def _final_state(docs: DataFrame, rounds: int) -> DataFrame:
-    """(w, cnt, rn, sym) after ``rounds`` merges — shared by training
-    readout and application."""
-    # re-run the loop body; bpe_merges keeps this tiny (vocab-bounded)
-    words = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    state = words.select(
-        "w", "cnt", F.posexplode(F.expr(_CHARS_T)).alias("p", "sym")
-    ).select("w", "cnt", (F.col("p") + 1).alias("rn"), "sym")
-    state = state.localCheckpoint(eager=True)
-    wlead = Window.partitionBy("w").orderBy("rn")
-    for _ in range(rounds):
-        paired = state.withColumn("nxt", F.lead("sym").over(wlead))
-        pairs = paired.filter(F.col("nxt").isNotNull())
-        best = (
-            pairs.groupBy("sym", "nxt")
-            .agg(F.sum("cnt").alias("pcnt"))
-            .orderBy(F.desc("pcnt"), F.asc("sym"), F.asc("nxt"))
-            .limit(1)
-            .select(F.col("sym").alias("bsym"), F.col("nxt").alias("bnxt"))
-            .localCheckpoint(eager=True)
-        )
-        cand = (
-            pairs.join(
-                F.broadcast(best),
-                (F.col("sym") == F.col("bsym"))
-                & (F.col("nxt") == F.col("bnxt")),
-            ).select("w", "rn")
-        )
-        isl = cand.withColumn(
-            "isl", F.col("rn") - F.row_number().over(wlead)
-        )
-        keep = (
-            isl.withColumn(
-                "mn", F.min("rn").over(Window.partitionBy("w", "isl"))
-            )
-            .filter(((F.col("rn") - F.col("mn")) % 2) == 0)
-            .select("w", "rn", F.lit(1).alias("k"))
-        )
-        state_prev = state
-        state = (
-            paired.join(keep, ["w", "rn"], "left")
-            .join(
-                keep.select(
-                    "w", (F.col("rn") + 1).alias("rn"), F.lit(1).alias("d")
-                ),
-                ["w", "rn"],
-                "left",
-            )
-            .filter(F.col("d").isNull())
-            .select(
-                "w",
-                "cnt",
-                "rn",
-                F.when(F.col("k") == 1, F.concat("sym", "nxt"))
-                .otherwise(F.col("sym"))
-                .alias("sym"),
-            )
-            .select(
-                "w", "cnt", F.row_number().over(wlead).alias("rn"), "sym"
-            )
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(state_prev)
+    """(w, cnt, rn, sym) after ``rounds`` merges, each applied — the
+    same rounds as ``bpe_merges``. Every ``best`` was read only by the
+    state checkpoint that applied it, so all of them are released."""
+    state, bests = _train(docs, rounds)
+    for best in bests:
         release_local_checkpoint(best)
     return state
 

@@ -25,6 +25,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 
 DIM = 64
@@ -73,6 +74,14 @@ def with_norm(emb: DataFrame) -> DataFrame:
         .withColumn("nrm", norm_expr("e"))
         .filter(F.col("nrm") > 0)
     )
+
+
+def _dims(emb: DataFrame, *extra: Column) -> DataFrame:
+    """(vec_id, *extra, pos, val): one double per embedding coordinate;
+    ``extra`` columns may read ``pos``."""
+    return emb.select(
+        "vec_id", F.posexplode("embedding").alias("pos", "val")
+    ).select("vec_id", *extra, "pos", F.col("val").cast("double").alias("val"))
 
 
 EMB_NORM_SQL = f"""
@@ -745,13 +754,11 @@ def kmeans_centroids(
     (e.g. 1-10M vectors) — the plan is identical with a ``.sample`` or
     id-range filter upstream; the full-corpus pass happens once at
     assignment time in ``ann_topk_ivf``, not per training round.
+    Each round's centroids are the loop state of ``iterate``: one eager
+    checkpoint per round, the superseded one released.
     """
-    cent = n.filter(F.col("vec_id") < nlist).select(
-        F.col("vec_id").alias("list_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    for _ in range(iters):
+
+    def round_(cent: DataFrame, _it: int) -> DataFrame:
         assigned = assign_lists(n, cent).select("list_id", "e")
         means = (
             assigned.select("list_id", F.posexplode("e").alias("pos", "x"))
@@ -772,7 +779,7 @@ def kmeans_centroids(
         me_nrm = F.sqrt(
             F.expr(_fold_sum("zip_with(me, me, (x, y) -> x * y)"))
         )
-        cent = (
+        return (
             cent.select("list_id", "ce", "cn")
             .join(means, "list_id", "left")
             .select(
@@ -782,8 +789,14 @@ def kmeans_centroids(
                 ).otherwise(F.col("ce")).alias("ce"),
             )
             .withColumn("cn", norm_expr("ce"))
-            .localCheckpoint(eager=True)
         )
+
+    seeds = n.filter(F.col("vec_id") < nlist).select(
+        F.col("vec_id").alias("list_id"),
+        F.col("e").alias("ce"),
+        F.col("nrm").alias("cn"),
+    )
+    cent, _, _ = iterate(seeds, round_, iters)
     return cent
 
 
@@ -1715,10 +1728,7 @@ SELECT label, vec_id, cos_centroid FROM (
 
 def embedding_quantize(emb: DataFrame, round_to: int = 6) -> DataFrame:
     """(vec_id, code_sum, mse_ppm) for every vector."""
-    dims = emb.select(
-        "vec_id",
-        F.posexplode("embedding").alias("pos", "val"),
-    ).select("vec_id", "pos", F.col("val").cast("double").alias("val"))
+    dims = _dims(emb)
     cal = dims.groupBy("pos").agg(
         F.min("val").alias("lo"), F.max("val").alias("hi")
     )
@@ -1800,9 +1810,7 @@ def principal_direction(
 ) -> DataFrame:
     """(pos, loading) — unit-norm first principal direction after
     ``max_iter`` power-iteration rounds on the centered corpus."""
-    dims = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "val")
-    ).select("vec_id", "pos", F.col("val").cast("double").alias("val"))
+    dims = _dims(emb)
     mean = dims.groupBy("pos").agg(F.avg("val").alias("mu"))
     x = (
         dims.join(F.broadcast(mean), "pos")
@@ -1816,12 +1824,7 @@ def principal_direction(
         # the (pos, loading) schema instead of an ANSI divide-by-zero
         # from the 1/sqrt(n_dim) start vector
         return spark.createDataFrame([], "pos int, loading double")
-    v = None  # dims-sized frame (pos, v)
-    v = spark.range(n_dim).select(
-        F.col("id").cast("int").alias("pos"),
-        (F.lit(1.0) / F.sqrt(F.lit(float(n_dim)))).alias("v"),
-    )
-    for _ in range(max_iter):
+    def round_(v: DataFrame, _it: int) -> DataFrame:
         s = (
             x.join(F.broadcast(v), "pos")
             .groupBy("vec_id")
@@ -1833,24 +1836,23 @@ def principal_direction(
             .agg(F.sum(F.col("s") * F.col("x")).alias("w"))
         )
         norm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nm"))
-        v_prev = v
         # a zero image (X v = 0 — e.g. every vector identical, so the
         # centered matrix is all zeros) has no direction to normalize:
         # keep w (zeros) instead of ANSI-dividing by zero; the loadings
         # come out all-zero, mirrored by the twin's CASE
-        v = (
-            w.crossJoin(F.broadcast(norm))
-            .select(
-                "pos",
-                F.when(F.col("nm") > 0, F.col("w") / F.col("nm"))
-                .otherwise(F.col("w"))
-                .alias("v"),
-            )
-            .localCheckpoint(eager=True)
+        return w.crossJoin(F.broadcast(norm)).select(
+            "pos",
+            F.when(F.col("nm") > 0, F.col("w") / F.col("nm"))
+            .otherwise(F.col("w"))
+            .alias("v"),
         )
-        # first v_prev is a plain range (release no-ops); later ones
-        # are superseded loop checkpoints
-        release_local_checkpoint(v_prev)
+
+    # dims-sized state (pos, v), one checkpoint per round
+    v0 = spark.range(n_dim).select(
+        F.col("id").cast("int").alias("pos"),
+        (F.lit(1.0) / F.sqrt(F.lit(float(n_dim)))).alias("v"),
+    )
+    v, _, _ = iterate(v0, round_, max_iter)
     release_local_checkpoint(x)
     return v.select(
         "pos", F.round("v", round_to).alias("loading")
@@ -1915,31 +1917,48 @@ def principal_direction_sql(
 # assignment window per vector + one dimension-keyed centroid update —
 # corpus-sized frames only in the distance join (corpus × k rows of
 # scalars, the unavoidable k-means work), centroids always k×dims.
+# ``kmeans_clusters`` and ``pq_codes`` both run ``_lloyd``; PQ keys
+# every frame one level deeper, by subspace.
 
 KMEANS_K = 8
 KMEANS_ROUNDS = 2
 
 
-def kmeans_clusters(
-    emb: DataFrame, k: int = KMEANS_K, rounds: int = KMEANS_ROUNDS
+def _lloyd(
+    dims: DataFrame, k: int, rounds: int, keys: tuple[str, ...] = ()
 ) -> DataFrame:
-    """(vec_id, cluster) — assignment after ``rounds`` Lloyd rounds."""
-    from pyspark.sql import Window
+    """(vec_id, *keys, cid) — the assignment after ``rounds`` Lloyd
+    rounds over the exploded ``(vec_id, *keys, pos, val)`` frame
+    (checkpointed here for the loop), one independent clustering per
+    ``keys`` group (``()`` for k-means, ``("sub",)`` for the PQ
+    subspaces).
 
-    dims = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "val")
-    ).select(
-        "vec_id", "pos", F.col("val").cast("double").alias("val")
-    ).localCheckpoint(eager=True)
-    cent = dims.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("cid"))
-    assign = None
-    for _ in range(rounds):
+    The assignment is the loop state of ``iterate``: one eager
+    checkpoint per round, the superseded one released. A round
+    averages each cluster's members into centroids (one (keys, cid,
+    pos)-keyed aggregate), broadcasts them into one (vec, keys, cid)
+    distance aggregate and keeps the nearest cid per (vec, keys) with
+    one window. The initial state is the seed vectors ``vec_id < k``,
+    each its own cluster: round 1 reads them as centroids directly,
+    since a one-member mean is the vector itself."""
+    dims = dims.localCheckpoint(eager=True)
+    w = Window.partitionBy("vec_id", *keys).orderBy(F.asc("d2"), F.asc("cid"))
+
+    def round_(prev: DataFrame, it: int) -> DataFrame:
+        if it == 1:
+            cent = prev.select(
+                *keys, F.col("vec_id").alias("cid"), "pos",
+                F.col("val").alias("cval"),
+            )
+        else:
+            cent = (
+                dims.join(prev, ["vec_id", *keys])
+                .groupBy(*keys, "cid", "pos")
+                .agg(F.avg("val").alias("cval"))
+            )
         d2 = (
-            dims.join(F.broadcast(cent), "pos")
-            .groupBy("vec_id", "cid")
+            dims.join(F.broadcast(cent), [*keys, "pos"])
+            .groupBy("vec_id", *keys, "cid")
             .agg(
                 F.sum(
                     (F.col("val") - F.col("cval"))
@@ -1947,22 +1966,23 @@ def kmeans_clusters(
                 ).alias("d2")
             )
         )
-        assign_prev = assign
-        assign = (
+        return (
             d2.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .select("vec_id", "cid")
-            .localCheckpoint(eager=True)
+            .select("vec_id", *keys, "cid")
         )
-        if assign_prev is not None:
-            release_local_checkpoint(assign_prev)
-        cent = (
-            dims.join(assign, "vec_id")
-            .groupBy("cid", "pos")
-            .agg(F.avg("val").alias("cval"))
-        )
+
+    assign, _, _ = iterate(dims.filter(F.col("vec_id") < k), round_, rounds)
     release_local_checkpoint(dims)
-    return assign.select(
+    return assign
+
+
+def kmeans_clusters(
+    emb: DataFrame, k: int = KMEANS_K, rounds: int = KMEANS_ROUNDS
+) -> DataFrame:
+    """(vec_id, cluster) — assignment after ``rounds`` Lloyd rounds
+    (``_lloyd`` over the whole vector, no extra key)."""
+    return _lloyd(_dims(emb), k, rounds).select(
         "vec_id", F.col("cid").cast("long").alias("cluster")
     ).orderBy("vec_id")
 
@@ -2155,56 +2175,14 @@ def pq_codes(
     64 float dims → 8 4-bit codes = 32× smaller).
 
     Scale shape: ALL subspaces train simultaneously — the dimension
-    frame carries a ``sub`` column, so each Lloyd round is ONE broadcast
+    frame carries a ``sub`` column and ``_lloyd``, the Lloyd round of
+    ``kmeans_clusters``, runs keyed by it: each round is ONE broadcast
     join + ONE (vec, sub, cid) distance aggregate + ONE centroid
-    aggregate for the whole codebook (same relational-kmeans kernel as
-    ``kmeans_clusters``, keyed one level deeper; deterministic init =
-    first k vectors, cid tie-break on equal distance)."""
-    from pyspark.sql import Window
-
+    aggregate for the whole codebook (deterministic init = first k
+    vectors, cid tie-break on equal distance)."""
     sub_dim = DIM // subs
-    dims = (
-        emb.select("vec_id", F.posexplode("embedding").alias("pos", "val"))
-        .select(
-            "vec_id",
-            F.expr(f"pos div {sub_dim}").alias("sub"),
-            "pos",
-            F.col("val").cast("double").alias("val"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cent = dims.filter(F.col("vec_id") < k).select(
-        "sub", F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
-    )
-    w = Window.partitionBy("vec_id", "sub").orderBy(F.asc("d2"), F.asc("cid"))
-    assign = None
-    for _ in range(rounds):
-        d2 = (
-            dims.join(F.broadcast(cent), ["sub", "pos"])
-            .groupBy("vec_id", "sub", "cid")
-            .agg(
-                F.sum(
-                    (F.col("val") - F.col("cval"))
-                    * (F.col("val") - F.col("cval"))
-                ).alias("d2")
-            )
-        )
-        assign_prev = assign
-        assign = (
-            d2.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("vec_id", "sub", "cid")
-            .localCheckpoint(eager=True)
-        )
-        if assign_prev is not None:
-            release_local_checkpoint(assign_prev)
-        cent = (
-            dims.join(assign, ["vec_id", "sub"])
-            .groupBy("sub", "cid", "pos")
-            .agg(F.avg("val").alias("cval"))
-        )
-    release_local_checkpoint(dims)
-    return assign.select(
+    dims = _dims(emb, F.expr(f"pos div {sub_dim}").alias("sub"))
+    return _lloyd(dims, k, rounds, ("sub",)).select(
         "vec_id",
         F.col("sub").cast("long").alias("sub"),
         F.col("cid").cast("long").alias("code"),
@@ -2364,27 +2342,23 @@ def feature_propagation(
             F.expr("transform(embedding, x -> cast(x as double))")
         ).alias("pos", "x"),
     ).select("vec_id", (F.col("pos") + 1).alias("dim"), "x")
-    x = x.localCheckpoint(eager=True)
-    for _ in range(rounds):
+
+    def round_(x: DataFrame, _it: int) -> DataFrame:
         nb = (
             e.join(x.withColumnRenamed("vec_id", "dst"), "dst")
             .groupBy(F.col("src").alias("vec_id"), "dim")
             .agg(F.avg("x").alias("nx"))
         )
-        x_prev = x
-        x = (
-            x.join(nb, ["vec_id", "dim"], "left")
-            .select(
-                "vec_id",
-                "dim",
-                (
-                    F.lit(1.0 - alpha) * F.col("x")
-                    + F.lit(alpha) * F.coalesce("nx", F.col("x"))
-                ).alias("x"),
-            )
-            .localCheckpoint(eager=True)
+        return x.join(nb, ["vec_id", "dim"], "left").select(
+            "vec_id",
+            "dim",
+            (
+                F.lit(1.0 - alpha) * F.col("x")
+                + F.lit(alpha) * F.coalesce("nx", F.col("x"))
+            ).alias("x"),
         )
-        release_local_checkpoint(x_prev)
+
+    x, _, _ = iterate(x.localCheckpoint(eager=True), round_, rounds)
     release_local_checkpoint(e)
     return x.filter(F.col("dim") <= out_dims).select(
         "vec_id",

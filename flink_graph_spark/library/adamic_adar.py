@@ -177,8 +177,10 @@ def adamic_adar(
     # stream by hash(b) into waves of ~WAVE_TARGET_BYTES each; every
     # wave's narrow output (triangle-carrying edges + their cs arrays —
     # 8.1M rows / 18.8M elements at 10x) is checkpointed and the
-    # wave's scratch drained before the next begins. One wave below
-    # the threshold: the plan is byte-identical to the r7 design.
+    # wave's scratch drained before the next begins. One wave (every
+    # graph below WAVE_EDGE_THRESHOLD, and a bigger one whose stream
+    # fits one wave): the plan is byte-identical to the r7 design and,
+    # like triangles._edge_commons' one-wave path, drains nothing.
     from ..plans.checkpoints import drain_shuffle_scratch
 
     from .triangles import _wave_count, _wave_filter
@@ -189,7 +191,6 @@ def adamic_adar(
         enriched = _attach(oe).localCheckpoint(eager=True)
         release_local_checkpoint(oe)
         release_local_checkpoint(deg)
-        drain_shuffle_scratch(spark)
     else:
         # checkpoint the shared compact frames once so waves do not
         # re-run the degree union / packing / adjacency work (_attach

@@ -32,6 +32,17 @@ loop                           every  why
 ``spectral_radius``,
 ``incremental_pagerank``,
 ``random_walks``
+``principal_direction``,       1      The functions-package loops, one checkpoint
+``feature_propagation``,              per round as before the kernel: the next
+``kmeans_centroids``,                 round reads each state in a join and in an
+``similarity._lloyd``,                aggregate. ``_lloyd`` is the one Lloyd round
+``bpe._train``                        of ``kmeans_clusters`` and ``pq_codes``;
+                                      ``_train`` runs the one BPE round for
+                                      ``bpe_merges`` and ``bpe_compression``,
+                                      whose best-pair checkpoint is a second job
+                                      of the step. ``bpe_merges`` trains
+                                      ``rounds - 1`` supersteps and ends its last
+                                      round at the best pair, never applied.
 ``hits``                       hand   Every 3rd iteration, never the last (the
                                       caller's action evaluates it). sf0.01 cs:
                                       every 1 = 13.3 s, 2 = 6.8 s, 3 = 4.2 s,
@@ -44,6 +55,16 @@ loop                           every  why
 ``k_core``, ``scc``,           hand   Two frames of state (edges and vertices,
 ``boruvka_mst``,                      levels and frontier), each with its own
 ``betweenness``                       release order.
+``k_truss``                    hand   The dropped-edge count is the job that
+                                      materializes a lazy checkpoint of the
+                                      support table, and the next edge set is
+                                      filtered from that table; the kernel
+                                      counts only over the stepped state, so it
+                                      would pay a second support job per round.
+``adamic_adar``,               hand   Wave loops: each wave is an independent
+``jaccard_similarity``,               slice of the edges, checkpointed and then
+``triangles._edge_commons``           drained, and no state carries from one
+                                      wave to the next.
 =============================  =====  ============================================
 """
 

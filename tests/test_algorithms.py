@@ -403,6 +403,25 @@ def test_adamic_adar_hand_computed(spark):
     assert all(v > 0 for v in got.values())
 
 
+def test_adamic_adar_single_wave_does_not_drain(spark, monkeypatch):
+    """A graph below the wave threshold runs one wave, the r7 plan:
+    no shuffle-scratch drain (on a box with < 40 GB free scratch each
+    drain call sleeps through its 15 s evidence probe)."""
+    from flink_graph_spark.library.adamic_adar import adamic_adar
+    from flink_graph_spark.plans import checkpoints
+
+    calls = []
+    monkeypatch.setattr(
+        checkpoints, "drain_shuffle_scratch", lambda *a, **k: calls.append(a)
+    )
+    edges = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
+    g = Graph.from_collection(
+        spark, [(i, i) for i in range(1, 5)], [(s, d, 0) for s, d in edges]
+    )
+    assert len(adamic_adar(g).collect()) == len(edges)
+    assert calls == []
+
+
 def test_adamic_adar_symmetrized_distinct_edges_not_doubled(spark):
     """r7 regression (ADVICE high): a symmetrized graph carries both
     orientations as DISTINCT directed rows, so distinct_edges=True holds

@@ -1373,6 +1373,23 @@ def test_pq_codes_shape_and_self_consistency(spark):
     assert all(subs == {0, 1, 2, 3} for subs in per_vec.values())
 
 
+def test_pq_codes_one_subspace_equals_kmeans_clusters(spark):
+    """``pq_codes`` and ``kmeans_clusters`` run the same Lloyd round:
+    with one subspace spanning every dimension, the codes are the
+    k-means clusters."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    codes = {
+        r["vec_id"]: r["code"]
+        for r in sim_mod.pq_codes(emb, subs=1, k=8, rounds=2).collect()
+    }
+    clusters = rows_as_dict(
+        sim_mod.kmeans_clusters(emb, k=8, rounds=2), "vec_id", "cluster"
+    )
+    assert len(clusters) == emb.count()
+    assert len(set(clusters.values())) > 1
+    assert codes == clusters
+
+
 def test_ngram_novelty_orders_by_first_seen(spark):
     d = spark.createDataFrame(
         [

@@ -405,6 +405,106 @@ def test_iterate_kernel_contract(spark):
     assert n_jobs == 4  # one checkpoint job per superstep, no count job
 
 
+def test_cadence_table_names_every_checkpointing_loop():
+    """Every function in the package whose for/while loop body calls
+    ``.localCheckpoint`` is either the ``iterate`` kernel or a row of its
+    cadence table, so a new hand-rolled loop cannot go unlisted. Nested
+    functions are scanned on their own: a ``step`` closure handed to the
+    kernel is not a loop of its enclosing function. A table row names a
+    function in its first column (``module.name`` counts as ``name``)."""
+    import ast
+    import pathlib
+
+    import flink_graph_spark
+    import flink_graph_spark.operators.iterate as it_mod
+
+    def own_nodes(node):
+        stack = list(ast.iter_child_nodes(node))
+        while stack:
+            n = stack.pop()
+            if isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
+            ):
+                continue
+            yield n
+            stack.extend(ast.iter_child_nodes(n))
+
+    def checkpoints_in_loop(fn) -> bool:
+        return any(
+            isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "localCheckpoint"
+            for loop in own_nodes(fn)
+            if isinstance(loop, (ast.For, ast.While))
+            for c in own_nodes(loop)
+        )
+
+    root = pathlib.Path(flink_graph_spark.__file__).parent
+    looping = {
+        f"{path.relative_to(root)}::{fn.name}"
+        for path in root.rglob("*.py")
+        for fn in ast.walk(ast.parse(path.read_text()))
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and checkpoints_in_loop(fn)
+    }
+    assert "operators/iterate.py::iterate" in looping
+    lines = it_mod.__doc__.splitlines()
+    rules = [i for i, ln in enumerate(lines) if ln.startswith("=====")]
+    width = len(lines[rules[0]].split(" ")[0])
+    table = {"iterate"} | {
+        name.rsplit(".", 1)[-1]
+        for ln in lines[rules[1] + 1:rules[-1]]
+        for name in re.findall(r"``([\w.]+)``", ln[:width])
+    }
+    missing = sorted(f for f in looping if f.split("::")[1] not in table)
+    assert not missing, f"loops missing from the iterate.py cadence table: {missing}"
+
+
+@pytest.mark.parametrize(
+    "op, kept",
+    [
+        ("principal_direction", 1),
+        ("feature_propagation", 1),
+        ("kmeans_clusters", 1),
+        ("pq_codes", 1),
+        ("kmeans_centroids", 1),
+        ("bpe_compression", 1),
+        ("bpe_merges", 3),
+    ],
+)
+def test_functions_loops_keep_only_result_checkpoints(spark, op, kept):
+    """The driver loops of ``functions/`` run on ``iterate``: once the
+    result is collected, the persistent RDDs gained are only the
+    checkpoints the result reads — the final state (or, for
+    ``bpe_merges``, one best-pair checkpoint per round)."""
+    from conftest import SF_DIR
+
+    from flink_graph_spark.functions import bpe as bpe_mod
+    from flink_graph_spark.functions import similarity as sim_mod
+    from flink_graph_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    docs = load_table(spark, SF_DIR, "documents").limit(100)
+    run = {
+        "principal_direction": lambda: sim_mod.principal_direction(emb),
+        "feature_propagation": lambda: sim_mod.feature_propagation(emb),
+        "kmeans_clusters": lambda: sim_mod.kmeans_clusters(emb),
+        "pq_codes": lambda: sim_mod.pq_codes(emb),
+        "kmeans_centroids": lambda: sim_mod.kmeans_centroids(
+            sim_mod.with_norm(emb), nlist=8, iters=3
+        ),
+        "bpe_compression": lambda: bpe_mod.bpe_compression(docs),
+        "bpe_merges": lambda: bpe_mod.bpe_merges(docs, rounds=3),
+    }[op]
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(jmap().keySet().toArray())
+    run().collect()
+    gained = set(jmap().keySet().toArray()) - before
+    assert len(gained) == kept
+    for rid in gained:
+        jmap().get(rid).unpersist(False)
+
+
 def test_drain_engage_predicate():
     """plans/checkpoints.py drain_shuffle_scratch: the r9 engage
     contract. SWEEP_r08 measured the old engage-on-free-space-alone
