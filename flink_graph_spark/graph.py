@@ -36,6 +36,8 @@ from typing import Callable, Iterable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plans.reuse import reuse_leaf
+
 
 class EdgeDirection(Enum):
     """Which incident edges a neighborhood op groups over.
@@ -317,10 +319,12 @@ class Graph:
         whose BOTH endpoints survive (subgraph, Graph.java ~L210-260).
 
         Two LEFT SEMI joins + filter — the reference's
-        filter→join-on-src→join-on-dst shape, Catalyst-planned.
+        filter→join-on-src→join-on-dst shape, Catalyst-planned. Both
+        joins read one id leaf (``plans.reuse``), so the id side is
+        shuffled or broadcast once.
         """
         v2 = self._vertices.filter(vertex_pred)
-        ids = v2.select("id")
+        ids = reuse_leaf(v2.select("id"))
         e2 = (
             self._edges.join(ids, self._edges["src"] == ids["id"], "left_semi")
             .join(ids, F.col("dst") == ids["id"], "left_semi")
@@ -733,12 +737,16 @@ class Graph:
         only in later Gelly — exposed here anyway per SURVEY §2.4).
 
         Columns: src, dst, <edge values>, src_<c>, dst_<c>.
+
+        Both endpoint sides read one vertex leaf (``plans.reuse``), so the
+        vertex frame is broadcast or shuffled once, not once per side.
         """
         vcols = self._schema.vertex_value_cols
-        sv = self._vertices.select(
+        v = reuse_leaf(self._vertices)
+        sv = v.select(
             F.col("id").alias("__sid"), *[F.col(c).alias(f"src_{c}") for c in vcols]
         )
-        dv = self._vertices.select(
+        dv = v.select(
             F.col("id").alias("__did"), *[F.col(c).alias(f"dst_{c}") for c in vcols]
         )
         e = self._edges
@@ -800,8 +808,9 @@ class Graph:
         )
 
     def remove_vertices(self, ids: DataFrame) -> "Graph":
-        """Set-removal via ANTI joins (scale path for bulk deletes)."""
-        ids = ids.select("id")
+        """Set-removal via ANTI joins (scale path for bulk deletes). Both
+        edge joins read one id leaf (``plans.reuse``)."""
+        ids = reuse_leaf(ids.select("id"))
         v = self._vertices.join(ids, "id", "left_anti")
         e = (
             self._edges.join(ids, self._edges["src"] == ids["id"], "left_anti")
@@ -889,8 +898,12 @@ class Graph:
 
     def partition_by_src(self, num_partitions: int | None = None) -> "Graph":
         """Pre-partition edges by src and persist — reused across Pregel
-        supersteps so the per-iteration join shuffles only the (small)
-        message side.
+        supersteps, so no superstep re-derives the edge table.
+
+        The planner does not see the src partitioning: with
+        ``canChangeCachedPlanOutputPartitioning=true`` (``plans.session``)
+        the cached frame reports ``UnknownPartitioning``, so a join on
+        src still broadcasts or shuffles a side (see ``operators.pregel``).
         """
         e = (
             self._edges.repartition(num_partitions, "src")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.reuse import reuse_leaf
 
 PROJ_CAP = 64
 PROJ_TOP_K = 1000
@@ -35,7 +36,9 @@ def project_top(
     deterministic top-k by (shared DESC, u, v)."""
     e = graph.edges.select("src", "dst")
     w = Window.partitionBy("dst").orderBy("src")
-    capped = (
+    # both sides of the self-join read one leaf: the window's shuffle
+    # runs once (plans.reuse)
+    capped = reuse_leaf(
         e.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= cap)
         .select("src", "dst")

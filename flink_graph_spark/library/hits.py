@@ -19,13 +19,14 @@ Fixed iteration count → DuckDB-oracle-able via unrolled CTEs
 
 Scale: each iteration is two aggregate_messages passes (single-sided
 reads → one vertex join each); the edge table is used untouched, so a
-builder's shared src-partitioned cache serves every iteration; lineage
-(two joins/iter, growing twice as fast as PageRank's one) is truncated
-with an eager localCheckpoint every 3rd iteration, never after the last
-one: the caller's action evaluates the final lineage directly. This loop
-stays off the ``operators.iterate`` kernel, whose trailing checkpoint
-would add a job; see the kernel's cadence table. The final totals are
-1-row aggregates broadcast back into the plan — never a driver collect.
+builder's shared src-partitioned cache serves every iteration. The
+state after the auth half is read twice (the hub messages and the hub
+update join), and over a cached edge table AQE cannot reuse an
+exchange between the two reads, so it is re-rooted on one leaf
+(``plans.reuse``) and its stages run once. The loop runs on the
+``operators.iterate`` kernel with one checkpoint per iteration; see the
+kernel's cadence table. The final totals are 1-row aggregates broadcast
+back into the plan — never a driver collect.
 """
 
 from __future__ import annotations
@@ -34,25 +35,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, GraphAlgorithm
-from ..plans.checkpoints import release_local_checkpoint
+from ..operators.iterate import iterate
+from ..plans.reuse import reuse_leaf
 
 
 def hits(graph: Graph, max_iter: int = 5, round_to: int | None = 6) -> DataFrame:
     """Returns (id, hub, auth), both L1-normalized, after ``max_iter``
     full (auth then hub) iterations."""
-    v = graph.vertices.select(
-        "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-    ).localCheckpoint(eager=True)
-    live_ckpt = v
 
-    for it in range(max_iter):
+    def iteration(v: DataFrame, _it: int) -> DataFrame:
         auth_msgs = graph.aggregate_messages(
             agg=[F.sum("__msg").alias("__raw")],
             msg_to_dst=F.col("src_hub"),
             msg_to_dst_reads=("src",),
             vertices=v,
         )
-        v = (
+        v = reuse_leaf(
             v.select("id", "hub")
             .join(auth_msgs, "id", "left")
             .select(
@@ -65,24 +63,20 @@ def hits(graph: Graph, max_iter: int = 5, round_to: int | None = 6) -> DataFrame
             msg_to_src_reads=("dst",),
             vertices=v,
         )
-        v = (
+        return (
             v.select("id", "auth")
             .join(hub_msgs, "id", "left")
             .select(
                 "id", F.coalesce(F.col("__raw"), F.lit(0.0)).alias("hub"), "auth"
             )
         )
-        # Two joins per iteration grows lineage twice as fast as
-        # PageRank's one, but an EAGER checkpoint is a full job: measured
-        # on the sf0.01 cs graph, every-iteration = 13.3s, every-2 =
-        # 6.8s, every-3 = 4.2s, never = 10.6s (analysis time blows past
-        # ~6 unchecked joins). Every 3rd iteration is the sweet spot;
-        # the final iteration's lineage is evaluated by the caller's
-        # action directly, so no trailing checkpoint.
-        if (it + 1) % 3 == 0 and it != max_iter - 1:
-            v = v.localCheckpoint(eager=True)
-            release_local_checkpoint(live_ckpt)
-            live_ckpt = v
+
+    v0 = reuse_leaf(
+        graph.vertices.select(
+            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+        )
+    )
+    v, _, _ = iterate(v0, iteration, max_iter)
 
     totals = v.agg(
         F.sum("hub").alias("__ht"), F.sum("auth").alias("__at")

@@ -105,6 +105,7 @@ def jaccard_similarity(
         drain_shuffle_scratch,
         release_local_checkpoint,
     )
+    from ..plans.reuse import reuse_leaf
 
     e = graph.edges.select("src", "dst")
     if salt_buckets:
@@ -152,7 +153,9 @@ def jaccard_similarity(
             # plan reads anyway — no extra derivation pass
             hint = graph.edge_count()
     if hint is None or hint <= _WAVE_EDGE_THRESHOLD:
-        return _attach(e, adj)
+        # both endpoint sides read one adjacency leaf: its collect_set
+        # shuffle runs once instead of once per side
+        return _attach(e, reuse_leaf(adj))
 
     # big graph: pay one sizing action over the materialized adjacency
     # (the plan reuses the checkpoint, so the groupBy is not recomputed)

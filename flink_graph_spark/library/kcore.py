@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.checkpoints import release_local_checkpoint
+from ..plans.reuse import reuse_leaf
 
 
 def k_core(graph: Graph, k: int = 3, max_iter: int = 8) -> DataFrame:
@@ -127,8 +128,9 @@ def rich_club(
     ends), the per-edge min-endpoint-degree needs two id joins, and the
     WHOLE ladder collapses into two single-row conditional aggregates +
     a stack — no per-k pass, no per-k shuffle. φ is NULL when the club
-    has <2 members."""
-    deg = (
+    has <2 members. Every read of the degree table reads one leaf
+    (``plans.reuse``), so its shuffle runs once."""
+    deg = reuse_leaf(
         graph.edges.select(F.col("src").alias("id"))
         .unionByName(graph.edges.select(F.col("dst").alias("id")))
         .groupBy("id")

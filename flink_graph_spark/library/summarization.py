@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, GraphAlgorithm
+from ..plans.reuse import reuse_leaf
 
 
 def vertex_groups(vertices: DataFrame) -> DataFrame:
@@ -51,14 +52,15 @@ def summarize_edges(graph: Graph, include_edge_value: bool = False) -> DataFrame
     ``include_edge_value=True`` mirrors Gelly exactly (edges grouped by
     (srcGroup, dstGroup, edgeValue)); False collapses all parallel
     edges between two groups regardless of value — the common
-    condensation-graph ask.
+    condensation-graph ask. Both endpoint joins read one mapping leaf
+    (``plans.reuse``).
     """
-    mapping = graph.vertices.join(
-        vertex_groups(graph.vertices).select(
-            F.col("group_value").alias("value"), "rep", "group_value"
-        ),
-        "value",
-    ).select("id", "rep", "group_value")
+    groups = vertex_groups(graph.vertices).select(
+        F.col("group_value").alias("value"), "rep", "group_value"
+    )
+    mapping = reuse_leaf(
+        graph.vertices.join(groups, "value").select("id", "rep", "group_value")
+    )
     e = (
         graph.edges.join(
             mapping.select(

@@ -32,6 +32,15 @@ loop                           every  why
 ``spectral_radius``,
 ``incremental_pagerank``,
 ``random_walks``
+``hits``                       1      The auth-half state is re-rooted on one
+                                      leaf (``plans.reuse``), so no stage runs
+                                      twice; the checkpoint cuts the RDD lineage,
+                                      whose skipped stages pile up otherwise.
+                                      sf0.1 cs, ``local[4]``, jobs/stages with
+                                      skipped: every 1 = 48/124; the hand loop
+                                      it replaces (every 3rd, lazy between) =
+                                      83/208; both halves re-rooted and no
+                                      checkpoint = 43/337.
 ``principal_direction``,       1      The functions-package loops, one checkpoint
 ``feature_propagation``,              per round as before the kernel: the next
 ``kmeans_centroids``,                 round reads each state in a join and in an
@@ -43,11 +52,6 @@ loop                           every  why
                                       of the step. ``bpe_merges`` trains
                                       ``rounds - 1`` supersteps and ends its last
                                       round at the best pair, never applied.
-``hits``                       hand   Every 3rd iteration, never the last (the
-                                      caller's action evaluates it). sf0.01 cs:
-                                      every 1 = 13.3 s, 2 = 6.8 s, 3 = 4.2 s,
-                                      never = 10.6 s. The kernel's trailing
-                                      checkpoint would add a job.
 ``maximal_independent_set``,   hand   Every round's checkpoint stays alive: lazy
 ``bipartite_matching``,               per-round outputs (winners, matched pairs,
 ``neighborhood_function``             per-radius estimates) read it after the

@@ -14,7 +14,10 @@ costs one exchange, not a message exchange plus an update join.
 Scale design:
 * Edges are persisted once (caller may pre-partition by src via
   ``Graph.partition_by_src``) so the loop-invariant side is never
-  rescanned from parquet nor reshuffled.
+  rescanned from parquet. The planner does not see that partitioning
+  (see the comment above the ``partition_by_src`` call in ``pregel``),
+  so each superstep's message join still broadcasts or shuffles one of
+  its sides.
 * The superstep loop is ``operators.iterate.iterate``, which owns the
   checkpoint, its release and the convergence count. Every superstep
   ends in an eager checkpoint (cadence 1 in the kernel's table): the
@@ -119,14 +122,18 @@ def pregel(
     change with an empty workset). NOT valid for PageRank-style sums,
     which need every contribution every superstep.
     """
-    # Pre-partition the loop-invariant edges by src so the per-superstep
-    # message join reuses one cached partitioning across all iterations:
-    # only the (small) vertex-state side shuffles each round. Measured on
-    # the sf0.1 customer–supplier graph this is ~30% faster per superstep
-    # and removes the worst-case re-shuffle variance. Graphs whose edge
-    # table is already src-partitioned + cached (the builder posture)
-    # are used as-is — their cache is shared across queries, so this
-    # loop must not evict it on exit.
+    # Persist the loop-invariant edges (repartitioned by src) once, so
+    # no superstep re-derives them. The src partitioning is not visible
+    # to the planner: with canChangeCachedPlanOutputPartitioning=true
+    # (plans.session) a cached frame reports UnknownPartitioning, so the
+    # message join broadcasts or shuffles a side every superstep. On the
+    # benchmark's cs_und graph (19.2k edges, ~1.5 MB) every cc_cs
+    # superstep after the first broadcasts the whole edge table
+    # (BroadcastHashJoin BuildLeft over its TableCacheQueryStage): the
+    # checkpointed state's size estimate is the larger one. Graphs whose
+    # edge table is already src-partitioned + cached (the builder
+    # posture) are used as-is — their cache is shared across queries,
+    # so this loop must not evict it on exit.
     owns_edge_cache = not graph.src_partitioned
     if owns_edge_cache:
         graph = graph.partition_by_src()

@@ -42,6 +42,7 @@ from .library import neighborhood as nf_mod
 from .sources import generators as gen_mod
 from .library import pagerank as pr_mod
 from .library import sssp as sssp_mod
+from .plans.reuse import reuse_leaf
 from .plans.session import tune_session
 from .sources.graphs import (
     CS_EDGES_SQL,
@@ -2576,7 +2577,7 @@ def assortativity_uu(spark, sf_dir):
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    deg = (
+    deg = reuse_leaf(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .groupBy("id")
@@ -3089,7 +3090,7 @@ def copurchase_lift(spark, sf_dir):
     tune_session(spark)
     g = part_copurchase_graph(spark, sf_dir)
     e = g.edges
-    deg = (
+    deg = reuse_leaf(
         e.select(F.col("src").alias("id"), F.col("value").alias("c"))
         .unionByName(e.select(F.col("dst").alias("id"), F.col("value").alias("c")))
         .groupBy("id")

@@ -15,15 +15,15 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
+from flink_graph_spark.plans import explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def _final_plan(spark, df) -> str:
-    df.write.format("noop").mode("overwrite").save()
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    """The formatted final adaptive plan ``df`` ran."""
+    explain.run_plan(df)
+    return explain.formatted(df)
 
 
 @pytest.fixture(scope="module")
@@ -41,6 +41,76 @@ def test_no_nested_loop_on_graph_joins(spark, queries):
         plan = _final_plan(spark, queries[name](spark, SF_DIR))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoop" not in plan, name
+
+
+def test_jaccard_runs_its_adjacency_shuffle_once(spark, queries):
+    # both endpoint joins read the adjacency from one leaf over the pc
+    # edge cache (plans.reuse), so no exchange of the final plan repeats
+    # another; reading the cache itself, AQE ran the collect_set shuffle
+    # once per side
+    plan = explain.run_plan(queries["jaccard_part_copurchase"](spark, SF_DIR))
+    assert explain.duplicate_stages(plan) == 0
+
+
+@pytest.fixture
+def broadcast_vertex_graph(spark):
+    """A cached graph whose vertex frame is under the broadcast threshold
+    and whose edge frame is over it, so both endpoint joins of a triplet
+    broadcast the vertex side (the shape of the benchmark's cs graph)."""
+    from pyspark.sql import functions as F
+
+    from flink_graph_spark.graph import Graph
+
+    edges = spark.range(20000).select(
+        (F.col("id") % 500).alias("src"),
+        (F.col("id") % 700 + 1000).alias("dst"),
+        F.col("id").alias("value"),
+    ).persist()
+    vertices = spark.range(1700).select(
+        "id", (F.col("id") * 2).alias("value")
+    ).persist()
+    edges.count()
+    vertices.count()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024))
+    try:
+        yield Graph(vertices, edges)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        edges.unpersist()
+        vertices.unpersist()
+
+
+def test_triplets_broadcasts_its_vertices_once(spark, broadcast_vertex_graph):
+    # the src and dst sides are two projections of one vertex leaf, so
+    # the second broadcast is a ReusedExchange; over the cache itself
+    # each side was broadcast on its own
+    t = broadcast_vertex_graph.triplets()
+    stages = explain.exchange_stages(explain.run_plan(t))
+    broadcasts = sorted(reused for cls, _, reused in stages if cls.startswith("Broadcast"))
+    assert broadcasts == [False, True], stages
+    assert t.count() == 20000
+
+
+def test_reuse_leaves_copy_no_blocks(spark, broadcast_vertex_graph):
+    # a re-rooted frame reads the RDD of its executed plan, not a block
+    # copy: once a result is read, the only persistent RDD a call leaves
+    # is the one its result reads (HITS' last iteration checkpoint)
+    from flink_graph_spark.library.hits import hits
+    from flink_graph_spark.library.jaccard import jaccard_similarity
+
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    for run, kept in (
+        (broadcast_vertex_graph.triplets, 0),
+        (lambda: jaccard_similarity(broadcast_vertex_graph), 0),
+        (lambda: hits(broadcast_vertex_graph, max_iter=2), 1),
+    ):
+        before = set(jmap().keySet().toArray())
+        run().collect()
+        gained = set(jmap().keySet().toArray()) - before
+        assert len(gained) == kept
+        for rid in gained:
+            jmap().get(rid).unpersist(False)
 
 
 def test_scans_are_pruned_to_needed_columns(spark, queries):
@@ -82,8 +152,7 @@ def test_ann_lsh_hamming_filter_is_codegen_hash_join(spark, queries):
 def _executed_final(df) -> str:
     """The executed physical plan after a run, without AQE's initial
     plan (which would repeat every node)."""
-    df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = explain.run_plan(df).toString()
     return plan.split("== Initial Plan ==")[0]
 
 

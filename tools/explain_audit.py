@@ -1,9 +1,14 @@
 """Physical-plan audit: prints `.explain(formatted)` excerpts for the
 headline queries and greps them for the scale-critical properties
 (SURVEY.md §4.2): parquet pushdown/pruning, broadcast of small sides,
-whole-stage codegen coverage, no cartesian products on big sides.
+whole-stage codegen coverage, no cartesian products on big sides,
+and exchanges AQE ran twice (``duplicate_stages``: non-reused shuffle
+and broadcast stages whose canonical plan equals another's, see
+``flink_graph_spark.plans.explain``).
 
-    python tools/explain_audit.py [sf_dir] [query ...]
+    python tools/explain_audit.py [sf_dir] [query ...] [-v]
+
+``-v`` also prints each query's final formatted plan.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from flink_graph_spark.plans import explain  # noqa: E402
 from flink_graph_spark.plans.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -39,6 +45,9 @@ AUDIT = [
 
 
 def main() -> int:
+    verbose = "-v" in sys.argv
+    if verbose:
+        sys.argv.remove("-v")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or AUDIT
     spark = get_spark("explain-audit")
@@ -48,10 +57,8 @@ def main() -> int:
         # Execute first: with AQE the pre-execution plan is
         # isFinalPlan=false and hides codegen spans / final join
         # strategies; the post-execution formatted plan is the real one.
-        df.write.format("noop").mode("overwrite").save()
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        final = explain.run_plan(df)
+        plan = explain.formatted(df)
         n_codegen = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
         n_exchange = plan.count("Exchange")
         n_reused = plan.count("ReusedExchange")
@@ -66,9 +73,10 @@ def main() -> int:
             f"{name}: codegen_spans={n_codegen} exchanges={n_exchange} "
             f"broadcasts={n_bcast} reused={n_reused} scans={n_scan} "
             f"pushed_filters={len(pushed_nonempty)} widest_scan_cols={widest} "
-            f"nested_loop_or_cartesian={cartesian}"
+            f"nested_loop_or_cartesian={cartesian} "
+            f"duplicate_stages={explain.duplicate_stages(final)}"
         )
-        if "-v" in sys.argv:
+        if verbose:
             print(plan)
     spark.stop()
     return 0

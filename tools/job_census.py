@@ -12,7 +12,12 @@ scheduler round-trips).
 
 Usage: python tools/job_census.py SF_DIR query [query ...]
 Prints one JSON line per query:
-  {"query": q, "wall_s": w, "jobs": j, "stages": s, "tasks": t}
+  {"query": q, "wall_s": w, "jobs": j, "stages": s, "tasks": t,
+   "skipped_stages": k, "skipped_tasks": kt, "shuffle_bytes": b}
+``stages`` and ``tasks`` count every stage of every job, skipped ones
+(whose shuffle output an earlier job already wrote) included; the
+``skipped_`` fields are that part. ``shuffle_bytes`` is the shuffle
+write of the stages that ran.
 
 Methodology matches bench.py: tables + derived-graph caches warmed
 outside the census, Python worker pool pre-spun, noop-sink execution,
@@ -87,6 +92,7 @@ def main() -> int:
         registry.jvm_gc(spark)
 
     tracker = sc.statusTracker()
+    store = jsc.sc().statusStore()
     for name in names:
         fn = queries[name]
         group = f"census-{name}"
@@ -97,8 +103,9 @@ def main() -> int:
         finally:
             sc.setJobGroup("", "")
         wall = time.time() - t0
+        jsc.sc().listenerBus().waitUntilEmpty()
         job_ids = tracker.getJobIdsForGroup(group)
-        stages = tasks = 0
+        stages = tasks = skipped = skipped_tasks = shuffle = 0
         for jid in job_ids:
             info = tracker.getJobInfo(jid)
             if info is None:
@@ -108,6 +115,12 @@ def main() -> int:
                 if si is not None:
                     stages += 1
                     tasks += si.numTasks
+                    data = store.lastStageAttempt(sid)
+                    if data.status().toString() == "SKIPPED":
+                        skipped += 1
+                        skipped_tasks += si.numTasks
+                    else:
+                        shuffle += data.shuffleWriteBytes()
         print(
             json.dumps(
                 {
@@ -116,6 +129,9 @@ def main() -> int:
                     "jobs": len(job_ids),
                     "stages": stages,
                     "tasks": tasks,
+                    "skipped_stages": skipped,
+                    "skipped_tasks": skipped_tasks,
+                    "shuffle_bytes": shuffle,
                 }
             ),
             flush=True,
