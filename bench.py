@@ -20,14 +20,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from flink_graph_spark import registry  # noqa: E402
 from flink_graph_spark.plans.session import get_spark, tune_session  # noqa: E402
+from tools.harness import sched_probe_ms, warm_up  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-# This harness times queries: own the JVM-GC cadence (see jvm_gc) so
-# the ContextCleaner nudge never pauses a timed window.
-registry.EXTERNAL_JVM_GC = True
 
 # Headline set: one representative per operator family (SURVEY.md §2) —
 # degrees/aggs, subgraph, triplets/joins, iterative algorithms, Jaccard,
@@ -277,88 +273,21 @@ def main() -> int:
     spark = get_spark("flink-graph-spark-bench")
     tune_session(spark)
 
-    # Warm up: touch every table and materialize the persisted derived
-    # edge tables once, so timings measure steady-state query cost, not
-    # one-time scan/cache population.
-    from flink_graph_spark.sources.graphs import (
-        customer_supplier_graph,
-        customer_supplier_undirected_graph,
-        part_copurchase_graph,
-        user_cooccurrence_graph,
-    )
-    from flink_graph_spark.sources.tables import load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        df.count()
-    for builder in (
-        customer_supplier_graph,
-        customer_supplier_undirected_graph,
-        part_copurchase_graph,
-        user_cooccurrence_graph,
-    ):
-        g = builder(spark, sf_dir)
-        g.edges.count()
-        g.vertices.count()
-
-    # Spin up the Python/Arrow worker pool once (per-session cost, not a
-    # per-query cost): the first Pandas-UDF stage otherwise pays daemon +
-    # worker fork + Arrow init inside its timing window.
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    # Warm up outside every timing window, so timings measure
+    # steady-state query cost, not one-time scan/cache/worker start-up.
+    warm_up(spark, sf_dir)
 
     queries = entrymod.queries()
 
-    # Scratch-cache guard: some queries persist intermediate frames for
-    # the duration of their own execution (e.g. shingle arrays in LSH
-    # dedup). Evict anything cached AFTER warmup once a query finishes,
-    # so 26 queries' scratch blocks don't pile up in one executor heap —
-    # the shared derived-graph caches warmed above stay resident.
-    jsc = spark.sparkContext._jsc
-    keep_ids = set(jsc.getPersistentRDDs().keySet().toArray())
-
-    def _evict_scratch() -> None:
-        jmap = jsc.getPersistentRDDs()
-        for rid in jmap.keySet().toArray():
-            if rid not in keep_ids:
-                jmap.get(rid).unpersist(False)
-        # localCheckpoint blocks from iterative queries are only freed
-        # once the py4j refs are collected — force that between queries
-        # so finished queries' blocks don't inflate GC pressure.
-        import gc
-
-        gc.collect()
-        # JVM-side GC runs HERE (outside the timing windows), not in
-        # _query_begin: this harness owns the cadence via
-        # registry.EXTERNAL_JVM_GC, so no System.gc pause can land
-        # inside a timed query.
-        registry.jvm_gc(spark)
-
-    def _sched_probe_ms() -> float:
-        """Box-health probe: ms/job for a trivial 32-task no-op job
-        (median of 9). A healthy local[32] box measures tens of ms;
-        the host-side vCPU-latency degradation documented in
-        BASELINE.md §Round-4-second-sitting measured ~350 ms and
-        inflates every scheduler-bound (iterative) query 3-10x while
-        map-heavy scans barely move. Emitted in the JSON (before/after
-        the passes) so each bench artifact self-describes whether its
-        numbers are comparable to the quiet-box records."""
-        sc = spark.sparkContext
-        samples = []
-        for _ in range(9):
-            t0 = time.time()
-            sc.parallelize(range(32), 32).count()
-            samples.append((time.time() - t0) * 1000)
-        samples.sort()
-        return round(samples[len(samples) // 2], 1)
-
-    sched_probe = [_sched_probe_ms()]
+    # Emitted in the JSON (before/after the passes) so each bench
+    # artifact self-describes whether its numbers are comparable to the
+    # quiet-box records.
+    sched_probe = [sched_probe_ms(spark)]
 
     def _timed(fn) -> float:
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         t = time.time() - t0
-        _evict_scratch()
         return t
 
     # Steady-state policy: this box shows up to 10x transient swings from
@@ -409,16 +338,15 @@ def main() -> int:
             # the two timing passes (its own SF — see measure_recall), so
             # an external timeout that lands in pass 2 still leaves the
             # artifact with a measured recall instead of an error row.
-            # Outside every timing window; scratch eviction in _timed has
-            # already run, so it can't pollute a timed query. Guarded so
-            # a recall failure degrades to an error string, never loses
-            # the bench.
+            # Outside every timing window; the checkpoints it leaves are
+            # freed when the next registered query begins, before that
+            # query's work. Guarded so a recall failure degrades to an
+            # error string, never loses the bench.
             try:
                 recall = measure_recall(spark)
             except Exception as e:  # pragma: no cover - defensive
                 recall = {"error": repr(e)}
-            _evict_scratch()
-    sched_probe.append(_sched_probe_ms())
+    sched_probe.append(sched_probe_ms(spark))
     per_pass = [p for p in per_pass if p]
     timings = {
         n: min(p[n] for p in per_pass if n in p)

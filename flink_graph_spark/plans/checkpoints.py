@@ -1,4 +1,5 @@
-"""Explicit release of superseded localCheckpoint blocks.
+"""Explicit release of localCheckpoint blocks: superseded ones inside a
+query, and every one a finished query left behind.
 
 Iterative operators truncate lineage with ``localCheckpoint(eager=True)``
 each round. Spark only reclaims those blocks when the ContextCleaner
@@ -9,11 +10,15 @@ displaced when the same code path runs again). Harmless at test scale;
 at cluster scale a 50-superstep loop would pin 50 snapshots of vertex
 state in executor storage until the driver GC happens to flush them.
 
-So loops release superseded checkpoints EXPLICITLY: the moment a new
-checkpoint is materialized (eager=True ⇒ its blocks are already
-written and its lineage no longer reads the parent), the previous
-round's blocks are unpersisted. Only the final checkpoint — the one the
-returned DataFrame actually reads — is left for the session to own.
+So no checkpoint waits for a GC. Loops release superseded checkpoints
+EXPLICITLY: the moment a new checkpoint is materialized (eager=True ⇒
+its blocks are already written and its lineage no longer reads the
+parent), the previous round's blocks are unpersisted. The checkpoints
+the returned DataFrame still reads belong to the query until the next
+registered query begins, which frees them all with
+``release_all_local_checkpoints`` (called by ``registry._query_begin``).
+The builder caches are ``DataFrame.persist()`` frames, never locally
+checkpointed, so that release leaves them resident.
 
 Safety contract: call ``release_local_checkpoint`` only on a DataFrame
 that (a) came straight from ``localCheckpoint()`` and (b) no surviving
@@ -63,7 +68,7 @@ def drain_shuffle_scratch(
     timeout_s: int = 180,
     _free=None,
     _sleep=None,
-    _jvm_gc=None,
+    _system_gc=None,
 ) -> bool:
     """Disk-gated shuffle-scratch drain for MULTI-JOB operators that
     materialize a narrow waist mid-plan (e.g. adamic_adar's enriched
@@ -92,7 +97,7 @@ def drain_shuffle_scratch(
        bailing after 15s without ≥1 GiB of progress.
 
     Returns True iff the floor was reached (or never breached).
-    ``_free``/``_sleep``/``_jvm_gc`` are test seams for the engage
+    ``_free``/``_sleep``/``_system_gc`` are test seams for the engage
     predicate (real disk, clock and py4j by default).
     """
     import gc
@@ -103,21 +108,21 @@ def drain_shuffle_scratch(
     free_fn = _free or (lambda: shutil.disk_usage(scratch).free)
     sleep_fn = _sleep or time.sleep
 
-    def default_jvm_gc() -> bool:
+    def default_system_gc() -> bool:
         try:
             spark.sparkContext._jvm.System.gc()
             return True
         except Exception:
             return False  # non-py4j session stub (unit tests)
 
-    jvm_gc_fn = _jvm_gc or default_jvm_gc
+    system_gc = _system_gc or default_system_gc
 
     floor = min_free_gb * 2**30
     start_free = free_fn()
     if start_free >= floor:
         return True
     gc.collect()  # drop py4j refs so the JVM can see dead dependencies
-    if not jvm_gc_fn():
+    if not system_gc():
         return False
     # evidence probe: deletions are async, so poll briefly for the
     # first GC pass's effect before committing to the full wait loop.
@@ -141,7 +146,7 @@ def drain_shuffle_scratch(
     while elapsed < timeout_s:
         sleep_fn(5)
         elapsed += 5
-        if not jvm_gc_fn():
+        if not system_gc():
             return False
         now = free_fn()
         if now >= floor:
@@ -170,3 +175,15 @@ def release_local_checkpoint(df: DataFrame) -> bool:
     except Exception:
         pass
     return False
+
+
+def release_all_local_checkpoints(spark) -> None:
+    """Unpersist (non-blocking) every persistent RDD of the session that
+    is locally checkpointed. Safe only where no live frame reads a
+    checkpoint anymore: between registered queries, whose result frames
+    are valid until the next one begins."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in rdds.keySet().toArray():
+        rdd = rdds.get(rid).rdd()
+        if rdd.isLocallyCheckpointed():
+            rdd.unpersist(False)

@@ -8,6 +8,10 @@ Conventions (driver contract):
   BIGINT, ratios ROUND(x, 6) on BOTH sides).
 * Anything order-dependent (top-k) carries a full deterministic ORDER BY
   with id tie-breaks.
+* A registered query's result frame is valid until the next registered
+  query begins: the registry owns query scratch, and each begin frees
+  every localCheckpoint the previous query left (``_query_begin``).
+  Consume a result (collect, write) before calling the next query.
 """
 
 from __future__ import annotations
@@ -42,6 +46,7 @@ from .library import neighborhood as nf_mod
 from .sources import generators as gen_mod
 from .library import pagerank as pr_mod
 from .library import sssp as sssp_mod
+from .plans.checkpoints import release_all_local_checkpoints
 from .plans.reuse import reuse_leaf
 from .plans.session import tune_session
 from .sources.graphs import (
@@ -65,29 +70,23 @@ ORACLE_SQL: dict[str, str] = {}
 
 
 def _query_begin(spark: SparkSession) -> None:
-    """Reclaim the PREVIOUS query's scratch before this one runs.
+    """Free the PREVIOUS query's scratch before this one runs.
 
-    Iterative queries leave localCheckpoint RDD blocks (and finished
-    scratch persists) behind; their Python refs are dead once the query
-    returns, but the blocks are only dropped after a GC cycle reaches
-    the py4j finalizers and the JVM ContextCleaner's weak refs (whose
-    own periodic GC defaults to 30 min — far longer than a gate run).
-    Left alone, a 100-query session accretes hundreds of stale blocks
-    and per-superstep cost degrades ~4x by the end of the gate. The
-    memoized derived-graph caches stay strongly referenced from
-    ``_GRAPH_MEMO``, so they are never collected.
+    Iterative queries return frames that read localCheckpoint blocks;
+    their operators already released every superseded checkpoint, and
+    the ones left are the finished query's result state. Those are
+    unpersisted here, all of them, with no GC involved
+    (``release_all_local_checkpoints``). Left to the ContextCleaner, a
+    100-query session accretes hundreds of stale blocks and
+    per-superstep cost degrades ~4x by the end of the gate. The
+    memoized derived-graph caches in ``_GRAPH_MEMO`` are persisted
+    frames, never checkpoints, so they stay resident.
 
     This runs inside the registry wrapper so EVERY runner (driver gate,
     local gate, bench, tests) gets the same scratch lifecycle without
-    cooperating. The JVM side is throttled to once per 30 s: the
-    degradation builds over tens of queries, while an unconditional
-    System.gc() inside every timed bench query is measurable overhead.
+    cooperating.
     """
-    import gc
-
-    gc.collect()
-    if not EXTERNAL_JVM_GC:
-        jvm_gc(spark)
+    release_all_local_checkpoints(spark)
     _ensure_workers_can_import(spark)
 
 
@@ -130,35 +129,6 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
                         zf.write(full, rel)
     spark.sparkContext.addPyFile(zpath)
     _PYFILE_SENT.add(sid)
-
-
-def jvm_gc(spark: SparkSession, throttle_s: float = 30.0) -> None:
-    """Throttled JVM System.gc() — the ContextCleaner nudge described in
-    ``_query_begin``. Public so a harness that TIMES queries (bench.py)
-    can trigger it between queries, outside the timing windows, instead
-    of eating an unpredictable JVM pause inside one: such a harness
-    sets ``EXTERNAL_JVM_GC = True`` and calls this after each timed
-    query."""
-    global _LAST_JVM_GC
-    import time
-
-    now = time.monotonic()
-    if now - _LAST_JVM_GC < throttle_s:
-        return
-    try:
-        spark.sparkContext._jvm.System.gc()
-        _LAST_JVM_GC = now
-    except Exception:
-        pass  # non-py4j session stub (unit tests)
-
-
-_LAST_JVM_GC = float("-inf")
-
-# When True, the harness owns the JVM-GC cadence (calls jvm_gc itself
-# between timed queries); _query_begin then skips it so no System.gc
-# pause lands inside a timed window. Default False: gate/test runners
-# get the full scratch lifecycle without cooperating.
-EXTERNAL_JVM_GC = False
 
 
 @contextmanager

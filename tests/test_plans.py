@@ -574,6 +574,62 @@ def test_functions_loops_keep_only_result_checkpoints(spark, op, kept):
         jmap().get(rid).unpersist(False)
 
 
+def test_back_to_back_queries_leave_no_scratch(spark, queries):
+    """``registry._query_begin`` owns query scratch: each registered
+    query frees every localCheckpoint the previous ones left, with no GC.
+    Run back to back, twice, a sample of loop queries only ever leaves
+    the builder caches plus the running query's own RDDs live, and the
+    second round holds exactly what the first did."""
+    from flink_graph_spark.sources.graphs import (
+        customer_supplier_undirected_graph,
+        part_copurchase_graph,
+        user_cooccurrence_graph,
+    )
+
+    names = (
+        "cc_cs",
+        "mis_uu",
+        "triangle_count_pc",
+        "betweenness_grid",
+        "neighborhood_function_uu",
+        "bpe_merges",
+    )
+    sc = spark.sparkContext._jsc.sc()
+
+    def live() -> dict:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k): rdds.get(k).rdd() for k in rdds.keySet().toArray()}
+
+    def storage_bytes() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        return sum(i.memSize() + i.diskSize() for i in sc.getRDDStorageInfo())
+
+    for builder in (
+        customer_supplier_undirected_graph,
+        part_copurchase_graph,
+        user_cooccurrence_graph,
+    ):
+        g = builder(spark, SF_DIR)
+        g.edges.count()
+        g.vertices.count()
+    caches = {i for i, rdd in live().items() if not rdd.isLocallyCheckpointed()}
+
+    rounds = []
+    for _ in range(2):
+        counts = []
+        for name in names:
+            began = sc.newRddId()  # every RDD the query creates is newer
+            queries[name](spark, SF_DIR).collect()
+            ids = set(live())
+            stale = sorted(i for i in ids - caches if i < began)
+            assert not stale, f"{name}: scratch of an earlier query live: {stale}"
+            counts.append(len(ids))
+        rounds.append((counts, storage_bytes()))
+    (counts1, bytes1), (counts2, bytes2) = rounds
+    assert counts2 == counts1
+    assert bytes2 <= bytes1, (bytes1, bytes2)
+
+
 def test_drain_engage_predicate():
     """plans/checkpoints.py drain_shuffle_scratch: the r9 engage
     contract. SWEEP_r08 measured the old engage-on-free-space-alone
@@ -609,7 +665,7 @@ def test_drain_engage_predicate():
         spy = _Spy([f * gb for f in frees])
         ok = cp.drain_shuffle_scratch(
             spark=None, min_free_gb=floor_gb, timeout_s=180,
-            _free=spy.free, _sleep=spy.sleep, _jvm_gc=spy.jvm_gc,
+            _free=spy.free, _sleep=spy.sleep, _system_gc=spy.jvm_gc,
         )
         return ok, spy
 

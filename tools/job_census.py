@@ -20,9 +20,12 @@ Prints one JSON line per query:
 write of the stages that ran.
 
 Methodology matches bench.py: tables + derived-graph caches warmed
-outside the census, Python worker pool pre-spun, noop-sink execution,
-scratch evicted between queries. Run each query under its own job
-group; stages/tasks summed over the group's jobs via statusTracker.
+outside the census and the Python worker pool pre-spun
+(``tools/harness.py``), noop-sink execution. The registry frees the
+previous query's checkpoints as each query begins (an unpersist, which
+launches no job), so the census itself evicts nothing. Run each query
+under its own job group; stages/tasks summed over the group's jobs via
+statusTracker.
 """
 
 from __future__ import annotations
@@ -35,12 +38,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from flink_graph_spark import registry  # noqa: E402
 from flink_graph_spark.plans.session import get_spark, tune_session  # noqa: E402
+from tools.harness import warm_up  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-registry.EXTERNAL_JVM_GC = True
 
 
 def main() -> int:
@@ -53,44 +54,11 @@ def main() -> int:
     spark = get_spark("job-census")
     tune_session(spark)
 
-    from flink_graph_spark.sources.graphs import (
-        customer_supplier_graph,
-        customer_supplier_undirected_graph,
-        part_copurchase_graph,
-        user_cooccurrence_graph,
-    )
-    from flink_graph_spark.sources.tables import load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        df.count()
-    for builder in (
-        customer_supplier_graph,
-        customer_supplier_undirected_graph,
-        part_copurchase_graph,
-        user_cooccurrence_graph,
-    ):
-        g = builder(spark, sf_dir)
-        g.edges.count()
-        g.vertices.count()
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     queries = entrymod.queries()
     sc = spark.sparkContext
     jsc = sc._jsc
-    keep_ids = set(jsc.getPersistentRDDs().keySet().toArray())
-
-    def _evict_scratch() -> None:
-        jmap = jsc.getPersistentRDDs()
-        for rid in jmap.keySet().toArray():
-            if rid not in keep_ids:
-                jmap.get(rid).unpersist(False)
-        import gc
-
-        gc.collect()
-        registry.jvm_gc(spark)
-
     tracker = sc.statusTracker()
     store = jsc.sc().statusStore()
     for name in names:
@@ -136,7 +104,6 @@ def main() -> int:
             ),
             flush=True,
         )
-        _evict_scratch()
     return 0
 
 

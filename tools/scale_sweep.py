@@ -87,10 +87,15 @@ UU_FAMILY = ["kcore_uu", "community_detection_uu"]
 def run_point(pname: str, sweep: list[str], out_path: str, passes: int,
               run_id: str = "") -> int:
     """Child mode: one scale point, one JVM, JSONL appended per query."""
-    from flink_graph_spark import registry
     from flink_graph_spark.plans.session import get_spark, tune_session
+    from flink_graph_spark.sources.graphs import (
+        customer_supplier_graph,
+        customer_supplier_undirected_graph,
+        part_copurchase_graph,
+        user_cooccurrence_graph,
+    )
+    from tools.harness import sched_probe_ms, warm_up
 
-    registry.EXTERNAL_JVM_GC = True
     sf_dir, K = POINTS[pname]
     spark = get_spark(f"scale-sweep-{pname}")
     tune_session(spark)
@@ -98,52 +103,14 @@ def run_point(pname: str, sweep: list[str], out_path: str, passes: int,
 
     queries = entrymod.queries()
 
-    from flink_graph_spark.sources.graphs import (
-        customer_supplier_graph,
-        customer_supplier_undirected_graph,
-        part_copurchase_graph,
-        user_cooccurrence_graph,
-    )
-    from flink_graph_spark.sources.tables import load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        df.count()
     builders = [customer_supplier_graph, customer_supplier_undirected_graph,
                 part_copurchase_graph]
     if any(q in UU_FAMILY for q in sweep):
         builders.append(user_cooccurrence_graph)
-    for b in builders:
-        g = b(spark, sf_dir)
-        g.edges.count()
-        g.vertices.count()
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # box-health probe (same shape as bench.py): ms/job for a trivial
-    # 32-task no-op, median of 9 — recorded per point so the artifact
-    # self-describes whether its absolute numbers are quiet-box grade
-    sc = spark.sparkContext
-    samples = []
-    for _ in range(9):
-        t0 = time.time()
-        sc.parallelize(range(32), 32).count()
-        samples.append((time.time() - t0) * 1000)
-    samples.sort()
-    probe_ms = round(samples[len(samples) // 2], 1)
-
-    jsc = spark.sparkContext._jsc
-    keep_ids = set(jsc.getPersistentRDDs().keySet().toArray())
-
-    def _evict() -> None:
-        jmap = jsc.getPersistentRDDs()
-        for rid in jmap.keySet().toArray():
-            if rid not in keep_ids:
-                jmap.get(rid).unpersist(False)
-        import gc
-        gc.collect()
-        registry.jvm_gc(spark)
-        _drain_scratch()
+    warm_up(spark, sf_dir, builders)
+    # box-health probe, recorded per point so the artifact self-describes
+    # whether its absolute numbers are quiet-box grade
+    probe_ms = sched_probe_ms(spark)
 
     def _drain_scratch(min_free_gb: float = 40.0, timeout_s: int = 240) -> None:
         """Block until shuffle scratch has actually drained. Shuffle-file
@@ -195,7 +162,7 @@ def run_point(pname: str, sweep: list[str], out_path: str, passes: int,
                                      "run_id": run_id,
                                      **({"error": err} if err else {})}) + "\n")
                 fh.flush()
-                _evict()
+                _drain_scratch()
             print(f"pass {_pass} @ {pname} done", file=sys.stderr, flush=True)
         if "ann_topk_ivf" in sweep:
             _ann_extras(spark, sf_dir, pname, fh, passes, run_id)
