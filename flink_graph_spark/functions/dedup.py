@@ -5,16 +5,18 @@ Scale design (100 TB posture):
 * Everything is inverted-index shaped: explode shingles → hash-join on
   shingle/bucket → aggregate. Never an O(n²) cross join — candidate
   pairs only ever come from shared buckets.
-* MinHash signatures are computed per row from each doc's shingle set
-  after the one ``collect_set`` shuffle (16 ``array_min`` over the
-  hashed set, ``minhash_sets``), then banded into b=4
-  bands of r=4 rows (tunable): the bucket key is the band index plus
-  the band's r-minhash array, so a candidate pair must agree on ALL r
-  hashes of some band — P(candidate) = 1-(1-s^r)^b, the standard LSH
-  S-curve. r=1 banding (any single hash matching) floods the candidate
-  set with low-similarity pairs at corpus scale; r≥2 keeps candidate
-  volume ~linear in true near-dups. Candidates are confirmed with
-  exact Jaccard, so precision is exact either way.
+* MinHash signatures are computed on the map side, per row, from the
+  row's hashed distinct shingles (16 ``array_min``, ``minhash_sets``);
+  the one full-corpus shuffle carries each row's text and 16 longs,
+  and a doc's signature is the element-wise min over its rows. They
+  are banded into b=4 bands of r=4 rows (tunable): the bucket key is
+  the band index plus the band's r-minhash array, so a candidate pair
+  must agree on ALL r hashes of some band — P(candidate) =
+  1-(1-s^r)^b, the standard LSH S-curve. r=1 banding (any single hash
+  matching) floods the candidate set with low-similarity pairs at
+  corpus scale; r≥2 keeps candidate volume ~linear in true near-dups.
+  Candidates are confirmed with exact Jaccard over shingle sets rebuilt
+  from their texts, so precision is exact either way.
 * All hashing is md5-derived integer arithmetic (functions/hashing.py)
   so the whole LSH pipeline — signatures, buckets, candidates,
   confirmation — is bit-identical in DuckDB and fully oracle-checked,
@@ -34,12 +36,7 @@ from .hashing import (
     h32,
     minhash_expr,
 )
-from .text import (
-    DOC_SHINGLES_SQL,
-    DOC_TOK_SQL,
-    doc_shingles,
-    exploded_shingles,
-)
+from .text import SHINGLES_T_EXPR, doc_shingles
 
 # ---- exact dedup -----------------------------------------------------
 
@@ -268,8 +265,6 @@ def cross_source_overlap(docs: DataFrame, round_to: int = 6) -> DataFrame:
     blowup of doc-level inverted indexes is structurally impossible
     here; no df cap needed. One distinct, one self-join, one bounded
     aggregate."""
-    from .text import SHINGLES_T_EXPR
-
     ss = (
         docs.select("source", F.split("text", " ").alias("t"))
         .select("source", F.explode(F.expr(SHINGLES_T_EXPR)).alias("s"))
@@ -342,35 +337,58 @@ def _permutation(k: int):
     return lambda h: minhash_expr(k, h)
 
 
-def minhash_sets(sh: DataFrame) -> DataFrame:
-    """(doc_id, ss, mh_0..mh_{K-1}): each doc's distinct shingle set and
-    its K min-hashes, from (doc_id, s) shingle rows.
+def minhash_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, texts, mh_0..mh_{K-1}): each doc's texts and the K
+    min-hashes of its distinct word-3-gram shingle set, from
+    (doc_id, text) rows.
 
-    The ``collect_set`` grouping is the one shuffle; the signature is
-    computed from the set after it, per row. The hashed array ``hs`` is
-    bound in a lower projection so the K ``array_min(transform(...))``
-    lambdas index it instead of re-hashing every shingle K times
-    (SCALING.md §11). Docs with no shingle (NULL, empty, < 3 tokens)
-    have no row.
+    The signature is built on the map side: per row, the tokens are
+    bound once, the distinct shingles hashed once (``hs``, bound in a
+    lower projection so the K ``array_min(transform(...))`` lambdas
+    index it instead of re-hashing every shingle K times, SCALING.md
+    §11) and reduced to K min-hashes. The one shuffle then carries each
+    row's text and K longs, packed into ONE ``collect_list`` aggregate so
+    that column pruning cannot split it into two exchanges for readers
+    of only ``mh_k`` or only ``texts``. After it, ``mh_k`` is the
+    ``array_min`` over the doc's rows: the min-hash of a union is the
+    minimum of the parts' min-hashes, so a doc_id split across rows
+    gets the signature of its whole shingle set. Rows with no shingle
+    (NULL, empty, < 3 tokens) are dropped before the shuffle, so docs
+    with no shingle have no row.
     """
-    per_doc = sh.groupBy("doc_id").agg(F.collect_set("s").alias("ss"))
-    hashed = per_doc.select("doc_id", "ss", F.transform("ss", h32).alias("hs"))
-    return hashed.select(
+    tok = docs.select("doc_id", "text", F.split("text", " ").alias("t"))
+    hashed = tok.filter(F.size("t") >= 3).select(
         "doc_id",
-        "ss",
+        "text",
+        F.transform(F.array_distinct(F.expr(SHINGLES_T_EXPR)), h32).alias("hs"),
+    )
+    packed = hashed.select(
+        "doc_id",
+        F.struct(
+            "text",
+            *[
+                F.array_min(F.transform("hs", _permutation(k))).alias(f"m_{k}")
+                for k in range(NUM_MINHASHES)
+            ],
+        ).alias("r"),
+    )
+    per_doc = packed.groupBy("doc_id").agg(F.collect_list("r").alias("rs"))
+    return per_doc.select(
+        "doc_id",
+        F.col("rs.text").alias("texts"),
         *[
-            F.array_min(F.transform("hs", _permutation(k))).alias(f"mh_{k}")
+            F.array_min(f"rs.m_{k}").alias(f"mh_{k}")
             for k in range(NUM_MINHASHES)
         ],
     )
 
 
-def minhash_signatures(sh: DataFrame) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, k, mh): the signature unpivoted (one row per
     permutation) — the r=1 bucketing view, kept for tests/inspection.
     """
     stack = ", ".join(f"{k}, mh_{k}" for k in range(NUM_MINHASHES))
-    return minhash_sets(sh).selectExpr(
+    return minhash_sets(docs).selectExpr(
         "doc_id", f"stack({NUM_MINHASHES}, {stack}) AS (k, mh)"
     )
 
@@ -404,21 +422,41 @@ def _bucket_pairs(
 
 
 def minhash_candidates(
-    sh: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
+    docs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:
     """Distinct candidate pairs (da < db) sharing at least one banded
-    LSH bucket, from (doc_id, s) shingle rows."""
-    return _bucket_pairs(minhash_sets(sh), bands, rows)
+    LSH bucket, from (doc_id, text) rows."""
+    return _bucket_pairs(minhash_sets(docs), bands, rows)
 
 
 def _side(sets: DataFrame, side: str, signature: bool = False) -> DataFrame:
-    """``sets`` renamed as one side of a pair: doc_id → d<side>, ss →
-    s<side> and, with ``signature``, each mh_k → <side>_k."""
+    """``sets`` renamed as one side of a pair: doc_id → d<side>, texts →
+    t<side> and, with ``signature``, each mh_k → <side>_k."""
     mhs = range(NUM_MINHASHES) if signature else ()
     return sets.select(
         F.col("doc_id").alias(f"d{side}"),
-        F.col("ss").alias(f"s{side}"),
+        F.col("texts").alias(f"t{side}"),
         *[F.col(f"mh_{k}").alias(f"{side}_{k}") for k in mhs],
+    )
+
+
+def _shingle_set(texts: str) -> Column:
+    """The distinct shingle set of the array of texts ``texts``. The
+    outer ``transform`` binds each text's tokens once, so the shingle
+    lambda ``SHINGLES_T_EXPR`` indexes a bound array ``t`` (SCALING.md
+    §11)."""
+    return F.expr(
+        f"array_distinct(flatten(transform("
+        f"transform({texts}, x -> split(x, ' ')), t -> {SHINGLES_T_EXPR})))"
+    )
+
+
+def _with_pair_sets(pairs: DataFrame, *cols: str) -> DataFrame:
+    """``pairs`` with its ``ta``/``tb`` texts replaced by the shingle
+    sets ``sa``/``sb``, built after the join so only candidate documents
+    are shingled again."""
+    return pairs.select(
+        *cols, _shingle_set("ta").alias("sa"), _shingle_set("tb").alias("sb")
     )
 
 
@@ -439,28 +477,31 @@ def dedup_minhash_lsh(
     with exact Jaccard ≥ threshold → (da, db, jaccard).
 
     Scale shape: exact Jaccard is computed ONLY for candidate pairs —
-    per-doc shingle-set arrays are joined onto the (small) candidate
-    list and intersected in place with ``array_intersect``. The full
-    inverted-index pair join (``_pair_jaccard``) is never built here:
-    on a skewed corpus a single hot shingle makes that self-join
-    quadratic, while the banded candidate set stays ~linear in the
-    number of true near-dups (P(candidate) = 1-(1-s^r)^b).
+    each candidate's texts are joined onto the (small) candidate list,
+    shingled there into sets and intersected in place with
+    ``array_intersect``. The full inverted-index pair join
+    (``_pair_jaccard``) is never built here: on a skewed corpus a single
+    hot shingle makes that self-join quadratic, while the banded
+    candidate set stays ~linear in the number of true near-dups
+    (P(candidate) = 1-(1-s^r)^b).
 
-    One lazy plan, nothing cached: the per-doc shingle sets
-    (``minhash_sets``) are the only full-corpus shuffle. Both sides of
-    the bucket self-join and both confirm joins read that one exchange
-    (Spark reuses it), and the bucket join and candidate ``distinct``
-    carry doc ids only — the sets are attached to the candidate list,
-    never to the bucket rows. Carrying the sets through the bucket join
-    instead would shuffle every doc's set once per band. A caller that
-    reads the result more than once materializes it itself
-    (``dedup_clusters``).
+    One lazy plan, nothing cached: the per-doc (texts, signature) rows
+    (``minhash_sets``) are the only full-corpus shuffle, and it carries
+    text plus 16 longs per row, not shingle sets. Both sides of the
+    bucket self-join and both confirm joins read that one exchange
+    (Spark reuses it). The bucket join and candidate ``distinct`` carry
+    doc ids only — the texts are attached to the candidate list, never
+    to the bucket rows. A caller that reads the result more than once
+    materializes it itself (``dedup_clusters``).
     """
-    sets = minhash_sets(exploded_shingles(docs))
-    return (
+    sets = minhash_sets(docs)
+    pairs = (
         _bucket_pairs(sets, bands, rows)
         .join(_side(sets, "a"), "da")
         .join(_side(sets, "b"), "db")
+    )
+    return (
+        _with_pair_sets(pairs, "da", "db")
         .select("da", "db", _exact_jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
@@ -1111,7 +1152,7 @@ def minhash_calibration(
     Same exact-vs-sketch pairing policy as two_hop vs HLL: measure the
     estimator against ground truth on the candidate set instead of
     assuming the textbook bound. Candidates only — never all pairs."""
-    sets = minhash_sets(exploded_shingles(docs))
+    sets = minhash_sets(docs)
     match = sum(
         (
             F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
@@ -1119,14 +1160,18 @@ def minhash_calibration(
         ),
         start=F.when(F.col("a_0") == F.col("b_0"), 1).otherwise(0),
     )
-    paired = (
+    pairs = (
         _bucket_pairs(sets, bands, rows)
         .join(_side(sets, "a", signature=True), "da")
         .join(_side(sets, "b", signature=True), "db")
         .select(
             (match.cast("double") / F.lit(float(NUM_MINHASHES))).alias("est"),
-            _exact_jaccard().alias("exact"),
+            "ta",
+            "tb",
         )
+    )
+    paired = _with_pair_sets(pairs, "est").select(
+        "est", _exact_jaccard().alias("exact")
     )
     bucket = F.least(
         F.floor(F.abs(F.col("est") - F.col("exact")) * 10), F.lit(9)

@@ -6,6 +6,7 @@ synthetic inputs with hand-computed answers, plus sf0.001 smoke.
 from __future__ import annotations
 
 import datetime
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,7 @@ from flink_graph_spark.functions import multimodal as mm_mod
 from flink_graph_spark.functions import sessions as sess_mod
 from flink_graph_spark.functions import similarity as sim_mod
 from flink_graph_spark.functions import text as text_mod
+from flink_graph_spark.functions.hashing import NUM_MINHASHES, h32
 from flink_graph_spark.sources.tables import load_table
 
 
@@ -191,8 +193,7 @@ def test_ngram_pair_join_caps_hot_shingles(spark):
 
 
 def test_minhash_similar_docs_share_buckets(docs):
-    sh = text_mod.doc_shingles(docs)
-    sig = dedup_mod.minhash_signatures(sh)
+    sig = dedup_mod.minhash_signatures(docs)
     assert sig.select("doc_id").distinct().count() == 4
     pairs = dedup_mod.dedup_minhash_lsh(docs, threshold=0.05)
     got = {(r["da"], r["db"]) for r in pairs.collect()}
@@ -217,23 +218,35 @@ def test_dedup_minhash_lsh_four_jobs_no_scratch(spark, docs):
     assert sc._jsc.getPersistentRDDs().size() == before
 
 
-def test_dedup_minhash_lsh_one_shingle_set_exchange(docs):
-    # every consumer of the per-doc shingle sets (both bucket-join sides,
-    # both confirm sides) reads ONE collect_set exchange; the others are
-    # ReusedExchange, and no cached frame stands in for the reuse
+def test_dedup_minhash_lsh_one_shingle_set_exchange(spark, docs):
+    # the signature is built map-side: the one full-corpus exchange
+    # carries a single collect_list of the packed struct(text, m_0..m_15)
+    # per row and no shingle set; every consumer (both bucket-join
+    # sides, both confirm sides) reads it, the others as ReusedExchange,
+    # and no cached frame stands in for the reuse
     out = dedup_mod.dedup_minhash_lsh(docs)
     out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    # print every field of the packed struct
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100")
+    try:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
     assert "InMemoryTableScan" not in plan
+    assert "partial_collect_set" not in plan
     final = plan.split("== Initial Plan ==")[0].splitlines()
-    set_exchanges = [
-        line
-        for line, below in zip(final, final[1:])
-        if "Exchange hashpartitioning" in line
-        and "ReusedExchange" not in line
-        and "partial_collect_set" in below
+    shuffles = [
+        i
+        for i, line in enumerate(final)
+        if "Exchange hashpartitioning" in line and "ReusedExchange" not in line
     ]
-    assert len(set_exchanges) == 1, plan
+    assert len(shuffles) == 1, plan
+    partial, packed = final[shuffles[0] + 1], final[shuffles[0] + 2]
+    one_list = r"functions=\[partial_collect_list\(\w+#\d+, 0, 0\)\]"
+    assert re.search(one_list, partial), plan
+    assert "struct(text, text#" in packed, plan
+    fields = [f"m_{k}, array_min(" for k in range(NUM_MINHASHES)]
+    assert all(f in packed for f in fields), plan
 
 
 def test_dedup_minhash_lsh_edge_cases(spark):
@@ -270,17 +283,73 @@ def test_dedup_minhash_lsh_edge_cases(spark):
     assert (5, 6, 1.0) in got
 
 
+def test_minhash_map_side_signature_equals_set_shuffle(spark):
+    # the map-side signature (min over each row's min-hashes) is the one
+    # the old shingle-set shuffle computed, including for a doc_id split
+    # across rows, double spaces and repeated shingles, and the confirmed
+    # pairs are the ones it returned; docs with no shingle have no row
+    base = "alpha beta gamma delta epsilon zeta eta theta"
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "two words"),
+            (4, "two words"),
+            (5, base),
+            (6, base),
+            (7, base.replace("theta", "iota")),
+            (8, "nothing here is shared with any other document"),
+            (9, "alpha beta gamma delta"),
+            (9, "epsilon zeta eta theta"),
+            (9, None),
+            (10, "alpha  beta gamma  delta epsilon"),
+            (11, "alpha  beta gamma  delta epsilon zeta"),
+            (12, "x y z x y z x y z"),
+            (13, "x y z x y z"),
+        ],
+        "doc_id long, text string",
+    )
+    got = dedup_mod.dedup_minhash_lsh(docs, threshold=0.0)
+    assert sorted((r["da"], r["db"], r["jaccard"]) for r in got.collect()) == [
+        (5, 6, 1.0),
+        (5, 7, 0.714286),
+        (5, 9, 0.666667),
+        (6, 7, 0.714286),
+        (6, 9, 0.666667),
+        (7, 9, 0.428571),
+        (10, 11, 0.833333),
+        (12, 13, 1.0),
+    ]
+    mh = [f"mh_{k}" for k in range(NUM_MINHASHES)]
+    old = (
+        text_mod.exploded_shingles(docs)
+        .groupBy("doc_id")
+        .agg(F.collect_set("s").alias("ss"))
+        .select("doc_id", F.transform("ss", h32).alias("hs"))
+        .select(
+            "doc_id",
+            *[
+                F.array_min(F.transform("hs", dedup_mod._permutation(k))).alias(c)
+                for k, c in enumerate(mh)
+            ],
+        )
+    )
+    want = {r["doc_id"]: tuple(r[c] for c in mh) for r in old.collect()}
+    new = dedup_mod.minhash_sets(docs).select("doc_id", *mh)
+    assert {r["doc_id"]: tuple(r[c] for c in mh) for r in new.collect()} == want
+    assert set(want) == {5, 6, 7, 8, 9, 10, 11, 12, 13}
+
+
 def test_minhash_banding_shrinks_candidates(spark):
     # r=4 banding must produce strictly fewer candidate pairs than r=1
     # (any-single-hash) banding on the synthetic-dup corpus, while still
     # catching every exact duplicate (identical signature in ALL bands).
     docs = dedup_mod.with_synthetic_dups(load_table(spark, SF_DIR, "documents"))
-    sh = text_mod.doc_shingles(docs)
-    n_r4 = dedup_mod.minhash_candidates(sh, bands=4, rows=4).count()
-    n_r1 = dedup_mod.minhash_candidates(sh, bands=16, rows=1).count()
+    n_r4 = dedup_mod.minhash_candidates(docs, bands=4, rows=4).count()
+    n_r1 = dedup_mod.minhash_candidates(docs, bands=16, rows=1).count()
     assert n_r4 < n_r1
     exact_dups = (
-        dedup_mod.minhash_candidates(sh, bands=4, rows=4)
+        dedup_mod.minhash_candidates(docs, bands=4, rows=4)
         .filter(F.col("db") == F.col("da") + 1_000_000)
         .count()
     )

@@ -13,19 +13,23 @@ scheduler round-trips).
 Usage: python tools/job_census.py SF_DIR query [query ...]
 Prints one JSON line per query:
   {"query": q, "wall_s": w, "jobs": j, "stages": s, "tasks": t,
-   "skipped_stages": k, "skipped_tasks": kt, "shuffle_bytes": b}
+   "skipped_stages": k, "skipped_tasks": kt, "shuffle_bytes": b,
+   "executor_cpu_s": c}
 ``stages`` and ``tasks`` count every stage of every job, skipped ones
 (whose shuffle output an earlier job already wrote) included; the
 ``skipped_`` fields are that part. ``shuffle_bytes`` is the shuffle
-write of the stages that ran.
+write and ``executor_cpu_s`` the executor CPU time (``executorCpuTime``)
+of the stages that ran. A query listed twice gets two rows, each
+counted over its own run.
 
 Methodology matches bench.py: tables + derived-graph caches warmed
 outside the census and the Python worker pool pre-spun
 (``tools/harness.py``), noop-sink execution. The registry frees the
 previous query's checkpoints as each query begins (an unpersist, which
-launches no job), so the census itself evicts nothing. Run each query
-under its own job group; stages/tasks summed over the group's jobs via
-statusTracker.
+launches no job), so the census itself evicts nothing. Each row runs
+under its own job group (``census-<i>-<query>``); stages/tasks summed
+over the group's jobs via statusTracker, shuffle and CPU read from the
+status store.
 """
 
 from __future__ import annotations
@@ -61,9 +65,9 @@ def main() -> int:
     jsc = sc._jsc
     tracker = sc.statusTracker()
     store = jsc.sc().statusStore()
-    for name in names:
+    for i, name in enumerate(names):
         fn = queries[name]
-        group = f"census-{name}"
+        group = f"census-{i}-{name}"
         sc.setJobGroup(group, group)
         t0 = time.time()
         try:
@@ -73,7 +77,7 @@ def main() -> int:
         wall = time.time() - t0
         jsc.sc().listenerBus().waitUntilEmpty()
         job_ids = tracker.getJobIdsForGroup(group)
-        stages = tasks = skipped = skipped_tasks = shuffle = 0
+        stages = tasks = skipped = skipped_tasks = shuffle = cpu_ns = 0
         for jid in job_ids:
             info = tracker.getJobInfo(jid)
             if info is None:
@@ -89,6 +93,7 @@ def main() -> int:
                         skipped_tasks += si.numTasks
                     else:
                         shuffle += data.shuffleWriteBytes()
+                        cpu_ns += data.executorCpuTime()
         print(
             json.dumps(
                 {
@@ -100,6 +105,7 @@ def main() -> int:
                     "skipped_stages": skipped,
                     "skipped_tasks": skipped_tasks,
                     "shuffle_bytes": shuffle,
+                    "executor_cpu_s": round(cpu_ns / 1e9, 3),
                 }
             ),
             flush=True,
