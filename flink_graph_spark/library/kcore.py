@@ -8,8 +8,9 @@ edge frame shrinks monotonically, so later rounds get cheaper; lineage
 is truncated per round with ``localCheckpoint``. A fixed ``max_iter``
 bounds the unrolled DuckDB oracle; peeling converges when a round
 removes nothing, after which further rounds are no-ops — the Spark
-loop early-stops on that (an ``isEmpty`` on the removed set, not a
-collect), making extra oracle rounds semantically free.
+loop early-stops on that (a ``count`` of the removed vertices, the job
+that materializes the round's lazy degree checkpoint), making extra
+oracle rounds semantically free.
 """
 
 from __future__ import annotations

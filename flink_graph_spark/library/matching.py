@@ -17,45 +17,50 @@ edge set).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
+
+
+def _accept(free: DataFrame) -> DataFrame:
+    """One propose–accept round's accepted pairs, checkpointed."""
+    return (
+        free.groupBy("src").agg(F.max("dst").alias("dst"))
+        .groupBy("dst").agg(F.max("src").alias("src"))
+        .select("src", "dst")
+        .localCheckpoint(eager=True)
+    )
 
 
 def bipartite_matching(graph: Graph, max_rounds: int = 5) -> DataFrame:
     """(src, dst) matched pairs after ``max_rounds`` propose–accept
-    rounds over ``graph``'s directed edges (src side proposes)."""
-    free = (
-        graph.edges.select("src", "dst").distinct().localCheckpoint(
-            eager=True
+    rounds over ``graph``'s directed edges (src side proposes), one
+    accepted-pairs checkpoint per round."""
+    edges = graph.edges.select("src", "dst")
+    if max_rounds <= 0:
+        return edges.limit(0)
+    accepted = []
+
+    def round_(free: DataFrame, _it: int) -> DataFrame:
+        acc = _accept(free)
+        accepted.append(acc)
+        return free.join(acc.select("src"), "src", "left_anti").join(
+            acc.select("dst"), "dst", "left_anti"
         )
+
+    free, _, _ = iterate(
+        edges.distinct().localCheckpoint(eager=True), round_, max_rounds - 1
     )
-    matched: DataFrame | None = None
-    for r in range(max_rounds):
-        prop = free.groupBy("src").agg(F.max("dst").alias("dst"))
-        acc = prop.groupBy("dst").agg(F.max("src").alias("src")).select(
-            "src", "dst"
-        )
-        acc = acc.localCheckpoint(eager=True)
-        matched = acc if matched is None else matched.unionByName(acc)
-        if r == max_rounds - 1:
-            # the final round's shrunken edge set feeds nothing — skip
-            # the two anti-joins (the oracle's unrolled chain stops at
-            # the same point)
-            break
-        # the per-round `acc` checkpoints all survive — the returned
-        # union reads every one of them; only `free` is rolling scratch
-        prev = free
-        free = (
-            free.join(acc.select("src"), "src", "left_anti")
-            .join(acc.select("dst"), "dst", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(prev)
+    # the last round stops at its accepted pairs: the edge set it would
+    # leave feeds nothing (the oracle's unrolled chain stops there too)
+    accepted.append(_accept(free))
     release_local_checkpoint(free)
-    return matched
+    return reduce(DataFrame.unionByName, accepted)
 
 
 def oracle_ctes(edges_cte: str, max_rounds: int = 5) -> tuple[str, str]:

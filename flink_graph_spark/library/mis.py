@@ -12,16 +12,14 @@ replays them exactly.
 
 Scale: each round is one message aggregation (min neighbor priority
 over the undecided subgraph, a single shuffle), one filter for the
-round's winners, and one anti-join removing winners and their
-neighbors from the undecided set; the undecided set shrinks
+round's winners, and one anti-join removing the winners' neighbors
+from the undecided set; the undecided set shrinks
 geometrically (Luby: expected O(log n) rounds), so like k-core the
-early rounds dominate. Only the undecided set is checkpointed per
-round (its survivor count doubles as the next round's emptiness
-check). The winner frames stay lazy over their round's undecided
-checkpoint and are unioned into ONE materialization after the loop,
-so every round's undecided checkpoint stays resident until then:
-checkpoint storage is O(max_iter) rounds, bounded by the geometric
-shrink, and all of it is released once the result is materialized.
+early rounds dominate. The rounds run on ``operators.iterate``: the
+state is the undecided vertices plus every winner so far, flagged
+``w``, so one state checkpoint is live at a time and the result is the
+``w`` rows of the last one. The count of undecided rows is the
+kernel's fused convergence signal; the loop stops once none remain.
 """
 
 from __future__ import annotations
@@ -30,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 
 PRIORITY_MULT = 2654435761
@@ -48,37 +47,12 @@ def maximal_independent_set(graph: Graph, max_iter: int = 6) -> DataFrame:
     rounds (mirrored by the oracle); Luby converges in O(log n)
     expected rounds, and on convergence extra rounds are no-ops."""
     edges = graph.simple_undirected_edges().localCheckpoint(eager=True)
-    und = graph.vertices.select(
-        "id", priority_col("id").alias("p")
+    state = graph.vertices.select(
+        "id", priority_col("id").alias("p"), F.lit(False).alias("w")
     ).localCheckpoint(eager=True)
 
-    # r10 (guide §2.4 remove shuffles / §2.6 driver round-trips): the
-    # old round built ``ue`` = edges semi-joined to und on BOTH
-    # endpoints and fed it to the neighbor-min agg and the removal set.
-    # Both semi-joins are provably redundant:
-    #   * nbr_min groups by src, and winners LEFT-joins it FROM und —
-    #     groups whose src is already decided are simply never looked
-    #     up, so filtering src ∈ und changes nothing; dst ∈ und is the
-    #     inner join with the (dst, np) state itself.
-    #   * removed is anti-joined against und — neighbors that are
-    #     already decided subtract nothing, so filtering the winner
-    #     fan-out to und is a no-op.
-    # Dropping ue removes two edge-scale semi-joins (and their
-    # exchanges/broadcasts) from every round. The per-round eager
-    # checkpoint of the accumulating ``mis`` frame is gone too: winner
-    # frames stay lazy over their round's (kept-alive) und checkpoint
-    # and union into ONE materialization after the loop — same total
-    # compute (winners were always evaluated twice: once under the
-    # removal count, once under the mis materialization), max_iter-1
-    # fewer driver actions. Round walls / job counts: OPTIMIZATION_r10.md.
-    winner_frames: list[DataFrame] = []
-    und_ckpts: list[DataFrame] = [und]
-    n_und: int | None = None  # carried from the round-end count below
-    for i in range(max_iter):
-        # first round: one cheap scan of the initial checkpoint; later
-        # rounds reuse the count that materialized und (no extra job)
-        if (n_und == 0) or (n_und is None and und.isEmpty()):
-            break
+    def round_(state: DataFrame, _it: int) -> DataFrame:
+        und = state.where(~F.col("w"))
         nbr_min = (
             edges.join(
                 und.select(F.col("id").alias("dst"), F.col("p").alias("np")),
@@ -87,41 +61,20 @@ def maximal_independent_set(graph: Graph, max_iter: int = 6) -> DataFrame:
             .groupBy(F.col("src").alias("id"))
             .agg(F.min("np").alias("nmin"))
         )
-        winners = (
-            und.join(nbr_min, "id", "left")
-            .where(F.col("nmin").isNull() | (F.col("p") < F.col("nmin")))
-            .select("id")
-        )
-        winner_frames.append(winners)
-        if i == max_iter - 1:
-            # the final round's undecided-set update feeds nothing —
-            # skip it (the oracle's unrolled chain stops at the same
-            # point)
-            break
-        # no .distinct(): the only consumer is the left_anti below, for
-        # which duplicate right-side keys are a no-op — deduping first
-        # costs one extra exchange+agg per round for nothing
-        removed = winners.unionByName(
-            edges.join(winners.withColumnRenamed("id", "src"), "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-        )
-        # LAZY checkpoint materialized by the survivor count — the count
-        # doubles as next round's emptiness check, one action instead of
-        # eager-checkpoint + isEmpty
-        und = und.join(removed, "id", "left_anti").localCheckpoint(eager=False)
-        n_und = und.count()
-        und_ckpts.append(und)
+        # a vertex wins iff its priority beats every undecided neighbor's
+        wins = F.col("nmin").isNull() | (F.col("p") < F.col("nmin"))
+        flagged = und.join(nbr_min, "id", "left").select("id", "p", wins.alias("w"))
+        # winners are pairwise non-adjacent, so dropping the winners'
+        # neighbors keeps every winner; duplicate right-side keys are a
+        # no-op for the left_anti, so the neighbor list is not deduped
+        lost = edges.join(
+            flagged.where("w").select(F.col("id").alias("src")), "src", "left_semi"
+        ).select(F.col("dst").alias("id"))
+        return state.where("w").unionByName(flagged.join(lost, "id", "left_anti"))
 
-    mis = und.select("id").where(F.lit(False))
-    for w in winner_frames:
-        mis = mis.unionByName(w)
-    # one materialization for the whole accumulated set; every round's
-    # und checkpoint is still alive here (winner frames read them)
-    mis = mis.localCheckpoint(eager=True)
-    for ckpt in und_ckpts:
-        release_local_checkpoint(ckpt)
+    state, _, _ = iterate(state, round_, max_iter, changed=~F.col("w"))
     release_local_checkpoint(edges)
-    return mis.orderBy("id")
+    return state.where("w").select("id").orderBy("id")
 
 
 def oracle_ctes(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import release_local_checkpoint
 
 W_MOD = 1000
@@ -39,6 +40,14 @@ def _w_expr(cs, cd):
         )
         % F.lit(W_MOD)
     ).cast("long")
+
+
+def _jump(ptr: DataFrame, _it: int) -> DataFrame:
+    """One pointer jump over (comp, p): p ← p∘p, the old p kept as q."""
+    nxt = ptr.select(F.col("comp").alias("p"), F.col("p").alias("pn"))
+    return ptr.join(nxt, "p").select(
+        "comp", F.col("pn").alias("p"), F.col("p").alias("q")
+    )
 
 
 def boruvka_mst(
@@ -83,20 +92,19 @@ def boruvka_mst(
             .select("ca", "cb", "cs", "cd", "w")
             .localCheckpoint(eager=True)
         )
-        if sel.limit(1).count() == 0:
-            # converged: no component has an outgoing edge. Extra
-            # rounds are no-ops in BOTH engines (the oracle's unrolled
-            # sel_r CTEs come up empty), so stopping early preserves
-            # parity while skipping dead scheduler rounds.
-            release_local_checkpoint(sel)
-            break
-        chosen = sel.select("cs", "cd", "w").distinct()
-        mst_prev = mst
-        mst = chosen if mst is None else mst.unionByName(chosen).distinct()
-        mst = mst.localCheckpoint(eager=True)
-        if mst_prev is not None:
-            release_local_checkpoint(mst_prev)
-        if r == rounds - 1:
+        # empty: no component has an outgoing edge. Extra rounds
+        # are no-ops in BOTH engines (the oracle's unrolled sel_r CTEs
+        # come up empty), so stopping early preserves parity while
+        # skipping dead scheduler rounds.
+        empty = sel.limit(1).count() == 0
+        if not empty:
+            chosen = sel.select("cs", "cd", "w").distinct()
+            mst_prev = mst
+            mst = chosen if mst is None else mst.unionByName(chosen).distinct()
+            mst = mst.localCheckpoint(eager=True)
+            if mst_prev is not None:
+                release_local_checkpoint(mst_prev)
+        if empty or r == rounds - 1:
             # the final round's label contraction feeds no further
             # selection — skip the pointer graph and jump chain (the
             # oracle's unrolled chain stops at the same point)
@@ -129,20 +137,21 @@ def boruvka_mst(
         # ptr's blocks are materialized; sel is no longer read by any
         # surviving plan (mst was checkpointed above)
         release_local_checkpoint(sel)
-        for _j in range(jumps):
-            nxt = ptr.select(F.col("comp").alias("p"), F.col("p").alias("pn"))
-            ptr_prev = ptr
-            ptr = ptr.join(nxt, "p").select(
-                "comp", F.col("pn").alias("p")
-            ).localCheckpoint(eager=True)
-            release_local_checkpoint(ptr_prev)
+        # pointer jumps, stopped by the first that moves no pointer:
+        # all sit on roots then, and the oracle's extra jumps are no-ops
+        ptr, _, converged = iterate(
+            ptr, _jump, jumps, changed=F.col("p") != F.col("q")
+        )
         # Convergence guard: every pointer must now reach a root
         # (p == p∘p). The oracle unrolls the SAME fixed jump count, so
         # an unconverged chain would not be a parity mismatch — it
         # would be the SAME silent cycle edge in both engines. Fail
-        # loudly instead: one count over the ≤n-row component table.
+        # loudly instead: one count over the ≤n-row component table,
+        # needed only when the last jump still moved a pointer.
         pj = ptr.select(F.col("comp").alias("p"), F.col("p").alias("p2"))
-        stale = ptr.join(pj, "p").filter(F.col("p") != F.col("p2")).count()
+        stale = not converged and (
+            ptr.join(pj, "p").filter(F.col("p") != F.col("p2")).count()
+        )
         if stale:
             raise RuntimeError(
                 f"boruvka_mst: {stale} component pointers unconverged "

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..operators.iterate import iterate
 from ..plans.checkpoints import (
     drain_shuffle_scratch,
     release_local_checkpoint,
@@ -175,15 +176,25 @@ def _edge_commons(
     Σ in·out wedge table never exists; downstream consumers see only
     #triangle corner rows (or just array sizes).
     """
+    return _commons(_oriented_checkpoint(e, assume_distinct), n_edges_hint)
+
+
+def _oriented_checkpoint(e: DataFrame, assume_distinct: bool) -> DataFrame:
+    """(a, b) — the deduped, oriented edges, checkpointed once: they feed
+    the adjacency groupBy AND the probe side of :func:`_commons` (else
+    the degree joins re-run per leg, 2x slower at sf0.1)."""
     de = _distinct_edges(e, assume_distinct)
-    # materialize the oriented edge list once — it feeds the adjacency
-    # groupBy AND the probe side; without this the degree joins re-run
-    # per leg (measured 2x slower at sf0.1 on the old plan's 3 legs)
     oe = _oriented_edges(de).select("a", "b").localCheckpoint(eager=True)
     if de is not e:
         # the deduped scratch blocks fed the (now-materialized) oriented
         # list and nothing else — release them immediately
         release_local_checkpoint(de)
+    return oe
+
+
+def _commons(oe: DataFrame, n_edges_hint: int | None) -> DataFrame:
+    """:func:`_edge_commons` over the oriented-edge checkpoint ``oe``.
+    The one-wave result reads ``oe``; the wave path releases it."""
     outadj = oe.groupBy(F.col("a").alias("id")).agg(
         F.sort_array(F.collect_set("b")).alias("ns")
     )
@@ -369,7 +380,14 @@ def edge_support(graph: Graph) -> DataFrame:
     join back to the edge list (edges in no triangle report 0).
     """
     e = graph.edges.select("src", "dst")
-    tri = _closed_wedges(e, graph.distinct_edges, graph.edge_count_hint())
+    return _support(
+        e, _edge_commons(e, graph.distinct_edges, graph.edge_count_hint())
+    )
+
+
+def _support(e: DataFrame, commons: DataFrame) -> DataFrame:
+    """:func:`edge_support` of the edges ``e`` from their commons."""
+    tri = commons.select("a", "b", F.explode("cs").alias("c"))
     mm = lambda x, y: F.struct(  # noqa: E731 — canonical (min,max) pair
         F.least(x, y).alias("src"), F.greatest(x, y).alias("dst")
     )
@@ -422,39 +440,35 @@ LEFT JOIN (
 def k_truss(graph: Graph, k: int = 3, max_rounds: int = 3) -> DataFrame:
     """k-truss edge set: iteratively peel edges whose triangle support
     is < k-2 until stable (bounded by ``max_rounds`` so the unrolled
-    oracle matches round-for-round; the Spark loop early-stops via an
-    ``isEmpty`` on the peeled set, so extra oracle rounds are no-ops).
-    Returns (src, dst, support) of surviving edges with their support
-    in the FINAL surviving subgraph. Each round reuses the O(m^1.5)
-    oriented support computation; the edge frame shrinks monotonically.
+    oracle matches round-for-round). Returns (src, dst, support) of
+    surviving edges with their support in the FINAL surviving subgraph.
+    On ``operators.iterate``: the state is the support table, each
+    superstep one O(m^1.5) support pass over its rows with support >=
+    k-2 (the seed gives every edge k-2), and the count of rows below
+    k-2 stops the loop at the fixed point, where extra oracle rounds
+    are no-ops.
     """
-    e = graph.edges.select("src", "dst").localCheckpoint(eager=True)
     thresh = k - 2
-    for _ in range(max_rounds):
-        # LAZY checkpoint of the O(m^1.5) support table, materialized by
-        # the dropped-count job itself — one action per round instead of
-        # eager-checkpoint + isEmpty (same fusion as the Pregel superstep)
-        sup = edge_support(
-            Graph(graph.vertices, e, distinct_edges=graph.distinct_edges)
-        ).localCheckpoint(eager=False)
-        n_dropped = sup.filter(F.col("support") < thresh).count()
-        if n_dropped == 0:
-            release_local_checkpoint(sup)
-            break
-        e_prev = e
-        e = (
-            sup.filter(F.col("support") >= thresh)
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(e_prev)
-        release_local_checkpoint(sup)
-    # final e stays — the returned lazy support recomputation reads it
-    return edge_support(
-        Graph(graph.vertices, e, distinct_edges=graph.distinct_edges)
-    ).filter(
-        F.col("support") >= thresh
+    oe: list[DataFrame] = []
+
+    def peel(state: DataFrame, _it: int) -> DataFrame:
+        # the previous superstep's oriented edges fed only its support
+        # table, which the kernel has checkpointed by now
+        for prev in oe:
+            release_local_checkpoint(prev)
+        e = state.where(F.col("support") >= thresh).select("src", "dst")
+        oe[:] = [_oriented_checkpoint(e, graph.distinct_edges)]
+        return _support(e, _commons(oe[0], graph.edge_count_hint()))
+
+    seed = graph.edges.select(
+        "src", "dst", F.lit(thresh).cast("long").alias("support")
     )
+    state, _, _ = iterate(
+        seed, peel, max_rounds + 1, changed=F.col("support") < thresh
+    )
+    for prev in oe:
+        release_local_checkpoint(prev)
+    return state.where(F.col("support") >= thresh)
 
 
 def k_truss_ctes(

@@ -934,7 +934,8 @@ def test_coloring_respects_round_budget(spark):
 
 def test_bipartite_matching_resolves_conflicts(spark):
     """Lefts 1,2 both prefer right 20; 2 wins round 1 (max proposer),
-    1 falls back to 10 in round 2 -> perfect matching in 2 rounds."""
+    1 falls back to 10 in round 2 -> perfect matching in 2 rounds.
+    Zero rounds match nothing: an empty (src, dst) frame."""
     from flink_graph_spark.graph import Graph
     from flink_graph_spark.library.matching import bipartite_matching
 
@@ -945,6 +946,9 @@ def test_bipartite_matching_resolves_conflicts(spark):
     got = {(r["src"], r["dst"])
            for r in bipartite_matching(Graph(v, e), 2).collect()}
     assert got == {(2, 20), (1, 10)}
+    none = bipartite_matching(Graph(v, e), 0)
+    assert none.collect() == []
+    assert none.schema.simpleString() == "struct<src:bigint,dst:bigint>"
 
 
 def test_bipartite_matching_is_a_matching(spark):

@@ -480,7 +480,11 @@ def test_cadence_table_names_every_checkpointing_loop():
     cadence table, so a new hand-rolled loop cannot go unlisted. Nested
     functions are scanned on their own: a ``step`` closure handed to the
     kernel is not a loop of its enclosing function. A table row names a
-    function in its first column (``module.name`` counts as ``name``)."""
+    function in its first column (``module.name`` counts as ``name`` in
+    ``module.py``). The check runs both ways: every name in the table is
+    a function of the package, and every ``hand`` row still checkpoints
+    inside a loop, so a loop moved onto the kernel cannot leave its hand
+    row behind."""
     import ast
     import pathlib
 
@@ -509,24 +513,53 @@ def test_cadence_table_names_every_checkpointing_loop():
         )
 
     root = pathlib.Path(flink_graph_spark.__file__).parent
-    looping = {
-        f"{path.relative_to(root)}::{fn.name}"
+    functions = [
+        (path, fn)
         for path in root.rglob("*.py")
         for fn in ast.walk(ast.parse(path.read_text()))
         if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
-        and checkpoints_in_loop(fn)
+    ]
+    looping = {
+        f"{path.relative_to(root)}::{fn.name}"
+        for path, fn in functions
+        if checkpoints_in_loop(fn)
     }
     assert "operators/iterate.py::iterate" in looping
     lines = it_mod.__doc__.splitlines()
     rules = [i for i, ln in enumerate(lines) if ln.startswith("=====")]
-    width = len(lines[rules[0]].split(" ")[0])
-    table = {"iterate"} | {
-        name.rsplit(".", 1)[-1]
-        for ln in lines[rules[1] + 1:rules[-1]]
-        for name in re.findall(r"``([\w.]+)``", ln[:width])
-    }
+    width, every_width = (len(c) for c in lines[rules[0]].split()[:2])
+    rows: dict[str, str] = {}  # table name -> its row's ``every``
+    every = ""
+    for ln in lines[rules[1] + 1:rules[-1]]:
+        every = ln[width:width + every_width + 2].strip() or every
+        for name in re.findall(r"``([\w.]+)``", ln[:width]):
+            rows[name] = every
+    table = {"iterate"} | {name.rsplit(".", 1)[-1] for name in rows}
     missing = sorted(f for f in looping if f.split("::")[1] not in table)
     assert not missing, f"loops missing from the iterate.py cadence table: {missing}"
+
+    def matches(name: str, path, fn) -> bool:
+        mod, _, base = name.rpartition(".")
+        return fn.name == base and (not mod or path.stem == mod)
+
+    stale = sorted(
+        name
+        for name in rows
+        if not any(matches(name, path, fn) for path, fn in functions)
+    )
+    assert not stale, f"cadence table rows naming no function: {stale}"
+    not_looping = sorted(
+        name
+        for name, every in rows.items()
+        if every == "hand"
+        and not any(
+            matches(name, path, fn) and checkpoints_in_loop(fn)
+            for path, fn in functions
+        )
+    )
+    assert not not_looping, (
+        f"hand rows whose function checkpoints in no loop: {not_looping}"
+    )
 
 
 @pytest.mark.parametrize(
@@ -564,6 +597,60 @@ def test_functions_loops_keep_only_result_checkpoints(spark, op, kept):
         ),
         "bpe_compression": lambda: bpe_mod.bpe_compression(docs),
         "bpe_merges": lambda: bpe_mod.bpe_merges(docs, rounds=3),
+    }[op]
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(jmap().keySet().toArray())
+    run().collect()
+    gained = set(jmap().keySet().toArray()) - before
+    assert len(gained) == kept
+    for rid in gained:
+        jmap().get(rid).unpersist(False)
+
+
+@pytest.mark.parametrize(
+    "op, kept",
+    [
+        ("maximal_independent_set", 1),
+        ("bipartite_matching", 3),
+        ("k_truss", 1),
+        ("boruvka_mst", 1),
+    ],
+)
+def test_library_loops_keep_only_result_checkpoints(spark, op, kept):
+    """The library loops moved onto ``iterate`` leave only what their
+    result reads once it is collected: MIS, k-truss and the Borůvka
+    forest their last checkpoint, matching one accepted-pairs checkpoint
+    per round (three here). Each runs on a small hand graph."""
+    from flink_graph_spark.graph import Graph
+    from flink_graph_spark.library.matching import bipartite_matching
+    from flink_graph_spark.library.mis import maximal_independent_set
+    from flink_graph_spark.library.mst import boruvka_mst
+    from flink_graph_spark.library.triangles import k_truss
+    from flink_graph_spark.sources.generators import grid_graph
+
+    def graph(edges):
+        ids = sorted({i for e in edges for i in e})
+        return Graph(
+            spark.createDataFrame([(i,) for i in ids], "id long"),
+            spark.createDataFrame(edges, "src long, dst long"),
+        )
+
+    run = {
+        # path 1-2-3-4-5 plus the chord 2-4
+        "maximal_independent_set": lambda: maximal_independent_set(
+            graph([(1, 2), (2, 3), (3, 4), (4, 5), (2, 4)])
+        ),
+        # lefts 1..3 compete for rights 10..30, one match per round
+        "bipartite_matching": lambda: bipartite_matching(
+            graph([(1, 10), (1, 20), (1, 30), (2, 20), (2, 30), (3, 30)]), 3
+        ),
+        # two triangles sharing edge 2-3, plus the tail 4-5
+        "k_truss": lambda: k_truss(
+            graph([(1, 2), (1, 3), (2, 3), (2, 4), (3, 4), (4, 5)]),
+            k=3,
+            max_rounds=2,
+        ),
+        "boruvka_mst": lambda: boruvka_mst(grid_graph(spark, 3, 3)),
     }[op]
     jmap = spark.sparkContext._jsc.getPersistentRDDs
     before = set(jmap().keySet().toArray())
