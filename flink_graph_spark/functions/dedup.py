@@ -383,16 +383,6 @@ def minhash_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, k, mh): the signature unpivoted (one row per
-    permutation) — the r=1 bucketing view, kept for tests/inspection.
-    """
-    stack = ", ".join(f"{k}, mh_{k}" for k in range(NUM_MINHASHES))
-    return minhash_sets(docs).selectExpr(
-        "doc_id", f"stack({NUM_MINHASHES}, {stack}) AS (k, mh)"
-    )
-
-
 def _bucket_pairs(
     sigs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:
@@ -419,14 +409,6 @@ def _bucket_pairs(
         .select("da", "db")
         .distinct()
     )
-
-
-def minhash_candidates(
-    docs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
-) -> DataFrame:
-    """Distinct candidate pairs (da < db) sharing at least one banded
-    LSH bucket, from (doc_id, text) rows."""
-    return _bucket_pairs(minhash_sets(docs), bands, rows)
 
 
 def _side(sets: DataFrame, side: str, signature: bool = False) -> DataFrame:

@@ -1,13 +1,14 @@
-"""Multimodal column handling — image/audio/video as opaque ``binary``
-columns with typed metadata, processed through Arrow-batched
-``mapInPandas`` (north-star extension, SURVEY.md §2.10).
+"""Multimodal column handling — an opaque ``binary`` payload column with
+typed metadata, processed through Arrow-batched ``mapInPandas``
+(north-star extension, SURVEY.md §2.10).
 
-The container has no image/audio codecs, so the actual decode step is a
-clearly-marked stub (``NotImplementedError``) with a deterministic fake
-used by tests — but the Spark-side plumbing is real: binary payload
+The container has no image/audio codecs, so the decode step is a
+deterministic fake (``fake_decode``: byte length and the sum of the
+first 8 bytes) — but the Spark-side plumbing is real: binary payload
 column, metadata struct, mapInPandas batch iterator with a fixed output
-schema, partition-preserving flow. Swap ``decode_image`` for a PIL/ffmpeg
-call on a real cluster and nothing else changes.
+schema, partition-preserving flow, and a DuckDB twin that replays the
+same byte arithmetic. Swap ``fake_decode`` for a PIL/ffmpeg call on a
+real cluster and nothing else changes.
 """
 
 from __future__ import annotations
@@ -38,12 +39,6 @@ def with_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_image(payload: bytes):  # pragma: no cover - stub
-    """STUB: real impl would be PIL/turbojpeg. Not available in this
-    container — see module docstring."""
-    raise NotImplementedError("image codecs not available in this environment")
-
-
 def fake_decode(payload: bytes) -> tuple[int, int]:
     """Deterministic fake decoder: (n_bytes, sum of first 8 byte values).
     Stands in for (width, height)-style metadata extraction."""
@@ -55,7 +50,7 @@ def extract_features(docs_payload: DataFrame) -> DataFrame:
 
     mapInPandas: each batch arrives as a pandas DataFrame; the UDF is
     pure per-row so Spark keeps partitioning intact (no shuffle). This
-    is the pattern for decode / resize / frame-sample at scale.
+    is the pattern for any per-row decode at scale.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -93,78 +88,3 @@ SELECT doc_id,
                     AS BIGINT)), 'sum'), 0)
             AS BIGINT) END AS head_sum
 FROM documents"""
-
-
-# ---- resize / frame-sample plumbing ----------------------------------
-
-RESIZED_SCHEMA = (
-    "doc_id long, payload binary, width int, height int, resized binary"
-)
-FRAMES_SCHEMA = "doc_id long, frame_idx int, frame binary"
-
-
-def decode_audio(payload: bytes):  # pragma: no cover - stub
-    """STUB: real impl would be soundfile/ffmpeg (absent here)."""
-    raise NotImplementedError("audio codecs not available in this environment")
-
-
-def fake_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Deterministic fake resize: truncate/tile payload to w*h bytes —
-    stands in for a decoded-and-resampled pixel buffer of exactly the
-    target size, so downstream batch-shape assertions are real.
-    """
-    need = w * h
-    if not payload:
-        return bytes(need)
-    reps = (need // len(payload)) + 1
-    return (payload * reps)[:need]
-
-
-def resize_images(docs_payload: DataFrame, width: int = 16, height: int = 8) -> DataFrame:
-    """Arrow-batched 'resize': one output row per input row, payload
-    replaced by a fixed-size buffer + dimensions. Pure per-row →
-    partition-preserving, no shuffle; swap fake_resize for
-    PIL.Image.resize and nothing else changes.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["payload"],
-                    "width": width,
-                    "height": height,
-                    "resized": pdf["payload"].map(
-                        lambda p: fake_resize(p, width, height)
-                    ),
-                }
-            )
-
-    return docs_payload.mapInPandas(batches, RESIZED_SCHEMA)
-
-
-def sample_frames(docs_payload: DataFrame, n_frames: int = 4, frame_bytes: int = 32) -> DataFrame:
-    """Arrow-batched 'frame sampling': 1→N row explosion inside the UDF
-    (the video-decode shape: one container in, n frames out). Evenly
-    spaced deterministic offsets; at scale the output is re-partitioned
-    by the caller if frames feed a shuffle-heavy stage.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                if not p:
-                    continue
-                step = max(len(p) // n_frames, 1)
-                for i in range(n_frames):
-                    off = min(i * step, max(len(p) - 1, 0))
-                    ids.append(did)
-                    idxs.append(i)
-                    frames.append(bytes(p[off : off + frame_bytes]))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return docs_payload.mapInPandas(batches, FRAMES_SCHEMA)

@@ -58,9 +58,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 
 
-def adamic_adar(
-    graph: Graph, round_to: int = 6, salt_buckets: int | None = None
-) -> DataFrame:
+def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
     """Returns (src, dst, aa) for every edge; neighborhoods over the
     undirected view, 0.0 when the endpoints share no neighbor."""
     from ..plans.checkpoints import release_local_checkpoint
@@ -125,26 +123,7 @@ def adamic_adar(
     op = oe.join(deg.select(F.col("id").alias("b"), "deg"), "b").select(
         "a", packed.alias("p")
     )
-    if salt_buckets:
-        # hub-safe two-phase collect (out-fan is already O(sqrt m)
-        # under the orientation, so this is rarely needed — kept for
-        # API parity with jaccard)
-        from ..functions.skew import salted_agg
-
-        outadj = salted_agg(
-            op,
-            keys=["a"],
-            salt_on=F.col("p"),
-            partial_aggs=[F.collect_set("p").alias("part")],
-            final_aggs=[
-                F.sort_array(
-                    F.array_distinct(F.flatten(F.collect_list("part")))
-                ).alias("ns")
-            ],
-            buckets=salt_buckets,
-        )
-    else:
-        outadj = op.groupBy("a").agg(F.sort_array(F.collect_set("p")).alias("ns"))
+    outadj = op.groupBy("a").agg(F.sort_array(F.collect_set("p")).alias("ns"))
 
     # oriented edges with endpoint weights on the row + both packed
     # out-arrays; a always has out-edges, b may be a DAG sink (left
@@ -310,11 +289,6 @@ LEFT JOIN aa_s c ON c.src = e.src AND c.dst = e.dst"""
 class AdamicAdar:
     """GraphAlgorithm packaging: edge value = Adamic-Adar score."""
 
-    def __init__(self, salt_buckets: int | None = None):
-        self.salt_buckets = salt_buckets
-
     def run(self, graph: Graph) -> Graph:
-        scored = adamic_adar(
-            graph, round_to=None, salt_buckets=self.salt_buckets
-        ).withColumnRenamed("aa", "value")
+        scored = adamic_adar(graph, round_to=None).withColumnRenamed("aa", "value")
         return Graph(graph.vertices, scored)

@@ -19,7 +19,6 @@ from ..operators.pregel import pregel
 def connected_components(
     graph: Graph,
     max_iter: int = 10,
-    check_convergence: bool = False,
     symmetrized_edges: bool = False,
 ) -> DataFrame:
     """Returns (id, comp) = min vertex id reachable within max_iter hops
@@ -70,13 +69,12 @@ def connected_components(
         max_iter=max_iter,
         state_col="comp",
         delta=True,
-        check_convergence=check_convergence,
     )
     if ue is not None:
-        # safe because every pregel superstep (delta=True above or not)
-        # ends in an eager localCheckpoint: the returned state reads
-        # that checkpoint (with max_iter=0, only the vertex frame),
-        # never the loop-scoped symmetrized table
+        # safe because iterate checkpoints the last superstep eagerly,
+        # so the returned state reads that checkpoint and never ``ue``;
+        # with max_iter=0 no superstep runs and the result is the lazy
+        # checkpoint of the caller's vertices, which never read ``ue``
         ue.unpersist()
     return res.vertices
 

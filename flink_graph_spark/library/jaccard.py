@@ -2,12 +2,12 @@
 example/JaccardSimilarityMeasure.java [unverified, SURVEY §2.9]:
 |N(u) ∩ N(v)| / |N(u) ∪ N(v)| over undirected neighbor sets.
 
-Implemented as a count-based inverted-index plan (edges ⋈ adjacency ⋈
-adjacency + hash aggs) instead of the reference's collect-the-
-neighborhood-into-a-set approach: no per-vertex set materialization, so
-hub vertices don't blow memory at scale; everything is joins + aggs
-Catalyst can reorder and AQE can skew-split. Integer counts → division
-of identical ints is bit-identical in Spark and DuckDB.
+One implementation: sorted per-vertex neighbor arrays attached to each
+edge's endpoints, intersected with ``array_intersect`` (see
+``jaccard_similarity``). Its DuckDB twin, ``oracle_ctes``, is the
+count-based wedge join (edges ⋈ adjacency ⋈ adjacency + a grouped
+count); both divide identical integer counts, so the scores are
+bit-identical in Spark and DuckDB.
 """
 
 from __future__ import annotations
@@ -61,7 +61,6 @@ def _adjacency_payload_bytes(adj: DataFrame) -> int:
 def jaccard_similarity(
     graph: Graph,
     round_to: int = 6,
-    salt_buckets: int | None = None,
     n_edges_hint: int | None = None,
 ) -> DataFrame:
     """Returns (src, dst, jaccard) for every edge. Neighborhoods are over
@@ -95,11 +94,12 @@ def jaccard_similarity(
     whether the one-action payload measurement runs).
 
     Hub handling: ``collect_set`` is a holistic agg — one reduce task
-    owns a hub's entire raw inbox. ``salt_buckets`` builds the arrays
-    via the two-phase salted agg (``functions.skew.salted_adjacency``)
-    so hub inboxes spread over N reducers; the final per-vertex array
-    still materializes (fine to ~1e6 degree). Beyond that, use
-    ``jaccard_similarity_counts`` — no arrays at all.
+    owns a hub's entire raw inbox, and the hub's array materializes on
+    every edge row that touches it (fine to ~1e6 degree). Duplicate
+    edge rows cannot inflate a score: the arrays are sets, and each
+    duplicate row re-emits the same value. No query graph comes near
+    that degree; a cluster that meets one needs a plan without
+    per-vertex arrays (SCALING.md §4).
     """
     from ..plans.checkpoints import (
         drain_shuffle_scratch,
@@ -108,19 +108,12 @@ def jaccard_similarity(
     from ..plans.reuse import reuse_leaf
 
     e = graph.edges.select("src", "dst")
-    if salt_buckets:
-        from ..functions.skew import salted_adjacency
-
-        adj = salted_adjacency(e, buckets=salt_buckets)
-    else:
-        adj = (
-            e.select(F.col("src").alias("id"), F.col("dst").alias("nbr"))
-            .unionByName(
-                e.select(F.col("dst").alias("id"), F.col("src").alias("nbr"))
-            )
-            .groupBy("id")
-            .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
-        )
+    adj = (
+        e.select(F.col("src").alias("id"), F.col("dst").alias("nbr"))
+        .unionByName(e.select(F.col("dst").alias("id"), F.col("src").alias("nbr")))
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
+    )
 
     def _attach(edges: DataFrame, adj_df: DataFrame) -> DataFrame:
         a = adj_df.select(F.col("id").alias("src"), F.col("ns").alias("na"))
@@ -184,55 +177,6 @@ def jaccard_similarity(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def jaccard_similarity_counts(graph: Graph, round_to: int = 6) -> DataFrame:
-    """Count-based wedge-join variant: no per-vertex neighbor array, so
-    hub degree never hits executor memory — the skew-safe path for
-    power-law graphs (AQE splits the skewed wedge join). Costs an
-    |E|·avg-degree intermediate; prefer ``jaccard_similarity`` when
-    max degree is bounded.
-    """
-    e = graph.edges.select("src", "dst")
-    # the wedge join must run over DISTINCT edges: a duplicated edge
-    # row would double `common` past the inclusion-exclusion bound and
-    # the denominator ds+dd-common can reach 0 (divide-by-zero under
-    # ANSI mode) — found by the skewed-RMat integration test, whose
-    # generator emits multi-edges. Builders that guarantee distinctness
-    # (Graph.distinct_edges) skip the extra edge-table shuffle.
-    ed = e if graph.distinct_edges else e.distinct()
-    adj = (
-        e.select(F.col("src").alias("id"), F.col("dst").alias("nbr"))
-        .unionByName(e.select(F.col("dst").alias("id"), F.col("src").alias("nbr")))
-        .distinct()
-    )
-    deg = adj.groupBy("id").agg(F.count("*").alias("deg"))
-
-    a = adj.select(F.col("id").alias("src"), F.col("nbr").alias("na"))
-    b = adj.select(F.col("id").alias("bid"), F.col("nbr").alias("nb"))
-    common = (
-        ed.join(a, "src")
-        .join(b, (F.col("dst") == F.col("bid")) & (F.col("na") == F.col("nb")))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("common"))
-    )
-
-    ds = deg.select(F.col("id").alias("src"), F.col("deg").alias("ds"))
-    dd = deg.select(F.col("id").alias("dst"), F.col("deg").alias("dd"))
-    return (
-        e.join(ds, "src")
-        .join(dd, "dst")
-        .join(common, ["src", "dst"], "left")
-        .select(
-            "src",
-            "dst",
-            F.round(
-                F.coalesce(F.col("common"), F.lit(0)).cast("double")
-                / (F.col("ds") + F.col("dd") - F.coalesce(F.col("common"), F.lit(0))),
-                round_to,
-            ).alias("jaccard"),
-        )
-    )
 
 
 def oracle_ctes(edges_cte: str, round_to: int = 6) -> tuple[str, str]:

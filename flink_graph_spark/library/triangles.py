@@ -143,8 +143,10 @@ def _oriented_edges(e: DataFrame, deg: DataFrame | None = None) -> DataFrame:
 
 
 def _distinct_edges(e: DataFrame, assume_distinct: bool) -> DataFrame:
-    """Multigraph guard for the wedge machinery (same hazard as
-    jaccard_similarity_counts). When the Graph carries the builder's
+    """Multigraph guard for the wedge machinery: a duplicated edge row
+    would re-drive every wedge through it and multiply the triangle and
+    common-neighbor counts (SCALING.md §15). When the Graph carries the
+    builder's
     ``distinct_edges`` guarantee this is FREE — the defensive distinct
     is one full edge-table shuffle, and every plan leg that re-reads it
     (degree union, degree joins) recomputes it, so skipping it on

@@ -86,7 +86,6 @@ def pregel(
     msg_to_src: Column | None = None,
     max_iter: int = 10,
     state_col: str = "state",
-    check_convergence: bool = False,
     delta: bool = False,
     msg_to_dst_reads: tuple[str, ...] | None = None,
     msg_to_src_reads: tuple[str, ...] | None = None,
@@ -108,18 +107,18 @@ def pregel(
                        that received no non-null message (an empty
                        inbox, or one holding only null messages).
 
-    With ``check_convergence`` the loop stops early when no vertex state
-    changed (exact equality, null-safe); otherwise runs ``max_iter``
-    fixed supersteps (the oracle-parity mode).
+    Without ``delta`` the loop runs ``max_iter`` fixed supersteps (the
+    oracle-parity mode).
 
     ``delta=True`` enables Spargel's workset semantics (the reference's
     actual model: only vertices UPDATED last superstep send messages).
     Valid for idempotent kernels (min/max propagation — SSSP, CC) where
     re-sending an unchanged state is redundant: results are identical to
     full propagation at any iteration count, but converged regions stop
-    costing anything, and the loop exits early once the frontier
-    empties (safe even in fixed-iteration oracle mode — no state can
-    change with an empty workset). NOT valid for PageRank-style sums,
+    costing anything, and the loop exits early once no vertex state
+    changed (exact equality, null-safe), which empties the frontier
+    (safe even in fixed-iteration oracle mode — no state can change
+    with an empty workset). NOT valid for PageRank-style sums,
     which need every contribution every superstep.
     """
     # Persist the loop-invariant edges (repartitioned by src) once, so
@@ -143,7 +142,6 @@ def pregel(
     # caller's uncached vertex frame (incremental SSSP's join, an SCC
     # peel round) is computed once, not once per read in superstep 1
     v0 = graph.vertices.select("id", initial.alias(state_col)).localCheckpoint(eager=False)
-    counted = delta or check_convergence
     changed_col = ~F.col(state_col).eqNullSafe(F.col("__old"))
 
     def superstep(cur: DataFrame, it: int) -> DataFrame:
@@ -201,7 +199,7 @@ def pregel(
     # with delta, the changed rows are also next superstep's frontier
     # (an empty one ends the loop)
     v, it, converged = iterate(
-        v0, superstep, max_iter, changed=changed_col if counted else None
+        v0, superstep, max_iter, changed=changed_col if delta else None
     )
     if owns_edge_cache:
         edges.unpersist()

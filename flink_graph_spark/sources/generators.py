@@ -119,13 +119,6 @@ def rmat_edges(spark: SparkSession, scale: int, n_edges: int) -> DataFrame:
     )
 
 
-def rmat_graph(spark: SparkSession, scale: int, n_edges: int) -> Graph:
-    e = rmat_edges(spark, scale, n_edges).withColumn(
-        "value", F.lit(1).cast("long")
-    )
-    return Graph.from_edges(e)
-
-
 def rmat_edges_sql(scale: int, n_edges: int) -> str:
     """DuckDB CTE replaying the identical RMat arithmetic
     (composes as `rmat_edges AS MATERIALIZED (...)`)."""

@@ -1,10 +1,11 @@
-"""Graph sinks + round-trip loaders.
+"""Graph sinks.
 
 Reference sinks are ``writeAsCsv(path)`` / ``print()`` on result DataSets
-(test/example drivers, SURVEY.md §2.1). The engine's canonical sink is
-partitioned Parquet (columnar, pushdown-friendly on re-read); CSV kept
-for reference parity. No ``print``-style driver collect — the driver
-contract returns DataFrames.
+(test/example drivers, SURVEY.md §2.1). The engine's sinks are Parquet
+(columnar, pushdown-friendly on re-read) and a bucketed edge table;
+``spark.read.parquet`` reads the first back, and a CSV writer is one
+``df.write.csv`` call, so none is wrapped here. No ``print``-style
+driver collect — the driver contract returns DataFrames.
 """
 
 from __future__ import annotations
@@ -21,19 +22,6 @@ def write_graph_parquet(graph: Graph, path: str, mode: str = "overwrite") -> Non
     """
     graph.vertices.write.mode(mode).parquet(f"{path}/vertices")
     graph.edges.repartition("src").write.mode(mode).parquet(f"{path}/edges")
-
-
-def read_graph_parquet(spark: SparkSession, path: str) -> Graph:
-    return Graph(
-        spark.read.parquet(f"{path}/vertices"),
-        spark.read.parquet(f"{path}/edges"),
-    )
-
-
-def write_graph_csv(graph: Graph, path: str, mode: str = "overwrite") -> None:
-    """writeAsCsv parity (reference test/example sink)."""
-    graph.vertices.write.mode(mode).option("header", "true").csv(f"{path}/vertices")
-    graph.edges.write.mode(mode).option("header", "true").csv(f"{path}/edges")
 
 
 def write_edges_bucketed(
@@ -73,49 +61,3 @@ def read_edges_bucketed(spark: SparkSession, table: str):
     catalog; requires ``spark.sql.sources.bucketing.enabled``, on by
     default)."""
     return spark.table(table)
-
-
-def write_graph_orc(graph: Graph, path: str, mode: str = "overwrite") -> None:
-    """ORC sink — same layout contract as the Parquet sink (edges
-    re-partitioned by src) for deployments standardized on ORC; both
-    columnar formats carry pushdown + pruning on re-read."""
-    graph.vertices.write.mode(mode).orc(f"{path}/vertices")
-    graph.edges.repartition("src").write.mode(mode).orc(f"{path}/edges")
-
-
-def read_graph_orc(spark: SparkSession, path: str) -> Graph:
-    return Graph(
-        spark.read.orc(f"{path}/vertices"),
-        spark.read.orc(f"{path}/edges"),
-    )
-
-
-def write_events_partitioned(
-    events, path: str, mode: str = "overwrite"
-) -> None:
-    """Land the event stream partitioned by DAY (Hive-style directory
-    partitioning on a derived ``day`` column) — the at-rest layout for
-    time-series at 100 TB: a day- or hour-bounded query prunes to the
-    matching directories at PLANNING time (PartitionFilters in the
-    scan), so a one-day report over a year of data reads ~1/365th of
-    the files. Partition count stays bounded (days, not hours×keys);
-    within each day the files keep the writer's natural ordering.
-    Verified by plan test (PartitionFilters present + non-matching
-    partitions absent from the scan)."""
-    from pyspark.sql import functions as F
-
-    (
-        events.withColumn("day", F.to_date("ts"))
-        .write.mode(mode)
-        .partitionBy("day")
-        .parquet(path)
-    )
-
-
-def read_events_day(spark: SparkSession, path: str, day: str):
-    """Read ONE day back from the partitioned layout — the filter is on
-    the partition column, so pruning happens before any file is
-    opened."""
-    from pyspark.sql import functions as F
-
-    return spark.read.parquet(path).filter(F.col("day") == F.lit(day))

@@ -7,8 +7,6 @@ columnar Parquet so Catalyst gets pushdown + pruning for free.
 
 from __future__ import annotations
 
-import os
-
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,13 +24,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 # Parquet schema inference costs one Spark job per read. ``load_table``
 # infers each table once and hands the StructType back to
@@ -115,14 +106,3 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def read_csv_edges(spark: SparkSession, path: str, delimiter: str = ",") -> DataFrame:
-    """CSV edge-list source (the reference's example-driver input path:
-    env.readCsvFile → edge tuples, example/*.java ~L30-60).
-    """
-    return (
-        spark.read.option("delimiter", delimiter)
-        .schema("src long, dst long, value long")
-        .csv(path)
-    )

@@ -283,80 +283,3 @@ def streaming_nation_counts(
             ),
         )
     )
-
-
-def stream_to_bucketed_table(
-    stream_df: DataFrame,
-    table: str,
-    bucket_col: str,
-    buckets: int = 32,
-) -> DataFrame:
-    """Land a stream into a src-of-truth BUCKETED table via
-    ``foreachBatch`` — the ingest→at-rest bridge: micro-batches append
-    into one Hive-bucketed parquet table, so every downstream consumer
-    (including the next round of batch graph builds) starts its
-    ``bucket_col``-keyed joins WITHOUT a shuffle, straight off disk.
-    ``writeStream.format('parquet')`` cannot carry bucket metadata;
-    foreachBatch reuses the batch writer, which can. Runs one
-    availableNow pass and returns the resulting table as a DataFrame.
-
-    At scale this is the continuous version of
-    ``sources.sinks.write_edges_bucketed``: the per-batch write cost is
-    one local sort per bucket file; no global shuffle is added to the
-    stream, because bucketing hashes rows at WRITE time.
-
-    Exactly-once landing: the table is PARTITIONED by ``__batch_id``
-    (and bucketed by ``bucket_col`` within each partition), and each
-    micro-batch overwrites ONLY its own partition (dynamic partition
-    overwrite). A batch that wrote its files but crashed before the
-    checkpoint commit is re-run on restart and replaces — not
-    duplicates — its partition. The checkpoint location is derived
-    from the table name, so a failed run re-invoked RESUMES batch
-    tracking instead of re-appending already-landed batches; on a
-    fresh start (no checkpoint on disk) any existing table is dropped
-    and rebuilt, and the checkpoint is removed after a successful
-    availableNow pass (per-partition overwrite keeps correctness even
-    without it). ``__batch_id`` is internal: it is dropped from the
-    returned frame, and partition pruning keeps it free for readers.
-    """
-    import shutil
-
-    spark = stream_df.sparkSession
-    ckpt = os.path.join(tempfile.gettempdir(), "fgs_bkt_ckpt", table)
-    if not os.path.isdir(ckpt):
-        # fresh land (no resumable state): rebuild from scratch rather
-        # than appending onto a previous invocation's rows
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        out = batch_df.withColumn("__batch_id", F.lit(batch_id))
-        old = sess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            if sess.catalog.tableExists(table):
-                # partition-level overwrite: idempotent per batch_id
-                out.write.mode("overwrite").insertInto(table)
-            else:
-                (
-                    out.write.mode("overwrite")
-                    .format("parquet")
-                    .partitionBy("__batch_id")
-                    .bucketBy(buckets, bucket_col)
-                    .sortBy(bucket_col)
-                    .saveAsTable(table)
-                )
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(table).drop("__batch_id")

@@ -52,8 +52,17 @@ def test_connected_components_two_islands(spark):
         [(i, i) for i in range(1, 7)],
         [(1, 2, 0), (2, 3, 0), (5, 4, 0), (6, 5, 0)],
     )
-    c = rows_as_dict(connected_components(g, max_iter=6), "id", "comp")
-    assert c == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
+    # collected after return, so after the loop-scoped symmetrized edge
+    # table is unpersisted: no result may read it, including max_iter=0
+    # (the caller's vertices) and a single superstep
+    want = {
+        0: {i: i for i in range(1, 7)},
+        1: {1: 1, 2: 1, 3: 2, 4: 4, 5: 4, 6: 5},
+        6: {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4},
+    }
+    for max_iter, comps in want.items():
+        c = rows_as_dict(connected_components(g, max_iter=max_iter), "id", "comp")
+        assert c == comps, max_iter
 
 
 def test_is_weakly_connected(golden, spark):
@@ -155,7 +164,7 @@ def test_pregel_convergence_early_stop(golden):
         agg=F.min("__msg").alias("__agg"),
         update=F.least(F.col("state"), F.col("__agg")),
         max_iter=30,
-        check_convergence=True,
+        delta=True,
     )
     assert res.converged
     assert res.iterations < 30
@@ -325,7 +334,7 @@ def test_pregel_struct_state_carry_is_a_hash_aggregate(spark):
     assert df.select(state.alias("state")).first()["state"] == (0.5, 2)
 
 
-@pytest.mark.parametrize("delta", [False, True])
+@pytest.mark.parametrize("delta", [True])
 def test_pregel_empty_graph_converges(spark, delta):
     # the observed changed-count must arrive (not block) when the
     # checkpoint job has no rows at all
@@ -337,7 +346,7 @@ def test_pregel_empty_graph_converges(spark, delta):
     t = threading.Thread(
         target=lambda: out.update(
             res=_min_label_pregel(
-                Graph(v, e), max_iter=5, check_convergence=True, delta=delta
+                Graph(v, e), max_iter=5, delta=delta
             )
         ),
         daemon=True,
@@ -1135,24 +1144,12 @@ def test_incremental_pagerank_converges_to_full_recompute(spark):
         assert abs(warm[k] - full[k]) < 1e-3
 
 
-def test_adamic_adar_salted_matches_unsalted_and_guard_fires(spark):
-    """The r7 packed-long plan: the salted two-phase collect must score
-    identically to the default path, and the id-domain guard must fail
-    LOUDLY (not silently corrupt) on an id outside [0, 2^40)."""
+def test_adamic_adar_packing_guard_fires(spark):
+    """The r7 packed-long plan: the id-domain guard must fail LOUDLY
+    (not silently corrupt) on an id outside [0, 2^40)."""
     import pytest as _pt
 
     from flink_graph_spark.library.adamic_adar import adamic_adar
-
-    edges = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (2, 4)]
-    g = Graph.from_collection(
-        spark, [(i, i) for i in range(1, 5)], [(s, d, 0) for s, d in edges]
-    )
-    plain = {(r["src"], r["dst"]): r["aa"] for r in adamic_adar(g).collect()}
-    salted = {
-        (r["src"], r["dst"]): r["aa"]
-        for r in adamic_adar(g, salt_buckets=4).collect()
-    }
-    assert plain == salted and len(plain) == len(edges)
 
     big = 1 << 41
     bad = Graph.from_collection(

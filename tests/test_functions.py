@@ -193,8 +193,8 @@ def test_ngram_pair_join_caps_hot_shingles(spark):
 
 
 def test_minhash_similar_docs_share_buckets(docs):
-    sig = dedup_mod.minhash_signatures(docs)
-    assert sig.select("doc_id").distinct().count() == 4
+    sets = dedup_mod.minhash_sets(docs)
+    assert sets.select("doc_id").distinct().count() == 4
     pairs = dedup_mod.dedup_minhash_lsh(docs, threshold=0.05)
     got = {(r["da"], r["db"]) for r in pairs.collect()}
     assert (1, 4) in got  # identical docs always collide
@@ -345,11 +345,12 @@ def test_minhash_banding_shrinks_candidates(spark):
     # (any-single-hash) banding on the synthetic-dup corpus, while still
     # catching every exact duplicate (identical signature in ALL bands).
     docs = dedup_mod.with_synthetic_dups(load_table(spark, SF_DIR, "documents"))
-    n_r4 = dedup_mod.minhash_candidates(docs, bands=4, rows=4).count()
-    n_r1 = dedup_mod.minhash_candidates(docs, bands=16, rows=1).count()
+    sets = dedup_mod.minhash_sets(docs)
+    n_r4 = dedup_mod._bucket_pairs(sets, bands=4, rows=4).count()
+    n_r1 = dedup_mod._bucket_pairs(sets, bands=16, rows=1).count()
     assert n_r4 < n_r1
     exact_dups = (
-        dedup_mod.minhash_candidates(docs, bands=4, rows=4)
+        dedup_mod._bucket_pairs(sets, bands=4, rows=4)
         .filter(F.col("db") == F.col("da") + 1_000_000)
         .count()
     )
@@ -471,11 +472,6 @@ def test_multimodal_payload_and_features(spark):
     assert all(r["head_sum"] > 0 for r in rows)
 
 
-def test_multimodal_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        mm_mod.decode_image(b"\x89PNG")
-
-
 def test_corpus_prep_pipeline(spark, docs):
     out = text_mod.corpus_prep(spark, docs, min_quality=0.0)
     rows = {r["doc_id"]: r for r in out.collect()}
@@ -485,72 +481,6 @@ def test_corpus_prep_pipeline(spark, docs):
     assert all(r["pred_lang"] for r in rows.values())
     strict = text_mod.corpus_prep(spark, docs, min_quality=2.0)
     assert strict.count() == 0
-
-
-def test_multimodal_resize_shapes(spark):
-    docs = load_table(spark, SF_DIR, "documents").limit(20)
-    out = mm_mod.resize_images(mm_mod.with_payload(docs), width=16, height=8)
-    rows = out.collect()
-    assert len(rows) == 20
-    assert all(len(r["resized"]) == 16 * 8 for r in rows)
-    assert dict(out.dtypes)["resized"] == "binary"
-
-
-def test_multimodal_frame_sampling(spark):
-    docs = load_table(spark, SF_DIR, "documents").limit(10)
-    out = mm_mod.sample_frames(mm_mod.with_payload(docs), n_frames=4, frame_bytes=8)
-    rows = out.collect()
-    assert len(rows) == 40  # 1 -> 4 explosion
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    assert all(sorted(v) == [0, 1, 2, 3] for v in by_doc.values())
-    assert all(0 < len(r["frame"]) <= 8 for r in rows)
-
-
-def test_multimodal_audio_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        mm_mod.decode_audio(b"RIFF")
-
-
-# --- skew-safe two-phase aggregation ----------------------------------
-
-def test_salted_adjacency_matches_direct(spark):
-    from flink_graph_spark.functions.skew import salted_adjacency
-    from flink_graph_spark.sources.graphs import golden_graph
-
-    e = golden_graph(spark).edges
-    direct = (
-        e.selectExpr("src AS id", "dst AS nbr")
-        .unionByName(e.selectExpr("dst AS id", "src AS nbr"))
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
-    )
-    salted = salted_adjacency(e, buckets=4)
-    want = {r["id"]: r["ns"] for r in direct.collect()}
-    got = {r["id"]: r["ns"] for r in salted.collect()}
-    assert got == want
-
-
-def test_salted_agg_hub_key(spark):
-    from flink_graph_spark.functions.skew import salted_agg
-
-    # one hub key with 500 values + a normal key
-    rows = [(1, v) for v in range(500)] + [(2, 7)]
-    df = spark.createDataFrame(rows, "k long, v long")
-    out = salted_agg(
-        df,
-        keys=["k"],
-        salt_on=F.col("v"),
-        partial_aggs=[F.collect_set("v").alias("part")],
-        final_aggs=[
-            F.sort_array(F.array_distinct(F.flatten(F.collect_list("part")))).alias("vs")
-        ],
-        buckets=8,
-    )
-    got = {r["k"]: r["vs"] for r in out.collect()}
-    assert got[1] == list(range(500))
-    assert got[2] == [7]
 
 
 class _FakeState:

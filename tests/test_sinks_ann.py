@@ -1,5 +1,5 @@
-"""Graph parquet/CSV sink round-trips, CSV edge source, IVF ANN, and
-the custom stateful streaming operator.
+"""Graph parquet sink round-trip, IVF ANN, and the custom stateful
+streaming operator.
 """
 
 from __future__ import annotations
@@ -11,12 +11,8 @@ from pyspark.sql import functions as F
 
 from conftest import SF_DIR, rows_as_set
 from flink_graph_spark.functions import similarity as sim_mod
-from flink_graph_spark.sources.sinks import (
-    read_graph_parquet,
-    write_graph_csv,
-    write_graph_parquet,
-)
-from flink_graph_spark.sources.tables import load_table, read_csv_edges, table_rows
+from flink_graph_spark.sources.sinks import write_graph_parquet
+from flink_graph_spark.sources.tables import load_table, table_rows
 from flink_graph_spark.streaming.events import read_events_stream, run_available_now
 from flink_graph_spark.streaming.stateful import running_user_totals
 
@@ -24,18 +20,10 @@ from flink_graph_spark.streaming.stateful import running_user_totals
 def test_parquet_graph_roundtrip(spark, golden):
     with tempfile.TemporaryDirectory() as d:
         write_graph_parquet(golden, d)
-        g2 = read_graph_parquet(spark, d)
-        assert rows_as_set(g2.vertices) == rows_as_set(golden.vertices)
-        assert rows_as_set(g2.edges) == rows_as_set(golden.edges)
-
-
-def test_csv_sink_and_source_roundtrip(spark, golden):
-    with tempfile.TemporaryDirectory() as d:
-        write_graph_csv(golden, d)
-        edges = read_csv_edges(spark, f"{d}/edges")
-        # header=true on write; schema-based read skips malformed header row
-        got = {t for t in rows_as_set(edges) if t[0] is not None}
-        assert got == rows_as_set(golden.edges)
+        vertices = spark.read.parquet(f"{d}/vertices")
+        edges = spark.read.parquet(f"{d}/edges")
+        assert rows_as_set(vertices) == rows_as_set(golden.vertices)
+        assert rows_as_set(edges) == rows_as_set(golden.edges)
 
 
 def test_load_table_repeat_read_runs_no_job(spark):
@@ -643,23 +631,6 @@ def test_json_source_tolerates_malformed_ts(spark, tmp_path):
     got = {r["event_id"]: r["ts"] for r in parse_events_ts(raw).collect()}
     assert got[2] is None and got[3] is None
     assert got[1] is not None and got[1].isoformat() == "2024-01-02T03:04:05.000006"
-
-
-def test_orc_graph_round_trip(spark, tmp_path, golden):
-    from flink_graph_spark.sources.sinks import (
-        read_graph_orc,
-        write_graph_orc,
-    )
-
-    path = str(tmp_path / "g_orc")
-    write_graph_orc(golden, path)
-    back = read_graph_orc(spark, path)
-    assert {tuple(r) for r in back.vertices.collect()} == {
-        tuple(r) for r in golden.vertices.collect()
-    }
-    assert {tuple(r) for r in back.edges.collect()} == {
-        tuple(r) for r in golden.edges.collect()
-    }
 
 
 def test_bench_recall_harness_clears_gates(spark):

@@ -1,10 +1,10 @@
 """End-to-end skew hardening (r3 verdict item 6).
 
-Unit tests already prove ``salted_agg``/``salted_adjacency`` correct on
-tiny frames; these tests drive the SAME machinery through a full
-library operator on a deliberately skewed graph, and prove the AQE
-skew-join escape hatch actually fires inside this engine's session
-config — the two claims SCALING.md §7 makes about the 100 TB posture.
+These tests prove the AQE skew-join escape hatch actually fires inside
+this engine's session config (the claim SCALING.md §7 makes about the
+100 TB posture), that Pregel loops do not accrete cached blocks over a
+long session, and that duplicate edge rows cannot inflate the
+wedge-based scores.
 """
 
 from __future__ import annotations
@@ -13,37 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from flink_graph_spark.library.jaccard import (
-    jaccard_similarity,
-    jaccard_similarity_counts,
-)
-from flink_graph_spark.sources.generators import rmat_graph
-
-
-def _as_map(df):
-    return {(r["src"], r["dst"]): r["jaccard"] for r in df.collect()}
-
-
-def test_jaccard_salted_end_to_end_on_skewed_rmat(spark):
-    """All three Jaccard plans — direct collect_set adjacency, salted
-    two-phase adjacency, and array-free wedge counts — agree edge for
-    edge on a power-law RMat graph whose hubs make collect_set the
-    skew-fragile path. This is the end-to-end twin of the unit-level
-    salted_adjacency parity test."""
-    g = rmat_graph(spark, scale=9, n_edges=8000)
-    # confirm the fixture actually IS skewed (hub degree >> mean),
-    # otherwise the test exercises nothing
-    deg = g.edges.select(F.explode(F.array("src", "dst")).alias("id")) \
-        .groupBy("id").count()
-    stats = deg.agg(F.max("count").alias("mx"), F.avg("count").alias("av")) \
-        .collect()[0]
-    assert stats["mx"] > 10 * stats["av"], "fixture lost its skew"
-
-    direct = _as_map(jaccard_similarity(g))
-    salted = _as_map(jaccard_similarity(g, salt_buckets=8))
-    counts = _as_map(jaccard_similarity_counts(g))
-    assert salted == direct
-    assert counts == direct
+from flink_graph_spark.library.jaccard import jaccard_similarity
 
 
 def test_aqe_skew_join_fires_on_hub_key(spark):
@@ -147,11 +117,11 @@ def test_pregel_soak_no_cache_growth(spark):
 
 
 def test_multigraph_duplicate_edges_do_not_double_scores(spark):
-    """Duplicate edge rows must not inflate wedge-count scores: the
-    count-based Jaccard and Adamic-Adar score each DISTINCT edge once
-    (dup rows re-emit the same value). Found via the RMat multigraph:
-    doubled `common` overflowed inclusion-exclusion into a zero (then
-    negative) denominator."""
+    """Duplicate edge rows must not inflate wedge-count scores: Jaccard
+    and Adamic-Adar score each DISTINCT edge once (dup rows re-emit the
+    same value). Found via the RMat multigraph: a doubled `common` once
+    overflowed inclusion-exclusion into a zero (then negative)
+    denominator."""
     from flink_graph_spark.graph import Graph
     from flink_graph_spark.library.adamic_adar import adamic_adar
 
@@ -161,7 +131,7 @@ def test_multigraph_duplicate_edges_do_not_double_scores(spark):
     g_dup = Graph.from_edges(dup.withColumn("value", F.lit(1)))
     g_ded = Graph.from_edges(ded.withColumn("value", F.lit(1)))
 
-    for fn in (jaccard_similarity_counts, adamic_adar):
+    for fn in (jaccard_similarity, adamic_adar):
         want = {(r[0], r[1]): r[2] for r in fn(g_ded).collect()}
         got = {(r[0], r[1]): r[2] for r in fn(g_dup).collect()}
         assert got == want, fn.__name__

@@ -112,65 +112,6 @@ def test_streaming_degrees_accumulates_across_batches(spark, tmp_path):
     assert got == {1: 2, 2: 1, 3: 2, 4: 1, 5: 1}
 
 
-def test_stream_bucketed_landing_idempotent_across_reinvocation(spark):
-    """Calling stream_to_bucketed_table twice on the same table must not
-    duplicate rows: a fresh invocation (no resumable checkpoint)
-    rebuilds the table, and each micro-batch overwrites only its own
-    __batch_id partition — the crash-retry idempotence contract."""
-    import uuid
-
-    from flink_graph_spark.streaming.events import (
-        read_events_stream,
-        stream_to_bucketed_table,
-    )
-
-    table = f"bkt_idem_{uuid.uuid4().hex[:8]}"
-    try:
-        s1 = read_events_stream(spark, SF_DIR).select("user_id", "event_id")
-        n1 = stream_to_bucketed_table(s1, table, "user_id", buckets=4).count()
-        s2 = read_events_stream(spark, SF_DIR).select("user_id", "event_id")
-        n2 = stream_to_bucketed_table(s2, table, "user_id", buckets=4).count()
-        assert n1 == n2 == load_table(spark, SF_DIR, "events").count()
-        # the batch-id partition column stays internal
-        assert "__batch_id" not in stream_to_bucketed_table(
-            read_events_stream(spark, SF_DIR).select("user_id", "event_id"),
-            table, "user_id", buckets=4,
-        ).columns
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_stream_lands_in_bucketed_table_joinable_without_exchange(spark):
-    """events stream → foreachBatch → bucketed table; the landed table
-    self-joins on the bucket key with no shuffle exchange."""
-    import uuid
-
-    from flink_graph_spark.streaming.events import (
-        read_events_stream,
-        stream_to_bucketed_table,
-    )
-
-    table = f"bkt_stream_{uuid.uuid4().hex[:8]}"
-    stream = read_events_stream(spark, SF_DIR).select("user_id", "event_id")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        landed = stream_to_bucketed_table(stream, table, "user_id", buckets=4)
-        batch = load_table(spark, SF_DIR, "events")
-        assert landed.count() == batch.count()
-        t1 = spark.table(table)
-        t2 = spark.table(table).withColumnRenamed("event_id", "e2")
-        plan = (
-            t1.join(t2.select("user_id", "e2"), "user_id")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_streaming_quality_by_source_matches_batch(spark):
     from flink_graph_spark.functions import text as text_mod
     from flink_graph_spark.streaming import docs as docs_stream

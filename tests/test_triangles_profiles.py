@@ -93,21 +93,6 @@ def test_music_profiles_communities(mp_events):
     )
     assert labels4 == {1: 1, 2: 2}  # one more swap — exact semantics
 
-def test_jaccard_salted_matches_default(spark):
-    from flink_graph_spark.library.jaccard import jaccard_similarity
-    from flink_graph_spark.sources.graphs import golden_graph
-
-    g = golden_graph(spark)
-    want = {
-        (r["src"], r["dst"]): r["jaccard"]
-        for r in jaccard_similarity(g).collect()
-    }
-    got = {
-        (r["src"], r["dst"]): r["jaccard"]
-        for r in jaccard_similarity(g, salt_buckets=4).collect()
-    }
-    assert got == want
-
 
 def test_closed_wedges_match_bruteforce_on_skewed_random_graph(spark):
     """The r7 array-intersect enumeration must emit exactly the same

@@ -4,9 +4,8 @@ On a box whose scheduler probe reads 300-900 ms per no-op job (healthy
 floor: tens of ms — BASELINE.md), every Spark job a query launches
 costs ~0.5 s of pure driver-barrier latency before any data moves, so
 at bench scale (sf0.1 tables are KB-MB) wall time is dominated by JOB
-COUNT, not bytes. This tool measures that directly — counting, like
-tools/simhash_census.py, so it is scheduler-noise-insensitive — and is
-the measurement behind the r10 "fewer, larger jobs" changes
+COUNT, not bytes. This tool measures that directly — it counts, so it
+is scheduler-noise-insensitive — and is the measurement behind the r10 "fewer, larger jobs" changes
 (guide §2.2/§2.6: driver barriers are the local-mode analogue of
 scheduler round-trips).
 
