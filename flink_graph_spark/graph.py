@@ -896,7 +896,7 @@ class Graph:
     # physical-layout helpers (§4.2)
     # ------------------------------------------------------------------
 
-    def partition_by_src(self, num_partitions: int | None = None) -> "Graph":
+    def partition_by_src(self) -> "Graph":
         """Pre-partition edges by src and persist — reused across Pregel
         supersteps, so no superstep re-derives the edge table.
 
@@ -905,33 +905,14 @@ class Graph:
         the cached frame reports ``UnknownPartitioning``, so a join on
         src still broadcasts or shuffles a side (see ``operators.pregel``).
         """
-        e = (
-            self._edges.repartition(num_partitions, "src")
-            if num_partitions
-            else self._edges.repartition("src")
-        )
         return self._count_preserved(
             Graph(
                 self._vertices,
-                e.persist(),
+                self._edges.repartition("src").persist(),
                 src_partitioned=True,
                 distinct_edges=self.distinct_edges,
             )
         )
-
-    def persist(self) -> "Graph":
-        return self._count_preserved(
-            Graph(
-                self._vertices.persist(),
-                self._edges.persist(),
-                distinct_edges=self.distinct_edges,
-            )
-        )
-
-    def unpersist(self) -> "Graph":
-        self._vertices.unpersist()
-        self._edges.unpersist()
-        return self
 
 
 class GraphAlgorithm:

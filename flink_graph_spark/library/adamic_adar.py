@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..operators.iterate import waves
 
 
 def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
@@ -152,42 +153,27 @@ def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
     # carries the packed na arrays — 8 B x Σ out² of payload, measured
     # 6.7 GB at the 10x point and therefore ~67 GB at 100x under
     # disjoint replication, which exceeds a single box's free scratch
-    # once sort spill doubles it. triangles._wave_count slices the
-    # stream by hash(b) into waves of ~WAVE_TARGET_BYTES each; every
-    # wave's narrow output (triangle-carrying edges + their cs arrays —
-    # 8.1M rows / 18.8M elements at 10x) is checkpointed and the
-    # wave's scratch drained before the next begins. One wave (every
-    # graph below WAVE_EDGE_THRESHOLD, and a bigger one whose stream
-    # fits one wave): the plan is byte-identical to the r7 design and,
-    # like triangles._edge_commons' one-wave path, drains nothing.
-    from ..plans.checkpoints import drain_shuffle_scratch
+    # once sort spill doubles it. triangles._wave_count sizes waves of
+    # ~WAVE_TARGET_BYTES each and ``operators.iterate.waves`` runs them
+    # over hash(a, b) slices; every wave's narrow output
+    # (triangle-carrying edges + their cs arrays — 8.1M rows / 18.8M
+    # elements at 10x) is checkpointed and the wave's scratch drained
+    # before the next begins. One wave (every graph below
+    # WAVE_EDGE_THRESHOLD, and a bigger one whose stream fits one
+    # wave): the plan is byte-identical to the r7 design, checkpointed
+    # once, and drains nothing.
+    from .triangles import _wave_count
 
-    from .triangles import _wave_count, _wave_filter
-
-    spark = e.sparkSession
     n_waves = _wave_count(oe, graph.edge_count_hint())
-    if n_waves == 1:
-        enriched = _attach(oe).localCheckpoint(eager=True)
-        release_local_checkpoint(oe)
-        release_local_checkpoint(deg)
-    else:
+    if n_waves > 1:
         # checkpoint the shared compact frames once so waves do not
         # re-run the degree union / packing / adjacency work (_attach
         # is a closure over these names — rebinding rewires it)
         wgt = wgt.localCheckpoint(eager=True)
         outadj = outadj.localCheckpoint(eager=True)
-        parts = []
-        for k in range(n_waves):
-            w = _attach(_wave_filter(oe, k, n_waves)).localCheckpoint(
-                eager=True
-            )
-            drain_shuffle_scratch(spark)
-            parts.append(w)
-        for ck in (oe, outadj, wgt, deg):
-            release_local_checkpoint(ck)
-        enriched = parts[0]
-        for p in parts[1:]:
-            enriched = enriched.unionByName(p)
+    enriched = waves(
+        oe, _attach, n_waves, ("a", "b"), release=(oe, outadj, wgt, deg)
+    )
     # every triangle credits its three edges with the opposite corner's
     # weight in ONE map-side pass over the enumeration (a multi-branch
     # union would re-run it per branch): the (a, b) edge's whole credit

@@ -38,27 +38,24 @@ def connected_components(
     carries both directions of every undirected pair (e.g. the shared
     persisted cs_und/uu builder caches) — the loop then runs on it
     as-is with ZERO per-query edge materialization, the best posture at
-    every scale. Otherwise the symmetrized table is built once per
-    loop, hash(src)-partitioned and persisted (the community.py
-    posture; one 2|E| shuffle up front replaces per-superstep doubled
-    joins) and released before returning. Alternating same-session
+    every scale. Otherwise the symmetrized table goes to ``pregel``,
+    which hash(src)-partitions and persists it for the loop and
+    releases it on return (one 2|E| shuffle up front replaces
+    per-superstep doubled joins). Alternating same-session
     floors at sf0.1 measured the shapes within noise locally (3.15 /
     3.35 / 3.38s two-sided / sym-once / und-cache on the cs graph) —
     the win is the per-superstep join/exchange count at scale, see
     OPTIMIZATION_r10.md §2.
     """
-    if symmetrized_edges:
-        g, ue = graph, None
-    else:
+    g = graph
+    if not symmetrized_edges:
         e = graph.edges.select("src", "dst")
-        ue = (
+        g = Graph(
+            graph.vertices,
             e.unionByName(
                 e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition("src")
-            .persist()
+            ),
         )
-        g = Graph(graph.vertices, ue, src_partitioned=True)
     res = pregel(
         g,
         initial=F.col("id"),
@@ -70,12 +67,6 @@ def connected_components(
         state_col="comp",
         delta=True,
     )
-    if ue is not None:
-        # safe because iterate checkpoints the last superstep eagerly,
-        # so the returned state reads that checkpoint and never ``ue``;
-        # with max_iter=0 no superstep runs and the result is the lazy
-        # checkpoint of the caller's vertices, which never read ``ue``
-        ue.unpersist()
     return res.vertices
 
 

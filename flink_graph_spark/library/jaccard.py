@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..operators.iterate import waves
 
 #: Sizing itself must not add driver actions to small queries: the
 #: payload agg only runs when the edge count is known (the graph's
@@ -101,10 +102,6 @@ def jaccard_similarity(
     that degree; a cluster that meets one needs a plan without
     per-vertex arrays (SCALING.md §4).
     """
-    from ..plans.checkpoints import (
-        drain_shuffle_scratch,
-        release_local_checkpoint,
-    )
     from ..plans.reuse import reuse_leaf
 
     e = graph.edges.select("src", "dst")
@@ -157,26 +154,14 @@ def jaccard_similarity(
     if payload <= JACCARD_WAVE_MIN_PAYLOAD_BYTES:
         return _attach(e, adj)
     n_waves = max(2, -(-payload // JACCARD_WAVE_TARGET_BYTES))
-    spark = e.sparkSession
     lvl = graph.edges.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
         # each wave re-reads the edge frame — materialize once so a
         # derived (non-persisted) edge pipeline is not recomputed K×
         e = e.localCheckpoint(eager=True)
-    parts = []
-    for k in range(n_waves):
-        wave_edges = e.filter(
-            F.pmod(F.xxhash64("src", "dst"), F.lit(n_waves)) == F.lit(k)
-        )
-        w = _attach(wave_edges, adj).localCheckpoint(eager=True)
-        drain_shuffle_scratch(spark)
-        parts.append(w)
-    release_local_checkpoint(adj)
-    release_local_checkpoint(e)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return waves(
+        e, lambda w: _attach(w, adj), n_waves, ("src", "dst"), release=(adj, e)
+    )
 
 
 def oracle_ctes(edges_cte: str, round_to: int = 6) -> tuple[str, str]:

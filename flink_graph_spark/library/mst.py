@@ -20,6 +20,8 @@ pair, so fixture graphs are weight-deterministic in both engines.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -75,11 +77,12 @@ def boruvka_mst(
         F.least("cs", "cd").alias("cs"),
         F.greatest("cs", "cd").alias("cd"),
     )
-    labels = graph.vertices.select(
-        "id", F.col("id").alias("comp")
-    ).localCheckpoint(eager=True)
-    mst: DataFrame | None = None
-    for r in range(rounds):
+    chosen: list[DataFrame] = []  # each round's selection: the result
+    ptrs: list[DataFrame] = []
+
+    def choose(labels: DataFrame) -> DataFrame:
+        """Each component's lightest outgoing edge, checkpointed into
+        ``chosen``."""
         la = labels.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         lb = labels.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
         live = (
@@ -92,24 +95,15 @@ def boruvka_mst(
             .select("ca", "cb", "cs", "cd", "w")
             .localCheckpoint(eager=True)
         )
-        # empty: no component has an outgoing edge. Extra rounds
-        # are no-ops in BOTH engines (the oracle's unrolled sel_r CTEs
-        # come up empty), so stopping early preserves parity while
-        # skipping dead scheduler rounds.
-        empty = sel.limit(1).count() == 0
-        if not empty:
-            chosen = sel.select("cs", "cd", "w").distinct()
-            mst_prev = mst
-            mst = chosen if mst is None else mst.unionByName(chosen).distinct()
-            mst = mst.localCheckpoint(eager=True)
-            if mst_prev is not None:
-                release_local_checkpoint(mst_prev)
-        if empty or r == rounds - 1:
-            # the final round's label contraction feeds no further
-            # selection — skip the pointer graph and jump chain (the
-            # oracle's unrolled chain stops at the same point)
-            release_local_checkpoint(sel)
-            break
+        chosen.append(sel)
+        return sel
+
+    def merge(labels: DataFrame, _it: int) -> DataFrame:
+        # the previous round's pointers fed only its labels, which the
+        # kernel has checkpointed by now
+        for prev in ptrs:
+            release_local_checkpoint(prev)
+        sel = choose(labels)
         # pointer graph over components: p(c) = partner of the chosen
         # edge, identity for finished components
         comps = labels.select("comp").distinct()
@@ -134,9 +128,6 @@ def boruvka_mst(
             )
             .localCheckpoint(eager=True)
         )
-        # ptr's blocks are materialized; sel is no longer read by any
-        # surviving plan (mst was checkpointed above)
-        release_local_checkpoint(sel)
         # pointer jumps, stopped by the first that moves no pointer:
         # all sit on roots then, and the oracle's extra jumps are no-ops
         ptr, _, converged = iterate(
@@ -159,24 +150,38 @@ def boruvka_mst(
                 "raise `jumps` — the DuckDB oracle unrolls the same "
                 "count, so both sides must use the larger value"
             )
-        labels_prev = labels
-        labels = labels.join(
-            ptr, labels["comp"] == ptr["comp"]
-        ).select("id", F.col("p").alias("comp")).localCheckpoint(eager=True)
-        release_local_checkpoint(labels_prev)
-        release_local_checkpoint(ptr)
-    # the result reads only the final mst checkpoint
-    release_local_checkpoint(labels)
-    if mst is None:
-        # no component ever had an outgoing edge (empty or edge-free
-        # graph): the forest is empty — same (src, dst, w) schema
-        return canon.select(
-            F.col("cs").alias("src"), F.col("cd").alias("dst"), "w"
-        ).limit(0)
-    release_local_checkpoint(canon)
-    return mst.select(
-        F.col("cs").alias("src"), F.col("cd").alias("dst"), "w"
+        ptrs[:] = [ptr]
+        return labels.join(ptr, labels["comp"] == ptr["comp"]).select(
+            "id", F.col("p").alias("comp"), labels["comp"].alias("__old")
+        )
+
+    labels = graph.vertices.select(
+        "id", F.col("id").alias("comp")
+    ).localCheckpoint(eager=True)
+    # a round whose selection is empty (no component has an outgoing
+    # edge) changes no label and stops the loop; extra rounds are
+    # no-ops in BOTH engines (the oracle's unrolled sel_r CTEs come up
+    # empty), so stopping early preserves parity
+    labels, _, converged = iterate(
+        labels, merge, rounds - 1, changed=F.col("comp") != F.col("__old")
     )
+    for prev in ptrs:
+        release_local_checkpoint(prev)
+    if not converged:
+        # the last round stops at its selection: the label contraction
+        # it would feed has no consumer (the oracle's unrolled chain
+        # stops at the same point)
+        choose(labels)
+    # the result reads only the per-round selections
+    release_local_checkpoint(labels)
+    release_local_checkpoint(canon)
+    return reduce(
+        DataFrame.unionByName,
+        (
+            sel.select(F.col("cs").alias("src"), F.col("cd").alias("dst"), "w")
+            for sel in chosen
+        ),
+    ).distinct()
 
 
 def grid_oracle_sql(

@@ -11,8 +11,8 @@ Per round over the REMAINING graph:
    weakly-connected components, directed one way).
 2. bwd(v) = min vertex id v can reach (same kernel on reversed edges).
 3. fwd(v) == bwd(v) == m  ⇔  m reaches v AND v reaches m, i.e.
-   v ∈ SCC(m): emit (v, scc=m), peel completed vertices (and their
-   incident edges, via anti-joins) and repeat on the remainder.
+   v ∈ SCC(m): set scc(v) = m, which peels v and its incident edges,
+   and repeat on the remainder.
 
 Every round completes at least the SCC of the smallest remaining id
 (its members have fwd = bwd = that id), so the loop terminates; on
@@ -35,15 +35,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph, GraphAlgorithm
+from ..operators.iterate import iterate
 from ..operators.pregel import pregel
 from ..plans.checkpoints import release_local_checkpoint
 
 
 def _fwd_bwd_labels(
-    v: DataFrame, e: DataFrame, max_iter: int, delta: bool = True
-) -> DataFrame:
+    v: DataFrame, e: DataFrame, max_iter: int
+) -> tuple[DataFrame, DataFrame]:
     """(id, fwd, bwd) — fwd = min id with a directed path TO the vertex,
-    bwd = min id the vertex has a directed path to (both include self).
+    bwd = min id the vertex has a directed path to (both include self)
+    — and the inner Pregel's checkpoint those labels read.
 
     Both fixpoints run in ONE delta-mode Pregel with a two-channel
     struct state: the forward channel flows src→dst, the backward
@@ -76,93 +78,60 @@ def _fwd_bwd_labels(
             F.least(F.col("state.b"), F.col("__agg.b")).alias("b"),
         ),
         max_iter=max_iter,
-        delta=delta,
+        delta=True,
     )
-    return res.vertices.select(
+    labels = res.vertices.select(
         "id", F.col("state.f").alias("fwd"), F.col("state.b").alias("bwd")
     )
+    return labels, res.checkpoint
 
 
-def scc(
-    graph: Graph,
-    max_rounds: int = 5,
-    max_iter: "int | tuple[int, ...]" = 10,
-    delta: bool = True,
-) -> DataFrame:
+def scc(graph: Graph, max_rounds: int = 5, max_iter: int = 10) -> DataFrame:
     """(id, scc) — scc = min vertex id of each strongly connected
-    component. ``max_rounds`` bounds the peel loop (unpeeled leftovers
-    keep scc = their round-final fwd label only if fwd==bwd, so with
-    enough rounds the result is exact; fixture queries size the bound
-    to the condensation depth), ``max_iter`` each inner fixpoint — a
-    tuple gives a per-round schedule (last entry repeats), letting
-    fixed-round callers size later rounds to the shrinking remainder:
-    after a peel the remaining label depth only ever decreases, and in
-    non-delta mode every budgeted superstep runs whether needed or not,
-    so each superstep trimmed from a late round is a scheduler-floor
-    job saved.
+    component, for every vertex peeled within ``max_rounds`` rounds
+    (with enough rounds, every vertex; fixture queries size the bound
+    to the condensation depth). ``max_iter`` bounds each inner
+    fixpoint, which runs in delta mode: exact at any iteration count,
+    it messages only changed vertices and exits early.
 
-    ``delta=True`` (the scale default) messages only changed vertices
-    and exits each fixpoint early (the frontier count rides each
-    superstep's checkpoint job as an observed metric), at the cost of
-    an emptiness check and three checkpoints per peel round. For
-    small/shallow graphs where ``max_iter`` is sized to the known label
-    depth, ``delta=False`` runs exactly the budgeted supersteps and
-    leaves the peel frames lazy, saving those per-round jobs."""
-    v = graph.vertices.select("id")
+    The peel loop runs on ``operators.iterate``. The state is (id, scc)
+    over every vertex, NULL until the vertex is peeled; a round runs the
+    fixpoints over the unpeeled vertices and the edges between them and
+    fills in the vertices whose fwd == bwd. ``changed`` counts the
+    unpeeled vertices, so the loop stops, without a job of its own, at
+    the round that peels the last one."""
     e = graph.edges.select("src", "dst")
-    done: DataFrame | None = None
-    iters = (max_iter,) if isinstance(max_iter, int) else tuple(max_iter)
+    inner: list[DataFrame] = []
 
-    for rnd in range(max_rounds):
-        # The early-exit check is a job per round; in fixed-round mode
-        # (delta=False, rounds sized to the known condensation depth) a
-        # round over an already-empty remainder is a no-op anyway, so
-        # the check is only worth its job when delta mode may exit early.
-        if delta and v.isEmpty():
-            break
-        labels = _fwd_bwd_labels(
-            v, e, iters[min(rnd, len(iters) - 1)], delta=delta
+    def peel(state: DataFrame, it: int) -> DataFrame:
+        # the previous round's fixpoint checkpoint fed only its state,
+        # which the kernel has checkpointed by now
+        for prev in inner:
+            release_local_checkpoint(prev)
+        rest = state.where(F.col("scc").isNull()).select("id")
+        rest_e = e
+        if it > 1:  # the seed peels nothing: round 1 reads every edge
+            rest_e = e.join(
+                rest.select(F.col("id").alias("src")), "src", "left_semi"
+            ).join(rest.select(F.col("id").alias("dst")), "dst", "left_semi")
+        labels, ck = _fwd_bwd_labels(rest, rest_e, max_iter)
+        inner[:] = [ck]
+        # the labels cover every unpeeled vertex, so the new state is a
+        # union, not a join
+        return state.where(F.col("scc").isNotNull()).unionByName(
+            labels.select(
+                "id",
+                F.when(F.col("fwd") == F.col("bwd"), F.col("fwd")).alias("scc"),
+            )
         )
-        completed = labels.filter(F.col("fwd") == F.col("bwd")).select(
-            "id", F.col("fwd").alias("scc")
-        )
-        if delta:
-            # at scale: pin the peel set before three downstream joins
-            completed = completed.localCheckpoint(eager=True)
-        done = completed if done is None else done.unionByName(completed)
-        v = v.join(completed.select("id"), "id", "left_anti")
-        e = (
-            e.join(completed.select(F.col("id").alias("src")), "src", "left_anti")
-            .join(completed.select(F.col("id").alias("dst")), "dst", "left_anti")
-            .select("src", "dst")
-        )
-        if delta:
-            v_prev, e_prev = v, e
-            v = v.localCheckpoint(eager=True)
-            e = e.localCheckpoint(eager=True)
-            # per-round `completed` checkpoints all survive (the
-            # returned union reads them); only the shrinking remainder
-            # frames are rolling scratch. First-round prev frames are
-            # plain projections — release is a defensive no-op there.
-            release_local_checkpoint(v_prev)
-            release_local_checkpoint(e_prev)
-        # in fixed mode the remainder frames stay lazy: `completed`
-        # derives from the inner Pregel's own final checkpoint, so the
-        # next round's lineage is one filter + two anti-joins deep —
-        # nothing to truncate, and each skipped checkpoint is a job
-        # saved (the 11-vertex fixture spends more on job scheduling
-        # than on data)
 
-    if done is None:
-        # empty graph (delta mode breaks before the first fixpoint):
-        # the component table is empty, same (id, scc) schema
-        return graph.vertices.select(
-            "id", F.col("id").alias("scc")
-        ).limit(0)
-    # the result reads only the per-round `completed` checkpoints
-    release_local_checkpoint(v)
-    release_local_checkpoint(e)
-    return done
+    seed = graph.vertices.select("id", F.lit(None).cast("long").alias("scc"))
+    state, _, _ = iterate(
+        seed, peel, max_rounds, changed=F.col("scc").isNull()
+    )
+    for prev in inner:
+        release_local_checkpoint(prev)
+    return state.where(F.col("scc").isNotNull())
 
 
 def oracle_sql(edges_values: str) -> str:

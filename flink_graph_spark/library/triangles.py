@@ -40,11 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..operators.iterate import iterate
-from ..plans.checkpoints import (
-    drain_shuffle_scratch,
-    release_local_checkpoint,
-)
+from ..operators.iterate import iterate, waves
+from ..plans.checkpoints import release_local_checkpoint
 
 #: Disk-bounded wave sizing for the enumeration's one big shuffle (the
 #: by-b redistribution of the na-carrying stream, 8 B x sum(out^2)
@@ -90,20 +87,6 @@ def _wave_count(oe: DataFrame, n_edges_hint: int | None = None) -> int:
     if int(row["m"] or 0) <= WAVE_EDGE_THRESHOLD:
         return 1
     return max(1, math.ceil(int(row["s"]) * 8 / WAVE_TARGET_BYTES))
-
-
-def _wave_filter(df: DataFrame, k: int, n_waves: int) -> DataFrame:
-    """Edges of wave k: hash(a, b) % K == k. Hashing the PAIR assigns
-    every edge independently, so each wave carries ~1/K of the array
-    payload with tight concentration (each edge's na is ≤ O(sqrt m)
-    elements under the orientation) — hashing b alone (the r8 scheme)
-    sent a hub's ENTIRE in-edge set to one wave, silently degrading
-    the per-wave disk bound on skewed graphs (ADVICE r8). No plan leg
-    groups by b across waves, so the slice key is free to change; the
-    predicate still pushes below the attach."""
-    return df.filter(
-        F.pmod(F.xxhash64("a", "b"), F.lit(n_waves)) == F.lit(k)
-    )
 
 
 def _oriented_edges(e: DataFrame, deg: DataFrame | None = None) -> DataFrame:
@@ -219,25 +202,12 @@ def _commons(oe: DataFrame, n_edges_hint: int | None) -> DataFrame:
     n_waves = _wave_count(oe, n_edges_hint)
     if n_waves == 1:
         return _attach(oe)
-    # disk-bounded waves (see WAVE_TARGET_BYTES): each wave enumerates
-    # the hash(b)-slice of the edges, its narrow (a, b, cs) output is
-    # checkpointed (#triangle elements — tiny next to the sum(out^2)
-    # stream), and the wave's shuffle scratch is drained before the
-    # next begins. The compact out-adjacency is checkpointed once and
-    # reshuffled per wave (m packed longs, ~1 GB at 100x — noise).
-    spark = oe.sparkSession
+    # disk-bounded waves (see WAVE_TARGET_BYTES): each wave's narrow
+    # (a, b, cs) output is #triangle elements, tiny next to the
+    # sum(out^2) stream. The compact out-adjacency is checkpointed once
+    # and reshuffled per wave (m packed longs, ~1 GB at 100x: noise).
     outadj = outadj.localCheckpoint(eager=True)
-    parts = []
-    for k in range(n_waves):
-        w = _attach(_wave_filter(oe, k, n_waves)).localCheckpoint(eager=True)
-        drain_shuffle_scratch(spark)
-        parts.append(w)
-    release_local_checkpoint(outadj)
-    release_local_checkpoint(oe)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return waves(oe, _attach, n_waves, ("a", "b"), release=(outadj, oe))
 
 
 def _closed_wedges(

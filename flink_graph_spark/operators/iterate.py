@@ -1,5 +1,6 @@
-"""The one driver-loop kernel: checkpoint cadence, release of superseded
-checkpoints and the fused convergence count.
+"""The driver-loop kernels: ``iterate`` (checkpoint cadence, release of
+superseded checkpoints and the fused convergence count) and ``waves``
+(hash-sliced, disk-bounded passes).
 
 Spark has no in-dataflow iteration, so every iterative algorithm here
 runs its supersteps from the Python driver. A superstep is a lazy plan
@@ -8,7 +9,7 @@ every superstep, and a state read twice per superstep (a message join
 plus an update join or grouping) recomputes old supersteps ~2^k-fold.
 ``iterate`` is the only place a moved loop writes its eager
 ``localCheckpoint``, releases the one it supersedes and counts its
-convergence signal.
+convergence signal; ``waves`` is the one loop over hash slices.
 
 Cadence table (``every`` is the ``checkpoint_every`` a loop passes; the
 last superstep is always checkpointed too):
@@ -69,31 +70,63 @@ loop                           every  why
                                       fixed point.
 ``mst._jump``                  1      Borůvka's pointer jumps; ``changed``
                                       counts moved pointers.
+``boruvka_mst``                1      State: the labels; ``changed`` is ``comp
+                                      != old comp``, which replaces a
+                                      per-round emptiness job. The step
+                                      checkpoints each round's selection,
+                                      which the result reads, and the loop
+                                      runs ``rounds - 1`` supersteps plus a
+                                      final selection (``bpe_merges``'
+                                      pattern). ``boruvka_mst_grid``,
+                                      ``local[4]``: 54 jobs; the hand loop,
+                                      which re-checkpointed a running union
+                                      of the chosen edges, read 64.
+``scc``                        1      The peel loop. State: (id, scc) over
+                                      every vertex, NULL until peeled, a
+                                      union of the peeled rows and the
+                                      round's labels; ``changed`` counts the
+                                      unpeeled, so the fixture stops at its
+                                      last round with no emptiness job.
+                                      ``scc_fixture``, ``local[4]``: 49 jobs;
+                                      the hand loop's fixed-superstep mode
+                                      read 51.
+``waves``                      1      The wave kernel below: one checkpoint
+                                      per hash slice of the edges, no state
+                                      carried between waves. It runs the
+                                      disk-bounded attach of
+                                      ``adamic_adar``, ``jaccard_similarity``
+                                      and ``triangles._commons``.
 ``neighborhood_function``      hand   Keeps every round's checkpoint: the
-                                      per-radius estimates read it.
-``scc``, ``boruvka_mst``,      hand   Two frames of state (levels and frontier,
-``betweenness``                       labels and forest), each with its own
-                                      release order.
+                                      per-radius estimates read it. On the
+                                      kernel, which releases each superseded
+                                      state, each round's estimate needs its
+                                      own checkpoint: sf0.01, ``local[4]``,
+                                      ``neighborhood_function_uu`` 14 → 16
+                                      jobs, ``effective_diameter_uu`` 25 → 30.
+``betweenness``                hand   Keeps every BFS level's checkpoint for
+                                      the backward sweep. On the kernel the
+                                      state must carry every level, and each
+                                      level's checkpoint rewrites the earlier
+                                      ones: ``betweenness_grid``, ``local[4]``,
+                                      90–92 jobs with 259–265 tasks by hand,
+                                      92 jobs with 568–583 tasks on the kernel.
 ``k_core``                     hand   Two frames (edges and the degree table).
                                       A flagged-edge state on the kernel read
                                       the same 9 jobs and 14.1 MB of shuffle
                                       with 28 tasks run vs 25 (sf0.1 uu,
                                       ``local[4]``): the move saves no job.
-``adamic_adar``,               hand   Wave loops: each wave is an independent
-``jaccard_similarity``,               slice of the edges, checkpointed and then
-``triangles._commons``                drained, and no state carries from one
-                                      wave to the next.
 =============================  =====  ============================================
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import drain_shuffle_scratch, release_local_checkpoint
 
 
 def iterate(
@@ -134,3 +167,43 @@ def iterate(
         if changed is not None and obs.get["n_changed"] == 0:
             return state, it, True
     return state, max_iter, False
+
+
+def waves(
+    edges: DataFrame,
+    attach: Callable[[DataFrame], DataFrame],
+    n_waves: int,
+    keys: tuple[str, ...],
+    release: tuple[DataFrame, ...] = (),
+) -> DataFrame:
+    """``attach`` over ``n_waves`` disjoint hash slices of ``edges``,
+    each wave checkpointed eagerly, returned as the union of the waves.
+
+    Wave ``k`` is the rows with ``pmod(xxhash64(*keys), n_waves) == k``.
+    Hashing the whole key (an edge's two endpoints) assigns every row
+    independently, so each wave carries ~1/K of the attach's payload
+    even around a hub; hashing one endpoint would send a hub's whole
+    edge set to one wave. The slice predicate pushes below the attach.
+    After each wave's checkpoint is written its shuffle scratch is dead,
+    and ``drain_shuffle_scratch`` returns it before the next wave
+    starts, so disk scratch stays near one wave's at any input size.
+    The ``release`` checkpoints, which every wave reads and the union
+    does not, are released after the last wave.
+
+    One wave is ``attach(edges)`` checkpointed, with no slice filter
+    and no drain.
+    """
+    spark = edges.sparkSession
+    parts = []
+    for k in range(n_waves):
+        wave = edges
+        if n_waves > 1:
+            wave = edges.filter(
+                F.pmod(F.xxhash64(*keys), F.lit(n_waves)) == F.lit(k)
+            )
+        parts.append(attach(wave).localCheckpoint(eager=True))
+        if n_waves > 1:
+            drain_shuffle_scratch(spark)
+    for ck in release:
+        release_local_checkpoint(ck)
+    return reduce(DataFrame.unionByName, parts)

@@ -49,6 +49,9 @@ class PregelResult:
     vertices: DataFrame  # (id, <state_col>)
     iterations: int
     converged: bool
+    #: the loop's last checkpoint, which ``vertices`` reads: a caller
+    #: that consumes ``vertices`` inside a longer loop releases it
+    checkpoint: DataFrame
 
 
 def _carry_state(state_col: str, dtype: T.DataType) -> tuple[list[Column], Column]:
@@ -203,4 +206,9 @@ def pregel(
     )
     if owns_edge_cache:
         edges.unpersist()
-    return PregelResult(vertices=v.select("id", state_col), iterations=it, converged=converged)
+    return PregelResult(
+        vertices=v.select("id", state_col),
+        iterations=it,
+        converged=converged,
+        checkpoint=v,
+    )

@@ -140,8 +140,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
     is CACHED, so this must run before any ``persist()``/``cache()``
     whose partitioning AQE should be allowed to re-plan — frames
     persisted earlier in the session keep their pinned partitioning.
-    Every registry entry point calls ``tune_session`` first, before the
-    graph builders persist anything; keep that order for new callers.
+    The registry wrapper (``registry._query_begin``) calls it before
+    every registered query body, so no graph builder persists anything
+    first; a caller that persists outside a registered query calls it
+    first too.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # some driver rounds ship events.parquet as TIMESTAMP(NANOS), which

@@ -70,7 +70,13 @@ ORACLE_SQL: dict[str, str] = {}
 
 
 def _query_begin(spark: SparkSession) -> None:
-    """Free the PREVIOUS query's scratch before this one runs.
+    """Tune the session and free the PREVIOUS query's scratch before
+    this one runs.
+
+    ``tune_session`` runs here, before the query body, so every
+    registered query sees the same confs whatever ran before it, and
+    no graph builder persists a frame before they are set (the
+    ordering contract in its docstring).
 
     Iterative queries return frames that read localCheckpoint blocks;
     their operators already released every superseded checkpoint, and
@@ -86,6 +92,7 @@ def _query_begin(spark: SparkSession) -> None:
     local gate, bench, tests) gets the same scratch lifecycle without
     cooperating.
     """
+    tune_session(spark)
     release_all_local_checkpoints(spark)
     _ensure_workers_can_import(spark)
 
@@ -136,10 +143,13 @@ def _fixture_partitions(spark: SparkSession, n: int = 4):
     """Size shuffle partitions to a hand-built fixture for the duration
     of an eager iterative loop: 32-partition exchanges on a ≤13-row
     frame are pure scheduler overhead, and fixture queries are nothing
-    BUT exchanges (every superstep shuffles). The caller must
-    materialize its result (localCheckpoint(eager=True)) before the
-    conf is restored so later actions replay nothing at the wrong
-    partition count."""
+    BUT exchanges (every superstep shuffles). The conf covers the jobs
+    run inside the block: the loop's eager checkpoints. A frame the
+    block returns lazily is planned at the caller's action, after the
+    conf is restored, so the exchanges in its tail over the last
+    checkpoint run at the session's partition count (AQE coalesces
+    them). A caller whose tail is heavy materializes it inside the
+    block, as ``incremental_sssp_golden`` does."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -170,7 +180,6 @@ def _with(*ctes: str) -> str:
 
 
 def _cs(spark: SparkSession, sf_dir: str) -> Graph:
-    tune_session(spark)
     return customer_supplier_graph(spark, sf_dir)
 
 
@@ -286,7 +295,6 @@ def vertex_metrics_cs(spark, sf_dir):
     C(d,2) is computed inside the partial agg, so the shuffle carries
     one row per partition)."""
     g = _cs(spark, sf_dir)
-    tune_session(spark)
     # direct aggs over the cached edge table rather than joining the
     # out_degrees()/in_degrees() frames (each of which re-derives the
     # vertex set — the composed plan carried 82 exchanges cold vs 8
@@ -875,7 +883,6 @@ def _golden_algo_sql(algo_ctes: tuple[str, str]) -> str:
     _golden_algo_sql(sssp_mod.oracle_ctes("golden_edges", "golden_vertices", 1, 5)),
 )
 def sssp_golden(spark, sf_dir):
-    tune_session(spark)
     return sssp_mod.shortest_paths(golden_graph(spark), 1, max_iter=5)
 
 
@@ -894,7 +901,6 @@ def incremental_sssp_golden(spark, sf_dir):
     delta Bellman-Ford. The ORACLE is a full recompute on the modified
     edges — the incremental path must land on the identical answer
     (vertex 5 reroutes 48 → 92 via 4)."""
-    tune_session(spark)
     from .library import incremental as inc_mod
 
     # Three sequential delta Pregels (prior SSSP, tight-DAG reach,
@@ -913,7 +919,6 @@ def incremental_sssp_golden(spark, sf_dir):
     _golden_algo_sql(cc_mod.oracle_ctes("golden_edges", "golden_vertices", 5)),
 )
 def cc_golden(spark, sf_dir):
-    tune_session(spark)
     return cc_mod.connected_components(golden_graph(spark), max_iter=5)
 
 
@@ -926,7 +931,6 @@ def cc_golden(spark, sf_dir):
     ),
 )
 def is_weakly_connected_golden(spark, sf_dir):
-    tune_session(spark)
     return cc_mod.is_weakly_connected(golden_graph(spark), max_iter=5)
 
 
@@ -937,7 +941,6 @@ def is_weakly_connected_golden(spark, sf_dir):
     ),
 )
 def pagerank_golden(spark, sf_dir):
-    tune_session(spark)
     return pr_mod.page_rank(golden_graph(spark), beta=0.85, max_iter=10)
 
 
@@ -954,7 +957,6 @@ def pagerank_golden(spark, sf_dir):
     ),
 )
 def lpa_golden(spark, sf_dir):
-    tune_session(spark)
     g = golden_graph(spark).get_undirected()
     return lpa_mod.label_propagation(g, max_iter=5)
 
@@ -1012,7 +1014,6 @@ def pagerank_bucketed_cs(spark, sf_dir):
     ),
 )
 def sssp_cs(spark, sf_dir):
-    tune_session(spark)
     g = customer_supplier_undirected_graph(spark, sf_dir)
     return sssp_mod.shortest_paths(g, 1, max_iter=6)
 
@@ -1051,7 +1052,6 @@ def cc_cs(spark, sf_dir):
     ),
 )
 def lpa_cs(spark, sf_dir):
-    tune_session(spark)
     g = customer_supplier_undirected_graph(spark, sf_dir)
     return lpa_mod.label_propagation(g, max_iter=4)
 
@@ -1133,7 +1133,6 @@ def hits_cs(spark, sf_dir):
     ),
 )
 def jaccard_part_copurchase(spark, sf_dir):
-    tune_session(spark)
     g = part_copurchase_graph(spark, sf_dir)
     return jaccard_mod.jaccard_similarity(g)
 
@@ -1147,7 +1146,6 @@ def jaccard_part_copurchase(spark, sf_dir):
     _with(UU_EDGES_SQL, "SELECT src, dst, value FROM uu_edges"),
 )
 def uu_graph_edges(spark, sf_dir):
-    tune_session(spark)
     return user_cooccurrence_graph(spark, sf_dir).edges
 
 
@@ -1159,7 +1157,6 @@ def uu_graph_edges(spark, sf_dir):
     ),
 )
 def adamic_adar_pc(spark, sf_dir):
-    tune_session(spark)
     g = part_copurchase_graph(spark, sf_dir)
     return aa_mod.adamic_adar(g)
 
@@ -1177,7 +1174,6 @@ def adamic_adar_pc(spark, sf_dir):
     ),
 )
 def mis_uu(spark, sf_dir):
-    tune_session(spark)
     g = user_cooccurrence_graph(spark, sf_dir)
     return mis_mod.maximal_independent_set(g, max_iter=6)
 
@@ -1203,7 +1199,6 @@ def community_detection_uu(spark, sf_dir):
     """Hop-attenuated label-score community detection (Leung et al. /
     Gelly CommunityDetection): delta=0.5 keeps every score a dyadic
     rational so the argmax is bit-exact across engines."""
-    tune_session(spark)
     g = user_cooccurrence_graph(spark, sf_dir)
     return community_mod.community_detection(g, max_iter=4)
 
@@ -1221,7 +1216,6 @@ def community_detection_uu(spark, sf_dir):
     ),
 )
 def random_walks_uu(spark, sf_dir):
-    tune_session(spark)
     g = user_cooccurrence_graph(spark, sf_dir)
     return sampling_mod.random_walks(g, length=3)
 
@@ -1234,7 +1228,6 @@ def random_walks_uu(spark, sf_dir):
     ),
 )
 def kcore_uu(spark, sf_dir):
-    tune_session(spark)
     g = user_cooccurrence_graph(spark, sf_dir)
     return kcore_mod.k_core(g, k=4, max_iter=8)
 
@@ -1257,17 +1250,14 @@ from .sources.tables import load_table, table_rows  # noqa: E402
 
 
 def _docs(spark, sf_dir):
-    tune_session(spark)
     return load_table(spark, sf_dir, "documents")
 
 
 def _events(spark, sf_dir):
-    tune_session(spark)
     return load_table(spark, sf_dir, "events")
 
 
 def _emb(spark, sf_dir):
-    tune_session(spark)
     return load_table(spark, sf_dir, "embeddings")
 
 
@@ -1573,7 +1563,6 @@ GROUP BY 1 ORDER BY 1""",
 def streaming_nation_counts(spark, sf_dir):
     """Stream-static join snapshot (complete mode) — equals the batch
     fact-to-dim join + GROUP BY on a fully-arrived input."""
-    tune_session(spark)
     stream = stream_mod.read_events_stream(spark, sf_dir)
     customer = load_table(spark, sf_dir, "customer")
     snap = stream_mod.run_available_now(
@@ -1591,7 +1580,6 @@ def streaming_nation_counts(spark, sf_dir):
 def streaming_dedup_keys(spark, sf_dir):
     """Stateful streaming dedup snapshot — append mode emits each key
     exactly once across all micro-batches; equals batch DISTINCT."""
-    tune_session(spark)
     stream = stream_mod.read_events_stream(spark, sf_dir)
     snap = stream_mod.run_available_now(
         stream_mod.streaming_dedup_keys(stream),
@@ -1616,7 +1604,6 @@ def streaming_click_purchase(spark, sf_dir):
     """Stream-stream interval join snapshot (append mode) — each click
     joined to the same user's purchases within 6 hours; on a fully
     arrived availableNow input this equals the batch range join."""
-    tune_session(spark)
     stream = stream_mod.read_events_stream(spark, sf_dir)
     snap = stream_mod.run_available_now(
         stream_mod.streaming_click_purchase_join(stream),
@@ -1740,7 +1727,6 @@ def json_source_rollup(spark, sf_dir):
     semantics to the parquet path (same oracle as ``hourly_rollup``)."""
     from .sources.json_source import read_events_json
 
-    tune_session(spark)
     return sess_mod.hourly_rollup(read_events_json(spark, sf_dir))
 
 
@@ -1758,21 +1744,18 @@ from .functions import sketch as sketch_mod  # noqa: E402
 @_register("tfidf_top_terms", ret_mod.tfidf_sql(3))
 def tfidf_top_terms(spark, sf_dir):
     """Top-3 tf·idf terms per document (window-ranked, term tie-break)."""
-    tune_session(spark)
     return ret_mod.tfidf_top_terms(_docs(spark, sf_dir), 3)
 
 
 @_register("bm25_search", ret_mod.bm25_sql())
 def bm25_search(spark, sf_dir):
     """BM25 top-20 documents for a fixed bag-of-words query."""
-    tune_session(spark)
     return ret_mod.bm25_search(_docs(spark, sf_dir))
 
 
 @_register("unigram_nll", ret_mod.unigram_nll_sql())
 def unigram_nll(spark, sf_dir):
     """Per-document unigram-LM negative log-likelihood (quality filter)."""
-    tune_session(spark)
     return ret_mod.unigram_nll(_docs(spark, sf_dir))
 
 
@@ -1783,7 +1766,6 @@ def unigram_nll(spark, sf_dir):
 def collocations_pmi(spark, sf_dir):
     """Top-50 adjacent-token collocations by PMI (deterministic rounded
     rank) — the phrase candidates a tokenizer/vocab builder promotes."""
-    tune_session(spark)
     return text_mod.collocations_pmi(_docs(spark, sf_dir))
 
 
@@ -1813,7 +1795,6 @@ def count_min_tokens(spark, sf_dir):
 def hll_user_estimate(spark, sf_dir):
     """HLL-style distinct-user estimate per event_type, exact count
     alongside — register arithmetic identical in Spark and DuckDB."""
-    tune_session(spark)
     return sketch_mod.hll_distinct(_events(spark, sf_dir), "event_type", "user_id")
 
 
@@ -1834,7 +1815,6 @@ from .library import triangles as tri_mod  # noqa: E402
     _with(PC_EDGES_SQL, tri_mod.oracle_sql("pc_edges")),
 )
 def triangle_count_pc(spark, sf_dir):
-    tune_session(spark)
     return tri_mod.triangle_count(part_copurchase_graph(spark, sf_dir))
 
 
@@ -1858,7 +1838,6 @@ def triangle_count_pc(spark, sf_dir):
     ),
 )
 def triangles_per_vertex_uu(spark, sf_dir):
-    tune_session(spark)
     return tri_mod.triangles_per_vertex(user_cooccurrence_graph(spark, sf_dir))
 
 
@@ -1869,7 +1848,6 @@ def triangles_per_vertex_uu(spark, sf_dir):
 def clustering_coeff_uu(spark, sf_dir):
     """Local clustering coefficient per vertex of the user-cooccurrence
     graph — triangle enumeration shared with triangles_per_vertex_uu."""
-    tune_session(spark)
     return tri_mod.clustering_coefficient(user_cooccurrence_graph(spark, sf_dir))
 
 
@@ -1900,10 +1878,10 @@ def scc_fixture(spark, sf_dir):
     eager peel loop (the same size-to-keys policy as the streaming
     snapshots' ``state_partitions``): every superstep materializes a
     checkpoint, and 32-partition exchanges on an 11-vertex frame are
-    pure scheduler overhead. The result is checkpointed before the conf
-    is restored, so the caller's later action replays nothing heavy.
+    pure scheduler overhead. The result reads the peel loop's last
+    state checkpoint, written before the conf is restored, so the
+    caller's later action replays only a filter.
     """
-    tune_session(spark)
     with _fixture_partitions(spark):
         g = Graph.from_edges(
             spark.createDataFrame(
@@ -1914,15 +1892,9 @@ def scc_fixture(spark, sf_dir):
         # Fixture condensation completes in exactly 2 peel rounds
         # ({1,2,3} + {11} first, then {4,5}/{6,7,8}/9/10); label depth
         # is 4 hops in round 1 (f(5) via 1→2→3→4→5) and 2 in round 2
-        # (the 6→7→8 cycle), so the schedule (5,3) keeps one superstep
-        # of margin per round while cutting the superstep total from
-        # 15 to 8 — this query's cost is pure per-superstep scheduler
-        # floor, so that's directly ~half the gate wall. Non-delta
-        # keeps supersteps lazy (fewer jobs than the per-superstep
-        # frontier checks are worth on 11 vertices).
-        return scc_mod.scc(
-            g, max_rounds=2, max_iter=(5, 3), delta=False
-        ).localCheckpoint(eager=True)
+        # (the 6→7→8 cycle). The delta-mode fixpoints exit one
+        # superstep after their depth, 5 + 3 supersteps in all.
+        return scc_mod.scc(g, max_rounds=2, max_iter=5)
 
 
 # ---- graph summarization (condensation by nation) ---------------------
@@ -1994,7 +1966,6 @@ def summarize_nation_edges(spark, sf_dir):
 def cc_pc(spark, sf_dir):
     """Connected components on the dense part co-purchase graph (1.2M
     edges at sf0.1) — the scale stressor for the delta Pregel loop."""
-    tune_session(spark)
     return cc_mod.connected_components(
         part_copurchase_graph(spark, sf_dir), max_iter=6
     )
@@ -2013,7 +1984,6 @@ def pagerank_pc(spark, sf_dir):
     """PageRank on the dense part co-purchase graph — the full-propagation
     (non-delta) Pregel stressor: every superstep moves a message per edge,
     unlike the shrinking-frontier CC/SSSP loops."""
-    tune_session(spark)
     return pr_mod.page_rank(part_copurchase_graph(spark, sf_dir), max_iter=5)
 
 
@@ -2079,7 +2049,6 @@ def streaming_hourly_rollup(spark, sf_dir):
     equal the batch GROUP BY exactly (the oracle); approx_count_distinct
     is excluded (nondeterministic across engines by design).
     """
-    tune_session(spark)
     stream = stream_mod.read_events_stream(spark, sf_dir)
     # state keyed by (event_type, hour window) — a few hundred rows at
     # any horizon, not one state store per core (r10: matches the 8 the
@@ -2106,7 +2075,6 @@ def streaming_sessionize(spark, sf_dir):
     boundaries to the batch lag()-gap plan (oracle = batch sessionize
     minus the session-id column, which streaming windows don't number).
     """
-    tune_session(spark)
     stream = stream_mod.read_events_stream(spark, sf_dir)
     snap = stream_mod.run_available_now(stream_mod.streaming_sessionize(stream))
     return snap.select("user_id", "n_events", "start_ts", "end_ts", "sum_cents")
@@ -2128,7 +2096,6 @@ def streaming_user_totals(spark, sf_dir):
     micro-batches the file source split the input into. Hash-matches
     the batch GROUP BY oracle.
     """
-    tune_session(spark)
     from .streaming.stateful import running_user_totals
 
     # Prune to the two columns the state update reads BEFORE the stateful
@@ -2164,7 +2131,6 @@ def streaming_degrees(spark, sf_dir):
     micro-batch), a stateful agg accumulates per-vertex out-degrees, and
     the availableNow snapshot equals batch out_degrees — the oracle.
     """
-    tune_session(spark)
     from .streaming import graph_stream as gs
 
     edges_path = gs.stage_edges(_cs(spark, sf_dir), key=sf_dir)
@@ -2231,7 +2197,6 @@ def bigram_nll(spark, sf_dir):
 def gsa_sssp_golden(spark, sf_dir):
     """SSSP on the gather-sum-apply surface (Gelly GSA parity) — same
     unrolled Bellman-Ford oracle as the vertex-centric sssp_golden."""
-    tune_session(spark)
     return sssp_mod.shortest_paths_gsa(golden_graph(spark), 1, max_iter=5)
 
 
@@ -2281,7 +2246,6 @@ def embedding_outliers(spark, sf_dir):
 def edge_support_uu(spark, sf_dir):
     """Per-edge triangle support (k-truss building block) on the user
     co-occurrence graph."""
-    tune_session(spark)
     return tri_mod.edge_support(user_cooccurrence_graph(spark, sf_dir))
 
 
@@ -2315,7 +2279,6 @@ def closeness_sample_uu(spark, sf_dir):
     """Sampled harmonic closeness via BATCHED multi-source BFS: all 4
     seeds run as ONE delta Pregel over a seed-replicated encoded graph
     (one join+agg per superstep regardless of seed count)."""
-    tune_session(spark)
     return closeness_mod.closeness_sample(
         user_cooccurrence_graph(spark, sf_dir), CLOSENESS_SEEDS, max_iter=6
     )
@@ -2334,7 +2297,6 @@ def ktruss_uu(spark, sf_dir):
     pure exchange scheduling, so the shuffle is sized down for the
     duration (same rationale as _fixture_partitions for golden-scale
     Pregel queries)."""
-    tune_session(spark)
     with _fixture_partitions(spark, 8):
         return tri_mod.k_truss(user_cooccurrence_graph(spark, sf_dir), 60, 1)
 
@@ -2374,7 +2336,6 @@ def ppr_cs(spark, sf_dir):
 def neighborhood_function_uu(spark, sf_dir):
     """HyperANF-style approximate neighborhood function N(r), r=0..2:
     per-vertex HLL ball sketches merged along edges each round."""
-    tune_session(spark)
     return nf_mod.neighborhood_function(
         user_cooccurrence_graph(spark, sf_dir), max_r=2
     )
@@ -2399,7 +2360,6 @@ def streaming_quality_by_source(spark, sf_dir):
     map-side per micro-batch over a DOCUMENT stream, per-source keep
     counters as the only streaming state (complete-mode snapshot =
     the batch oracle on a fully-arrived corpus)."""
-    tune_session(spark)
     from .streaming import docs as docs_stream_mod
 
     stream = docs_stream_mod.read_docs_stream(spark, sf_dir)
@@ -2436,7 +2396,6 @@ def rmat_degree_histogram(spark, sf_dir):
     graph is arithmetic over spark.range (no I/O), and DuckDB replays
     the identical per-edge bit recursion, so even the generator is
     oracle-checked. The power-law bucket spread is the RMat signature."""
-    tune_session(spark)
     deg = (
         gen_mod.rmat_edges(spark, RMAT_SCALE, RMAT_EDGES)
         .groupBy("src")
@@ -2541,7 +2500,6 @@ def assortativity_uu(spark, sf_dir):
     """Degree assortativity (Newman 2002): Pearson correlation of
     endpoint degrees over the symmetrized edge list — one scan to the
     degree table, two dimension joins, a single scalar agg."""
-    tune_session(spark)
     g = user_cooccurrence_graph(spark, sf_dir)
     e = g.edges.select("src", "dst")
     sym = e.unionByName(
@@ -2687,7 +2645,6 @@ def betweenness_grid(spark, sf_dir):
     composite (source, vertex) key, then one backward dependency sweep
     per level. Oracle enumerates every shortest path — checks the
     definition, not the recurrence."""
-    tune_session(spark)
     with _fixture_partitions(spark, 4):
         return btw_mod.betweenness(gen_mod.grid_graph(spark, 4, 4), max_depth=6)
 
@@ -2698,7 +2655,6 @@ def dag_longest_path(spark, sf_dir):
     level per vertex on the 5x5 grid DAG — 8 bounded relax-all rounds,
     one join + one max-agg each; oracle enumerates every monotone
     path."""
-    tune_session(spark)
     with _fixture_partitions(spark, 4):
         return dag_mod.dag_longest_path(
             dag_mod.weighted_grid_dag(spark, 5, 5), max_rounds=8
@@ -2717,7 +2673,6 @@ def dag_longest_path(spark, sf_dir):
 def effective_diameter_uu(spark, sf_dir):
     """HyperANF effective diameter (90% rule over the neighborhood
     function, r=0..4) on the user co-occurrence graph."""
-    tune_session(spark)
     return nf_mod.effective_diameter(
         user_cooccurrence_graph(spark, sf_dir), max_r=4
     )
@@ -2728,7 +2683,6 @@ def graph_coloring_grid(spark, sf_dir):
     """Iterated-MIS (Luby / Jones-Plassmann) proper coloring with
     portable hash priorities on the 4x4 grid — one MIS round per color;
     oracle replays the rounds unrolled."""
-    tune_session(spark)
     with _fixture_partitions(spark, 4):
         return col_mod.color_graph(gen_mod.grid_graph(spark, 4, 4), max_rounds=6)
 
@@ -2788,7 +2742,6 @@ def rich_club_uu(spark, sf_dir):
     """Rich-club coefficient phi(k) over a hub-degree ladder on the
     user co-occurrence graph — one degree table, two id joins, the
     whole ladder in two single-row conditional aggregates."""
-    tune_session(spark)
     return kcore_mod.rich_club(user_cooccurrence_graph(spark, sf_dir))
 
 
@@ -2880,7 +2833,6 @@ def edge_growth_cs(spark, sf_dir):
     """Temporal graph growth: customer-supplier edge first appearances
     per month + cumulative graph size; cumulative windows over the
     month table, never the edge table."""
-    tune_session(spark)
     return sess_mod.edge_growth(
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "lineitem"),
@@ -2942,7 +2894,6 @@ def walk_skipgram_pairs(spark, sf_dir):
     """DeepWalk training corpus: skip-gram (center, context) pairs from
     the deterministic random walks — one stack projection over the walk
     table, pair-vocabulary-bounded count."""
-    tune_session(spark)
     return sampling_mod.walk_skipgram_pairs(
         user_cooccurrence_graph(spark, sf_dir), length=3, window=2
     )
@@ -2955,7 +2906,6 @@ def boruvka_mst_grid(spark, sf_dir):
     round each component picks its lightest outgoing edge under the
     (w, src, dst) total order, 2-cycles collapse, components at least
     halve. Oracle replays the rounds unrolled."""
-    tune_session(spark)
     with _fixture_partitions(spark, 4):
         return mst_mod.boruvka_mst(gen_mod.grid_graph(spark, 4, 5))
 
@@ -2965,7 +2915,6 @@ def wl_colors_grid(spark, sf_dir):
     """1-WL color refinement on the 4x4 grid: canonical structural
     vertex classes (corner/edge/interior orbits) + the color-histogram
     graph fingerprint; one edge join + one sort-agg per round."""
-    tune_session(spark)
     with _fixture_partitions(spark, 4):
         return wl_mod.wl_color_classes(gen_mod.grid_graph(spark, 4, 4))
 
@@ -2976,7 +2925,6 @@ def streaming_hourly_anomaly(spark, sf_dir):
     hourly rollup (availableNow snapshot) feeds the SAME z-score stage
     as the batch query — for a fully-arrived input the alerts must
     equal the batch anomaly table exactly (the oracle)."""
-    tune_session(spark)
     stream = stream_mod.read_events_stream(spark, sf_dir)
     # same (event_type, hour)-keyed state sizing as streaming_hourly_rollup
     snap = stream_mod.run_available_now(
@@ -3057,7 +3005,6 @@ def copurchase_lift(spark, sf_dir):
     """Association-rule lift over the co-purchase graph: top-50 part
     pairs by observed/expected co-occurrence — degree totals attach as
     dimension joins, the grand total as a 1-row broadcast scalar."""
-    tune_session(spark)
     g = part_copurchase_graph(spark, sf_dir)
     e = g.edges
     deg = reuse_leaf(
@@ -3149,7 +3096,6 @@ def sql_revenue_by_nation(spark, sf_dir):
     written as ANSI SQL through spark.sql — Catalyst reorders the
     4-table join (nation/customer broadcast under AQE) exactly as the
     DataFrame plans do. Revenue in integer cents for exactness."""
-    tune_session(spark)
     for t in ("nation", "customer", "orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
@@ -3267,7 +3213,6 @@ def spectral_radius_uu(spark, sf_dir):
     """Largest adjacency eigenvalue of the user co-occurrence graph via
     5 power-iteration rounds + a Rayleigh readout — the PageRank kernel
     without the teleport; one double per vertex of state."""
-    tune_session(spark)
     return nf_mod.spectral_radius(user_cooccurrence_graph(spark, sf_dir))
 
 
@@ -3332,7 +3277,6 @@ def rmat_degree_zipf(spark, sf_dir):
     Ranks via rank_desc_scale_safe: degree-histogram offset +
     per-degree partitioned tie-break, so no single-partition window
     over the |V|-sized degree table."""
-    tune_session(spark)
     deg = (
         gen_mod.rmat_edges(spark, RMAT_SCALE, RMAT_EDGES)
         .groupBy("src")
@@ -3361,7 +3305,6 @@ def incremental_pagerank_golden(spark, sf_dir):
     6 base supersteps, add edge (2,5), resume 3 supersteps from the old
     ranks instead of restarting at 1/n — the PageRank face of the
     incremental-maintenance contract."""
-    tune_session(spark)
     with _fixture_partitions(spark, 4):
         g = golden_graph(spark)
         added = spark.createDataFrame(
@@ -3454,7 +3397,6 @@ def reciprocity_golden_pc(spark, sf_dir):
     exists) for the golden fixture and the co-purchase graph — one
     left-semi self-join per graph; the standard directionality
     diagnostic."""
-    tune_session(spark)
 
     def recip(edges, name):
         e = edges.select("src", "dst")

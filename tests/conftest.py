@@ -6,6 +6,8 @@ TestGraphUtils.java ~L20-60).
 from __future__ import annotations
 
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -28,6 +30,20 @@ def spark():
 @pytest.fixture(scope="session")
 def golden(spark):
     return golden_graph(spark)
+
+
+@contextmanager
+def job_count(spark):
+    """Run the block under a Spark job group of its own and yield a
+    callable returning how many jobs the group has launched so far
+    (read inside the block, or after it for the total)."""
+    sc = spark.sparkContext
+    group = f"test-job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
 
 
 def rows_as_dict(df, key, val):

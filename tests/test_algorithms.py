@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR, rows_as_dict
+from conftest import SF_DIR, job_count, rows_as_dict
 from flink_graph_spark.graph import Graph
 from flink_graph_spark.library.connected_components import (
     ConnectedComponents,
@@ -228,19 +228,13 @@ def test_pregel_superstep_job_shape(spark, golden):
     ue = g.edges.repartition("src").persist()
     ue.count()
     g = Graph(g.vertices, ue, src_partitioned=True)
-    sc = spark.sparkContext
     try:
         for max_iter in (1, 2):
-            group = f"test-pregel-superstep-shape-{max_iter}"
-            sc.setJobGroup(group, group)
-            try:
+            with job_count(spark) as jobs:
                 comps = connected_components(
                     g, max_iter=max_iter, symmetrized_edges=True
                 )
-            finally:
-                sc.setJobGroup("", "")
-            jobs = sc.statusTracker().getJobIdsForGroup(group)
-            assert 0 < len(jobs) <= 3 * max_iter, (max_iter, len(jobs))
+            assert 0 < jobs() <= 3 * max_iter, (max_iter, jobs())
         assert rows_as_dict(comps, "id", "comp") == {i: 1 for i in range(1, 6)}
     finally:
         ue.unpersist()
@@ -417,11 +411,11 @@ def test_adamic_adar_single_wave_does_not_drain(spark, monkeypatch):
     no shuffle-scratch drain (on a box with < 40 GB free scratch each
     drain call sleeps through its 15 s evidence probe)."""
     from flink_graph_spark.library.adamic_adar import adamic_adar
-    from flink_graph_spark.plans import checkpoints
+    from flink_graph_spark.operators import iterate as iterate_mod
 
     calls = []
     monkeypatch.setattr(
-        checkpoints, "drain_shuffle_scratch", lambda *a, **k: calls.append(a)
+        iterate_mod, "drain_shuffle_scratch", lambda *a, **k: calls.append(a)
     )
     edges = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
     g = Graph.from_collection(

@@ -11,7 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR, rows_as_dict
+from conftest import SF_DIR, job_count, rows_as_dict
 from flink_graph_spark.functions import dedup as dedup_mod
 from flink_graph_spark.functions import multimodal as mm_mod
 from flink_graph_spark.functions import sessions as sess_mod
@@ -206,15 +206,10 @@ def test_dedup_minhash_lsh_four_jobs_no_scratch(spark, docs):
     # or checkpointed once the result has been read
     sc = spark.sparkContext
     before = sc._jsc.getPersistentRDDs().size()
-    group = "test-dedup-minhash-lsh-jobs"
-    sc.setJobGroup(group, group)
-    try:
+    with job_count(spark) as jobs:
         got = dedup_mod.dedup_minhash_lsh(docs).collect()
-    finally:
-        sc.setJobGroup("", "")
     assert {(r["da"], r["db"]) for r in got} == {(1, 2), (1, 4), (2, 4)}
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 4, len(jobs)
+    assert 0 < jobs() <= 4, jobs()
     assert sc._jsc.getPersistentRDDs().size() == before
 
 
@@ -268,14 +263,9 @@ def test_dedup_minhash_lsh_edge_cases(spark):
         ],
         "doc_id long, text string",
     )
-    sc = spark.sparkContext
-    group = "test-dedup-minhash-lsh-lazy"
-    sc.setJobGroup(group, group)
-    try:
+    with job_count(spark) as jobs:
         pairs = dedup_mod.dedup_minhash_lsh(docs)
-    finally:
-        sc.setJobGroup("", "")
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert jobs() == 0
     got = [(r["da"], r["db"], r["jaccard"]) for r in pairs.collect()]
     ids = {d for da, db, _ in got for d in (da, db)}
     assert ids <= {5, 6, 7}

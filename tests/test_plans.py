@@ -15,6 +15,7 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
+from conftest import job_count
 from flink_graph_spark.plans import explain
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -391,9 +392,6 @@ def test_iterate_kernel_contract(spark):
     def rdd_id(df) -> int:
         return int(df._jdf.queryExecution().analyzed().rdd().id())
 
-    def jobs(group: str) -> int:
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     def bump(s, _it):
         return s.select("id", (F.col("x") + 1).alias("x"))
 
@@ -401,28 +399,22 @@ def test_iterate_kernel_contract(spark):
     out, n, converged = iterate(s0, bump, 0)
     assert (out, n, converged) == (s0, 0, False)
 
-    group = "iterate-cadence"
     seen = []  # jobs finished when each superstep starts, then at exit
-
-    def counted_bump(s, it):
-        seen.append(jobs(group))
-        return bump(s, it)
-
     before = persisted()
-    sc.setJobGroup(group, group)
-    try:
+    with job_count(spark) as jobs:
+
+        def counted_bump(s, it):
+            seen.append(jobs())
+            return bump(s, it)
+
         s0 = spark.range(8).select("id", F.lit(0).alias("x")).localCheckpoint(eager=False)
         out, n, converged = iterate(s0, counted_bump, 3, checkpoint_every=2)
-        seen.append(jobs(group))
-    finally:
-        sc.setJobGroup("", "")
+        seen.append(jobs())
     # checkpoint jobs at supersteps 2 and 3, none at 1
     assert seen == [0, 0, 1, 2]
     assert (n, converged) == (3, False)
     assert [r["x"] for r in out.collect()] == [3] * 8
     assert persisted() - before == {rdd_id(out)}
-
-    group = "iterate-converge"
 
     def saturate(s, _it):
         return s.select(
@@ -430,14 +422,11 @@ def test_iterate_kernel_contract(spark):
         )
 
     s0 = spark.range(8).select("id", F.lit(0).alias("x")).localCheckpoint(eager=True)
-    sc.setJobGroup(group, group)
-    try:
+    with job_count(spark) as jobs:
         out, n, converged = iterate(
             s0, saturate, 10, changed=F.col("x") != F.col("__old")
         )
-        n_jobs = jobs(group)
-    finally:
-        sc.setJobGroup("", "")
+    n_jobs = jobs()
     # x reaches 3 at superstep 3; superstep 4 changes nothing
     assert (n, converged) == (4, True)
     assert n_jobs == 4  # one checkpoint job per superstep, no count job
@@ -445,15 +434,17 @@ def test_iterate_kernel_contract(spark):
 
 def test_cadence_table_names_every_checkpointing_loop():
     """Every function in the package whose for/while loop body calls
-    ``.localCheckpoint`` is either the ``iterate`` kernel or a row of its
-    cadence table, so a new hand-rolled loop cannot go unlisted. Nested
-    functions are scanned on their own: a ``step`` closure handed to the
-    kernel is not a loop of its enclosing function. A table row names a
-    function in its first column (``module.name`` counts as ``name`` in
-    ``module.py``). The check runs both ways: every name in the table is
-    a function of the package, and every ``hand`` row still checkpoints
-    inside a loop, so a loop moved onto the kernel cannot leave its hand
-    row behind."""
+    ``.localCheckpoint`` is either one of the two kernels (``iterate``,
+    ``waves``) or a row of the cadence table, so a new hand-rolled loop
+    cannot go unlisted. Nested functions are scanned on their own: a
+    ``step`` closure handed to the kernel is not a loop of its enclosing
+    function. A table row names a function in its first column
+    (``module.name`` counts as ``name`` in ``module.py``). The check runs
+    both ways: every name in the table is a function of the package,
+    every ``hand`` row still checkpoints inside a loop, so a loop moved
+    onto the kernel cannot leave its hand row behind, and no other row
+    but the kernels' does, so a loop written by hand again cannot keep
+    its kernel row."""
     import ast
     import pathlib
 
@@ -493,7 +484,8 @@ def test_cadence_table_names_every_checkpointing_loop():
         for path, fn in functions
         if checkpoints_in_loop(fn)
     }
-    assert "operators/iterate.py::iterate" in looping
+    kernels = {"iterate", "waves"}
+    assert {f"operators/iterate.py::{k}" for k in kernels} <= looping
     lines = it_mod.__doc__.splitlines()
     rules = [i for i, ln in enumerate(lines) if ln.startswith("=====")]
     width, every_width = (len(c) for c in lines[rules[0]].split()[:2])
@@ -503,7 +495,7 @@ def test_cadence_table_names_every_checkpointing_loop():
         every = ln[width:width + every_width + 2].strip() or every
         for name in re.findall(r"``([\w.]+)``", ln[:width]):
             rows[name] = every
-    table = {"iterate"} | {name.rsplit(".", 1)[-1] for name in rows}
+    table = kernels | {name.rsplit(".", 1)[-1] for name in rows}
     missing = sorted(f for f in looping if f.split("::")[1] not in table)
     assert not missing, f"loops missing from the iterate.py cadence table: {missing}"
 
@@ -528,6 +520,19 @@ def test_cadence_table_names_every_checkpointing_loop():
     )
     assert not not_looping, (
         f"hand rows whose function checkpoints in no loop: {not_looping}"
+    )
+    hand_written = sorted(
+        name
+        for name, every in rows.items()
+        if every != "hand"
+        and name not in kernels
+        and any(
+            matches(name, path, fn) and checkpoints_in_loop(fn)
+            for path, fn in functions
+        )
+    )
+    assert not hand_written, (
+        f"kernel rows whose function checkpoints in its own loop: {hand_written}"
     )
 
 
@@ -665,18 +670,21 @@ def test_functions_loops_keep_only_result_checkpoints(spark, op, kept):
         ("maximal_independent_set", 1),
         ("bipartite_matching", 3),
         ("k_truss", 1),
-        ("boruvka_mst", 1),
+        ("boruvka_mst", 3),
+        ("scc", 1),
     ],
 )
 def test_library_loops_keep_only_result_checkpoints(spark, op, kept):
     """The library loops moved onto ``iterate`` leave only what their
-    result reads once it is collected: MIS, k-truss and the Borůvka
-    forest their last checkpoint, matching one accepted-pairs checkpoint
-    per round (three here). Each runs on a small hand graph."""
+    result reads once it is collected: MIS, k-truss and SCC their last
+    checkpoint, matching one accepted-pairs checkpoint per round and the
+    Borůvka forest one selection checkpoint per round (three here). Each
+    runs on a small hand graph."""
     from flink_graph_spark.graph import Graph
     from flink_graph_spark.library.matching import bipartite_matching
     from flink_graph_spark.library.mis import maximal_independent_set
     from flink_graph_spark.library.mst import boruvka_mst
+    from flink_graph_spark.library.scc import scc
     from flink_graph_spark.library.triangles import k_truss
     from flink_graph_spark.sources.generators import grid_graph
 
@@ -703,6 +711,11 @@ def test_library_loops_keep_only_result_checkpoints(spark, op, kept):
             max_rounds=2,
         ),
         "boruvka_mst": lambda: boruvka_mst(grid_graph(spark, 3, 3)),
+        # cycles {1, 2} and {3, 4} joined by 2 -> 3, and the sink 5:
+        # three peel rounds
+        "scc": lambda: scc(
+            graph([(1, 2), (2, 1), (2, 3), (3, 4), (4, 3), (4, 5)]), 3, 5
+        ),
     }[op]
     jmap = spark.sparkContext._jsc.getPersistentRDDs
     before = set(jmap().keySet().toArray())

@@ -1,6 +1,6 @@
 """Strongly-connected-components checks: known SCC decomposition on
-the registry fixture and on hand graphs, in both delta and fixed-step
-modes, plus the GraphAlgorithm packaging."""
+the registry fixture and on hand graphs, plus the GraphAlgorithm
+packaging."""
 
 from __future__ import annotations
 
@@ -24,9 +24,10 @@ def _fixture_graph(spark):
     )
 
 
-@pytest.mark.parametrize("delta", [True, False])
+# ``scc`` has one mode; the one-value parameter keeps the item id
+@pytest.mark.parametrize("delta", [True])
 def test_scc_fixture_decomposition(spark, delta):
-    out = scc(_fixture_graph(spark), max_rounds=3, max_iter=5, delta=delta)
+    out = scc(_fixture_graph(spark), max_rounds=3, max_iter=5)
     assert {r.id: r.scc for r in out.collect()} == EXPECTED
 
 
@@ -50,8 +51,9 @@ def test_scc_algorithm_packaging(spark):
 
 
 def test_scc_empty_graph_returns_empty(spark):
-    """Empty graph: delta mode breaks before the first fixpoint — the
-    result is the empty component table, not an assertion failure."""
+    """Empty graph: the first peel round leaves no vertex unpeeled and
+    the loop stops; the result is the empty component table, not an
+    assertion failure."""
     g = Graph.from_edges(
         spark.createDataFrame([], "src long, dst long, value long")
     )

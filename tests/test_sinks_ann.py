@@ -9,7 +9,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR, rows_as_set
+from conftest import SF_DIR, job_count, rows_as_set
 from flink_graph_spark.functions import similarity as sim_mod
 from flink_graph_spark.sources.sinks import write_graph_parquet
 from flink_graph_spark.sources.tables import load_table, table_rows
@@ -30,16 +30,11 @@ def test_load_table_repeat_read_runs_no_job(spark):
     # schema inference and the raw count run once per table version
     load_table(spark, SF_DIR, "documents")
     table_rows(spark, SF_DIR, "documents")
-    sc = spark.sparkContext
-    group = "test-load-table-repeat"
-    sc.setJobGroup(group, group)
-    try:
+    with job_count(spark) as jobs:
         docs = load_table(spark, SF_DIR, "documents")
         assert "doc_id" in docs.columns
         n = table_rows(spark, SF_DIR, "documents")
-    finally:
-        sc.setJobGroup("", "")
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert jobs() == 0
     assert n == docs.count()
 
 

@@ -7,7 +7,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import rows_as_dict
+from conftest import job_count, rows_as_dict
 from flink_graph_spark.graph import Graph
 from flink_graph_spark.library.music_profiles import (
     music_profiles_communities,
@@ -221,33 +221,75 @@ def test_wave_sizing_skips_action_below_threshold(spark):
 
     assert tri_mod._wave_count(_Poison(), n_edges_hint=10) == 1
 
-    sc = spark.sparkContext
     edges = [(i, i + 1) for i in range(20)] + [(0, 5), (0, 9), (3, 17)]
     e = spark.createDataFrame(edges, "src long, dst long")
     v = spark.createDataFrame(
         [(i,) for i in range(21)], "id long"
     )
 
-    def jobs_for(graph, group):
-        sc.setJobGroup(group, group)
-        try:
+    def jobs_for(graph):
+        with job_count(spark) as jobs:
             # plan construction runs the eager checkpoint + any sizing
             # actions; the result itself stays lazy
             tri_mod.triangle_count(graph)
-        finally:
-            sc.setJobGroup("", "")
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return jobs()
 
     g_cold = Graph(v, e, canonical_edges=True)
-    cold_jobs = jobs_for(g_cold, "wave-sizing-cold")
+    cold_jobs = jobs_for(g_cold)
 
     g_warm = Graph(v, e, canonical_edges=True)
     g_warm.edge_count()  # fills the memo the hint path reads
-    warm_jobs = jobs_for(g_warm, "wave-sizing-warm")
+    warm_jobs = jobs_for(g_warm)
 
     # the sizing agg can span several Spark jobs under AQE — the
     # contract is strictly FEWER actions with the memo filled
     assert warm_jobs < cold_jobs
+
+
+def test_wave_kernel_matches_one_wave(spark, monkeypatch):
+    """``operators.iterate.waves``: a tiny graph forced through two hash
+    waves gives the one-wave result of Jaccard, Adamic–Adar and the
+    triangle count, and drains the shuffle scratch once per wave; the
+    one-wave plans drain nothing."""
+    from flink_graph_spark.library import jaccard as jc_mod
+    from flink_graph_spark.library import triangles as tri_mod
+    from flink_graph_spark.library.adamic_adar import adamic_adar
+    from flink_graph_spark.operators import iterate as iterate_mod
+
+    # hub 0 over 1..6, the square 1-2-3-4 with chord 1-3, and 5-6
+    edges = [(0, v) for v in range(1, 7)] + [
+        (1, 2), (2, 3), (3, 4), (1, 4), (1, 3), (5, 6),
+    ]
+    g = Graph.from_edges(
+        spark.createDataFrame(
+            [(s, d, 1) for s, d in edges], "src long, dst long, value long"
+        )
+    )
+    drains = []
+    monkeypatch.setattr(
+        iterate_mod, "drain_shuffle_scratch", lambda *a, **k: drains.append(a)
+    )
+
+    def run(**jc_kw):
+        return (
+            triangle_count(g).collect()[0]["n_triangles"],
+            {(r["src"], r["dst"]): r["aa"] for r in adamic_adar(g).collect()},
+            {
+                (r["src"], r["dst"]): r["jaccard"]
+                for r in jc_mod.jaccard_similarity(g, **jc_kw).collect()
+            },
+        )
+
+    one = run()
+    assert drains == []
+    assert one[0] == 8  # six through the hub, two in the square
+
+    monkeypatch.setattr(tri_mod, "_wave_count", lambda oe, hint=None: 2)
+    monkeypatch.setattr(jc_mod, "_WAVE_EDGE_THRESHOLD", 0)
+    monkeypatch.setattr(jc_mod, "JACCARD_WAVE_MIN_PAYLOAD_BYTES", 0)
+    monkeypatch.setattr(jc_mod, "JACCARD_WAVE_TARGET_BYTES", 1 << 40)
+    assert run(n_edges_hint=len(edges)) == one
+    assert len(drains) == 3 * 2
 
 
 @pytest.mark.slow
