@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 BPE_ROUNDS = 4
 
@@ -119,6 +119,7 @@ def _train(docs: DataFrame, rounds: int) -> tuple[DataFrame, list[DataFrame]]:
     return state, bests
 
 
+@scratch_scope
 def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     """(round, left, right, merged, pair_count) — the first ``rounds``
     learned BPE merges over the corpus word-frequency table. Keeps
@@ -128,7 +129,6 @@ def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     # readout: its round stops at the best pair (the oracle's unrolled
     # chain stops at the same point), and the state it read is dead
     bests.append(_bpe_round(state)[0])
-    release_local_checkpoint(state)
     return reduce(
         DataFrame.unionByName,
         (
@@ -219,14 +219,12 @@ FROM bpe_b{r}"""
     return f"WITH {joined}\n{union}"
 
 
+@scratch_scope
 def _final_state(docs: DataFrame, rounds: int) -> DataFrame:
     """(w, cnt, rn, sym) after ``rounds`` merges, each applied — the
     same rounds as ``bpe_merges``. Every ``best`` was read only by the
-    state checkpoint that applied it, so all of them are released."""
-    state, bests = _train(docs, rounds)
-    for best in bests:
-        release_local_checkpoint(best)
-    return state
+    state checkpoint that applied it, so the scope frees all of them."""
+    return _train(docs, rounds)[0]
 
 
 def bpe_compression(

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 DIM = 64
 
@@ -1805,6 +1805,7 @@ GROUP BY 1"""
 PCA_ITER = 4
 
 
+@scratch_scope
 def principal_direction(
     emb: DataFrame, max_iter: int = PCA_ITER, round_to: int = 6
 ) -> DataFrame:
@@ -1853,7 +1854,6 @@ def principal_direction(
         (F.lit(1.0) / F.sqrt(F.lit(float(n_dim)))).alias("v"),
     )
     v, _, _ = iterate(v0, round_, max_iter)
-    release_local_checkpoint(x)
     return v.select(
         "pos", F.round("v", round_to).alias("loading")
     ).orderBy("pos")
@@ -1924,6 +1924,7 @@ KMEANS_K = 8
 KMEANS_ROUNDS = 2
 
 
+@scratch_scope
 def _lloyd(
     dims: DataFrame, k: int, rounds: int, keys: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -1973,7 +1974,6 @@ def _lloyd(
         )
 
     assign, _, _ = iterate(dims.filter(F.col("vec_id") < k), round_, rounds)
-    release_local_checkpoint(dims)
     return assign
 
 
@@ -2318,6 +2318,7 @@ GROUP BY 1, 2"""
 
 # ---- feature propagation (the GNN aggregation layer) -----------------
 
+@scratch_scope
 def feature_propagation(
     emb: DataFrame,
     k: int = 5,
@@ -2359,7 +2360,6 @@ def feature_propagation(
         )
 
     x, _, _ = iterate(x.localCheckpoint(eager=True), round_, rounds)
-    release_local_checkpoint(e)
     return x.filter(F.col("dim") <= out_dims).select(
         "vec_id",
         F.col("dim").cast("long").alias("dim"),

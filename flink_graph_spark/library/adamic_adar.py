@@ -57,29 +57,20 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..operators.iterate import waves
+from ..plans.checkpoints import scratch_scope
 
 
-def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
-    """Returns (src, dst, aa) for every edge; neighborhoods over the
-    undirected view, 0.0 when the endpoints share no neighbor."""
-    from ..plans.checkpoints import release_local_checkpoint
+@scratch_scope
+def _degrees_and_orientation(
+    ec: DataFrame, canonical: bool
+) -> tuple[DataFrame, DataFrame]:
+    """(deg, oe): the (id, deg) checkpoint and the degree-oriented (a, b)
+    checkpoint of the canonical edges ``ec``, deduped unless
+    ``canonical``. The dedup checkpoint feeds only these two, so the
+    scope frees it at return, before the enumeration runs."""
     from .triangles import _distinct_edges, _oriented_edges
 
-    e = graph.edges.select("src", "dst")
-
-    # canonicalize before enumerating: the API (unlike the triangles
-    # module's declared src<dst contract) accepts edges in either
-    # orientation — (4, 1) and (1, 4) are the same undirected edge and
-    # must not enumerate twice. The dedup skip is gated on
-    # ``canonical_edges`` (src<dst already holds, projection is the
-    # identity), NOT on ``distinct_edges``: a symmetrized graph carries
-    # both orientations as distinct directed rows, and canonicalizing
-    # them yields exact duplicates that would double every AA score
-    # (r7 bug on customer_supplier_undirected_graph).
-    ec = e.select(
-        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-    )
-    de = _distinct_edges(ec, graph.canonical_edges)
+    de = _distinct_edges(ec, canonical)
     # ONE degree aggregation per query (r10): over the DEDUPED canonical
     # set each endpoint's neighbors appear exactly once in the union, so
     # count(*) here ≡ the old count_distinct over the raw pairs (the
@@ -97,6 +88,31 @@ def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
         .agg(F.count("*").alias("deg"))
         .localCheckpoint(eager=True)
     )
+    oe = _oriented_edges(
+        de, deg.select("id", F.col("deg").alias("d"))
+    ).select("a", "b").localCheckpoint(eager=True)
+    return deg, oe
+
+
+@scratch_scope
+def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
+    """Returns (src, dst, aa) for every edge; neighborhoods over the
+    undirected view, 0.0 when the endpoints share no neighbor."""
+    e = graph.edges.select("src", "dst")
+
+    # canonicalize before enumerating: the API (unlike the triangles
+    # module's declared src<dst contract) accepts edges in either
+    # orientation — (4, 1) and (1, 4) are the same undirected edge and
+    # must not enumerate twice. The dedup skip is gated on
+    # ``canonical_edges`` (src<dst already holds, projection is the
+    # identity), NOT on ``distinct_edges``: a symmetrized graph carries
+    # both orientations as distinct directed rows, and canonicalizing
+    # them yields exact duplicates that would double every AA score
+    # (r7 bug on customer_supplier_undirected_graph).
+    ec = e.select(
+        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+    )
+    deg, oe = _degrees_and_orientation(ec, graph.canonical_edges)
     wgt = deg.select(
         "id",
         F.when(
@@ -106,11 +122,6 @@ def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("wgt"),
     )
-    oe = _oriented_edges(
-        de, deg.select("id", F.col("deg").alias("d"))
-    ).select("a", "b").localCheckpoint(eager=True)
-    if de is not ec:
-        release_local_checkpoint(de)
 
     packed = F.when(
         (F.col("b") < 0)
@@ -171,9 +182,9 @@ def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
         # is a closure over these names — rebinding rewires it)
         wgt = wgt.localCheckpoint(eager=True)
         outadj = outadj.localCheckpoint(eager=True)
-    enriched = waves(
-        oe, _attach, n_waves, ("a", "b"), release=(oe, outadj, wgt, deg)
-    )
+    # the enriched waves read none of oe, outadj, wgt and deg: the
+    # scope frees their checkpoints at return (the tail runs no job)
+    enriched = waves(oe, _attach, n_waves, ("a", "b"))
     # every triangle credits its three edges with the opposite corner's
     # weight in ONE map-side pass over the enumeration (a multi-branch
     # union would re-run it per branch): the (a, b) edge's whole credit

@@ -25,9 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 
+@scratch_scope
 def betweenness(
     graph: Graph,
     max_depth: int,
@@ -122,12 +123,6 @@ def betweenness(
         .groupBy("v")
         .agg(F.sum("dep").alias("bc"))
     )
-    # the lazy result reads the dep checkpoints plus (through the
-    # un-checkpointed dep_by_level[max_depth] wrapper) the LAST level;
-    # sym and every earlier level frame are now unreferenced
-    release_local_checkpoint(sym)
-    for lv in levels[:-1]:
-        release_local_checkpoint(lv)
     return v.join(bc, v["id"] == bc["v"], "left").select(
         "id", F.round(F.coalesce(F.col("bc"), F.lit(0.0)), round_to).alias(
             "betweenness"

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h32, h32_sql
 from ..graph import Graph
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 PRIO_SHIFT = 1 << 20
 
@@ -36,6 +36,7 @@ def _priority(idcol):
     return h32(idcol.cast("string")) * F.lit(PRIO_SHIFT) + idcol
 
 
+@scratch_scope
 def color_graph(graph: Graph, max_rounds: int) -> DataFrame:
     """(id, color) — color r assigned in round r (1-based); NULL if
     still uncolored after ``max_rounds``. Proper on the undirected
@@ -74,7 +75,6 @@ def color_graph(graph: Graph, max_rounds: int) -> DataFrame:
         )
 
     state, _, _ = iterate(state, round_, max_rounds)
-    release_local_checkpoint(sym)
     return state.select("id", "color")
 
 

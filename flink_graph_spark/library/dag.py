@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
 from ..graph import Graph
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 from ..sources.generators import grid_graph
 
 W_MOD = 50  # weights in 1..50
@@ -46,6 +46,7 @@ def weighted_grid_dag(spark: SparkSession, rows: int, cols: int) -> Graph:
     return g.map_edges(w)
 
 
+@scratch_scope
 def dag_longest_path(graph: Graph, max_rounds: int) -> DataFrame:
     """(id, level, longest): longest hop count and longest weighted path
     ENDING at each vertex, over ``graph``'s directed edges (edge weight
@@ -77,8 +78,6 @@ def dag_longest_path(graph: Graph, max_rounds: int) -> DataFrame:
         )
 
     state, _, _ = iterate(state, round_, max_rounds)
-    # result reads only the final state checkpoint; drop the edge scratch
-    release_local_checkpoint(e)
     return state.select(
         "id", F.col("level").cast("long").alias("level"), "longest"
     )

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..operators.iterate import iterate
 from ..operators.pregel import pregel
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 
 def incremental_sssp_remove_edge(
@@ -109,6 +109,7 @@ def incremental_sssp_remove_edge(
 
 # ---- incremental PageRank (warm restart under edge insertion) --------
 
+@scratch_scope
 def incremental_pagerank(
     graph: Graph,
     added_edges: DataFrame,
@@ -139,7 +140,6 @@ def incremental_pagerank(
     if n == 0:
         # empty base graph: page_rank already returned the empty
         # ranking; no resume phase to run (1/n teleport is undefined)
-        release_local_checkpoint(e2)
         return r.select("id", F.round("rank", round_to).alias("rank"))
 
     def superstep(r: DataFrame, _it: int) -> DataFrame:
@@ -156,10 +156,7 @@ def incremental_pagerank(
             ).alias("rank"),
         )
 
-    # the first superseded state is page_rank's select wrapper, which the
-    # kernel leaves alone (its own final checkpoint is not releasable here)
     r, _, _ = iterate(r, superstep, post_iter)
-    release_local_checkpoint(e2)
     return r.select("id", F.round("rank", round_to).alias("rank"))
 
 

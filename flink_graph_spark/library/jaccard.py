@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..operators.iterate import waves
+from ..plans.checkpoints import scratch_scope
 
 #: Sizing itself must not add driver actions to small queries: the
 #: payload agg only runs when the edge count is known (the graph's
@@ -59,6 +60,7 @@ def _adjacency_payload_bytes(adj: DataFrame) -> int:
     return int(row["s"] or 0) * 8
 
 
+@scratch_scope
 def jaccard_similarity(
     graph: Graph,
     round_to: int = 6,
@@ -159,9 +161,8 @@ def jaccard_similarity(
         # each wave re-reads the edge frame — materialize once so a
         # derived (non-persisted) edge pipeline is not recomputed K×
         e = e.localCheckpoint(eager=True)
-    return waves(
-        e, lambda w: _attach(w, adj), n_waves, ("src", "dst"), release=(adj, e)
-    )
+    # the waves read neither adj nor e: the scope frees both at return
+    return waves(e, lambda w: _attach(w, adj), n_waves, ("src", "dst"))
 
 
 def oracle_ctes(edges_cte: str, round_to: int = 6) -> tuple[str, str]:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 
 def _accept(free: DataFrame) -> DataFrame:
@@ -37,6 +37,7 @@ def _accept(free: DataFrame) -> DataFrame:
     )
 
 
+@scratch_scope
 def bipartite_matching(graph: Graph, max_rounds: int = 5) -> DataFrame:
     """(src, dst) matched pairs after ``max_rounds`` propose–accept
     rounds over ``graph``'s directed edges (src side proposes), one
@@ -59,7 +60,6 @@ def bipartite_matching(graph: Graph, max_rounds: int = 5) -> DataFrame:
     # the last round stops at its accepted pairs: the edge set it would
     # leave feeds nothing (the oracle's unrolled chain stops there too)
     accepted.append(_accept(free))
-    release_local_checkpoint(free)
     return reduce(DataFrame.unionByName, accepted)
 
 

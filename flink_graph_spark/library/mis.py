@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 PRIORITY_MULT = 2654435761
 PRIORITY_MOD = 4294967296
@@ -42,6 +42,7 @@ def priority_col(id_col: str = "id") -> F.Column:
     ) * PRIORITY_SHIFT + F.col(id_col)
 
 
+@scratch_scope
 def maximal_independent_set(graph: Graph, max_iter: int = 6) -> DataFrame:
     """Returns (id,) — the MIS members, sorted. ``max_iter`` bounds the
     rounds (mirrored by the oracle); Luby converges in O(log n)
@@ -73,7 +74,6 @@ def maximal_independent_set(graph: Graph, max_iter: int = 6) -> DataFrame:
         return state.where("w").unionByName(flagged.join(lost, "id", "left_anti"))
 
     state, _, _ = iterate(state, round_, max_iter, changed=~F.col("w"))
-    release_local_checkpoint(edges)
     return state.where("w").select("id").orderBy("id")
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import MINHASH_A, MINHASH_B, MINHASH_P
 from ..graph import Graph
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import release_local_checkpoint, scratch_scope
 
 W_MOD = 1000
 
@@ -52,6 +52,7 @@ def _jump(ptr: DataFrame, _it: int) -> DataFrame:
     )
 
 
+@scratch_scope
 def boruvka_mst(
     graph: Graph, rounds: int = 3, jumps: int = 5
 ) -> DataFrame:
@@ -162,19 +163,22 @@ def boruvka_mst(
     # edge) changes no label and stops the loop; extra rounds are
     # no-ops in BOTH engines (the oracle's unrolled sel_r CTEs come up
     # empty), so stopping early preserves parity
-    labels, _, converged = iterate(
-        labels, merge, rounds - 1, changed=F.col("comp") != F.col("__old")
-    )
-    for prev in ptrs:
-        release_local_checkpoint(prev)
+    @scratch_scope
+    def contract(labels: DataFrame) -> tuple[DataFrame, bool, list[DataFrame]]:
+        """The merge rounds. The scope frees the last round's pointers
+        before the final selection runs; ``chosen`` is returned so that
+        it keeps the selections."""
+        labels, _, converged = iterate(
+            labels, merge, rounds - 1, changed=F.col("comp") != F.col("__old")
+        )
+        return labels, converged, chosen
+
+    labels, converged, _ = contract(labels)
     if not converged:
         # the last round stops at its selection: the label contraction
         # it would feed has no consumer (the oracle's unrolled chain
         # stops at the same point)
         choose(labels)
-    # the result reads only the per-round selections
-    release_local_checkpoint(labels)
-    release_local_checkpoint(canon)
     return reduce(
         DataFrame.unionByName,
         (

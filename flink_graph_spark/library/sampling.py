@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 W_MULT_C = 2654435761
 W_MULT_S = 40503
@@ -43,6 +43,7 @@ def _hop_hash(cur: str, step: int, nbr: str) -> F.Column:
     return h * W_SHIFT + F.col(nbr)
 
 
+@scratch_scope
 def random_walks(graph: Graph, length: int = 3) -> DataFrame:
     """(start_id, v1, .., vL) — one deterministic walk per start vertex
     (NULL-padded at dead ends)."""
@@ -69,7 +70,6 @@ def random_walks(graph: Graph, length: int = 3) -> DataFrame:
         F.col("id").alias("start_id"), F.col("id").alias("__cur")
     )
     walks, _, _ = iterate(walks, step, length)
-    release_local_checkpoint(adj)
     return walks.drop("__cur").orderBy("start_id")
 
 

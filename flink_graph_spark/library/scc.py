@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph, GraphAlgorithm
 from ..operators.iterate import iterate
 from ..operators.pregel import pregel
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import release_local_checkpoint, scratch_scope
 
 
 def _fwd_bwd_labels(
@@ -86,6 +86,7 @@ def _fwd_bwd_labels(
     return labels, res.checkpoint
 
 
+@scratch_scope
 def scc(graph: Graph, max_rounds: int = 5, max_iter: int = 10) -> DataFrame:
     """(id, scc) — scc = min vertex id of each strongly connected
     component, for every vertex peeled within ``max_rounds`` rounds
@@ -129,8 +130,6 @@ def scc(graph: Graph, max_rounds: int = 5, max_iter: int = 10) -> DataFrame:
     state, _, _ = iterate(
         seed, peel, max_rounds, changed=F.col("scc").isNull()
     )
-    for prev in inner:
-        release_local_checkpoint(prev)
     return state.where(F.col("scc").isNotNull())
 
 

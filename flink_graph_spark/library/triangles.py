@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..operators.iterate import iterate, waves
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import release_local_checkpoint, scratch_scope
 
 #: Disk-bounded wave sizing for the enumeration's one big shuffle (the
 #: by-b redistribution of the na-carrying stream, 8 B x sum(out^2)
@@ -143,6 +143,7 @@ def _distinct_edges(e: DataFrame, assume_distinct: bool) -> DataFrame:
     return e.distinct().localCheckpoint(eager=True)
 
 
+@scratch_scope
 def _edge_commons(
     e: DataFrame,
     assume_distinct: bool = False,
@@ -164,22 +165,20 @@ def _edge_commons(
     return _commons(_oriented_checkpoint(e, assume_distinct), n_edges_hint)
 
 
+@scratch_scope
 def _oriented_checkpoint(e: DataFrame, assume_distinct: bool) -> DataFrame:
     """(a, b) — the deduped, oriented edges, checkpointed once: they feed
     the adjacency groupBy AND the probe side of :func:`_commons` (else
     the degree joins re-run per leg, 2x slower at sf0.1)."""
     de = _distinct_edges(e, assume_distinct)
-    oe = _oriented_edges(de).select("a", "b").localCheckpoint(eager=True)
-    if de is not e:
-        # the deduped scratch blocks fed the (now-materialized) oriented
-        # list and nothing else — release them immediately
-        release_local_checkpoint(de)
-    return oe
+    return _oriented_edges(de).select("a", "b").localCheckpoint(eager=True)
 
 
 def _commons(oe: DataFrame, n_edges_hint: int | None) -> DataFrame:
     """:func:`_edge_commons` over the oriented-edge checkpoint ``oe``.
-    The one-wave result reads ``oe``; the wave path releases it."""
+    The one-wave result reads ``oe``. The wave result reads neither
+    ``oe`` nor the out-adjacency checkpoint, and the caller's scope,
+    which made ``oe``, frees both."""
     outadj = oe.groupBy(F.col("a").alias("id")).agg(
         F.sort_array(F.collect_set("b")).alias("ns")
     )
@@ -207,7 +206,7 @@ def _commons(oe: DataFrame, n_edges_hint: int | None) -> DataFrame:
     # sum(out^2) stream. The compact out-adjacency is checkpointed once
     # and reshuffled per wave (m packed longs, ~1 GB at 100x: noise).
     outadj = outadj.localCheckpoint(eager=True)
-    return waves(oe, _attach, n_waves, ("a", "b"), release=(outadj, oe))
+    return waves(oe, _attach, n_waves, ("a", "b"))
 
 
 def _closed_wedges(
@@ -409,6 +408,7 @@ LEFT JOIN (
     return cte, final
 
 
+@scratch_scope
 def k_truss(graph: Graph, k: int = 3, max_rounds: int = 3) -> DataFrame:
     """k-truss edge set: iteratively peel edges whose triangle support
     is < k-2 until stable (bounded by ``max_rounds`` so the unrolled
@@ -423,9 +423,11 @@ def k_truss(graph: Graph, k: int = 3, max_rounds: int = 3) -> DataFrame:
     thresh = k - 2
     oe: list[DataFrame] = []
 
+    @scratch_scope
     def peel(state: DataFrame, _it: int) -> DataFrame:
         # the previous superstep's oriented edges fed only its support
-        # table, which the kernel has checkpointed by now
+        # table, which the kernel has checkpointed by now (after waves,
+        # which do not read them, the scope freed them at return)
         for prev in oe:
             release_local_checkpoint(prev)
         e = state.where(F.col("support") >= thresh).select("src", "dst")
@@ -438,8 +440,6 @@ def k_truss(graph: Graph, k: int = 3, max_rounds: int = 3) -> DataFrame:
     state, _, _ = iterate(
         seed, peel, max_rounds + 1, changed=F.col("support") < thresh
     )
-    for prev in oe:
-        release_local_checkpoint(prev)
     return state.where(F.col("support") >= thresh)
 
 

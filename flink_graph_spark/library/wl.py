@@ -24,9 +24,10 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h32, h32_sql
 from ..graph import Graph
 from ..operators.iterate import iterate
-from ..plans.checkpoints import release_local_checkpoint
+from ..plans.checkpoints import scratch_scope
 
 
+@scratch_scope
 def wl_color_classes(graph: Graph, rounds: int = 3) -> DataFrame:
     """(color, n) — 1-WL color-class histogram after ``rounds``
     refinement rounds over the undirected view (initial color =
@@ -67,9 +68,6 @@ def wl_color_classes(graph: Graph, rounds: int = 3) -> DataFrame:
         )
 
     state, _, _ = iterate(state, round_, rounds)
-    # the result reads only the FINAL state checkpoint (its lineage is
-    # truncated), so the scratch symmetric-edge checkpoint can go too
-    release_local_checkpoint(sym)
     return state.groupBy(F.col("c").alias("color")).agg(
         F.count("*").cast("long").alias("n")
     )

@@ -174,7 +174,6 @@ def waves(
     attach: Callable[[DataFrame], DataFrame],
     n_waves: int,
     keys: tuple[str, ...],
-    release: tuple[DataFrame, ...] = (),
 ) -> DataFrame:
     """``attach`` over ``n_waves`` disjoint hash slices of ``edges``,
     each wave checkpointed eagerly, returned as the union of the waves.
@@ -187,8 +186,9 @@ def waves(
     After each wave's checkpoint is written its shuffle scratch is dead,
     and ``drain_shuffle_scratch`` returns it before the next wave
     starts, so disk scratch stays near one wave's at any input size.
-    The ``release`` checkpoints, which every wave reads and the union
-    does not, are released after the last wave.
+    The union reads only the wave checkpoints, so the checkpoints that
+    every wave reads (``edges``, the adjacency ``attach`` joins) are
+    the caller's to free: its ``scratch_scope`` does at return.
 
     One wave is ``attach(edges)`` checkpointed, with no slice filter
     and no drain.
@@ -204,6 +204,4 @@ def waves(
         parts.append(attach(wave).localCheckpoint(eager=True))
         if n_waves > 1:
             drain_shuffle_scratch(spark)
-    for ck in release:
-        release_local_checkpoint(ck)
     return reduce(DataFrame.unionByName, parts)

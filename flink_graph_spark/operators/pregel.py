@@ -140,10 +140,12 @@ def pregel(
     if owns_edge_cache:
         graph = graph.partition_by_src()
     edges = graph.edges
-    # LAZY checkpoint of the initial state: it costs no job of its own
-    # (the first superstep's first read writes its blocks), yet a
-    # caller's uncached vertex frame (incremental SSSP's join, an SCC
-    # peel round) is computed once, not once per read in superstep 1
+    # LAZY checkpoint of the initial state: the first superstep's first
+    # read writes its blocks, so a caller's uncached vertex frame
+    # (incremental SSSP's join, an SCC peel round) is computed once, not
+    # once per read in superstep 1. Over a frame with no exchange it
+    # costs no job of its own; over one with an exchange, AQE runs that
+    # exchange's stage as a job here, at call time
     v0 = graph.vertices.select("id", initial.alias(state_col)).localCheckpoint(eager=False)
     changed_col = ~F.col(state_col).eqNullSafe(F.col("__old"))
 

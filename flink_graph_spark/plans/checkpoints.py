@@ -1,35 +1,39 @@
 """Explicit release of localCheckpoint blocks: superseded ones inside a
-query, and every one a finished query left behind.
+loop, the ones a call's result does not read when it returns, and
+every one a finished query left behind.
 
-Iterative operators truncate lineage with ``localCheckpoint(eager=True)``
-each round. Spark only reclaims those blocks when the ContextCleaner
-notices the JVM-side RDD object is unreachable — which, driven through
-py4j, can lag indefinitely (measured: a finished run's blocks survive
-``gc.collect()`` + ``System.gc()`` polling for minutes and are only
-displaced when the same code path runs again). Harmless at test scale;
-at cluster scale a 50-superstep loop would pin 50 snapshots of vertex
-state in executor storage until the driver GC happens to flush them.
+Spark reclaims a checkpoint's blocks only when the ContextCleaner sees
+its JVM-side RDD unreachable, which, driven through py4j, can lag
+indefinitely (a finished run's blocks survived ``gc.collect()`` +
+``System.gc()`` polling for minutes). So no checkpoint waits for a GC:
 
-So no checkpoint waits for a GC. Loops release superseded checkpoints
-EXPLICITLY: the moment a new checkpoint is materialized (eager=True ⇒
-its blocks are already written and its lineage no longer reads the
-parent), the previous round's blocks are unpersisted. The checkpoints
-the returned DataFrame still reads belong to the query until the next
-registered query begins, which frees them all with
-``release_all_local_checkpoints`` (called by ``registry._query_begin``).
-The builder caches are ``DataFrame.persist()`` frames, never locally
-checkpointed, so that release leaves them resident.
+- the loop kernels (``operators/iterate.py``) unpersist the previous
+  round's checkpoint once the new one is written (it no longer reads
+  the old blocks);
+- ``scratch_scope`` frees at a call's return every checkpoint the call
+  made that its returned value does not read;
+- ``registry._query_begin`` frees, with
+  ``release_all_local_checkpoints``, the checkpoints the previous
+  query's result read. The builder caches are ``DataFrame.persist()``
+  frames, never locally checkpointed, so no release touches them.
 
-Safety contract: call ``release_local_checkpoint`` only on a DataFrame
-that (a) came straight from ``localCheckpoint()`` and (b) no surviving
-DataFrame's plan can read anymore. localCheckpoint blocks are NOT
-recomputable — releasing one that a live plan still references turns
-the next action into a block-not-found failure, which is why this is a
-deliberate helper with a narrow contract and not a blanket unpersist.
+Safety contract: localCheckpoint blocks are NOT recomputable, so
+releasing one that a live plan still reads turns the next action into
+a block-not-found failure. ``scratch_scope`` checks the contract
+against the plan, not a comment: it keeps every checkpoint a DataFrame
+in the returned value reaches through its analyzed plan, subqueries and
+the RDD lineage of its leaves. It cannot see a frame held anywhere else
+(an attribute, a closure, a module cache), so a scoped function keeps
+no checkpoint there. ``release_local_checkpoint`` is the loops' narrow
+tool: call it only on a DataFrame straight from ``localCheckpoint()``
+that no surviving plan can read anymore.
 """
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 #: A drain engages for real only if the first GC pass frees at least
@@ -187,3 +191,68 @@ def release_all_local_checkpoints(spark) -> None:
         rdd = rdds.get(rid).rdd()
         if rdd.isLocallyCheckpointed():
             rdd.unpersist(False)
+
+
+def _seq(jseq) -> list:
+    """A Scala ``Seq`` from py4j as a Python list."""
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _frames(value):
+    """Every DataFrame in ``value``, inside tuples (namedtuples such as
+    ``PregelResult`` too) and lists."""
+    if isinstance(value, DataFrame):
+        yield value
+    elif isinstance(value, (tuple, list)):
+        for v in value:
+            yield from _frames(v)
+
+
+def reached_rdd_ids(value, since: int) -> set[int]:
+    """The ids, ``since`` or newer, of the RDDs the DataFrames in
+    ``value`` read: through each analyzed plan's ``children()`` and
+    ``subqueries()`` (a ``DataFrame.scalar()`` is one) to the
+    ``LogicalRDD`` leaves, then down each leaf RDD's ``dependencies()``,
+    so a lazy checkpoint not yet written keeps the checkpoints its
+    lineage reads (a written one depends on its own blocks only). An
+    RDD older than ``since`` is not entered: all it depends on is older
+    still. Launches no Spark job."""
+    plans = [df._jdf.queryExecution().analyzed() for df in _frames(value)]
+    rdds, reached = [], set()
+    while plans:
+        node = plans.pop()
+        if node.getClass().getSimpleName() == "LogicalRDD":
+            rdds.append(node.rdd())
+        plans += _seq(node.children()) + _seq(node.subqueries())
+    while rdds:
+        rdd = rdds.pop()
+        rid = rdd.id()
+        if rid >= since and rid not in reached:
+            reached.add(rid)
+            rdds += [dep.rdd() for dep in _seq(rdd.dependencies())]
+    return reached
+
+
+def scratch_scope(fn):
+    """Decorator: when ``fn`` returns, unpersist (non-blocking) every
+    local checkpoint made during the call that the returned value does
+    not read (:func:`reached_rdd_ids`); the rest go to the caller with
+    the value. A call that raises frees nothing (the next registered
+    query does)."""
+
+    @functools.wraps(fn)
+    def scoped(*args, **kwargs):
+        sc = SparkContext._active_spark_context
+        since = sc._jsc.sc().newRddId()  # every RDD the call makes is newer
+        result = fn(*args, **kwargs)
+        rdds = sc._jsc.getPersistentRDDs()
+        own = [rdds.get(i).rdd() for i in rdds.keySet().toArray() if i >= since]
+        own = [rdd for rdd in own if rdd.isLocallyCheckpointed()]
+        if own:
+            reached = reached_rdd_ids(result, since)
+            for rdd in own:
+                if rdd.id() not in reached:
+                    rdd.unpersist(False)
+        return result
+
+    return scoped

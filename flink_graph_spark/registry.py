@@ -46,7 +46,7 @@ from .library import neighborhood as nf_mod
 from .sources import generators as gen_mod
 from .library import pagerank as pr_mod
 from .library import sssp as sssp_mod
-from .plans.checkpoints import release_all_local_checkpoints
+from .plans.checkpoints import release_all_local_checkpoints, scratch_scope
 from .plans.reuse import reuse_leaf
 from .plans.session import tune_session
 from .sources.graphs import (
@@ -78,19 +78,16 @@ def _query_begin(spark: SparkSession) -> None:
     no graph builder persists a frame before they are set (the
     ordering contract in its docstring).
 
-    Iterative queries return frames that read localCheckpoint blocks;
-    their operators already released every superseded checkpoint, and
-    the ones left are the finished query's result state. Those are
+    Each query's ``scratch_scope`` already freed every checkpoint its
+    result does not read; the ones left are the previous result's state,
     unpersisted here, all of them, with no GC involved
     (``release_all_local_checkpoints``). Left to the ContextCleaner, a
     100-query session accretes hundreds of stale blocks and
     per-superstep cost degrades ~4x by the end of the gate. The
     memoized derived-graph caches in ``_GRAPH_MEMO`` are persisted
-    frames, never checkpoints, so they stay resident.
-
-    This runs inside the registry wrapper so EVERY runner (driver gate,
-    local gate, bench, tests) gets the same scratch lifecycle without
-    cooperating.
+    frames, never checkpoints, so they stay resident. Both run in the
+    registry wrapper, so every runner (the oracle gates, bench, tests)
+    gets the same scratch lifecycle without cooperating.
     """
     tune_session(spark)
     release_all_local_checkpoints(spark)
@@ -160,9 +157,11 @@ def _fixture_partitions(spark: SparkSession, n: int = 4):
 
 def _register(name: str, oracle: str | None):
     def deco(fn: QueryFn) -> QueryFn:
+        scoped = scratch_scope(fn)
+
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             _query_begin(spark)
-            return fn(spark, sf_dir)
+            return scoped(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

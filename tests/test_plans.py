@@ -672,20 +672,35 @@ def test_functions_loops_keep_only_result_checkpoints(spark, op, kept):
         ("k_truss", 1),
         ("boruvka_mst", 3),
         ("scc", 1),
+        ("wl_color_classes", 1),
+        ("color_graph", 1),
+        ("dag_longest_path", 1),
+        ("random_walks", 1),
+        ("betweenness", 3),
+        ("incremental_pagerank", 1),
     ],
 )
 def test_library_loops_keep_only_result_checkpoints(spark, op, kept):
-    """The library loops moved onto ``iterate`` leave only what their
-    result reads once it is collected: MIS, k-truss and SCC their last
-    checkpoint, matching one accepted-pairs checkpoint per round and the
-    Borůvka forest one selection checkpoint per round (three here). Each
-    runs on a small hand graph."""
+    """The library loops on ``iterate`` leave only what their result
+    reads once it is collected: MIS, k-truss, SCC, WL, coloring, the DAG
+    paths, the random walks and incremental PageRank their last
+    checkpoint, matching one accepted-pairs checkpoint per round, the
+    Borůvka forest one selection checkpoint per round (three here) and
+    betweenness one dependency checkpoint per level below the last plus
+    the last BFS level (depth 2 here). Each runs on a small hand
+    graph."""
     from flink_graph_spark.graph import Graph
+    from flink_graph_spark.library.betweenness import betweenness
+    from flink_graph_spark.library.coloring import color_graph
+    from flink_graph_spark.library.dag import dag_longest_path, weighted_grid_dag
+    from flink_graph_spark.library.incremental import incremental_pagerank
     from flink_graph_spark.library.matching import bipartite_matching
     from flink_graph_spark.library.mis import maximal_independent_set
     from flink_graph_spark.library.mst import boruvka_mst
+    from flink_graph_spark.library.sampling import random_walks
     from flink_graph_spark.library.scc import scc
     from flink_graph_spark.library.triangles import k_truss
+    from flink_graph_spark.library.wl import wl_color_classes
     from flink_graph_spark.sources.generators import grid_graph
 
     def graph(edges):
@@ -715,6 +730,19 @@ def test_library_loops_keep_only_result_checkpoints(spark, op, kept):
         # three peel rounds
         "scc": lambda: scc(
             graph([(1, 2), (2, 1), (2, 3), (3, 4), (4, 3), (4, 5)]), 3, 5
+        ),
+        "wl_color_classes": lambda: wl_color_classes(grid_graph(spark, 2, 3), 2),
+        "color_graph": lambda: color_graph(grid_graph(spark, 2, 3), 3),
+        "dag_longest_path": lambda: dag_longest_path(weighted_grid_dag(spark, 2, 3), 3),
+        "random_walks": lambda: random_walks(grid_graph(spark, 2, 3), 2),
+        "betweenness": lambda: betweenness(grid_graph(spark, 2, 2), 2),
+        # the page_rank phase ends in a checkpoint the resume phase
+        # supersedes
+        "incremental_pagerank": lambda: incremental_pagerank(
+            grid_graph(spark, 2, 2),
+            spark.createDataFrame([(3, 0, 1)], "src long, dst long, value long"),
+            pre_iter=2,
+            post_iter=2,
         ),
     }[op]
     jmap = spark.sparkContext._jsc.getPersistentRDDs
@@ -780,6 +808,154 @@ def test_back_to_back_queries_leave_no_scratch(spark, queries):
     (counts1, bytes1), (counts2, bytes2) = rounds
     assert counts2 == counts1
     assert bytes2 <= bytes1, (bytes1, bytes2)
+
+
+def test_queries_keep_only_checkpoints_their_result_reads(spark, queries):
+    """The ``_register`` wrapper runs each query in a ``scratch_scope``:
+    once a result is collected, every live checkpoint the query made is
+    one that the result reaches, by the scope's own walk
+    (``plans.checkpoints.reached_rdd_ids``). The sample holds queries
+    whose leaks the scope ended: a dedup pipeline's pair checkpoint
+    under CC, an incremental query's first-phase state."""
+    from flink_graph_spark.plans.checkpoints import reached_rdd_ids
+
+    names = (
+        "dedup_clusters",
+        "incremental_sssp_golden",
+        "incremental_pagerank_golden",
+        "semantic_dedup_lsh",
+    )
+    sc = spark.sparkContext._jsc.sc()
+    unread = {}
+    for name in names:
+        began = sc.newRddId()
+        result = queries[name](spark, SF_DIR)
+        result.collect()
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        own = {
+            int(k)
+            for k in rdds.keySet().toArray()
+            if int(k) >= began and rdds.get(k).rdd().isLocallyCheckpointed()
+        }
+        left = own - reached_rdd_ids(result, began)
+        if left:
+            unread[name] = sorted(left)
+    assert not unread, f"checkpoints the result does not read: {unread}"
+
+
+def test_scratch_scope_frees_what_the_result_does_not_read(spark):
+    """plans/checkpoints.py ``scratch_scope``: at return it frees every
+    checkpoint the call made that its value does not read, and keeps
+    the ones reached through a lazy checkpoint's lineage, a
+    ``DataFrame.scalar()`` subquery or any frame of a tuple."""
+    from pyspark.sql import functions as F
+
+    from flink_graph_spark.plans.checkpoints import scratch_scope
+
+    sc = spark.sparkContext
+    made: dict[str, int] = {}
+
+    def persisted() -> set[int]:
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    def checkpoint(name, df, eager=True):
+        ck = df.localCheckpoint(eager=eager)
+        made[name] = int(ck._jdf.queryExecution().analyzed().rdd().id())
+        return ck
+
+    @scratch_scope
+    def lazy_over_eager():
+        base = checkpoint("base", spark.range(6))
+        checkpoint("unread", spark.range(3))
+        return checkpoint("lazy", base.select((F.col("id") * 2).alias("id")), eager=False)
+
+    @scratch_scope
+    def scalar_only():
+        top = checkpoint("top", spark.range(5)).select(F.max("id")).scalar()
+        return spark.range(3).select((F.col("id") + top).alias("x"))
+
+    @scratch_scope
+    def pair():
+        a = checkpoint("a", spark.range(4))
+        b = checkpoint("b", spark.range(7))
+        checkpoint("dead", spark.range(2))
+        return a.select("id"), [b.where("id > 2")]
+
+    out = lazy_over_eager()
+    live = persisted()
+    assert {made["base"], made["lazy"]} <= live and made["unread"] not in live
+    assert sorted(r["id"] for r in out.collect()) == [0, 2, 4, 6, 8, 10]
+
+    out = scalar_only()
+    assert made["top"] in persisted()
+    assert sorted(r["x"] for r in out.collect()) == [4, 5, 6]
+
+    (a, [b]) = pair()
+    live = persisted()
+    assert {made["a"], made["b"]} <= live and made["dead"] not in live
+    assert (a.count(), b.count()) == (4, 4)
+    for rid in made.values():
+        if rid in persisted():
+            sc._jsc.getPersistentRDDs().get(rid).unpersist(False)
+
+
+#: The functions outside the lifecycle owners (``plans/``,
+#: ``operators/``, the graph builders) whose own loops still free
+#: scratch by hand: the previous-step lists of SCC, Borůvka and k-truss,
+#: k-core's two-frame loop, and the persisted edge caches of community
+#: detection, the mode-vote loop and winnowing.
+LIFECYCLE_ALLOWED = {
+    "library/scc.py::scc",
+    "library/mst.py::boruvka_mst",
+    "library/triangles.py::k_truss",
+    "library/kcore.py::k_core",
+    "library/community.py::community_detection",
+    "library/label_propagation.py::_mode_vote_loop",
+    "functions/dedup.py::winnow_dup_pairs",
+}
+
+
+def test_scratch_release_stays_in_its_owners():
+    """A ``release_local_checkpoint(...)`` or ``.unpersist(...)`` call
+    in the package sits in ``plans/``, ``operators/``,
+    ``sources/graphs.py`` or ``graph.py``, or inside a function of
+    ``LIFECYCLE_ALLOWED`` (nested functions count as their enclosing
+    module-level function). Anything else a call checkpoints is freed by
+    ``plans.checkpoints.scratch_scope``. The allow-list is checked both
+    ways: an entry whose function is gone or releases nothing fails."""
+    import ast
+    import pathlib
+
+    import flink_graph_spark
+
+    root = pathlib.Path(flink_graph_spark.__file__).parent
+    owners = ("plans/", "operators/", "sources/graphs.py", "graph.py")
+
+    def releases(node) -> bool:
+        return any(
+            isinstance(c, ast.Call)
+            and (
+                (isinstance(c.func, ast.Name) and c.func.id == "release_local_checkpoint")
+                or (
+                    isinstance(c.func, ast.Attribute)
+                    and c.func.attr in ("release_local_checkpoint", "unpersist")
+                )
+            )
+            for c in ast.walk(node)
+        )
+
+    releasing = set()
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        if rel.startswith(owners):
+            continue
+        for top in ast.parse(path.read_text()).body:
+            if releases(top):
+                releasing.add(f"{rel}::{getattr(top, 'name', type(top).__name__)}")
+    stray = sorted(releasing - LIFECYCLE_ALLOWED)
+    assert not stray, f"scratch released by hand outside its owners: {stray}"
+    stale = sorted(LIFECYCLE_ALLOWED - releasing)
+    assert not stale, f"allow-listed functions that are gone or release nothing: {stale}"
 
 
 def test_drain_engage_predicate():
