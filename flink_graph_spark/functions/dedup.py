@@ -5,18 +5,17 @@ Scale design (100 TB posture):
 * Everything is inverted-index shaped: explode shingles → hash-join on
   shingle/bucket → aggregate. Never an O(n²) cross join — candidate
   pairs only ever come from shared buckets.
-* MinHash signatures are computed on the map side, per row, from the
-  row's hashed distinct shingles (16 ``array_min``, ``minhash_sets``);
-  the one full-corpus shuffle carries each row's text and 16 longs,
-  and a doc's signature is the element-wise min over its rows. They
-  are banded into b=4 bands of r=4 rows (tunable): the bucket key is
-  the band index plus the band's r-minhash array, so a candidate pair
-  must agree on ALL r hashes of some band — P(candidate) =
-  1-(1-s^r)^b, the standard LSH S-curve. r=1 banding (any single hash
-  matching) floods the candidate set with low-similarity pairs at
-  corpus scale; r≥2 keeps candidate volume ~linear in true near-dups.
-  Candidates are confirmed with exact Jaccard over shingle sets rebuilt
-  from their texts, so precision is exact either way.
+* MinHash signatures are 16 ``min`` aggregates of each row's hashed
+  distinct shingles (``minhash_sets``): the one full-corpus shuffle
+  carries 17 longs per doc and no text. They are banded into b=4
+  bands of r=4 rows (tunable): the bucket key is the band index plus
+  the band's r-minhash array, so a candidate pair must agree on ALL r
+  hashes of some band — P(candidate) = 1-(1-s^r)^b, the standard LSH
+  S-curve. r=1 banding (any single hash matching) floods the candidate
+  set with low-similarity pairs at corpus scale; r≥2 keeps candidate
+  volume ~linear in true near-dups. Candidates are confirmed with
+  exact Jaccard over shingle sets rebuilt from their texts, which a
+  second read of the docs joins to the candidate list only.
 * All hashing is md5-derived integer arithmetic (functions/hashing.py)
   so the whole LSH pipeline — signatures, buckets, candidates,
   confirmation — is bit-identical in DuckDB and fully oracle-checked,
@@ -337,49 +336,38 @@ def _permutation(k: int):
     return lambda h: minhash_expr(k, h)
 
 
-def minhash_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, texts, mh_0..mh_{K-1}): each doc's texts and the K
-    min-hashes of its distinct word-3-gram shingle set, from
-    (doc_id, text) rows.
+def _min_hashes(hs: str) -> list[Column]:
+    """The K min-hashes of the hashed shingle array column ``hs``, which
+    a lower projection binds: each of the K lambdas indexes it, where an
+    inlined ``hs`` would hash every shingle K times (SCALING.md §11)."""
+    return [F.array_min(F.transform(hs, _permutation(k))) for k in range(NUM_MINHASHES)]
 
-    The signature is built on the map side: per row, the tokens are
-    bound once, the distinct shingles hashed once (``hs``, bound in a
-    lower projection so the K ``array_min(transform(...))`` lambdas
-    index it instead of re-hashing every shingle K times, SCALING.md
-    §11) and reduced to K min-hashes. The one shuffle then carries each
-    row's text and K longs, packed into ONE ``collect_list`` aggregate so
-    that column pruning cannot split it into two exchanges for readers
-    of only ``mh_k`` or only ``texts``. After it, ``mh_k`` is the
-    ``array_min`` over the doc's rows: the min-hash of a union is the
-    minimum of the parts' min-hashes, so a doc_id split across rows
-    gets the signature of its whole shingle set. Rows with no shingle
-    (NULL, empty, < 3 tokens) are dropped before the shuffle, so docs
-    with no shingle have no row.
-    """
+
+def _shingled(docs: DataFrame) -> DataFrame:
+    """The (doc_id, text, t) rows of ``docs`` with ≥ 3 tokens ``t``: the
+    rows with a shingle, which signatures and confirm step both read."""
     tok = docs.select("doc_id", "text", F.split("text", " ").alias("t"))
-    hashed = tok.filter(F.size("t") >= 3).select(
+    return tok.filter(F.size("t") >= 3)
+
+
+def minhash_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh_0..mh_{K-1}): the K min-hashes of each doc's distinct
+    word-3-gram shingle set, from (doc_id, text) rows.
+
+    Per row, the distinct shingles are hashed once (``hs``); each
+    ``mh_k`` is a plain ``min`` of the rows' min-hashes. The min-hash of
+    a union is the minimum of its parts', so a doc_id split across rows
+    gets the signature of its whole shingle set, and the partial
+    aggregate before the one shuffle is a codegen ``HashAggregate``
+    over fixed-width buffers: K + 1 longs per doc and map task, no
+    text. Docs with no shingle (NULL, empty, < 3 tokens) have no row.
+    """
+    hashed = _shingled(docs).select(
         "doc_id",
-        "text",
         F.transform(F.array_distinct(F.expr(SHINGLES_T_EXPR)), h32).alias("hs"),
     )
-    packed = hashed.select(
-        "doc_id",
-        F.struct(
-            "text",
-            *[
-                F.array_min(F.transform("hs", _permutation(k))).alias(f"m_{k}")
-                for k in range(NUM_MINHASHES)
-            ],
-        ).alias("r"),
-    )
-    per_doc = packed.groupBy("doc_id").agg(F.collect_list("r").alias("rs"))
-    return per_doc.select(
-        "doc_id",
-        F.col("rs.text").alias("texts"),
-        *[
-            F.array_min(f"rs.m_{k}").alias(f"mh_{k}")
-            for k in range(NUM_MINHASHES)
-        ],
+    return hashed.groupBy("doc_id").agg(
+        *[F.min(m).alias(f"mh_{k}") for k, m in enumerate(_min_hashes("hs"))]
     )
 
 
@@ -411,14 +399,21 @@ def _bucket_pairs(
     )
 
 
-def _side(sets: DataFrame, side: str, signature: bool = False) -> DataFrame:
-    """``sets`` renamed as one side of a pair: doc_id → d<side>, texts →
-    t<side> and, with ``signature``, each mh_k → <side>_k."""
-    mhs = range(NUM_MINHASHES) if signature else ()
-    return sets.select(
-        F.col("doc_id").alias(f"d{side}"),
-        F.col("texts").alias(f"t{side}"),
-        *[F.col(f"mh_{k}").alias(f"{side}_{k}") for k in mhs],
+def _candidate_rows(docs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(da, db, ta, xb): each LSH candidate pair with the texts ``ta`` of
+    da, once per text ``xb`` of db. The texts are those of ``_shingled``
+    rows, joined to the candidate list first on da, collected per pair,
+    then joined on db; no text meets the signatures or the bucket rows.
+    """
+    cand = _bucket_pairs(minhash_sets(docs), bands, rows)
+    texts = _shingled(docs)
+    a = texts.select(F.col("doc_id").alias("da"), F.col("text").alias("xa"))
+    b = texts.select(F.col("doc_id").alias("db"), F.col("text").alias("xb"))
+    return (
+        cand.join(a, "da")
+        .groupBy("da", "db")
+        .agg(F.collect_list("xa").alias("ta"))
+        .join(b, "db")
     )
 
 
@@ -433,20 +428,17 @@ def _shingle_set(texts: str) -> Column:
     )
 
 
-def _with_pair_sets(pairs: DataFrame, *cols: str) -> DataFrame:
-    """``pairs`` with its ``ta``/``tb`` texts replaced by the shingle
-    sets ``sa``/``sb``, built after the join so only candidate documents
-    are shingled again."""
-    return pairs.select(
-        *cols, _shingle_set("ta").alias("sa"), _shingle_set("tb").alias("sb")
-    )
+def _pair_sets() -> tuple[Column, Column]:
+    """The shingle sets (sa, sb) of a candidate pair: aggregates over
+    its ``_candidate_rows`` grouped by (da, db), where ``ta`` is one
+    value per group."""
+    return _shingle_set("first(ta)"), _shingle_set("collect_list(xb)")
 
 
-def _exact_jaccard() -> Column:
-    inter = F.size(F.array_intersect("sa", "sb"))
-    return F.round(
-        inter.cast("double") / (F.size("sa") + F.size("sb") - inter), 6
-    )
+def _exact_jaccard(sa: Column, sb: Column) -> Column:
+    # sa, sb and inter repeat; subexpression elimination builds each once
+    inter = F.size(F.array_intersect(sa, sb))
+    return F.round(inter.cast("double") / (F.size(sa) + F.size(sb) - inter), 6)
 
 
 def dedup_minhash_lsh(
@@ -467,24 +459,22 @@ def dedup_minhash_lsh(
     candidate set stays ~linear in the number of true near-dups
     (P(candidate) = 1-(1-s^r)^b).
 
-    One lazy plan, nothing cached: the per-doc (texts, signature) rows
-    (``minhash_sets``) are the only full-corpus shuffle, and it carries
-    text plus 16 longs per row, not shingle sets. Both sides of the
-    bucket self-join and both confirm joins read that one exchange
-    (Spark reuses it). The bucket join and candidate ``distinct`` carry
-    doc ids only — the texts are attached to the candidate list, never
-    to the bucket rows. A caller that reads the result more than once
-    materializes it itself (``dedup_clusters``).
+    One lazy plan, nothing cached. The signatures (``minhash_sets``) are
+    the only full-corpus shuffle, no text; both bucket-join sides read
+    it through reuse. ``docs`` is read twice: the texts reach the
+    candidates by a second read (``_candidate_rows``), broadcast up to
+    the broadcast threshold and shuffled once above it. For a parquet
+    source that is a second scan, so a caller passing an expensive
+    derived frame materializes it first. The Jaccard is computed in the
+    aggregate that collects the texts, so the threshold filter sits
+    above it and each pair's sets and intersection are built once. A
+    caller reading the result twice materializes it (``dedup_clusters``).
     """
-    sets = minhash_sets(docs)
-    pairs = (
-        _bucket_pairs(sets, bands, rows)
-        .join(_side(sets, "a"), "da")
-        .join(_side(sets, "b"), "db")
-    )
+    sa, sb = _pair_sets()
     return (
-        _with_pair_sets(pairs, "da", "db")
-        .select("da", "db", _exact_jaccard().alias("jaccard"))
+        _candidate_rows(docs, bands, rows)
+        .groupBy("da", "db")
+        .agg(_exact_jaccard(sa, sb).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -1133,27 +1123,22 @@ def minhash_calibration(
 
     Same exact-vs-sketch pairing policy as two_hop vs HLL: measure the
     estimator against ground truth on the candidate set instead of
-    assuming the textbook bound. Candidates only — never all pairs."""
-    sets = minhash_sets(docs)
-    match = sum(
-        (
-            F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
-            for k in range(1, NUM_MINHASHES)
-        ),
-        start=F.when(F.col("a_0") == F.col("b_0"), 1).otherwise(0),
+    assuming the textbook bound. Candidates only — never all pairs.
+    Both sides' signatures are recomputed from the candidate's shingle
+    sets, which the confirm step builds anyway: the min-hash of a union
+    is the minimum of its parts, so they equal ``minhash_sets``'."""
+    sa, sb = _pair_sets()
+    sets = (
+        _candidate_rows(docs, bands, rows)
+        .groupBy("da", "db")
+        .agg(sa.alias("sa"), sb.alias("sb"))
+        .select("sa", "sb", *[F.transform(c, h32).alias(f"h{c}") for c in ("sa", "sb")])
     )
-    pairs = (
-        _bucket_pairs(sets, bands, rows)
-        .join(_side(sets, "a", signature=True), "da")
-        .join(_side(sets, "b", signature=True), "db")
-        .select(
-            (match.cast("double") / F.lit(float(NUM_MINHASHES))).alias("est"),
-            "ta",
-            "tb",
-        )
-    )
-    paired = _with_pair_sets(pairs, "est").select(
-        "est", _exact_jaccard().alias("exact")
+    pairs = zip(_min_hashes("hsa"), _min_hashes("hsb"))
+    match = sum(((a == b).cast("int") for a, b in pairs), F.lit(0))
+    paired = sets.select(
+        (match.cast("double") / F.lit(float(NUM_MINHASHES))).alias("est"),
+        _exact_jaccard(F.col("sa"), F.col("sb")).alias("exact"),
     )
     bucket = F.least(
         F.floor(F.abs(F.col("est") - F.col("exact")) * 10), F.lit(9)

@@ -18,6 +18,7 @@ from flink_graph_spark.functions import sessions as sess_mod
 from flink_graph_spark.functions import similarity as sim_mod
 from flink_graph_spark.functions import text as text_mod
 from flink_graph_spark.functions.hashing import NUM_MINHASHES, h32
+from flink_graph_spark.plans import explain
 from flink_graph_spark.sources.tables import load_table
 
 
@@ -200,48 +201,58 @@ def test_minhash_similar_docs_share_buckets(docs):
     assert (1, 4) in got  # identical docs always collide
 
 
-def test_dedup_minhash_lsh_four_jobs_no_scratch(spark, docs):
-    # one lazy plan: the shingle-set shuffle, the bucket join and the
-    # confirm joins run in at most 4 jobs, and nothing is left persisted
-    # or checkpointed once the result has been read
+def test_dedup_minhash_lsh_four_jobs_no_scratch(spark, docs, tmp_path):
+    # one lazy plan: the signature shuffle, the bucket join and the
+    # confirm joins run in at most 4 jobs on a parquet source (what the
+    # registered callers pass: its size lets Spark broadcast the texts),
+    # and nothing is left persisted or checkpointed once the result has
+    # been read. The in-memory fixture has no size statistics, so its
+    # texts join by shuffle, in more jobs; only its pairs are pinned.
+    path = str(tmp_path / "docs")
+    docs.write.parquet(path)
+    stored = spark.read.parquet(path)
     sc = spark.sparkContext
     before = sc._jsc.getPersistentRDDs().size()
+    want = {(1, 2), (1, 4), (2, 4)}
     with job_count(spark) as jobs:
-        got = dedup_mod.dedup_minhash_lsh(docs).collect()
-    assert {(r["da"], r["db"]) for r in got} == {(1, 2), (1, 4), (2, 4)}
+        got = dedup_mod.dedup_minhash_lsh(stored).collect()
+    assert {(r["da"], r["db"]) for r in got} == want
     assert 0 < jobs() <= 4, jobs()
+    got = dedup_mod.dedup_minhash_lsh(docs).collect()
+    assert {(r["da"], r["db"]) for r in got} == want
     assert sc._jsc.getPersistentRDDs().size() == before
 
 
 def test_dedup_minhash_lsh_one_shingle_set_exchange(spark, docs):
-    # the signature is built map-side: the one full-corpus exchange
-    # carries a single collect_list of the packed struct(text, m_0..m_15)
-    # per row and no shingle set; every consumer (both bucket-join
-    # sides, both confirm sides) reads it, the others as ReusedExchange,
-    # and no cached frame stands in for the reuse
+    # the one full-corpus exchange carries the signatures only: it is fed
+    # by K partial min aggregates in a codegen HashAggregate, whose
+    # output is doc_id and K longs (no text, no ObjectHashAggregate), and
+    # both bucket-join sides read it, the second as ReusedExchange; no
+    # cached frame stands in for the reuse
     out = dedup_mod.dedup_minhash_lsh(docs)
     out.collect()
-    # print every field of the packed struct
-    spark.conf.set("spark.sql.debug.maxToStringFields", "100")
-    try:
-        plan = out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset("spark.sql.debug.maxToStringFields")
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" not in plan
-    assert "partial_collect_set" not in plan
     final = plan.split("== Initial Plan ==")[0].splitlines()
-    shuffles = [
-        i
-        for i, line in enumerate(final)
-        if "Exchange hashpartitioning" in line and "ReusedExchange" not in line
-    ]
-    assert len(shuffles) == 1, plan
-    partial, packed = final[shuffles[0] + 1], final[shuffles[0] + 2]
-    one_list = r"functions=\[partial_collect_list\(\w+#\d+, 0, 0\)\]"
-    assert re.search(one_list, partial), plan
-    assert "struct(text, text#" in packed, plan
-    fields = [f"m_{k}, array_min(" for k in range(NUM_MINHASHES)]
-    assert all(f in packed for f in fields), plan
+    reads = [i for i, line in enumerate(final) if "Exchange hashpartitioning(doc_id#" in line]
+    fresh = [i for i in reads if "ReusedExchange" not in final[i]]
+    assert len(reads) == 2 and len(fresh) == 1, plan
+    partial = final[fresh[0] + 1]
+    assert re.search(r"^\W*HashAggregate\(keys=\[doc_id#\d+L\]", partial), plan
+    assert partial.count("partial_min(") == NUM_MINHASHES, plan
+    output = re.search(r"output=\[([^\]]*)\]", partial).group(1).split(", ")
+    assert len(output) == NUM_MINHASHES + 1, plan
+    assert all(re.fullmatch(r"\w+#\d+L", c) for c in output), plan
+
+
+def test_dedup_minhash_lsh_intersects_once(spark, docs):
+    # the threshold filter sits above the aggregate that computes the
+    # Jaccard, so each candidate's shingle sets and their intersection
+    # are built in one operator, not again in a pushed-down filter
+    out = dedup_mod.dedup_minhash_lsh(docs)
+    explain.run_plan(out)
+    blocks = explain.formatted(out).split("\n\n")
+    assert sum("array_intersect(" in b for b in blocks) == 1, blocks
 
 
 def test_dedup_minhash_lsh_edge_cases(spark):
@@ -273,32 +284,34 @@ def test_dedup_minhash_lsh_edge_cases(spark):
     assert (5, 6, 1.0) in got
 
 
+_BASE = "alpha beta gamma delta epsilon zeta eta theta"
+# (doc_id, text) rows with no-shingle docs, exact and near copies, a doc
+# split across rows, double spaces and repeated shingles
+MULTI_ROW_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "two words"),
+    (4, "two words"),
+    (5, _BASE),
+    (6, _BASE),
+    (7, _BASE.replace("theta", "iota")),
+    (8, "nothing here is shared with any other document"),
+    (9, "alpha beta gamma delta"),
+    (9, "epsilon zeta eta theta"),
+    (9, None),
+    (10, "alpha  beta gamma  delta epsilon"),
+    (11, "alpha  beta gamma  delta epsilon zeta"),
+    (12, "x y z x y z x y z"),
+    (13, "x y z x y z"),
+]
+
+
 def test_minhash_map_side_signature_equals_set_shuffle(spark):
     # the map-side signature (min over each row's min-hashes) is the one
     # the old shingle-set shuffle computed, including for a doc_id split
     # across rows, double spaces and repeated shingles, and the confirmed
     # pairs are the ones it returned; docs with no shingle have no row
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = spark.createDataFrame(
-        [
-            (1, None),
-            (2, ""),
-            (3, "two words"),
-            (4, "two words"),
-            (5, base),
-            (6, base),
-            (7, base.replace("theta", "iota")),
-            (8, "nothing here is shared with any other document"),
-            (9, "alpha beta gamma delta"),
-            (9, "epsilon zeta eta theta"),
-            (9, None),
-            (10, "alpha  beta gamma  delta epsilon"),
-            (11, "alpha  beta gamma  delta epsilon zeta"),
-            (12, "x y z x y z x y z"),
-            (13, "x y z x y z"),
-        ],
-        "doc_id long, text string",
-    )
+    docs = spark.createDataFrame(MULTI_ROW_DOCS, "doc_id long, text string")
     got = dedup_mod.dedup_minhash_lsh(docs, threshold=0.0)
     assert sorted((r["da"], r["db"], r["jaccard"]) for r in got.collect()) == [
         (5, 6, 1.0),
@@ -328,6 +341,63 @@ def test_minhash_map_side_signature_equals_set_shuffle(spark):
     new = dedup_mod.minhash_sets(docs).select("doc_id", *mh)
     assert {r["doc_id"]: tuple(r[c] for c in mh) for r in new.collect()} == want
     assert set(want) == {5, 6, 7, 8, 9, 10, 11, 12, 13}
+
+
+def test_minhash_shuffle_join_path_matches_broadcast(spark, tmp_path):
+    # above the broadcast threshold the texts reach the candidates by a
+    # shuffle join; its pairs and calibration equal the broadcast run's
+    # on a parquet copy of the multi-row fixture (which Spark broadcasts)
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(MULTI_ROW_DOCS, "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def run():
+        pairs = dedup_mod.dedup_minhash_lsh(docs, threshold=0.0)
+        cal = dedup_mod.minhash_calibration(docs)
+        plan = explain.run_plan(pairs).toString()
+        return plan, sorted(pairs.collect()), sorted(cal.collect())
+
+    plan, *broadcast = run()
+    assert "BroadcastExchange" in plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan, *shuffled = run()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in plan
+    assert shuffled == broadcast
+    assert len(broadcast[0]) == 8
+
+
+def test_minhash_calibration_est_equals_signature_estimate(spark):
+    # calibration recomputes both sides' min-hashes from the candidate's
+    # shingle sets; per pair, that estimate is the one the signature
+    # frame gives, so the readout equals one built from the signatures
+    docs = spark.createDataFrame(MULTI_ROW_DOCS, "doc_id long, text string")
+    mh = [f"mh_{k}" for k in range(NUM_MINHASHES)]
+    sigs = {
+        r["doc_id"]: [r[c] for c in mh]
+        for r in dedup_mod.minhash_sets(docs).collect()
+    }
+    buckets: dict[int, list] = {}
+    for r in dedup_mod.dedup_minhash_lsh(docs, threshold=0.0).collect():
+        a, b = sigs[r["da"]], sigs[r["db"]]
+        est = sum(x == y for x, y in zip(a, b)) / NUM_MINHASHES
+        bucket = min(int(abs(est - r["jaccard"]) * 10), 9)
+        buckets.setdefault(bucket, []).append((est, r["jaccard"]))
+    got = {r["err_bucket"]: r for r in dedup_mod.minhash_calibration(docs).collect()}
+    assert set(got) == set(buckets)
+    for bucket, pairs in buckets.items():
+        row = got[bucket]
+        assert row["n_pairs"] == len(pairs)
+        assert row["mean_est"] == pytest.approx(
+            sum(e for e, _ in pairs) / len(pairs), abs=1e-6
+        )
+        assert row["mean_exact"] == pytest.approx(
+            sum(j for _, j in pairs) / len(pairs), abs=1e-6
+        )
 
 
 def test_minhash_banding_shrinks_candidates(spark):
