@@ -82,9 +82,9 @@ class Graph:
             raise InvalidGraphError(f"edges must have 'src' and 'dst' columns, got {ecols}")
         self._vertices = vertices
         self._edges = edges
-        #: edges are already hash-partitioned by ``src`` AND cached — the
-        #: 100 TB posture is an edge table bucketed by src, so iterative
-        #: consumers (pregel, LPA) must not re-shuffle or re-cache it.
+        #: edges are already cached, hash-partitioned by an endpoint (the
+        #: builders' posture), so the mode-vote loop (LPA) must not
+        #: re-shuffle or re-cache them.
         self.src_partitioned = src_partitioned
         #: construction-time guarantee that no (src, dst) edge row is
         #: duplicated (e.g. the edge table is a groupBy output). Lets
@@ -108,7 +108,7 @@ class Graph:
             self.distinct_edges = True
         # Memoized scalar vertex count, held in a one-slot list so
         # vertex-preserving derivations (reverse, edge maps/joins,
-        # partition_by_src, the symmetrized view) SHARE the memo with
+        # the symmetrized view) SHARE the memo with
         # their parent: whichever graph counts first, the whole family
         # is filled — one count job per distinct vertex set per session.
         self._n_cell: list[int | None] = [None]
@@ -642,8 +642,8 @@ class Graph:
         ``vertices`` overrides the vertex frame joined in (used by the
         Pregel loop to pass the current state without rebuilding a Graph).
         ``agg=None`` returns the raw message rows ``(id, __msg)``
-        ungrouped, one per sent message: the Pregel loop folds them into
-        its own grouping with the vertex state.
+        ungrouped, one per sent message: the Pregel loop aggregates them
+        itself.
 
         ``msg_to_dst_reads`` / ``msg_to_src_reads`` declare which
         endpoint states (``"src"``/``"dst"``) the message expression
@@ -891,28 +891,6 @@ class Graph:
         from .operators.pregel import pregel as _pregel
 
         return _pregel(self, **kwargs)
-
-    # ------------------------------------------------------------------
-    # physical-layout helpers (§4.2)
-    # ------------------------------------------------------------------
-
-    def partition_by_src(self) -> "Graph":
-        """Pre-partition edges by src and persist — reused across Pregel
-        supersteps, so no superstep re-derives the edge table.
-
-        The planner does not see the src partitioning: with
-        ``canChangeCachedPlanOutputPartitioning=true`` (``plans.session``)
-        the cached frame reports ``UnknownPartitioning``, so a join on
-        src still broadcasts or shuffles a side (see ``operators.pregel``).
-        """
-        return self._count_preserved(
-            Graph(
-                self._vertices,
-                self._edges.repartition("src").persist(),
-                src_partitioned=True,
-                distinct_edges=self.distinct_edges,
-            )
-        )
 
 
 class GraphAlgorithm:

@@ -39,9 +39,8 @@ def connected_components(
     persisted cs_und/uu builder caches) — the loop then runs on it
     as-is with ZERO per-query edge materialization, the best posture at
     every scale. Otherwise the symmetrized table goes to ``pregel``,
-    which hash(src)-partitions and persists it for the loop and
-    releases it on return (one 2|E| shuffle up front replaces
-    per-superstep doubled joins). Alternating same-session
+    which lays it out by dst for the loop and frees it on return (one
+    2|E| shuffle up front replaces per-superstep doubled joins). Alternating same-session
     floors at sf0.1 measured the shapes within noise locally (3.15 /
     3.35 / 3.38s two-sided / sym-once / und-cache on the cs graph) —
     the win is the per-superstep join/exchange count at scale, see

@@ -39,7 +39,7 @@ def _mode_vote_loop(
     # Loop-invariant edges: project, pre-partition by the join key (src)
     # and persist ONCE — every superstep's message join then reuses the
     # cached partitioning and only the small label frame shuffles. A
-    # graph already src-partitioned + cached (builder posture) is used
+    # graph whose edges the builders cached (``src_partitioned``) is used
     # as-is; its shared cache must survive this call.
     owns_edge_cache = not graph.src_partitioned
     edges = graph.edges.select("src", "dst")

@@ -24,9 +24,8 @@ def page_rank(
     """Returns (id, rank). Scale: the out-degree normalization lives in
     the VERTEX STATE (a (rank, od) struct, od loop-invariant) rather than
     in a normalized copy of the edge table — the input edge table is used
-    untouched, so a builder's shared src-partitioned cache serves every
-    superstep with no per-query edge materialization, and per superstep
-    only the (small) state frame and the message agg shuffle.
+    untouched: ``pregel`` lays it out by dst once per call, and a
+    superstep broadcasts the (small) state and shuffles nothing.
     """
     n = graph.vertex_count()  # memoized on the Graph — one count job ever
     if n == 0:
@@ -39,7 +38,7 @@ def page_rank(
         F.count("*").alias("outdeg")
     )
     v0 = graph.vertices.select("id").join(outdeg, "id", "left")
-    g = Graph(v0, graph.edges, src_partitioned=graph.src_partitioned)
+    g = Graph(v0, graph.edges)
 
     res = pregel(
         g,
@@ -121,9 +120,7 @@ def weighted_page_rank(
     ``rank * w(e) / Σ_out w`` along its out-edges (the uniform variant is
     the special case w≡1). Same scale posture as ``page_rank``: the
     weight normalizer is folded into the VERTEX state (a (rank, wsum)
-    struct), the edge table is consumed untouched so a builder's shared
-    src-partitioned cache serves every superstep; messages are
-    partial-aggregated before the shuffle.
+    struct), the edge table is consumed untouched.
     """
     n = graph.vertex_count()
     if n == 0:
@@ -135,7 +132,7 @@ def weighted_page_rank(
         F.sum(F.col("value").cast("double")).alias("wsum")
     )
     v0 = graph.vertices.select("id").join(wsum, "id", "left")
-    g = Graph(v0, graph.edges, src_partitioned=graph.src_partitioned)
+    g = Graph(v0, graph.edges)
 
     res = pregel(
         g,
@@ -212,7 +209,7 @@ def personalized_page_rank(
     seeds, 0 elsewhere; update = beta·Σmsgs + (1-beta)/|S|·[v ∈ S].
     Same scale posture as ``page_rank``: out-degree and the seed flag
     live in the loop-invariant vertex state, the edge table is consumed
-    untouched from the builder's shared src-partitioned cache.
+    untouched.
     """
     if not seeds:
         raise ValueError(
@@ -226,7 +223,7 @@ def personalized_page_rank(
         F.count("*").alias("outdeg")
     )
     v0 = graph.vertices.select("id").join(outdeg, "id", "left")
-    g = Graph(v0, graph.edges, src_partitioned=graph.src_partitioned)
+    g = Graph(v0, graph.edges)
     is_seed = F.col("id").isin(*seeds)
 
     res = pregel(

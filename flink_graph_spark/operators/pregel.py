@@ -4,48 +4,79 @@ lacks natively (SURVEY.md §4.3).
 Reference: Graph.runVertexCentricIteration (Graph.java ~L895-930)
 delegating to flink-spargel's VertexCentricIteration (a Flink delta
 iteration of two coGroups). Spark has no in-dataflow iteration, so the
-superstep loop lives in the Python driver. Each superstep is the
-reference's coGroup of messages with vertex state, written as ONE
-grouping: the frontier⋈edges join emits raw message rows, which are
-unioned with the state rows and grouped by id once, carrying the state
-and aggregating the inbox in the same aggregate. A superstep thus
-costs one exchange, not a message exchange plus an update join.
+superstep loop lives in the Python driver.
+
+A superstep is a pull over a co-partitioned layout, as GraphX
+(OSDI'14) co-partitions its vertex and edge views: the edges are
+hash-partitioned by the vertex their messages go to (``dst`` for
+``msg_to_dst``, ``src`` for ``msg_to_src``) and the state by ``id``,
+into the same n partitions, and the planner sees both layouts
+(``plans.layout``). A superstep
+
+1. broadcasts the frontier (``delta``) or the state;
+2. joins it to the edges where they are stored;
+3. aggregates the messages by owner: they sit in their owner's
+   partition already, so the grouping needs no exchange;
+4. left-joins the inbox to the state with a ``shuffle_hash`` hint: the
+   two sides are co-partitioned, so again no exchange.
+
+It runs the broadcast job and the checkpoint job and shuffles nothing.
+sf0.1, ``local[4]`` (``tools/job_census.py``): ``cc_cs`` 16 → 11 jobs
+and 3,186 KB → 0 of shuffle, ``pagerank_cs`` 33 → 26 jobs for 10
+supersteps, against the earlier fold of messages and state rows into one
+grouping exchange per superstep.
 
 Scale design:
-* Edges are persisted once (caller may pre-partition by src via
-  ``Graph.partition_by_src``) so the loop-invariant side is never
-  rescanned from parquet. The planner does not see that partitioning
-  (see the comment above the ``partition_by_src`` call in ``pregel``),
-  so each superstep's message join still broadcasts or shuffles one of
-  its sides.
-* The superstep loop is ``operators.iterate.iterate``, which owns the
-  checkpoint, its release and the convergence count. Every superstep
+* Layout. A graph laid out already (the ``cs_und`` builder: edges by
+  dst, vertices by id, both counted) is used as it is. Otherwise each
+  call lays out the edges and the initial state once, as checkpoints
+  that declare their layout, freed at return by ``scratch_scope``: one
+  shuffle of the edges per message direction and one of the state, the
+  one-time cost of the call (``pagerank_cs``: 2.3 MB of shuffle, the
+  edge table by dst). n comes from ``plans.layout.layout_partitions``
+  over the measured bytes of the edges.
+* Broadcast. The state side is hinted only when its size is at most
+  ``autoBroadcastJoinThreshold``; each checkpoint leaf reports its
+  stored size, so the hint follows the state, not a join estimate.
+  Above it the planner plans the join with its own exchanges, AQE
+  coalesces them, the checkpoint declares no layout, and every later
+  superstep shuffles: correct, slower. A pull through routing tables
+  (GraphX's) for states that large is future work.
+* The loop is ``operators.iterate.iterate``, which owns the checkpoint,
+  its layout, its release and the convergence count. Every superstep
   ends in an eager checkpoint (cadence 1 in the kernel's table): the
-  next superstep reads the state twice (the message join and the
-  grouping's state rows) with different column pruning, so a lazy
-  chain of k supersteps would recompute the oldest one ~2^k times.
-* Convergence (optional) is the kernel's ``changed`` count, an
-  observed metric on the checkpoint job, so a superstep is the
-  frontier broadcast, the grouping's map stage and the checkpoint job:
-  no separate count job, never a collect of the state.
+  next superstep reads the state twice (the broadcast side and the
+  update join), so a lazy chain of k supersteps would recompute the
+  oldest one ~2^k times.
+* Convergence (optional) is the kernel's ``changed`` count, an observed
+  metric on the checkpoint job: no separate count job, never a collect
+  of the state.
 * No per-row Python: message/update expressions are Spark Columns, so
   every superstep stays inside whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..graph import Graph
+from ..plans.checkpoints import scratch_scope
+from ..plans.layout import (
+    checkpoint,
+    lay_out,
+    layout_partitions,
+    measured_bytes,
+    partitions_by,
+    stored_bytes,
+)
 from .iterate import iterate
 
 
-@dataclass
-class PregelResult:
+class PregelResult(NamedTuple):
     vertices: DataFrame  # (id, <state_col>)
     iterations: int
     converged: bool
@@ -54,32 +85,38 @@ class PregelResult:
     checkpoint: DataFrame
 
 
-def _carry_state(state_col: str, dtype: T.DataType) -> tuple[list[Column], Column]:
-    """The aggregates carrying each id's one state row through the
-    superstep grouping (every other row of the id is a message with a
-    NULL state), and the Column rebuilding the state from them.
+def _owner_layout(
+    graph: Graph, owners: list[str], v0: DataFrame
+) -> tuple[dict[str, DataFrame], DataFrame]:
+    """The edges hash-partitioned by each message owner and the initial
+    state by ``id``, all into one partition count n the planner sees.
 
-    A struct state (PageRank's (rank, od), SCC's (f, b)) is carried
-    field by field, its own NULL riding as bit 4 of the state row's
-    ``__tag``: an aggregation buffer holding a whole struct is not
-    fixed-width, which turns the grouping, message rows included, from
-    a hash into a sort aggregate (pagerank_cs at sf0.1 on ``local[4]``:
-    ~3x the executor time). Any other state is carried whole.
-    """
-    if not isinstance(dtype, T.StructType):
-        return [F.any_value(state_col, ignoreNulls=True).alias(state_col)], F.col(state_col)
-    parts = [f"__carry{i}" for i in range(len(dtype.fields))]
-    carry = [
-        F.any_value(F.col(state_col).getField(f.name), ignoreNulls=True).alias(p)
-        for f, p in zip(dtype.fields, parts)
-    ]
-    rebuilt = F.when(
-        F.col("__tag").bitwiseAND(4) == 0,
-        F.struct(*[F.col(p).alias(f.name) for f, p in zip(dtype.fields, parts)]),
-    )
-    return carry, rebuilt
+    A layout the graph already has is used as it is: its n wins. The
+    rest are laid out here, once per call, as checkpoints declaring
+    their layout (``plans.layout``): the edges lazily (their exchange's
+    map stage runs now, their blocks are written by superstep 1) and
+    the state eagerly, so superstep 1 sees its stored size, not a join
+    estimate. Without a layout, n comes from the measured bytes of the
+    edges: their plan size when their leaves are materialized, else the
+    stored size of a checkpoint of them."""
+    edges = graph.edges
+    found = {o: partitions_by(edges, o) for o in owners}
+    n = next((k for k in found.values() if k is not None), None)
+    if n is None:
+        nbytes = measured_bytes(edges)
+        if nbytes is None:
+            edges = edges.localCheckpoint(eager=True)
+            nbytes = stored_bytes(edges) or 0
+        n = layout_partitions(edges.sparkSession, nbytes)
+    laid = {
+        o: graph.edges if k == n else lay_out(edges, o, n) for o, k in found.items()
+    }
+    if partitions_by(v0, "id") == n:
+        return laid, checkpoint(v0, eager=False, key="id")
+    return laid, lay_out(v0, "id", n, eager=True)
 
 
+@scratch_scope
 def pregel(
     graph: Graph,
     initial: Column,
@@ -99,16 +136,16 @@ def pregel(
     ``msg_to_dst``   — Column over the triplet (``src``, ``dst``, edge
                        value cols, ``src_<state_col>``, ``dst_<state_col>``)
                        sent to the edge target; ``msg_to_src`` likewise to
-                       the source. Null messages are dropped by the agg.
+                       the source.
     ``agg``          — aggregate Column over ``__msg`` (must alias to
                        ``__agg``), e.g. ``F.min("__msg").alias("__agg")``.
-                       It must ignore NULL ``__msg``: the loop groups the
-                       state rows together with the messages, each state
-                       row carrying a NULL message.
+                       It must ignore NULL ``__msg``: a null message is
+                       no message.
     ``update``       — Column over (``id``, ``<state_col>``, ``__agg``)
                        → new state. ``__agg`` is null for every vertex
                        that received no non-null message (an empty
                        inbox, or one holding only null messages).
+                       Messages to ids outside the vertex frame drop.
 
     Without ``delta`` the loop runs ``max_iter`` fixed supersteps (the
     oracle-parity mode).
@@ -124,90 +161,69 @@ def pregel(
     with an empty workset). NOT valid for PageRank-style sums,
     which need every contribution every superstep.
     """
-    # Persist the loop-invariant edges (repartitioned by src) once, so
-    # no superstep re-derives them. The src partitioning is not visible
-    # to the planner: with canChangeCachedPlanOutputPartitioning=true
-    # (plans.session) a cached frame reports UnknownPartitioning, so the
-    # message join broadcasts or shuffles a side every superstep. On the
-    # benchmark's cs_und graph (19.2k edges, ~1.5 MB) every cc_cs
-    # superstep after the first broadcasts the whole edge table
-    # (BroadcastHashJoin BuildLeft over its TableCacheQueryStage): the
-    # checkpointed state's size estimate is the larger one. Graphs whose
-    # edge table is already src-partitioned + cached (the builder
-    # posture) are used as-is — their cache is shared across queries,
-    # so this loop must not evict it on exit.
-    owns_edge_cache = not graph.src_partitioned
-    if owns_edge_cache:
-        graph = graph.partition_by_src()
-    edges = graph.edges
-    # LAZY checkpoint of the initial state: the first superstep's first
-    # read writes its blocks, so a caller's uncached vertex frame
-    # (incremental SSSP's join, an SCC peel round) is computed once, not
-    # once per read in superstep 1. Over a frame with no exchange it
-    # costs no job of its own; over one with an exchange, AQE runs that
-    # exchange's stage as a job here, at call time
-    v0 = graph.vertices.select("id", initial.alias(state_col)).localCheckpoint(eager=False)
+    sides = [
+        (owner, msg, reads)
+        for owner, msg, reads in (
+            ("dst", msg_to_dst, msg_to_dst_reads),
+            ("src", msg_to_src, msg_to_src_reads),
+        )
+        if msg is not None
+    ]
+    if not sides:
+        raise ValueError("need msg_to_dst and/or msg_to_src")
+    edges, v0 = _owner_layout(
+        graph,
+        [owner for owner, _, _ in sides],
+        graph.vertices.select("id", initial.alias(state_col)),
+    )
+    views = {owner: Graph(v0, e) for owner, e in edges.items()}
+    conf = v0.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
     changed_col = ~F.col(state_col).eqNullSafe(F.col("__old"))
+    old = [F.col(state_col).alias("__old")] if delta else []
+
+    def ship(side: DataFrame) -> DataFrame:
+        # the state side goes to the edges, which stay where they are
+        # stored; above the threshold the planner plans the join
+        size = side._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return F.broadcast(side) if 0 <= size <= threshold else side
 
     def superstep(cur: DataFrame, it: int) -> DataFrame:
         v = cur.select("id", state_col)
         active = None
         if delta:
-            active = v if it == 1 else cur.filter(changed_col).select("id", state_col)
-        msgs = graph.aggregate_messages(
-            None,
-            msg_to_dst=msg_to_dst,
-            msg_to_src=msg_to_src,
-            vertices=v,
-            active=active,
-            msg_to_dst_reads=msg_to_dst_reads,
-            msg_to_src_reads=msg_to_src_reads,
+            active = ship(v if it == 1 else cur.filter(changed_col).select("id", state_col))
+        shipped = ship(v)
+        msgs = reduce(
+            DataFrame.unionByName,
+            [
+                views[owner].aggregate_messages(
+                    None,
+                    vertices=shipped,
+                    active=active,
+                    **{f"msg_to_{owner}": msg, f"msg_to_{owner}_reads": reads},
+                )
+                for owner, msg, reads in sides
+            ],
         )
-        # The update join folded into the message grouping: state rows
-        # tag 1 (plus 4 for a NULL state), non-null message rows tag 2,
-        # one groupBy("id") carrying the state (exactly one state row
-        # per id), aggregating the inbox (the state rows' NULL __msg is
-        # dropped by the agg, per the contract above) and OR-ing the
-        # tags. Bit 1 keeps real vertices only — messages to ids outside
-        # the vertex frame drop, as under the old left join — and bit 2
-        # marks a non-empty inbox, so an empty one still yields a NULL
-        # __agg even for aggregates that never return NULL themselves
-        # (struct(min, min)).
-        carry, state = _carry_state(state_col, v.schema[state_col].dataType)
-        folded = (
-            v.select(
-                "id",
-                state_col,
-                F.when(F.col(state_col).isNull(), 5).otherwise(1).alias("__tag"),
-            )
-            .unionByName(
-                # tag by projection, not a NULL filter: Catalyst would
-                # push isnotnull(<message expr>) below the join, onto
-                # vertices that send nothing (PageRank's rank / outdeg
-                # then divides by zero for sinks under ANSI mode)
-                msgs.select(
-                    "id", "__msg", F.when(F.col("__msg").isNotNull(), 2).alias("__tag")
-                ),
-                allowMissingColumns=True,
-            )
-            .groupBy("id")
-            .agg(*carry, agg, F.bit_or("__tag").alias("__tag"))
-            .where(F.col("__tag").bitwiseAND(1) == 1)
-            .select(
-                "id",
-                state.alias(state_col),
-                F.when(F.col("__tag").bitwiseAND(2) == 2, F.col("__agg")).alias("__agg"),
-            )
+        # each message sits in its owner's partition already, so the
+        # grouping and the co-partitioned update join need no exchange.
+        # count(__msg) keeps an empty or all-NULL inbox NULL even for
+        # aggregates that never return NULL themselves (struct(min, min))
+        inbox = (
+            msgs.groupBy("id")
+            .agg(agg, F.count("__msg").alias("__n"))
+            .select("id", F.when(F.col("__n") > 0, F.col("__agg")).alias("__agg"))
         )
-        return folded.select("id", update.alias(state_col), F.col(state_col).alias("__old"))
+        return v.join(inbox.hint("shuffle_hash"), "id", "left").select(
+            "id", update.alias(state_col), *old
+        )
 
     # with delta, the changed rows are also next superstep's frontier
     # (an empty one ends the loop)
     v, it, converged = iterate(
         v0, superstep, max_iter, changed=changed_col if delta else None
     )
-    if owns_edge_cache:
-        edges.unpersist()
     return PregelResult(
         vertices=v.select("id", state_col),
         iterations=it,

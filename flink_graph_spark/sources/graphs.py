@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.layout import layout_partitions, measured_bytes
 from .tables import load_table
 
 SUPPLIER_OFFSET = 1_000_000
@@ -106,27 +107,49 @@ def customer_supplier_graph(spark: SparkSession, sf_dir: str) -> Graph:
 
 @_memo_graph("cs_und")
 def customer_supplier_undirected_graph(spark: SparkSession, sf_dir: str) -> Graph:
-    """Symmetrized customer–supplier graph with the doubled edge table
-    itself src-partitioned and persisted — shared by every undirected
-    iterative consumer (SSSP, LPA) instead of each query re-deriving,
-    re-shuffling, and re-caching its own copy.
+    """Symmetrized customer–supplier graph, shared by every undirected
+    iterative consumer (CC, SSSP, LPA) instead of each query re-deriving,
+    re-shuffling and re-caching its own copy.
+
+    Laid out for ``pregel``'s pull: the edges hash-partitioned by
+    ``dst`` (the table is symmetric, so CC and SSSP message to ``dst``)
+    into an n sized from the measured cs cache
+    (``plans.layout.layout_partitions``), and the vertices, every ``dst``
+    of that table once, in the same partitions by ``id``. The edge cache
+    is counted before the vertex cache is planned: a persisted
+    ``repartition(n, key)`` shows its partitioning to the planner only
+    once materialized, and then the vertices derive from it without an
+    exchange. A superstep joins the broadcast state to the edges where
+    they are stored, and groups and updates by id without an exchange.
     """
     g = customer_supplier_graph(spark, sf_dir)
+    nbytes = measured_bytes(g.edges)
+    if nbytes is None:  # not loaded yet
+        g.edges.count()
+        nbytes = measured_bytes(g.edges)
     ue = (
         g.edges.unionByName(
             g.edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "value"
             )
         )
-        .repartition("src")
+        .repartition(layout_partitions(spark, 2 * nbytes), "dst")
         .persist()
     )
+    ue.count()
+    v = (
+        ue.select(F.col("dst").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("value"))
+        .persist()
+    )
+    v.count()
     # shares the directed graph's vertex-count memo (same vertex set):
     # pagerank-over-undirected issues no second count job
     return g._count_preserved(
         # distinct forward pairs ∪ their reverses over disjoint id spaces:
         # no duplicate rows in the symmetrized table
-        Graph(g.vertices, ue, src_partitioned=True, distinct_edges=True)
+        Graph(v, ue, src_partitioned=True, distinct_edges=True)
     )
 
 
@@ -135,12 +158,12 @@ def customer_supplier_bucketed_graph(spark: SparkSession, sf_dir: str) -> Graph:
     """Customer–supplier graph whose edge table is read back from a
     src-BUCKETED parquet table (the at-rest 100 TB posture,
     SCALING.md §7): bucket metadata flows from the catalog, so every
-    src-keyed consumer — degree aggs, each Pregel superstep's message
-    join — starts co-located straight off disk with ZERO Exchange on
-    the edge side, across sessions, which a transient ``repartition()``
-    cannot provide. Written once per (session, sf) by the memo; the
-    table is external at a scratch path so the gate never writes into a
-    cwd-relative warehouse dir.
+    src-keyed consumer — degree aggs, joins on src — starts co-located
+    straight off disk with ZERO Exchange on the edge side, across
+    sessions, which a transient ``repartition()`` cannot provide.
+    Written once per (session, sf) by the memo; the table is external at
+    a scratch path so the gate never writes into a cwd-relative
+    warehouse dir.
     """
     import re as _re
 
@@ -153,7 +176,7 @@ def customer_supplier_bucketed_graph(spark: SparkSession, sf_dir: str) -> Graph:
         g, table, buckets=32, path=f"/tmp/spark_graft_bucketed/{table}"
     )
     e = read_edges_bucketed(spark, table)
-    # src_partitioned=True: pregel must NOT re-shuffle/re-cache — the
+    # src_partitioned=True: LPA must NOT re-shuffle/re-cache — the
     # bucketed scan IS the partitioning; count memo shared (same set)
     return g._count_preserved(
         Graph(g.vertices, e, src_partitioned=True, distinct_edges=g.distinct_edges)

@@ -221,23 +221,81 @@ def test_graph_pregel_method(golden):
 
 
 def test_pregel_superstep_job_shape(spark, golden):
-    # A delta superstep is the frontier broadcast, the one exchange of
-    # the state+message grouping and the checkpoint job that also
-    # returns the changed count: ≤ 3 jobs, and none before superstep 1
+    # On a graph laid out for the pull (edges by dst, vertices by id,
+    # both counted, as the cs_und builder lays them out) a delta
+    # superstep is the frontier broadcast and the checkpoint job that
+    # also returns the changed count: <= 2 jobs, and none before
+    # superstep 1
     g = golden.get_undirected()
-    ue = g.edges.repartition("src").persist()
+    ue = g.edges.repartition(2, "dst").persist()
+    v = g.vertices.repartition(2, "id").persist()
     ue.count()
-    g = Graph(g.vertices, ue, src_partitioned=True)
+    v.count()
+    g = Graph(v, ue)
     try:
         for max_iter in (1, 2):
             with job_count(spark) as jobs:
                 comps = connected_components(
                     g, max_iter=max_iter, symmetrized_edges=True
                 )
-            assert 0 < jobs() <= 3 * max_iter, (max_iter, jobs())
+            assert 0 < jobs() <= 2 * max_iter, (max_iter, jobs())
         assert rows_as_dict(comps, "id", "comp") == {i: 1 for i in range(1, 6)}
     finally:
         ue.unpersist()
+        v.unpersist()
+
+
+def _superstep_plans(monkeypatch, run) -> list:
+    """The final physical plans of the loop checkpoints ``run()`` writes."""
+    import flink_graph_spark.operators.iterate as imod
+    from flink_graph_spark.plans.layout import final_plan
+
+    plans = []
+    written = imod.checkpoint
+
+    def record(df, *a, **kw):
+        out = written(df, *a, **kw)
+        plans.append(final_plan(df))
+        return out
+
+    monkeypatch.setattr(imod, "checkpoint", record)
+    run()
+    return plans
+
+
+def _nodes(plan) -> list:
+    """The physical operators of ``plan``, inside its result stage but
+    not inside any other query stage (a cache scan's build plan, a
+    broadcast's input)."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        out.append(node)
+        if node.getClass().getSimpleName() == "ResultQueryStageExec":
+            todo.append(node.plan())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def test_cc_cs_superstep_moves_no_row_but_the_broadcast(spark, monkeypatch):
+    # the cs_und layout (edges by dst, vertices by id) makes a cc_cs
+    # superstep the state broadcast plus exchange-free joins and groups
+    from flink_graph_spark.sources.graphs import (
+        customer_supplier_undirected_graph,
+    )
+
+    und = customer_supplier_undirected_graph(spark, SF_DIR)
+    plans = _superstep_plans(
+        monkeypatch,
+        lambda: connected_components(und, max_iter=3, symmetrized_edges=True).collect(),
+    )
+    assert plans
+    for plan in plans:
+        kinds = [n.getClass().getSimpleName() for n in _nodes(plan)]
+        assert any(k.startswith("Broadcast") for k in kinds), kinds
+        moved = [k for k in kinds if "Shuffle" in k and "Join" not in k]
+        assert not moved, plan.toString()
 
 
 def _min_label_pregel(graph, **kw):
@@ -312,20 +370,78 @@ def test_pregel_struct_state_keeps_null_struct_and_null_fields(spark):
     assert (got[2]["a"], got[2]["b"]) == (2, None)
 
 
-def test_pregel_struct_state_carry_is_a_hash_aggregate(spark):
-    # the reason the struct is carried field by field: a whole-struct
-    # buffer would turn the superstep grouping into a sort aggregate
-    from flink_graph_spark.operators.pregel import _carry_state
-
-    rows = spark.createDataFrame(
-        [(1, (0.5, 2), 1), (1, None, 2)],
-        "id long, state struct<rank: double, od: long>, __tag int",
+def test_pregel_without_a_visible_layout_matches_the_pull(spark, monkeypatch):
+    # CC and SSSP give the laid-out run's results on a copy of cs_und
+    # whose caches are not materialized (the planner sees no layout, so
+    # pregel lays one out per call), and with no broadcast (the planner
+    # shuffles, AQE coalesces the state, and its checkpoints declare
+    # nothing)
+    import flink_graph_spark.operators.iterate as imod
+    from flink_graph_spark.plans.layout import partitions_by
+    from flink_graph_spark.sources.graphs import (
+        customer_supplier_undirected_graph,
     )
-    carry, state = _carry_state("state", rows.schema["state"].dataType)
-    df = rows.groupBy("id").agg(*carry, F.bit_or("__tag").alias("__tag"))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
-    assert df.select(state.alias("state")).first()["state"] == (0.5, 2)
+
+    und = customer_supplier_undirected_graph(spark, SF_DIR)
+
+    def both(g):
+        return (
+            sorted(connected_components(g, 8, symmetrized_edges=True).collect()),
+            sorted(shortest_paths(g, 1, 6).collect()),
+        )
+
+    want = both(und)
+    e = und.edges.select("src", "dst", "value").repartition(3, "dst").persist()
+    v = und.vertices.repartition(3, "id").persist()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    try:
+        assert partitions_by(e, "dst") is None and partitions_by(v, "id") is None
+        assert both(Graph(v, e)) == want
+        e.count()
+        v.count()
+        assert partitions_by(e, "dst") == 3 and partitions_by(v, "id") == 3
+        declared = []
+        written = imod.checkpoint
+
+        def record(df, *a, **kw):
+            out = written(df, *a, **kw)
+            declared.append(
+                out._jdf.queryExecution().analyzed().outputPartitioning().toString()
+            )
+            return out
+
+        monkeypatch.setattr(imod, "checkpoint", record)
+        spark.conf.set(key, "-1")
+        assert both(Graph(v, e)) == want
+        assert declared and set(declared) == {"UnknownPartitioning(0)"}, declared
+    finally:
+        spark.conf.set(key, threshold)
+        e.unpersist()
+        v.unpersist()
+
+
+def test_pagerank_superstep_aggregates_messages_only(spark, golden, monkeypatch):
+    # the (rank, od) struct state rides the update join; the superstep's
+    # aggregate groups the messages alone, as a hash aggregate (a struct
+    # in an aggregation buffer would make it a sort or object aggregate)
+    plans = _superstep_plans(
+        monkeypatch, lambda: page_rank(golden, max_iter=2).collect()
+    )
+    assert len(plans) == 2
+    for plan in plans:
+        nodes = _nodes(plan)
+        kinds = {n.getClass().getSimpleName() for n in nodes}
+        assert "HashAggregateExec" in kinds, kinds
+        assert not kinds & {"SortAggregateExec", "ObjectHashAggregateExec"}, kinds
+        for node in nodes:
+            if node.getClass().getSimpleName() == "HashAggregateExec":
+                aggs = node.aggregateExpressions()
+                for i in range(aggs.size()):
+                    assert "__msg" in aggs.apply(i).toString(), node.toString()
+        joins = [n for n in nodes if n.getClass().getSimpleName() == "ShuffledHashJoinExec"]
+        assert [j.joinType().toString() for j in joins] == ["LeftOuter"], kinds
+        assert "st" in joins[0].left().output().toString()
 
 
 @pytest.mark.parametrize("delta", [True])

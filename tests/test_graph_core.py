@@ -342,8 +342,11 @@ def test_difference_removes_vertices_and_incident_edges(spark, golden):
 def test_pregel_preserves_shared_edge_cache(spark, golden):
     from flink_graph_spark.operators.pregel import pregel
 
-    g = golden.partition_by_src()
-    assert g.src_partitioned
+    g = Graph(
+        golden.vertices,
+        golden.edges.repartition("src").persist(),
+        src_partitioned=True,
+    )
     res = pregel(
         g,
         initial=F.col("id").cast("long"),
@@ -362,7 +365,10 @@ def test_pregel_preserves_shared_edge_cache(spark, golden):
 def test_label_propagation_preserves_shared_edge_cache(spark, golden):
     from flink_graph_spark.library.label_propagation import label_propagation
 
-    g = golden.get_undirected().partition_by_src()
+    und = golden.get_undirected()
+    g = Graph(
+        und.vertices, und.edges.repartition("src").persist(), src_partitioned=True
+    )
     label_propagation(g, max_iter=2).count()
     assert g.edges.storageLevel.useMemory
     g.edges.unpersist()

@@ -227,6 +227,53 @@ def test_bucketed_graph_feeds_superstep_join_without_edge_exchange(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def _declared(df) -> str:
+    """The output partitioning the leaf under ``df`` declares."""
+    return df._jdf.queryExecution().analyzed().outputPartitioning().toString()
+
+
+def test_checkpoint_declares_only_the_layout_its_final_plan_reports(spark):
+    from pyspark.sql import functions as F
+
+    from flink_graph_spark.plans.layout import (
+        checkpoint,
+        declare_layout,
+        final_plan,
+        partitions_by,
+    )
+
+    df = spark.range(3000).select("id", (F.col("id") % 7).alias("x"))
+    laid = checkpoint(df.repartition(3, "id"))
+    assert re.fullmatch(r"hashpartitioning\(id#\d+L, 3\)", _declared(laid))
+    assert partitions_by(laid, "id") == 3 and partitions_by(laid, "x") is None
+    # a self-join of the laid-out leaf needs no exchange
+    j = laid.join(laid.where("x > 2").select("id").hint("shuffle_hash"), "id")
+    assert "Exchange" not in j._jdf.queryExecution().executedPlan().toString()
+    # one partition, declared on the named key
+    single = checkpoint(df.repartition(1, "x"), key="x")
+    assert re.fullmatch(r"hashpartitioning\(x#\d+L, 1\)", _declared(single))
+    # AQE coalesced this exchange: n coalesced ranges are not hash mod n
+    coalesced = df.repartition("id")
+    ck = checkpoint(coalesced)
+    assert "coalesced" in final_plan(coalesced).outputPartitioning().toString()
+    assert _declared(ck) == "UnknownPartitioning(0)"
+    # a final plan of 4 partitions never labels a 3-partition checkpoint
+    other = df.repartition(4, "id")
+    other.localCheckpoint(eager=True)
+    three = df.repartition(3, "id").localCheckpoint(eager=True)
+    assert _declared(declare_layout(three, other)) == "UnknownPartitioning(0)"
+
+
+def test_layout_partitions_reads_the_session_confs(spark):
+    from flink_graph_spark.plans.layout import layout_partitions
+
+    cores = spark.sparkContext.defaultParallelism
+    assert layout_partitions(spark, 0) == 1
+    assert layout_partitions(spark, 461_136) == 1  # under 2 x 256 KiB
+    assert layout_partitions(spark, 4 << 20) == min(cores, 16)
+    assert layout_partitions(spark, 1 << 30) == 16  # 64 MB advisory size
+
+
 def test_ivf_assignment_is_map_side_no_corpus_window(spark, queries):
     # Nearest-centroid assignment must be a per-row fold over the
     # broadcast centroid bank — never the old corpus×nlist cross join
@@ -434,7 +481,8 @@ def test_iterate_kernel_contract(spark):
 
 def test_cadence_table_names_every_checkpointing_loop():
     """Every function in the package whose for/while loop body calls
-    ``.localCheckpoint`` is either one of the two kernels (``iterate``,
+    ``.localCheckpoint`` (or ``plans.layout.checkpoint``, which wraps
+    it) is either one of the two kernels (``iterate``,
     ``waves``) or a row of the cadence table, so a new hand-rolled loop
     cannot go unlisted. Nested functions are scanned on their own: a
     ``step`` closure handed to the kernel is not a loop of its enclosing
@@ -465,8 +513,11 @@ def test_cadence_table_names_every_checkpointing_loop():
     def checkpoints_in_loop(fn) -> bool:
         return any(
             isinstance(c, ast.Call)
-            and isinstance(c.func, ast.Attribute)
-            and c.func.attr == "localCheckpoint"
+            and (
+                (isinstance(c.func, ast.Attribute) and c.func.attr == "localCheckpoint")
+                # plans.layout.checkpoint: a localCheckpoint that declares its layout
+                or (isinstance(c.func, ast.Name) and c.func.id == "checkpoint")
+            )
             for loop in own_nodes(fn)
             if isinstance(loop, (ast.For, ast.While))
             for c in own_nodes(loop)
