@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
 from ..plans.checkpoints import scratch_scope
+from ..rounding import ROUND_TO
 
 BPE_ROUNDS = 4
 
@@ -120,11 +121,11 @@ def _train(docs: DataFrame, rounds: int) -> tuple[DataFrame, list[DataFrame]]:
 
 
 @scratch_scope
-def bpe_merges(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
-    """(round, left, right, merged, pair_count) — the first ``rounds``
+def bpe_merges(docs: DataFrame) -> DataFrame:
+    """(round, left, right, merged, pair_count) — the first ``BPE_ROUNDS``
     learned BPE merges over the corpus word-frequency table. Keeps
     every round's ``best`` checkpoint: the result reads them."""
-    state, bests = _train(docs, rounds - 1)
+    state, bests = _train(docs, BPE_ROUNDS - 1)
     # the last learned merge is never APPLIED for the merge table
     # readout: its round stops at the best pair (the oracle's unrolled
     # chain stops at the same point), and the state it read is dead
@@ -206,16 +207,16 @@ def _bpe_train_ctes(rounds: int, final_state: bool = True) -> list[str]:
     return ctes
 
 
-def bpe_merges_sql(rounds: int = BPE_ROUNDS) -> str:
+def bpe_merges_sql() -> str:
     """Self-contained DuckDB twin — the same training loop, unrolled."""
     union = "\nUNION ALL\n".join(
         f"""SELECT CAST({r} AS BIGINT) AS round, bsym AS "left",
        bnxt AS "right", bsym || bnxt AS merged,
        CAST(pcnt AS BIGINT) AS pair_count
 FROM bpe_b{r}"""
-        for r in range(1, rounds + 1)
+        for r in range(1, BPE_ROUNDS + 1)
     )
-    joined = ",\n".join(_bpe_train_ctes(rounds, final_state=False))
+    joined = ",\n".join(_bpe_train_ctes(BPE_ROUNDS, final_state=False))
     return f"WITH {joined}\n{union}"
 
 
@@ -227,9 +228,7 @@ def _final_state(docs: DataFrame, rounds: int) -> DataFrame:
     return _train(docs, rounds)[0]
 
 
-def bpe_compression(
-    docs: DataFrame, rounds: int = BPE_ROUNDS, round_to: int = 6
-) -> DataFrame:
+def bpe_compression(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
     """(source, n_chars, n_pieces, compression) — corpus pieces under
     the trained ``rounds``-merge vocabulary, per source. The tokenizer
     fit-then-measure loop as one query: the piece length of every word
@@ -248,26 +247,24 @@ def bpe_compression(
         .agg(
             F.sum("chars").cast("long").alias("n_chars"),
             F.sum("pieces").cast("long").alias("n_pieces"),
-            F.round(F.sum("chars") / F.sum("pieces"), round_to).alias(
+            F.round(F.sum("chars") / F.sum("pieces"), ROUND_TO).alias(
                 "compression"
             ),
         )
     )
 
 
-def bpe_compression_sql(
-    rounds: int = BPE_ROUNDS, round_to: int = 6
-) -> str:
+def bpe_compression_sql() -> str:
     """DuckDB twin: the training chain + per-source weighted readout —
     composed structurally from the shared ``_bpe_train_ctes`` chain."""
-    ctes = ",\n".join(_bpe_train_ctes(rounds))
+    ctes = ",\n".join(_bpe_train_ctes(BPE_ROUNDS))
     return f"""WITH {ctes},
 bpe_wlen AS MATERIALIZED (
     SELECT w, COUNT(*) AS pieces, MAX(length(w)) AS chars
-    FROM bpe_s{rounds} GROUP BY 1)
+    FROM bpe_s{BPE_ROUNDS} GROUP BY 1)
 SELECT source, CAST(SUM(chars) AS BIGINT) AS n_chars,
        CAST(SUM(pieces) AS BIGINT) AS n_pieces,
-       ROUND(SUM(chars) * 1.0 / SUM(pieces), {round_to}) AS compression
+       ROUND(SUM(chars) * 1.0 / SUM(pieces), {ROUND_TO}) AS compression
 FROM (
     SELECT source, unnest(string_split(text, ' ')) AS w FROM documents)
 JOIN bpe_wlen USING (w)

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..rounding import ROUND_TO
 from .hashing import (
     MINHASH_A,
     MINHASH_B,
@@ -254,7 +255,7 @@ ORDER BY containment DESC, da ASC, db ASC LIMIT 50"""
 
 # ---- cross-source shingle overlap ------------------------------------
 
-def cross_source_overlap(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def cross_source_overlap(docs: DataFrame) -> DataFrame:
     """(source_a, source_b, shared, jaccard) — distinct-shingle overlap
     between every source pair: the corpus-provenance health check
     (mirrors of each other? shared boilerplate? leaked splits?).
@@ -294,7 +295,7 @@ def cross_source_overlap(docs: DataFrame, round_to: int = 6) -> DataFrame:
             F.round(
                 F.col("shared").cast("double")
                 / (F.col("sza") + F.col("szb") - F.col("shared")),
-                round_to,
+                ROUND_TO,
             ).alias("jaccard"),
         )
     )
@@ -441,11 +442,11 @@ def _exact_jaccard(sa: Column, sb: Column) -> Column:
     return F.round(inter.cast("double") / (F.size(sa) + F.size(sb) - inter), 6)
 
 
+MINHASH_THRESHOLD = 0.05
+
+
 def dedup_minhash_lsh(
-    docs: DataFrame,
-    threshold: float = 0.05,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
+    docs: DataFrame, threshold: float = MINHASH_THRESHOLD
 ) -> DataFrame:
     """LSH candidates (shared (band, r-minhash-array) bucket) confirmed
     with exact Jaccard ≥ threshold → (da, db, jaccard).
@@ -472,17 +473,17 @@ def dedup_minhash_lsh(
     """
     sa, sb = _pair_sets()
     return (
-        _candidate_rows(docs, bands, rows)
+        _candidate_rows(docs, LSH_BANDS, LSH_ROWS)
         .groupBy("da", "db")
         .agg(_exact_jaccard(sa, sb).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
 
-def minhash_sql_parts(bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> str:
-    # the band count is DERIVED (k // rows over NUM_MINHASHES hashes) —
-    # an inconsistent bands value would silently be ignored, so pin it
-    assert bands * rows == NUM_MINHASHES, (bands, rows, NUM_MINHASHES)
+def minhash_sql_parts() -> str:
+    # the band count is DERIVED (k // LSH_ROWS over NUM_MINHASHES hashes) —
+    # an inconsistent LSH_BANDS would silently be ignored, so pin it
+    assert LSH_BANDS * LSH_ROWS == NUM_MINHASHES
     params = ", ".join(
         f"({k}, {MINHASH_A[k]}, {MINHASH_B[k]})" for k in range(NUM_MINHASHES)
     )
@@ -498,7 +499,7 @@ mh_sigs AS MATERIALIZED (
     GROUP BY 1, 2
 ),
 mh_band AS MATERIALIZED (
-    SELECT doc_id, CAST(k // {rows} AS INT) AS band, list(mh ORDER BY k) AS sig
+    SELECT doc_id, CAST(k // {LSH_ROWS} AS INT) AS band, list(mh ORDER BY k) AS sig
     FROM mh_sigs GROUP BY 1, 2
 ),
 mh_cand AS MATERIALIZED (
@@ -508,22 +509,19 @@ mh_cand AS MATERIALIZED (
 )"""
 
 
-DEDUP_MINHASH_SQL = """
+DEDUP_MINHASH_SQL = f"""
 SELECT c.da, c.db, j.jaccard
 FROM mh_cand c
 JOIN pair_jaccard j ON c.da = j.da AND c.db = j.db
-WHERE j.jaccard >= 0.05"""
+WHERE j.jaccard >= {MINHASH_THRESHOLD}"""
 
 
 # ---- near-dup clustering (pairs → components → representative) -------
 
-def dedup_clusters(
-    docs: DataFrame,
-    threshold: float = 0.05,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    max_iter: int = 4,
-) -> DataFrame:
+DEDUP_MAX_ITER = 4
+
+
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """(doc_id, cluster_id) for every doc in ≥1 near-dup pair: the full
     corpus-dedup pipeline shape — banded-LSH candidate pairs, exact
     Jaccard confirm, then connected components over the near-dup graph
@@ -533,9 +531,10 @@ def dedup_clusters(
     pipeline meet: the pair list feeds ``Graph.from_edges`` and the
     Spargel delta loop directly.
 
-    ``max_iter`` bounds propagation (exact for components of diameter ≤
-    max_iter; near-dup clusters are cliques or short chains). Docs with
-    no near-dup are absent (they keep themselves — no row needed).
+    ``DEDUP_MAX_ITER`` bounds propagation (exact for components of
+    diameter ≤ DEDUP_MAX_ITER; near-dup clusters are cliques or short
+    chains). Docs with no near-dup are absent (they keep themselves — no
+    row needed).
     """
     from ..graph import Graph
     from ..library.connected_components import connected_components
@@ -545,27 +544,25 @@ def dedup_clusters(
     # without this checkpoint the shingle-set shuffle and bucket join run
     # twice. The only caller that reuses the pairs, so the only one that
     # materializes them.
-    pairs = dedup_minhash_lsh(docs, threshold, bands, rows).localCheckpoint(
-        eager=True
-    )
+    pairs = dedup_minhash_lsh(docs).localCheckpoint(eager=True)
     edges = pairs.select(F.col("da").alias("src"), F.col("db").alias("dst"))
-    comps = connected_components(Graph.from_edges(edges), max_iter=max_iter)
+    comps = connected_components(Graph.from_edges(edges), max_iter=DEDUP_MAX_ITER)
     return comps.select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
 
-def dedup_clusters_sql(max_iter: int = 4) -> tuple[str, str]:
+def dedup_clusters_sql(max_iter: int = DEDUP_MAX_ITER) -> tuple[str, str]:
     """(CTE text, final SELECT); composes after doc_shingles +
     pair_jaccard + minhash parts."""
     from ..library.connected_components import oracle_ctes
 
-    pair_ctes = """
+    pair_ctes = f"""
 dd_pairs AS MATERIALIZED (
     SELECT c.da AS src, c.db AS dst
     FROM mh_cand c
     JOIN pair_jaccard j ON c.da = j.da AND c.db = j.db
-    WHERE j.jaccard >= 0.05
+    WHERE j.jaccard >= {MINHASH_THRESHOLD}
 ),
 dd_docs AS MATERIALIZED (
     SELECT DISTINCT id FROM (
@@ -655,16 +652,14 @@ FROM bitsums GROUP BY 1"""
 CONTAMINATION_HOLDOUT_MOD = 37  # doc_id % MOD == 0 → held-out "benchmark" doc
 
 
-def contamination_check(
-    docs: DataFrame, holdout_mod: int = CONTAMINATION_HOLDOUT_MOD
-) -> DataFrame:
+def contamination_check(docs: DataFrame) -> DataFrame:
     """(doc_id, shared_ngrams, contamination_score) for every TRAINING
     doc (those NOT in the held-out set): how many of its distinct word
     3-gram shingles also appear in any held-out doc, and that count as a
     fraction of its shingles.
 
     The held-out set models an eval benchmark: deterministically
-    ``doc_id % holdout_mod == 0`` here. Scale shape: the held-out
+    ``doc_id % CONTAMINATION_HOLDOUT_MOD == 0`` here. Scale shape: the held-out
     shingle vocabulary is DISTINCT-ed then joined — for a real benchmark
     suite it is tiny relative to the corpus, so Spark broadcasts it and
     the check is one map-side semi-join + hash agg over the training
@@ -672,7 +667,7 @@ def contamination_check(
     tokens) have no score, matching the oracle.
     """
     sh = doc_shingles(docs)
-    is_held = F.col("doc_id") % holdout_mod == 0
+    is_held = F.col("doc_id") % CONTAMINATION_HOLDOUT_MOD == 0
     held = sh.where(is_held).select("s").distinct()
     train = sh.where(~is_held)
     totals = train.groupBy("doc_id").agg(F.count("*").alias("total"))
@@ -720,13 +715,7 @@ FROM contam_tot t LEFT JOIN contam_hit h ON t.doc_id = h.doc_id
 ORDER BY t.doc_id"""
 
 
-def dedup_keep_set(
-    docs: DataFrame,
-    threshold: float = 0.05,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    max_iter: int = 4,
-) -> DataFrame:
+def dedup_keep_set(docs: DataFrame) -> DataFrame:
     """(doc_id, reason) — the corpus-dedup ENDGAME: every document that
     survives near-dup collapse, i.e. all docs minus non-representative
     cluster members. ``reason`` says why a doc survived ('unique' — in
@@ -736,7 +725,7 @@ def dedup_keep_set(
     One anti-join over the cluster assignment; at 100 TB the cluster
     frame is bounded by the number of near-dup docs, not the corpus.
     """
-    clusters = dedup_clusters(docs, threshold, bands, rows, max_iter)
+    clusters = dedup_clusters(docs)
     return (
         docs.select("doc_id")
         .join(clusters, "doc_id", "left")
@@ -802,11 +791,11 @@ def passage_windows(docs_with_dups: DataFrame, n: int = PASSAGE_N) -> DataFrame:
     ).select("doc_id", F.explode(F.expr(hashes)).alias("h"))
 
 
-def passage_dedup(docs_with_dups: DataFrame, n: int = PASSAGE_N) -> DataFrame:
+def passage_dedup(docs_with_dups: DataFrame) -> DataFrame:
     """Passages (by window hash) appearing in >= 2 distinct documents:
     (passage_hash, n_docs, n_occ, first_doc)."""
     return (
-        passage_windows(docs_with_dups, n)
+        passage_windows(docs_with_dups, PASSAGE_N)
         .groupBy(F.col("h").alias("passage_hash"))
         .agg(
             F.countDistinct("doc_id").cast("long").alias("n_docs"),
@@ -818,7 +807,7 @@ def passage_dedup(docs_with_dups: DataFrame, n: int = PASSAGE_N) -> DataFrame:
     )
 
 
-def passage_dedup_sql(n: int = PASSAGE_N) -> str:
+def passage_dedup_sql() -> str:
     """DuckDB twin (composes after DD_SQL; tokenizes dd inline)."""
     return f"""SELECT passage_hash,
        CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
@@ -826,10 +815,10 @@ def passage_dedup_sql(n: int = PASSAGE_N) -> str:
        CAST(MIN(doc_id) AS BIGINT) AS first_doc
 FROM (
     SELECT doc_id,
-           unnest(CASE WHEN len(t) >= {n} THEN
-               list_transform(generate_series(1, len(t) - {n - 1}),
+           unnest(CASE WHEN len(t) >= {PASSAGE_N} THEN
+               list_transform(generate_series(1, len(t) - {PASSAGE_N - 1}),
                    i -> CAST(concat('0x', substr(md5(array_to_string(
-                       list_slice(t, i, i + {n - 1}), ' ')), 1, 8)) AS BIGINT))
+                       list_slice(t, i, i + {PASSAGE_N - 1}), ' ')), 1, 8)) AS BIGINT))
                ELSE [] END) AS passage_hash
     FROM (SELECT doc_id, string_split(text, ' ') AS t FROM dd)
 )
@@ -856,20 +845,21 @@ ORDER BY n_docs DESC, n_occ DESC, passage_hash ASC"""
 WINNOW_K = 4   # k-gram (tokens) per hash
 WINNOW_W = 4   # window of consecutive k-gram hashes
 WINNOW_MAX_DF = 100
+WINNOW_TOP_K = 50
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fp) — distinct winnowed fingerprints per document."""
     gram_hashes = (
-        f"CASE WHEN size(t) >= {k} THEN "
-        f"transform(sequence(1, size(t) - {k - 1}), "
-        f"i -> CAST(conv(substring(md5(concat_ws(' ', slice(t, i, {k}))),"
+        f"CASE WHEN size(t) >= {WINNOW_K} THEN "
+        f"transform(sequence(1, size(t) - {WINNOW_K - 1}), "
+        f"i -> CAST(conv(substring(md5(concat_ws(' ', slice(t, i, {WINNOW_K}))),"
         f" 1, 8), 16, 10) AS BIGINT)) ELSE array() END"
     )
     mins = (
-        f"CASE WHEN size(h) >= {w} THEN "
-        f"transform(sequence(1, size(h) - {w - 1}), "
-        f"j -> array_min(slice(h, j, {w}))) "
+        f"CASE WHEN size(h) >= {WINNOW_W} THEN "
+        f"transform(sequence(1, size(h) - {WINNOW_W - 1}), "
+        f"j -> array_min(slice(h, j, {WINNOW_W}))) "
         "WHEN size(h) > 0 THEN array(array_min(h)) ELSE array() END"
     )
     return (
@@ -880,23 +870,17 @@ def winnow_fingerprints(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W) -
     )
 
 
-def winnow_dup_pairs(
-    docs_with_dups: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    max_df: int = WINNOW_MAX_DF,
-    top_k: int = 50,
-) -> DataFrame:
+def winnow_dup_pairs(docs_with_dups: DataFrame) -> DataFrame:
     """Top document pairs by shared winnowed-fingerprint count
     (da < db): the MOSS-style candidate generator, df-capped."""
     # The fingerprint frame feeds three consumers (df count + both pair
     # sides); unpersisted that is three full corpus scans + three
     # winnowing passes. Persist for the duration of the call only —
     # result is materialized eagerly, then the scratch is released.
-    fps = winnow_fingerprints(docs_with_dups, k, w).persist()
+    fps = winnow_fingerprints(docs_with_dups).persist()
     try:
         dfreq = fps.groupBy("fp").agg(F.count("*").alias("df"))
-        keep = dfreq.filter(F.col("df") <= max_df).select("fp")
+        keep = dfreq.filter(F.col("df") <= WINNOW_MAX_DF).select("fp")
         capped = fps.join(keep, "fp", "left_semi")
         a = capped.select(F.col("doc_id").alias("da"), "fp")
         b = capped.select(F.col("doc_id").alias("db"), "fp")
@@ -906,33 +890,28 @@ def winnow_dup_pairs(
             .groupBy("da", "db")
             .agg(F.count("*").cast("long").alias("n_shared"))
             .orderBy(F.desc("n_shared"), "da", "db")
-            .limit(top_k)
+            .limit(WINNOW_TOP_K)
             .localCheckpoint(eager=True)
         )
     finally:
         fps.unpersist()
 
 
-def winnow_sql(
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    max_df: int = WINNOW_MAX_DF,
-    top_k: int = 50,
-) -> tuple[str, str]:
+def winnow_sql() -> tuple[str, str]:
     """(CTE text, final SELECT) — composes after DD_SQL."""
     ctes = f"""wn_fp AS MATERIALIZED (
     SELECT DISTINCT doc_id, fp FROM (
         SELECT doc_id,
-               unnest(CASE WHEN len(h) >= {w} THEN
-                   list_transform(generate_series(1, len(h) - {w - 1}),
-                       j -> list_min(list_slice(h, j, j + {w - 1})))
+               unnest(CASE WHEN len(h) >= {WINNOW_W} THEN
+                   list_transform(generate_series(1, len(h) - {WINNOW_W - 1}),
+                       j -> list_min(list_slice(h, j, j + {WINNOW_W - 1})))
                WHEN len(h) > 0 THEN [list_min(h)] ELSE [] END) AS fp
         FROM (
             SELECT doc_id,
-                   CASE WHEN len(t) >= {k} THEN
-                       list_transform(generate_series(1, len(t) - {k - 1}),
+                   CASE WHEN len(t) >= {WINNOW_K} THEN
+                       list_transform(generate_series(1, len(t) - {WINNOW_K - 1}),
                            i -> CAST(concat('0x', substr(md5(array_to_string(
-                               list_slice(t, i, i + {k - 1}), ' ')), 1, 8))
+                               list_slice(t, i, i + {WINNOW_K - 1}), ' ')), 1, 8))
                                AS BIGINT))
                    ELSE [] END AS h
             FROM (SELECT doc_id, string_split(text, ' ') AS t FROM dd)
@@ -941,7 +920,7 @@ def winnow_sql(
 ),
 wn_keep AS MATERIALIZED (
     SELECT fp FROM (SELECT fp, COUNT(*) AS df FROM wn_fp GROUP BY 1)
-    WHERE df <= {max_df}
+    WHERE df <= {WINNOW_MAX_DF}
 )"""
     final = f"""SELECT a.doc_id AS da, b.doc_id AS db,
        CAST(COUNT(*) AS BIGINT) AS n_shared
@@ -949,13 +928,13 @@ FROM (SELECT * FROM wn_fp WHERE fp IN (SELECT fp FROM wn_keep)) a
 JOIN (SELECT * FROM wn_fp WHERE fp IN (SELECT fp FROM wn_keep)) b
   ON a.fp = b.fp AND a.doc_id < b.doc_id
 GROUP BY 1, 2
-ORDER BY n_shared DESC, da, db LIMIT {top_k}"""
+ORDER BY n_shared DESC, da, db LIMIT {WINNOW_TOP_K}"""
     return ctes, final
 
 
 # ---- n-gram novelty (data-valuation screen) --------------------------
 
-def ngram_novelty(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def ngram_novelty(docs: DataFrame) -> DataFrame:
     """(doc_id, n_shingles, n_seen, novelty) — fraction of each doc's
     distinct shingles NOT already contributed by any earlier doc
     (doc_id order): the marginal-contribution / data-valuation screen —
@@ -975,7 +954,7 @@ def ngram_novelty(docs: DataFrame, round_to: int = 6) -> DataFrame:
         .agg(
             F.count("*").cast("long").alias("n_shingles"),
             seen.cast("long").alias("n_seen"),
-            F.round(F.lit(1.0) - seen / F.count("*"), round_to).alias(
+            F.round(F.lit(1.0) - seen / F.count("*"), ROUND_TO).alias(
                 "novelty"
             ),
         )
@@ -1002,11 +981,8 @@ SIMHASH_NEAR_BANDS = 4  # 15-bit bands over the 60-bit fingerprint
 SIMHASH_MAX_HAMMING = 3  # pigeonhole: ≤3 flipped bits ⇒ ≥1 clean band
 
 
-def simhash_near_dup(
-    docs_with_dups: DataFrame,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-) -> DataFrame:
-    """(da, db, hamming) — pairs within ``max_hamming`` SimHash bits,
+def simhash_near_dup(docs_with_dups: DataFrame) -> DataFrame:
+    """(da, db, hamming) — pairs within ``SIMHASH_MAX_HAMMING`` SimHash bits,
     via the Google crawl-dedup scheme (Manku, Jarmulin & Das Sarma
     2007): the 60-bit fingerprint splits into 4 15-bit bands; any pair
     within hamming ≤3 agrees EXACTLY on ≥1 band (pigeonhole), so
@@ -1058,13 +1034,11 @@ def simhash_near_dup(
                 F.col("fa").bitwiseXOR(F.col("fb"))
             ).cast("long").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
-def simhash_near_dup_sql(
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-) -> tuple[str, str]:
+def simhash_near_dup_sql() -> tuple[str, str]:
     """(CTEs, final SELECT) DuckDB twin over the dup-injected corpus
     (``dd`` from DD_SQL)."""
     band_w = SIMHASH_BITS // SIMHASH_NEAR_BANDS
@@ -1104,17 +1078,13 @@ sd_cand AS MATERIALIZED (
 )"""
     final = f"""SELECT da, db,
        CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
-FROM sd_cand WHERE bit_count(xor(fa, fb)) <= {max_hamming}"""
+FROM sd_cand WHERE bit_count(xor(fa, fb)) <= {SIMHASH_MAX_HAMMING}"""
     return ctes, final
 
 
 # ---- MinHash estimator calibration -----------------------------------
 
-def minhash_calibration(
-    docs: DataFrame,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-) -> DataFrame:
+def minhash_calibration(docs: DataFrame) -> DataFrame:
     """(err_bucket, n_pairs, mean_est, mean_exact) — |MinHash-estimated
     − exact| Jaccard error over the LSH candidate pairs, bucketed at
     0.1: the sketch-calibration readout (est = matching permutations /
@@ -1129,7 +1099,7 @@ def minhash_calibration(
     is the minimum of its parts, so they equal ``minhash_sets``'."""
     sa, sb = _pair_sets()
     sets = (
-        _candidate_rows(docs, bands, rows)
+        _candidate_rows(docs, LSH_BANDS, LSH_ROWS)
         .groupBy("da", "db")
         .agg(sa.alias("sa"), sb.alias("sb"))
         .select("sa", "sb", *[F.transform(c, h32).alias(f"h{c}") for c in ("sa", "sb")])

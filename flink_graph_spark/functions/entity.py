@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from ..rounding import ROUND_TO
 
 DIRTY_MOD = 40  # every 40th customer gets a perturbed clone
 DIRTY_OFFSET = 5_000_000
@@ -84,11 +85,7 @@ NEIGHBORHOOD_WINDOW = 16
 
 
 def entity_matches(
-    customers_dirty: DataFrame,
-    prefix_len: int = BLOCK_PREFIX_LEN,
-    threshold: float = MATCH_THRESHOLD,
-    round_to: int = 6,
-    window: int = NEIGHBORHOOD_WINDOW,
+    customers_dirty: DataFrame, window: int = NEIGHBORHOOD_WINDOW
 ) -> DataFrame:
     """(ka, kb, sim) — matched pairs under the MULTI-FIELD score
     0.7·name_similarity + 0.3·balance_agreement: on id-style names
@@ -106,7 +103,7 @@ def entity_matches(
         "c_acctbal",
         F.struct(
             "c_nationkey",
-            F.expr(f"substring(c_name, 1, {prefix_len})").alias("pfx"),
+            F.expr(f"substring(c_name, 1, {BLOCK_PREFIX_LEN})").alias("pfx"),
         ).alias("bk"),
     )
     w = Window.partitionBy("bk").orderBy("c_name", "c_custkey")
@@ -142,21 +139,16 @@ def entity_matches(
             & (F.col("rb") <= F.col("ra") + F.lit(window))
         )
         .withColumn("__sim_raw", sim)
-        .filter(F.col("__sim_raw") >= threshold)
+        .filter(F.col("__sim_raw") >= MATCH_THRESHOLD)
         .select(
             F.least("ka", "kb").alias("ka"),
             F.greatest("ka", "kb").alias("kb"),
-            F.round("__sim_raw", round_to).alias("sim"),
+            F.round("__sim_raw", ROUND_TO).alias("sim"),
         )
     )
 
 
-def entity_matches_sql(
-    prefix_len: int = BLOCK_PREFIX_LEN,
-    threshold: float = MATCH_THRESHOLD,
-    round_to: int = 6,
-    window: int = NEIGHBORHOOD_WINDOW,
-) -> str:
+def entity_matches_sql() -> str:
     """Final SELECT (composes after DIRTY_SQL). Replays the sorted-
     neighborhood rank window exactly: same ROW_NUMBER ordering, same
     rank-distance bound, same LEAST/GREATEST key ordering."""
@@ -168,16 +160,16 @@ def entity_matches_sql(
     )
     return f"""SELECT LEAST(a.c_custkey, b.c_custkey) AS ka,
        GREATEST(a.c_custkey, b.c_custkey) AS kb,
-       ROUND({score}, {round_to}) AS sim
+       ROUND({score}, {ROUND_TO}) AS sim
 FROM (SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY c_nationkey, substr(c_name, 1, {prefix_len})
+          PARTITION BY c_nationkey, substr(c_name, 1, {BLOCK_PREFIX_LEN})
           ORDER BY c_name, c_custkey) AS rn
       FROM er_cust) a
 JOIN (SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY c_nationkey, substr(c_name, 1, {prefix_len})
+          PARTITION BY c_nationkey, substr(c_name, 1, {BLOCK_PREFIX_LEN})
           ORDER BY c_name, c_custkey) AS rn
       FROM er_cust) b
   ON a.c_nationkey = b.c_nationkey
- AND substr(a.c_name, 1, {prefix_len}) = substr(b.c_name, 1, {prefix_len})
- AND b.rn > a.rn AND b.rn <= a.rn + {window}
-WHERE {score} >= {threshold}"""
+ AND substr(a.c_name, 1, {BLOCK_PREFIX_LEN}) = substr(b.c_name, 1, {BLOCK_PREFIX_LEN})
+ AND b.rn > a.rn AND b.rn <= a.rn + {NEIGHBORHOOD_WINDOW}
+WHERE {score} >= {MATCH_THRESHOLD}"""

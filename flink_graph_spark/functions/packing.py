@@ -31,17 +31,13 @@ TOKEN_BUDGET = 256
 SHARD_SIZE = 200
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int = TOKEN_BUDGET,
-    shard_size: int = SHARD_SIZE,
-) -> DataFrame:
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, shard, n_tokens, bin_id) — next-fit packing per
     (lang, shard) group in doc_id order."""
     toks = docs.select(
         "doc_id",
         "lang",
-        F.expr(f"doc_id div {shard_size}").alias("shard"),
+        F.expr(f"doc_id div {SHARD_SIZE}").alias("shard"),
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
     )
 
@@ -49,7 +45,7 @@ def pack_sequences(
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         bins, fill, cur = [], 0, 0
         for n in pdf["n_tokens"]:
-            if bins and fill + n > budget:
+            if bins and fill + n > TOKEN_BUDGET:
                 cur += 1
                 fill = 0
             fill += n

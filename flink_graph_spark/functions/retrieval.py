@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from ..rounding import ROUND_TO
 
 # BM25 constants (standard Robertson/Sparck-Jones defaults)
 BM25_K1 = 1.2
@@ -31,6 +32,7 @@ BM25_B = 0.75
 # fixed benchmark query: two ubiquitous terms + one rare term ("dup"
 # appears in ~5% of synthetic docs) so idf separates scores
 BM25_QUERY_TERMS = ("join", "dup", "spark")
+BM25_TOP_K = 20
 
 
 def _doc_tokens(docs: DataFrame) -> DataFrame:
@@ -40,7 +42,7 @@ def _doc_tokens(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3, round_to: int = 6) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-``k`` terms per document by tf·idf, idf = ln(N/df).
 
     Returns (doc_id, term, rank, tfidf); deterministic tie-break on the
@@ -67,12 +69,12 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, round_to: int = 6) -> DataFrame
             "doc_id",
             "term",
             F.col("rank").cast("long").alias("rank"),
-            F.round("s", round_to).alias("tfidf"),
+            F.round("s", ROUND_TO).alias("tfidf"),
         )
     )
 
 
-def tfidf_sql(k: int = 3, round_to: int = 6) -> str:
+def tfidf_sql(k: int = 3) -> str:
     return f"""WITH tok AS MATERIALIZED (
     SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
 ),
@@ -87,7 +89,7 @@ scored AS (
            t.tf * ln((SELECT COUNT(*) FROM documents) * 1.0 / d.df) AS s
     FROM tf t JOIN dfreq d USING (term)
 )
-SELECT doc_id, term, CAST(rank AS BIGINT) AS rank, ROUND(s, {round_to}) AS tfidf
+SELECT doc_id, term, CAST(rank AS BIGINT) AS rank, ROUND(s, {ROUND_TO}) AS tfidf
 FROM (
     SELECT doc_id, term, s,
            ROW_NUMBER() OVER (PARTITION BY doc_id
@@ -97,12 +99,9 @@ FROM (
 
 
 def bm25_search(
-    docs: DataFrame,
-    query_terms: tuple[str, ...] = BM25_QUERY_TERMS,
-    k: int = 20,
-    round_to: int = 6,
+    docs: DataFrame, query_terms: tuple[str, ...] = BM25_QUERY_TERMS
 ) -> DataFrame:
-    """BM25 top-``k`` documents for a fixed bag-of-words query.
+    """BM25 top-``BM25_TOP_K`` documents for a fixed bag-of-words query.
 
     idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)) (always positive);
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)).
@@ -137,18 +136,14 @@ def bm25_search(
     )
     return (
         per_term.groupBy("doc_id")
-        .agg(F.round(F.sum("s"), round_to).alias("score"))
+        .agg(F.round(F.sum("s"), ROUND_TO).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .limit(BM25_TOP_K)
     )
 
 
-def bm25_sql(
-    query_terms: tuple[str, ...] = BM25_QUERY_TERMS,
-    k: int = 20,
-    round_to: int = 6,
-) -> str:
-    terms_in = ", ".join(f"'{t}'" for t in query_terms)
+def bm25_sql() -> str:
+    terms_in = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
     return f"""WITH tok AS MATERIALIZED (
     SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
 ),
@@ -162,7 +157,7 @@ consts AS (
     SELECT (SELECT COUNT(*) FROM documents) AS n,
            (SELECT AVG(dl) FROM dl) AS avgdl
 )
-SELECT doc_id, ROUND(SUM(s), {round_to}) AS score FROM (
+SELECT doc_id, ROUND(SUM(s), {ROUND_TO}) AS score FROM (
     SELECT t.doc_id,
            ln(1.0 + (c.n - d.df + 0.5) / (d.df + 0.5))
              * t.tf * {BM25_K1 + 1.0}
@@ -173,10 +168,10 @@ SELECT doc_id, ROUND(SUM(s), {round_to}) AS score FROM (
     JOIN dl l USING (doc_id)
     CROSS JOIN consts c
 ) GROUP BY doc_id
-ORDER BY score DESC, doc_id ASC LIMIT {k}"""
+ORDER BY score DESC, doc_id ASC LIMIT {BM25_TOP_K}"""
 
 
-def unigram_nll(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def unigram_nll(docs: DataFrame) -> DataFrame:
     """Per-document mean negative log-likelihood under the corpus's own
     unigram model — the classic cheap LM-quality filter (documents with
     improbable token distributions score high and get dropped/flagged).
@@ -195,13 +190,13 @@ def unigram_nll(docs: DataFrame, round_to: int = 6) -> DataFrame:
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
             F.round(
-                -F.avg(F.log(F.col("c") / F.col("__t"))), round_to
+                -F.avg(F.log(F.col("c") / F.col("__t"))), ROUND_TO
             ).alias("nll"),
         )
     )
 
 
-def unigram_nll_sql(round_to: int = 6) -> str:
+def unigram_nll_sql() -> str:
     return f"""WITH tok AS MATERIALIZED (
     SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
 ),
@@ -209,7 +204,7 @@ counts AS MATERIALIZED (SELECT term, COUNT(*) AS c FROM tok GROUP BY 1)
 SELECT t.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
        ROUND(-AVG(ln(c.c * 1.0 / (SELECT SUM(c) FROM counts))),
-             {round_to}) AS nll
+             {ROUND_TO}) AS nll
 FROM tok t JOIN counts c USING (term)
 GROUP BY 1"""
 
@@ -219,7 +214,7 @@ GROUP BY 1"""
 BIGRAM_LAMBDA = 0.75
 
 
-def bigram_nll(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def bigram_nll(docs: DataFrame) -> DataFrame:
     """Per-document mean NLL under a Jelinek–Mercer interpolated bigram
     model trained on the corpus itself — the step up from
     ``unigram_nll`` as a cheap LM-quality / domain-shift filter:
@@ -273,13 +268,13 @@ def bigram_nll(docs: DataFrame, round_to: int = 6) -> DataFrame:
                         + (F.lit(1.0) - lam) * F.col("c1_cur") / F.col("__t")
                     )
                 ),
-                round_to,
+                ROUND_TO,
             ).alias("nll"),
         )
     )
 
 
-def bigram_nll_sql(round_to: int = 6) -> str:
+def bigram_nll_sql() -> str:
     return f"""WITH tok AS MATERIALIZED (
     SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
 ),
@@ -302,7 +297,7 @@ SELECT p.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_bigrams,
        ROUND(-AVG(ln({BIGRAM_LAMBDA} * b.c2 * 1.0 / h.ch
                      + {1.0 - BIGRAM_LAMBDA} * u2.c1
-                       / (SELECT SUM(c1) FROM uni))), {round_to}) AS nll
+                       / (SELECT SUM(c1) FROM uni))), {ROUND_TO}) AS nll
 FROM pairs p
 JOIN bi b ON p.prev = b.prev AND p.cur = b.cur
 JOIN hist h ON p.prev = h.prev

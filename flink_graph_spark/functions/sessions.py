@@ -15,11 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from ..rounding import ROUND_TO
 
 SESSION_GAP_US = 1_800_000_000  # 30 minutes
 
 
-def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Classic batch sessionization: lag over (user, time) → new-session
     flag on gap > threshold → running sum = session id → per-session
     rollup. One window pass + one aggregation; partitions by user_id so
@@ -36,7 +37,7 @@ def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
             "is_new",
             F.when(
                 F.col("prev_us").isNull()
-                | ((F.col("us") - F.col("prev_us")) > gap_us),
+                | ((F.col("us") - F.col("prev_us")) > SESSION_GAP_US),
                 F.lit(1),
             ).otherwise(F.lit(0)),
         )
@@ -50,14 +51,14 @@ def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
     )
 
 
-def sessionize_sql(gap_us: int = SESSION_GAP_US) -> tuple[str, str]:
+def sessionize_sql() -> tuple[str, str]:
     """(CTE text, final SELECT) for composition by the registry."""
     ctes = f"""
 ev AS MATERIALIZED (
     SELECT user_id, event_id, ts, value, epoch_us(ts) AS us FROM events
 ),
 flagged AS MATERIALIZED (
-    SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > {gap_us}
+    SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > {SESSION_GAP_US}
                    THEN 1 ELSE 0 END AS is_new
     FROM (
         SELECT *, LAG(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
@@ -151,7 +152,7 @@ SELECT user_id, event_id, value, CAST(rn AS BIGINT) AS rn FROM (
 FUNNEL_STAGES = ("signup", "view", "click", "purchase")
 
 
-def event_funnel(events: DataFrame, stages: tuple[str, ...] = FUNNEL_STAGES) -> DataFrame:
+def event_funnel(events: DataFrame) -> DataFrame:
     """(user_id, funnel_depth) — deepest stage each user reached through
     the ordered chain, earliest-completion semantics: stage i counts
     only with a timestamp STRICTLY after the user's earliest completion
@@ -165,11 +166,11 @@ def event_funnel(events: DataFrame, stages: tuple[str, ...] = FUNNEL_STAGES) -> 
     raw events.
     """
     cur = (
-        events.where(F.col("event_type") == stages[0])
+        events.where(F.col("event_type") == FUNNEL_STAGES[0])
         .groupBy("user_id")
         .agg(F.min("ts").alias("t0"))
     )
-    for i, stage in enumerate(stages[1:], start=1):
+    for i, stage in enumerate(FUNNEL_STAGES[1:], start=1):
         nxt = (
             events.where(F.col("event_type") == stage)
             .select("user_id", F.col("ts").alias("__ts"))
@@ -180,7 +181,7 @@ def event_funnel(events: DataFrame, stages: tuple[str, ...] = FUNNEL_STAGES) -> 
         )
         cur = cur.join(nxt, "user_id", "left")
     depth = sum(
-        (F.col(f"t{i}").isNotNull()).cast("int") for i in range(len(stages))
+        (F.col(f"t{i}").isNotNull()).cast("int") for i in range(len(FUNNEL_STAGES))
     )
     return cur.select(
         "user_id", depth.cast("bigint").alias("funnel_depth")
@@ -332,7 +333,7 @@ ORDER BY 1, 2"""
 
 # ---- trailing-window anomaly scores ----------------------------------
 
-def hourly_anomaly(events: DataFrame, round_to: int = 6) -> DataFrame:
+def hourly_anomaly(events: DataFrame) -> DataFrame:
     """(event_type, hour, n_events, trail_mean, trail_std, z) — each
     hour's event count z-scored against its own 3-hour trailing window
     (the streaming-monitoring alert primitive, computed batch-side).
@@ -345,10 +346,10 @@ def hourly_anomaly(events: DataFrame, round_to: int = 6) -> DataFrame:
     cells = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hour")
     ).agg(F.count("*").alias("n_events"))
-    return anomaly_scores(cells, round_to)
+    return anomaly_scores(cells)
 
 
-def anomaly_scores(cells: DataFrame, round_to: int = 6) -> DataFrame:
+def anomaly_scores(cells: DataFrame) -> DataFrame:
     """z-score stage over a prebuilt (event_type, hour, n_events) cell
     table — shared by the batch rollup and the STREAMING rollup
     snapshot (the alert layer reads the incrementally-maintained cells
@@ -365,15 +366,15 @@ def anomaly_scores(cells: DataFrame, round_to: int = 6) -> DataFrame:
         "event_type",
         "hour",
         F.col("n_events").cast("long").alias("n_events"),
-        F.when(trail_n >= 3, F.round(trail_mean, round_to)).alias(
+        F.when(trail_n >= 3, F.round(trail_mean, ROUND_TO)).alias(
             "trail_mean"
         ),
-        F.when(trail_n >= 3, F.round(trail_std, round_to)).alias(
+        F.when(trail_n >= 3, F.round(trail_std, ROUND_TO)).alias(
             "trail_std"
         ),
         F.when(
             (trail_n >= 3) & (trail_std > 0),
-            F.round((F.col("n_events") - trail_mean) / trail_std, round_to),
+            F.round((F.col("n_events") - trail_mean) / trail_std, ROUND_TO),
         ).alias("z"),
     )
 
@@ -400,7 +401,7 @@ FROM (
 
 # ---- event-type transition matrix ------------------------------------
 
-def event_transitions(events: DataFrame, round_to: int = 6) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """(prev_type, event_type, n, p) — the per-user event-sequence
     Markov transition counts and row-normalized probabilities (the
     session-model / next-action primitive).
@@ -428,7 +429,7 @@ def event_transitions(events: DataFrame, round_to: int = 6) -> DataFrame:
         "prev_type",
         "event_type",
         "n",
-        F.round(F.col("n") / F.sum("n").over(row_tot), round_to).alias("p"),
+        F.round(F.col("n") / F.sum("n").over(row_tot), ROUND_TO).alias("p"),
     )
 
 
@@ -584,15 +585,13 @@ GROUP BY 1, 2"""
 
 # ---- session duration histogram --------------------------------------
 
-def session_duration_histogram(
-    events: DataFrame, gap_us: int = SESSION_GAP_US, round_to: int = 6
-) -> DataFrame:
+def session_duration_histogram(events: DataFrame) -> DataFrame:
     """(bucket_minutes, n_sessions, mean_events) — session durations in
     power-of-two minute buckets (0 = sub-minute/single-event): the
     engagement-distribution readout over the sessionizer. One more
     bounded aggregate over the session table — the window pass is the
     sessionizer's own."""
-    s = sessionize(events, gap_us)
+    s = sessionize(events)
     dur_min = (
         F.unix_micros(F.col("end_ts").cast("timestamp"))
         - F.unix_micros(F.col("start_ts").cast("timestamp"))
@@ -604,11 +603,11 @@ def session_duration_histogram(
     )
     return s.groupBy(bucket.alias("bucket_minutes")).agg(
         F.count("*").cast("long").alias("n_sessions"),
-        F.round(F.avg("n_events"), round_to).alias("mean_events"),
+        F.round(F.avg("n_events"), ROUND_TO).alias("mean_events"),
     )
 
 
-def session_duration_histogram_sql(round_to: int = 6) -> str:
+def session_duration_histogram_sql() -> str:
     """Final SELECT (composes after sessionize_sql's CTEs + a wrapped
     session table CTE named ``sess_t``)."""
     dur = "(epoch_us(end_ts) - epoch_us(start_ts)) / 60000000.0"
@@ -616,5 +615,5 @@ def session_duration_histogram_sql(round_to: int = 6) -> str:
             ELSE CAST(POWER(2.0, FLOOR(LOG2({dur})) + 1) AS BIGINT)
        END AS bucket_minutes,
        CAST(COUNT(*) AS BIGINT) AS n_sessions,
-       ROUND(AVG(n_events), {round_to}) AS mean_events
+       ROUND(AVG(n_events), {ROUND_TO}) AS mean_events
 FROM sess_t GROUP BY 1"""

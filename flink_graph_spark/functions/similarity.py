@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.iterate import iterate
 from ..plans.checkpoints import scratch_scope
+from ..rounding import ROUND_TO
 
 DIM = 64
 
@@ -523,11 +524,7 @@ ANN_AT_REST_BUCKETS = 32
 
 
 def write_ann_at_rest(
-    emb: DataFrame,
-    sig_table: str,
-    vec_table: str,
-    buckets: int = ANN_AT_REST_BUCKETS,
-    path_prefix: str | None = None,
+    emb: DataFrame, sig_table: str, vec_table: str, path_prefix: str | None = None
 ) -> None:
     """One-time index build: materialize the sparse-SimHash sketch and
     the vectors as two vec_id-bucketed tables (same column, same bucket
@@ -543,7 +540,7 @@ def write_ann_at_rest(
         w = (
             df.write.mode("overwrite")
             .format("parquet")
-            .bucketBy(buckets, "vec_id")
+            .bucketBy(ANN_AT_REST_BUCKETS, "vec_id")
             .sortBy("vec_id")
         )
         if path_prefix is not None:
@@ -561,7 +558,6 @@ def ann_topk_lsh_at_rest(
     n_rows: int,
     n_queries: int = 5,
     k: int = 10,
-    cut: int | None = None,
 ) -> DataFrame:
     """The warm probe over the at-rest sketch index — result-identical
     to :func:`ann_topk_lsh` (same signatures, same adaptive cut from
@@ -573,8 +569,7 @@ def ann_topk_lsh_at_rest(
     the non-foldable constant key (Hamming test in codegen, same
     lesson as the inline path) → bucketed-bucketed survivor→vector
     join with no Exchange → window ranks survivors only."""
-    if cut is None:
-        cut = ann_cut_for(n_rows)
+    cut = ann_cut_for(n_rows)
     sigs = spark.table(sig_table)
     # float → double element cast at probe time (exact widening, same
     # doubles as with_norm); the projection preserves the bucketed
@@ -1222,7 +1217,6 @@ def semantic_dedup_clusters(
     max_iter: int = 4,
     bucketed: bool = False,
     multi_probe: bool = False,
-    bits: int | None = None,
     sig_table: str | None = None,
     vec_table: str | None = None,
     n_sig_rows: int | None = None,
@@ -1244,7 +1238,7 @@ def semantic_dedup_clusters(
 
     pairs = (
         semantic_near_dup_pairs_lsh(
-            emb, threshold, bits=bits, multi_probe=multi_probe,
+            emb, threshold, multi_probe=multi_probe,
             sig_table=sig_table, vec_table=vec_table, n_sig_rows=n_sig_rows,
         )
         if bucketed
@@ -1646,9 +1640,7 @@ SELECT query_id, label AS pred_label, votes FROM (
 OUTLIER_K = 5
 
 
-def embedding_outliers(
-    emb: DataFrame, k: int = OUTLIER_K, round_to: int = 6
-) -> DataFrame:
+def embedding_outliers(emb: DataFrame, k: int = OUTLIER_K) -> DataFrame:
     """(label, vec_id, cos_centroid): k lowest-cosine vectors per label."""
     from pyspark.sql import Window
 
@@ -1674,7 +1666,7 @@ def embedding_outliers(
             "label",
             "vec_id",
             F.round(
-                F.col("dot") / (F.sqrt("n1") * F.sqrt("n2")), round_to
+                F.col("dot") / (F.sqrt("n1") * F.sqrt("n2")), ROUND_TO
             ).alias("cos_centroid"),
         )
     )
@@ -1688,7 +1680,7 @@ def embedding_outliers(
     )
 
 
-def embedding_outliers_sql(k: int = OUTLIER_K, round_to: int = 6) -> str:
+def embedding_outliers_sql() -> str:
     return f"""WITH dims AS MATERIALIZED (
     SELECT vec_id, label, g.i AS pos, embedding[g.i] AS val
     FROM embeddings, UNNEST(generate_series(1, len(embedding))) g(i)
@@ -1700,7 +1692,7 @@ scored AS (
     SELECT d.label, d.vec_id,
            ROUND(SUM(d.val * c.cval)
                  / (SQRT(SUM(d.val * d.val)) * SQRT(SUM(c.cval * c.cval))),
-                 {round_to}) AS cos_centroid
+                 {ROUND_TO}) AS cos_centroid
     FROM dims d JOIN cent c ON d.label = c.label AND d.pos = c.pos
     GROUP BY 1, 2
     HAVING SUM(d.val * d.val) > 0 AND SUM(c.cval * c.cval) > 0
@@ -1709,7 +1701,7 @@ SELECT label, vec_id, cos_centroid FROM (
     SELECT *, ROW_NUMBER() OVER (
         PARTITION BY label ORDER BY cos_centroid ASC, vec_id ASC) AS rn
     FROM scored
-) WHERE rn <= {k}"""
+) WHERE rn <= {OUTLIER_K}"""
 
 
 # ---- scalar quantization (int8 embedding compression) ----------------
@@ -1726,7 +1718,7 @@ SELECT label, vec_id, cos_centroid FROM (
 # replays it exactly.
 
 
-def embedding_quantize(emb: DataFrame, round_to: int = 6) -> DataFrame:
+def embedding_quantize(emb: DataFrame) -> DataFrame:
     """(vec_id, code_sum, mse_ppm) for every vector."""
     dims = _dims(emb)
     cal = dims.groupBy("pos").agg(
@@ -1756,12 +1748,12 @@ def embedding_quantize(emb: DataFrame, round_to: int = 6) -> DataFrame:
         .groupBy("vec_id")
         .agg(
             F.sum("code").cast("long").alias("code_sum"),
-            F.round(F.avg("e2") * 1_000_000.0, round_to).alias("mse_ppm"),
+            F.round(F.avg("e2") * 1_000_000.0, ROUND_TO).alias("mse_ppm"),
         )
     )
 
 
-def embedding_quantize_sql(round_to: int = 6) -> str:
+def embedding_quantize_sql() -> str:
     return f"""WITH dims AS MATERIALIZED (
     SELECT vec_id, g.i AS pos, CAST(embedding[g.i] AS DOUBLE) AS val
     FROM embeddings, UNNEST(generate_series(1, len(embedding))) g(i)
@@ -1781,7 +1773,7 @@ SELECT vec_id,
        ROUND(AVG(
            POWER(val - (CASE WHEN hi > lo
                         THEN lo + code * (hi - lo) / 255.0
-                        ELSE lo END), 2)) * 1000000.0, {round_to}) AS mse_ppm
+                        ELSE lo END), 2)) * 1000000.0, {ROUND_TO}) AS mse_ppm
 FROM coded
 GROUP BY 1"""
 
@@ -1806,11 +1798,9 @@ PCA_ITER = 4
 
 
 @scratch_scope
-def principal_direction(
-    emb: DataFrame, max_iter: int = PCA_ITER, round_to: int = 6
-) -> DataFrame:
+def principal_direction(emb: DataFrame) -> DataFrame:
     """(pos, loading) — unit-norm first principal direction after
-    ``max_iter`` power-iteration rounds on the centered corpus."""
+    ``PCA_ITER`` power-iteration rounds on the centered corpus."""
     dims = _dims(emb)
     mean = dims.groupBy("pos").agg(F.avg("val").alias("mu"))
     x = (
@@ -1853,15 +1843,13 @@ def principal_direction(
         F.col("id").cast("int").alias("pos"),
         (F.lit(1.0) / F.sqrt(F.lit(float(n_dim)))).alias("v"),
     )
-    v, _, _ = iterate(v0, round_, max_iter)
+    v, _, _ = iterate(v0, round_, PCA_ITER)
     return v.select(
-        "pos", F.round("v", round_to).alias("loading")
+        "pos", F.round("v", ROUND_TO).alias("loading")
     ).orderBy("pos")
 
 
-def principal_direction_sql(
-    max_iter: int = PCA_ITER, round_to: int = 6
-) -> str:
+def principal_direction_sql() -> str:
     ctes = [
         """pc_dims AS MATERIALIZED (
     SELECT vec_id, g.i - 1 AS pos, CAST(embedding[g.i] AS DOUBLE) AS val
@@ -1878,7 +1866,7 @@ def principal_direction_sql(
     FROM (SELECT DISTINCT pos FROM pc_dims)
 )""",
     ]
-    for i in range(1, max_iter + 1):
+    for i in range(1, PCA_ITER + 1):
         ctes.append(
             f"""pc_w{i} AS MATERIALIZED (
     SELECT x.pos, SUM(s.s * x.x) AS w
@@ -1900,8 +1888,8 @@ def principal_direction_sql(
 )"""
         )
     final = (
-        f"SELECT pos, ROUND(v, {round_to}) AS loading"
-        f" FROM pc_v{max_iter} ORDER BY pos"
+        f"SELECT pos, ROUND(v, {ROUND_TO}) AS loading"
+        f" FROM pc_v{PCA_ITER} ORDER BY pos"
     )
     return "WITH " + ",\n".join(ctes) + "\n" + final
 
@@ -1977,19 +1965,15 @@ def _lloyd(
     return assign
 
 
-def kmeans_clusters(
-    emb: DataFrame, k: int = KMEANS_K, rounds: int = KMEANS_ROUNDS
-) -> DataFrame:
-    """(vec_id, cluster) — assignment after ``rounds`` Lloyd rounds
+def kmeans_clusters(emb: DataFrame, k: int = KMEANS_K) -> DataFrame:
+    """(vec_id, cluster) — assignment after ``KMEANS_ROUNDS`` Lloyd rounds
     (``_lloyd`` over the whole vector, no extra key)."""
-    return _lloyd(_dims(emb), k, rounds).select(
+    return _lloyd(_dims(emb), k, KMEANS_ROUNDS).select(
         "vec_id", F.col("cid").cast("long").alias("cluster")
     ).orderBy("vec_id")
 
 
-def kmeans_clusters_sql(
-    k: int = KMEANS_K, rounds: int = KMEANS_ROUNDS
-) -> str:
+def kmeans_clusters_sql() -> str:
     ctes = [
         """km_dims AS MATERIALIZED (
     SELECT vec_id, g.i - 1 AS pos, CAST(embedding[g.i] AS DOUBLE) AS val
@@ -1997,10 +1981,10 @@ def kmeans_clusters_sql(
 )""",
         f"""km_c0 AS MATERIALIZED (
     SELECT vec_id AS cid, pos, val AS cval FROM km_dims
-    WHERE vec_id < {k}
+    WHERE vec_id < {KMEANS_K}
 )""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, KMEANS_ROUNDS + 1):
         ctes.append(
             f"""km_a{r} AS MATERIALIZED (
     SELECT vec_id, cid FROM (
@@ -2016,7 +2000,7 @@ def kmeans_clusters_sql(
     ) WHERE rn = 1
 )"""
         )
-        if r < rounds:
+        if r < KMEANS_ROUNDS:
             ctes.append(
                 f"""km_c{r} AS MATERIALIZED (
     SELECT a.cid, d.pos, AVG(d.val) AS cval
@@ -2026,7 +2010,7 @@ def kmeans_clusters_sql(
             )
     final = (
         f"SELECT vec_id, CAST(cid AS BIGINT) AS cluster"
-        f" FROM km_a{rounds} ORDER BY vec_id"
+        f" FROM km_a{KMEANS_ROUNDS} ORDER BY vec_id"
     )
     return "WITH " + ",\n".join(ctes) + "\n" + final
 
@@ -2075,7 +2059,7 @@ def knn_edges_sql(k: int = 5) -> str:
 
 # ---- per-dimension statistics (standardization fit) ------------------
 
-def embedding_dim_stats(emb: DataFrame, round_to: int = 6) -> DataFrame:
+def embedding_dim_stats(emb: DataFrame) -> DataFrame:
     """(dim, n, mean, std) — the fitted diagonal standardization /
     whitening transform for the embedding space, one row per dimension
     (1-based, matching DuckDB ordinality).
@@ -2093,16 +2077,16 @@ def embedding_dim_stats(emb: DataFrame, round_to: int = 6) -> DataFrame:
     )
     return d.groupBy((F.col("pos") + 1).cast("long").alias("dim")).agg(
         F.count("*").cast("long").alias("n"),
-        F.round(F.avg("x"), round_to).alias("mean"),
-        F.round(F.stddev_pop("x"), round_to).alias("std"),
+        F.round(F.avg("x"), ROUND_TO).alias("mean"),
+        F.round(F.stddev_pop("x"), ROUND_TO).alias("std"),
     )
 
 
-def embedding_dim_stats_sql(round_to: int = 6) -> str:
+def embedding_dim_stats_sql() -> str:
     return f"""SELECT CAST(dim AS BIGINT) AS dim,
        CAST(COUNT(*) AS BIGINT) AS n,
-       ROUND(AVG(x), {round_to}) AS mean,
-       ROUND(stddev_pop(x), {round_to}) AS std
+       ROUND(AVG(x), {ROUND_TO}) AS mean,
+       ROUND(stddev_pop(x), {ROUND_TO}) AS std
 FROM (
   SELECT unnest(generate_series(1, len(embedding))) AS dim,
          unnest(embedding::DOUBLE[]) AS x
@@ -2112,7 +2096,7 @@ GROUP BY 1"""
 
 # ---- corpus-geometry cosine histogram --------------------------------
 
-def cosine_pair_histogram(emb: DataFrame, round_to: int = 6) -> DataFrame:
+def cosine_pair_histogram(emb: DataFrame) -> DataFrame:
     """(bucket, n_pairs, mean_cos) — cosine of every (vec_id, vec_id+1)
     pair, bucketed at 0.1 (bucket = floor(cos·10), clamped to [-10, 9]).
 
@@ -2141,18 +2125,18 @@ def cosine_pair_histogram(emb: DataFrame, round_to: int = 6) -> DataFrame:
     )
     return pairs.groupBy(bucket.cast("long").alias("bucket")).agg(
         F.count("*").cast("long").alias("n_pairs"),
-        F.round(F.avg("__cos"), round_to).alias("mean_cos"),
+        F.round(F.avg("__cos"), ROUND_TO).alias("mean_cos"),
     )
 
 
-def cosine_pair_histogram_sql(round_to: int = 6) -> str:
+def cosine_pair_histogram_sql() -> str:
     return f"""WITH {EMB_NORM_SQL.strip()},
 cp_pairs AS MATERIALIZED (
   SELECT {COS_SQL} AS cos
   FROM emb_norm a JOIN emb_norm b ON a.vec_id + 1 = b.vec_id)
 SELECT CAST(LEAST(GREATEST(FLOOR(cos * 10), -10), 9) AS BIGINT) AS bucket,
        CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       ROUND(AVG(cos), {round_to}) AS mean_cos
+       ROUND(AVG(cos), {ROUND_TO}) AS mean_cos
 FROM cp_pairs GROUP BY 1"""
 
 
@@ -2163,12 +2147,7 @@ PQ_K = 16  # centroids per subspace -> 4-bit codes
 PQ_ROUNDS = 2
 
 
-def pq_codes(
-    emb: DataFrame,
-    subs: int = PQ_SUBS,
-    k: int = PQ_K,
-    rounds: int = PQ_ROUNDS,
-) -> DataFrame:
+def pq_codes(emb: DataFrame, subs: int = PQ_SUBS, k: int = PQ_K) -> DataFrame:
     """(vec_id, sub, code) — product-quantization codes: the embedding
     split into ``subs`` subvectors, each Lloyd-quantized to ``k``
     centroids (Jégou et al. 2011 — the FAISS IVF-PQ compression stage;
@@ -2182,17 +2161,15 @@ def pq_codes(
     vectors, cid tie-break on equal distance)."""
     sub_dim = DIM // subs
     dims = _dims(emb, F.expr(f"pos div {sub_dim}").alias("sub"))
-    return _lloyd(dims, k, rounds, ("sub",)).select(
+    return _lloyd(dims, k, PQ_ROUNDS, ("sub",)).select(
         "vec_id",
         F.col("sub").cast("long").alias("sub"),
         F.col("cid").cast("long").alias("code"),
     )
 
 
-def pq_codes_sql(
-    subs: int = PQ_SUBS, k: int = PQ_K, rounds: int = PQ_ROUNDS
-) -> str:
-    sub_dim = DIM // subs
+def pq_codes_sql() -> str:
+    sub_dim = DIM // PQ_SUBS
     ctes = [
         f"""pq_dims AS MATERIALIZED (
     SELECT vec_id, (g.i - 1) // {sub_dim} AS sub, g.i - 1 AS pos,
@@ -2201,10 +2178,10 @@ def pq_codes_sql(
 )""",
         f"""pq_c0 AS MATERIALIZED (
     SELECT sub, vec_id AS cid, pos, val AS cval FROM pq_dims
-    WHERE vec_id < {k}
+    WHERE vec_id < {PQ_K}
 )""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, PQ_ROUNDS + 1):
         ctes.append(
             f"""pq_a{r} AS MATERIALIZED (
     SELECT vec_id, sub, cid FROM (
@@ -2218,7 +2195,7 @@ def pq_codes_sql(
         GROUP BY d.vec_id, d.sub, c.cid)
     WHERE rn = 1
 )""")
-        if r < rounds:
+        if r < PQ_ROUNDS:
             ctes.append(
                 f"""pq_c{r} AS MATERIALIZED (
     SELECT d.sub, a.cid, d.pos, AVG(d.val) AS cval
@@ -2229,21 +2206,23 @@ def pq_codes_sql(
     joined = ",\n".join(ctes)
     return f"""WITH {joined}
 SELECT vec_id, CAST(sub AS BIGINT) AS sub, CAST(cid AS BIGINT) AS code
-FROM pq_a{rounds}"""
+FROM pq_a{PQ_ROUNDS}"""
 
 
 # ---- kNN evaluation: confusion matrix --------------------------------
 
-def knn_confusion(
-    emb: DataFrame, n_queries: int = 100, k: int = 10
-) -> DataFrame:
+CONFUSION_QUERIES = 100
+CONFUSION_K = 10
+
+
+def knn_confusion(emb: DataFrame) -> DataFrame:
     """(true_label, pred_label, n) — confusion matrix of the kNN label
-    vote over the first ``n_queries`` vectors (each query's own vector
+    vote over the first ``CONFUSION_QUERIES`` vectors (each query's own vector
     excluded from its neighbor set, so this is leave-one-out
     evaluation): the quality report a similarity index ships with.
     Label-count-bounded output; the vote machinery is shared with
     ``knn_label_vote``."""
-    preds = knn_label_vote(emb, n_queries, k)
+    preds = knn_label_vote(emb, CONFUSION_QUERIES, CONFUSION_K)
     truth = emb.select(
         F.col("vec_id").alias("query_id"),
         F.col("label").cast("long").alias("true_label"),
@@ -2255,8 +2234,8 @@ def knn_confusion(
     )
 
 
-def knn_confusion_sql(n_queries: int = 100, k: int = 10) -> str:
-    inner = knn_label_vote_sql(n_queries, k)
+def knn_confusion_sql() -> str:
+    inner = knn_label_vote_sql(CONFUSION_QUERIES, CONFUSION_K)
     return f"""WITH knn_preds AS MATERIALIZED (
 {inner}
 )
@@ -2269,7 +2248,7 @@ GROUP BY 1, 2"""
 
 # ---- Gram matrix (linear-model sufficient statistics) ----------------
 
-def gram_matrix(emb: DataFrame, round_to: int = 6) -> DataFrame:
+def gram_matrix(emb: DataFrame) -> DataFrame:
     """(i, j, xtx) — upper triangle of X^T X over the embedding matrix
     (1-based dims): the sufficient statistic behind every linear probe,
     ridge fit, PCA and whitening transform. The distributed half of the
@@ -2295,13 +2274,13 @@ def gram_matrix(emb: DataFrame, round_to: int = 6) -> DataFrame:
             F.col("i").cast("long").alias("i"),
             F.col("j").cast("long").alias("j"),
         )
-        .agg(F.round(F.sum(F.col("xi") * F.col("xj")), round_to).alias("xtx"))
+        .agg(F.round(F.sum(F.col("xi") * F.col("xj")), ROUND_TO).alias("xtx"))
     )
 
 
-def gram_matrix_sql(round_to: int = 6) -> str:
+def gram_matrix_sql() -> str:
     return f"""SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-       ROUND(SUM(xi * xj), {round_to}) AS xtx
+       ROUND(SUM(xi * xj), {ROUND_TO}) AS xtx
 FROM (
   SELECT a.vec_id, a.i, a.xi, b.j, b.xj FROM (
     SELECT vec_id, unnest(generate_series(1, len(embedding))) AS i,
@@ -2318,25 +2297,24 @@ GROUP BY 1, 2"""
 
 # ---- feature propagation (the GNN aggregation layer) -----------------
 
+FP_K = 5
+FP_ALPHA = 0.5
+FP_ROUNDS = 2
+FP_OUT_DIMS = 4
+
+
 @scratch_scope
-def feature_propagation(
-    emb: DataFrame,
-    k: int = 5,
-    alpha: float = 0.5,
-    rounds: int = 2,
-    out_dims: int = 4,
-    round_to: int = 6,
-) -> DataFrame:
-    """(vec_id, dim, val) — ``rounds`` of Laplacian feature smoothing
+def feature_propagation(emb: DataFrame, alpha: float = FP_ALPHA) -> DataFrame:
+    """(vec_id, dim, val) — ``FP_ROUNDS`` of Laplacian feature smoothing
     over the kNN graph: x' = (1−α)·x + α·mean(neighbor x). This IS the
     message-passing layer of a GNN (GCN aggregation with mean
     normalization), run relationally: per round one edge join against
     the (vec, dim, x) frame + one (vec, dim)-keyed mean — no vector
-    array ever crosses a shuffle whole. First ``out_dims`` dims
+    array ever crosses a shuffle whole. First ``FP_OUT_DIMS`` dims
     reported (the readout is dimension-wise; swap in all dims at will).
     kNN edges are the exact anchor; the LSH/IVF paths slot in at scale.
     """
-    e = knn_edges(emb, k).localCheckpoint(eager=True)
+    e = knn_edges(emb, FP_K).localCheckpoint(eager=True)
     x = emb.select(
         "vec_id",
         F.posexplode(
@@ -2359,34 +2337,28 @@ def feature_propagation(
             ).alias("x"),
         )
 
-    x, _, _ = iterate(x.localCheckpoint(eager=True), round_, rounds)
-    return x.filter(F.col("dim") <= out_dims).select(
+    x, _, _ = iterate(x.localCheckpoint(eager=True), round_, FP_ROUNDS)
+    return x.filter(F.col("dim") <= FP_OUT_DIMS).select(
         "vec_id",
         F.col("dim").cast("long").alias("dim"),
-        F.round("x", round_to).alias("val"),
+        F.round("x", ROUND_TO).alias("val"),
     )
 
 
-def feature_propagation_sql(
-    k: int = 5,
-    alpha: float = 0.5,
-    rounds: int = 2,
-    out_dims: int = 4,
-    round_to: int = 6,
-) -> str:
+def feature_propagation_sql() -> str:
     ctes = [
         EMB_NORM_SQL.strip(),
-        knn_edges_sql(k),
+        knn_edges_sql(FP_K),
         """fp_0 AS MATERIALIZED (
   SELECT vec_id, unnest(generate_series(1, len(embedding))) AS dim,
          unnest(embedding::DOUBLE[]) AS x
   FROM embeddings)""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, FP_ROUNDS + 1):
         ctes.append(
             f"""fp_{r} AS MATERIALIZED (
   SELECT s.vec_id, s.dim,
-         {1.0 - alpha} * s.x + {alpha} * COALESCE(m.nx, s.x) AS x
+         {1.0 - FP_ALPHA} * s.x + {FP_ALPHA} * COALESCE(m.nx, s.x) AS x
   FROM fp_{r - 1} s LEFT JOIN (
     SELECT e.src AS vec_id, t.dim, AVG(t.x) AS nx
     FROM knn_edges e JOIN fp_{r - 1} t ON t.vec_id = e.dst
@@ -2395,5 +2367,5 @@ def feature_propagation_sql(
         )
     joined = ",\n".join(ctes)
     return f"""WITH {joined}
-SELECT vec_id, CAST(dim AS BIGINT) AS dim, ROUND(x, {round_to}) AS val
-FROM fp_{rounds} WHERE dim <= {out_dims}"""
+SELECT vec_id, CAST(dim AS BIGINT) AS dim, ROUND(x, {ROUND_TO}) AS val
+FROM fp_{FP_ROUNDS} WHERE dim <= {FP_OUT_DIMS}"""

@@ -25,16 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..rounding import ROUND_TO
 from .hashing import h32, h32_sql
 
 HLL_M = 64  # registers (2^6 buckets)
 HLL_REST_BITS = 26  # 32-bit hash minus 6 bucket bits
 HLL_ALPHA = 0.709  # standard alpha_64
+HLL_ROUND_TO = 4
 
 
-def hll_distinct(
-    df: DataFrame, group_col: str, key_col: str, round_to: int = 4
-) -> DataFrame:
+def hll_distinct(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """Per-``group_col`` HLL estimate of distinct ``key_col`` values,
     with the exact count alongside so accuracy is auditable.
 
@@ -85,7 +85,7 @@ def hll_distinct(
         .agg(F.count_distinct(F.col(key_col)).cast("long").alias("exact_distinct"))
     )
     return (
-        agg.select("grp", F.round(est, round_to).alias("est_distinct"))
+        agg.select("grp", F.round(est, HLL_ROUND_TO).alias("est_distinct"))
         .join(exact, "grp")
         .select(
             F.col("grp").alias(group_col), "est_distinct", "exact_distinct"
@@ -93,9 +93,7 @@ def hll_distinct(
     )
 
 
-def hll_sql(
-    table: str, group_col: str, key_col: str, round_to: int = 4
-) -> str:
+def hll_sql(table: str, group_col: str, key_col: str) -> str:
     h = h32_sql(f"CAST({key_col} AS VARCHAR)")
     return f"""WITH hashed AS MATERIALIZED (
     SELECT {group_col} AS grp,
@@ -125,7 +123,7 @@ est AS (
 SELECT e.grp AS {group_col},
        ROUND(CASE WHEN raw <= {2.5 * HLL_M} AND empties > 0
              THEN {HLL_M}.0 * ln({HLL_M}.0 / empties)
-             ELSE raw END, {round_to}) AS est_distinct,
+             ELSE raw END, {HLL_ROUND_TO}) AS est_distinct,
        x.exact_distinct
 FROM est e
 JOIN (
@@ -139,14 +137,11 @@ JOIN (
 
 CM_DEPTH = 4
 CM_WIDTH = 256
+CM_TOP_K = 20
 
 
 def count_min_estimates(
-    df: DataFrame,
-    key_col: str,
-    top_k: int = 20,
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
+    df: DataFrame, key_col: str, top_k: int = CM_TOP_K, width: int = CM_WIDTH
 ) -> DataFrame:
     """(token, exact_cnt, cm_est) — build a depth×width count-min sketch
     over ``key_col`` occurrences, then read back the estimates for the
@@ -164,7 +159,7 @@ def count_min_estimates(
     """
     keys = df.select(F.col(key_col).cast("string").alias("key"))
     cnts = keys.groupBy("key").agg(F.count("*").cast("long").alias("cnt"))
-    j = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("j")
+    j = F.explode(F.array(*[F.lit(i) for i in range(CM_DEPTH)])).alias("j")
     cells = cnts.select("key", "cnt", j).select(
         "j",
         (
@@ -196,12 +191,7 @@ def count_min_estimates(
     )
 
 
-def count_min_sql(
-    keys_cte: str,
-    top_k: int = 20,
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
-) -> tuple[str, str]:
+def count_min_sql(keys_cte: str) -> tuple[str, str]:
     """(CTE text, final SELECT); ``keys_cte`` must expose one ``key``
     row per occurrence."""
     h = h32_sql("concat(CAST(j AS VARCHAR), ':', key)")
@@ -209,18 +199,18 @@ def count_min_sql(
     SELECT key, CAST(COUNT(*) AS BIGINT) AS cnt FROM {keys_cte} GROUP BY 1
 ),
 cm_sketch AS MATERIALIZED (
-    SELECT j, {h} % {width} AS col, CAST(SUM(cnt) AS BIGINT) AS c
-    FROM cm_cnt, UNNEST(generate_series(0, {depth - 1})) AS u(j)
+    SELECT j, {h} % {CM_WIDTH} AS col, CAST(SUM(cnt) AS BIGINT) AS c
+    FROM cm_cnt, UNNEST(generate_series(0, {CM_DEPTH - 1})) AS u(j)
     GROUP BY 1, 2
 ),
 cm_top AS MATERIALIZED (
-    SELECT key, cnt FROM cm_cnt ORDER BY cnt DESC, key ASC LIMIT {top_k}
+    SELECT key, cnt FROM cm_cnt ORDER BY cnt DESC, key ASC LIMIT {CM_TOP_K}
 )"""
     final = f"""SELECT t.key AS token, t.cnt AS exact_cnt,
        CAST(MIN(s.c) AS BIGINT) AS cm_est
-FROM cm_top t, UNNEST(generate_series(0, {depth - 1})) AS u(j), cm_sketch s
+FROM cm_top t, UNNEST(generate_series(0, {CM_DEPTH - 1})) AS u(j), cm_sketch s
 WHERE s.j = u.j
-  AND s.col = {h32_sql("concat(CAST(u.j AS VARCHAR), ':', t.key)")} % {width}
+  AND s.col = {h32_sql("concat(CAST(u.j AS VARCHAR), ':', t.key)")} % {CM_WIDTH}
 GROUP BY 1, 2"""
     return ctes, final
 
@@ -239,13 +229,11 @@ GROUP BY 1, 2"""
 # shortcut; this exposes the math for cross-engine verification.
 
 HIST_BIN_W = 10  # token-count bin width
+HIST_QUANTILES = (0.5, 0.9, 0.99)
 
 
 def histogram_quantiles(
-    docs: DataFrame,
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    bin_w: int = HIST_BIN_W,
-    round_to: int = 6,
+    docs: DataFrame, quantiles: tuple[float, ...] = HIST_QUANTILES
 ) -> DataFrame:
     """One row per requested quantile: (q, n, est) where est is the
     interpolated token-count quantile from the binned histogram."""
@@ -257,7 +245,7 @@ def histogram_quantiles(
     # the twin, silently shifting every cumulative count)
     binned = (
         docs.select(
-            F.expr(f"size(split(text, ' ')) div {bin_w}").alias("bin")
+            F.expr(f"size(split(text, ' ')) div {HIST_BIN_W}").alias("bin")
         )
         .filter(F.col("bin").isNotNull())
         .groupBy("bin")
@@ -298,19 +286,15 @@ def histogram_quantiles(
         "q",
         F.col("n").cast("long").alias("n"),
         F.round(
-            F.col("bin") * F.lit(float(bin_w)) + frac * F.lit(float(bin_w)),
-            round_to,
+            F.col("bin") * F.lit(float(HIST_BIN_W)) + frac * F.lit(float(HIST_BIN_W)),
+            ROUND_TO,
         ).alias("est"),
     )
 
 
-def histogram_quantiles_sql(
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    bin_w: int = HIST_BIN_W,
-    round_to: int = 6,
-) -> tuple[str, str]:
+def histogram_quantiles_sql() -> tuple[str, str]:
     """(CTE text, final SELECT) — composes after DOC_TOK_SQL."""
-    qvals = ", ".join(f"({q})" for q in quantiles)
+    qvals = ", ".join(f"({q})" for q in HIST_QUANTILES)
     ctes = f"""hq_cum AS MATERIALIZED (
     SELECT bin, cnt,
            SUM(cnt) OVER (ORDER BY bin) AS cum,
@@ -318,15 +302,15 @@ def histogram_quantiles_sql(
     FROM (
         -- NULL-text docs carry no token count: excluded from the
         -- histogram and the denominator (mirrors the Spark side)
-        SELECT len(t) // {bin_w} AS bin, COUNT(*) AS cnt
+        SELECT len(t) // {HIST_BIN_W} AS bin, COUNT(*) AS cnt
         FROM doc_tok WHERE t IS NOT NULL GROUP BY 1
     )
 ),
 hq_q AS (SELECT * FROM (VALUES {qvals}) AS t(q))"""
     final = f"""SELECT q, CAST(n AS BIGINT) AS n,
-       ROUND(bin * {float(bin_w)}
-             + ((q * n - (cum - cnt)) / cnt) * {float(bin_w)},
-             {round_to}) AS est
+       ROUND(bin * {float(HIST_BIN_W)}
+             + ((q * n - (cum - cnt)) / cnt) * {float(HIST_BIN_W)},
+             {ROUND_TO}) AS est
 FROM (
     SELECT q, bin, cnt, cum, n,
            ROW_NUMBER() OVER (PARTITION BY q ORDER BY bin) AS rn

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..rounding import ROUND_TO
 from .hashing import FINGERPRINT_MULT, FINGERPRINT_P
 
 # ---- tokenization (Spark + SQL twins) --------------------------------
@@ -297,7 +298,12 @@ FROM doc_tok"""
 
 # ---- corpus-prep pipeline (composite showcase) -----------------------
 
-def corpus_prep(spark, docs: DataFrame, min_quality: float = 0.55) -> DataFrame:
+CORPUS_MIN_QUALITY = 0.55
+
+
+def corpus_prep(
+    spark, docs: DataFrame, min_quality: float = CORPUS_MIN_QUALITY
+) -> DataFrame:
     """Training-corpus manifest: quality-filter -> language ID ->
     fingerprint-dedup (keep min doc_id per fingerprint) -> per-doc stats.
     The canonical LLM-data pipeline shape: every stage is a join/agg on
@@ -318,7 +324,7 @@ def corpus_prep(spark, docs: DataFrame, min_quality: float = 0.55) -> DataFrame:
     )
 
 
-def corpus_prep_sql(min_quality: float = 0.55) -> tuple[str, ...]:
+def corpus_prep_sql() -> tuple[str, ...]:
     """CTEs + final for the registry (reuses doc_tok/lang CTEs)."""
     quality_cte = f"""cp_quality AS MATERIALIZED (
     SELECT doc_id,
@@ -348,7 +354,7 @@ FROM cp_quality q
 JOIN cp_keep k ON q.doc_id = k.doc_id
 JOIN doc_tok d ON q.doc_id = d.doc_id
 LEFT JOIN lang_best b ON q.doc_id = b.doc_id
-WHERE q.quality >= {min_quality!r}"""
+WHERE q.quality >= {CORPUS_MIN_QUALITY!r}"""
     return quality_cte, fp_cte, keep_cte, final
 
 
@@ -358,9 +364,7 @@ BOILER_MIN_DF = 5      # a shingle in ≥ this many docs is boilerplate
 BOILER_FRAC = 0.5      # flag docs whose shingle set is ≥ this much boilerplate
 
 
-def boilerplate_flags(
-    docs: DataFrame, min_df: int = BOILER_MIN_DF, frac: float = BOILER_FRAC
-) -> DataFrame:
+def boilerplate_flags(docs: DataFrame, min_df: int = BOILER_MIN_DF) -> DataFrame:
     """(doc_id, n_shingles, n_boiler, boiler_frac, flagged) — the
     boilerplate-removal step of corpus cleaning: a shingle occurring in
     ≥ ``min_df`` distinct documents is template text (headers, nav,
@@ -394,20 +398,20 @@ def boilerplate_flags(
         "n_shingles",
         "n_boiler",
         F.round(bf, 6).alias("boiler_frac"),
-        (bf >= frac).alias("flagged"),
+        (bf >= BOILER_FRAC).alias("flagged"),
     )
 
 
-def boilerplate_sql(min_df: int = BOILER_MIN_DF, frac: float = BOILER_FRAC) -> str:
+def boilerplate_sql() -> str:
     """DuckDB twin (composes after DOC_TOK_SQL + DOC_SHINGLES_SQL)."""
     return f"""SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_shingles,
-       CAST(SUM(CASE WHEN f.df >= {min_df} THEN 1 ELSE 0 END) AS BIGINT)
+       CAST(SUM(CASE WHEN f.df >= {BOILER_MIN_DF} THEN 1 ELSE 0 END) AS BIGINT)
          AS n_boiler,
-       ROUND(SUM(CASE WHEN f.df >= {min_df} THEN 1 ELSE 0 END)
+       ROUND(SUM(CASE WHEN f.df >= {BOILER_MIN_DF} THEN 1 ELSE 0 END)
              / CAST(COUNT(*) AS DOUBLE), 6) AS boiler_frac,
-       (SUM(CASE WHEN f.df >= {min_df} THEN 1 ELSE 0 END)
-             / CAST(COUNT(*) AS DOUBLE)) >= {frac!r} AS flagged
+       (SUM(CASE WHEN f.df >= {BOILER_MIN_DF} THEN 1 ELSE 0 END)
+             / CAST(COUNT(*) AS DOUBLE)) >= {BOILER_FRAC!r} AS flagged
 FROM doc_shingles d
 JOIN (SELECT s, CAST(COUNT(*) AS BIGINT) AS df
       FROM doc_shingles GROUP BY 1) f ON d.s = f.s
@@ -418,17 +422,17 @@ GROUP BY doc_id"""
 
 CHUNK_TOKENS = 64  # window size
 CHUNK_STRIDE = 48  # start-to-start distance → 16-token overlap
+# a stride above the window would skip tokens, breaking the
+# every-token-covered guarantee
+assert 1 <= CHUNK_STRIDE <= CHUNK_TOKENS
+CHUNK_OVERLAP = CHUNK_TOKENS - CHUNK_STRIDE
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = CHUNK_TOKENS,
-    stride: int = CHUNK_STRIDE,
-) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """(doc_id, chunk_idx, n_tokens, chunk_fp) — fixed-size token
     windows with overlap, the context-window prep step of a pretraining
-    / RAG pipeline. Window starts are 1, 1+stride, … while
-    start ≤ max(n_tokens - overlap, 1), so every token is covered, the
+    / RAG pipeline. Window starts are 1, 1+CHUNK_STRIDE, … while
+    start ≤ max(n_tokens - CHUNK_OVERLAP, 1), so every token is covered, the
     final window may run short, and no window is a suffix-subset of its
     predecessor. ``chunk_fp`` is the same engine-portable rolling hash
     as ``doc_fingerprint`` over just the window's tokens, so chunks can
@@ -440,13 +444,6 @@ def chunk_documents(
     input tokens / stride regardless of document skew, since a huge
     document fans out inside its own partition.
     """
-    if stride > chunk_tokens or stride < 1:
-        raise ValueError(
-            f"stride must be in [1, chunk_tokens]: stride={stride}, "
-            f"chunk_tokens={chunk_tokens} (stride > chunk_tokens would "
-            "skip tokens, breaking the every-token-covered guarantee)"
-        )
-    overlap = chunk_tokens - stride
     # NULL text → no chunks (a phantom chunk with a NULL fingerprint
     # would otherwise be emitted: greatest() skips the NULL size and
     # sequence(1,1) yields one window over a NULL token array; the twin
@@ -458,8 +455,8 @@ def chunk_documents(
         "doc_id",
         F.posexplode(
             F.expr(
-                f"transform(sequence(1, greatest(size(t) - {overlap}, 1),"
-                f" {stride}), s -> slice(t, s, {chunk_tokens}))"
+                f"transform(sequence(1, greatest(size(t) - {CHUNK_OVERLAP}, 1),"
+                f" {CHUNK_STRIDE}), s -> slice(t, s, {CHUNK_TOKENS}))"
             )
         ).alias("chunk_idx", "ctoks"),
     )
@@ -476,20 +473,12 @@ def chunk_documents(
     )
 
 
-def chunk_documents_sql(
-    chunk_tokens: int = CHUNK_TOKENS, stride: int = CHUNK_STRIDE
-) -> str:
+def chunk_documents_sql() -> str:
     """DuckDB twin (composes after DOC_TOK_SQL); generate_series is
     inclusive and list_slice takes begin/end, both 1-based like Spark's
     sequence/slice."""
-    if stride > chunk_tokens or stride < 1:
-        raise ValueError(
-            f"stride must be in [1, chunk_tokens]: stride={stride}, "
-            f"chunk_tokens={chunk_tokens}"
-        )
-    overlap = chunk_tokens - stride
     return f"""SELECT doc_id,
-       CAST((s - 1) // {stride} AS BIGINT) AS chunk_idx,
+       CAST((s - 1) // {CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
        CAST(len(ctoks) AS BIGINT) AS n_tokens,
        list_reduce(
          list_prepend(CAST(0 AS BIGINT),
@@ -499,12 +488,12 @@ def chunk_documents_sql(
        AS chunk_fp
 FROM (
     SELECT doc_id, s,
-           list_slice(t, s, s + {chunk_tokens} - 1) AS ctoks
+           list_slice(t, s, s + {CHUNK_TOKENS} - 1) AS ctoks
     -- NULL text → no chunks (mirrors the Spark-side filter; DuckDB's
     -- greatest() skips the NULL length and would emit a phantom window)
     FROM doc_tok,
-         UNNEST(generate_series(1, greatest(len(t) - {overlap}, 1),
-                                {stride})) AS u(s)
+         UNNEST(generate_series(1, greatest(len(t) - {CHUNK_OVERLAP}, 1),
+                                {CHUNK_STRIDE})) AS u(s)
     WHERE t IS NOT NULL
 )"""
 
@@ -565,9 +554,9 @@ ORDER BY doc_id"""
 SOURCE_QUOTA = 15  # binds on the uniform 25-docs/source testdata
 
 
-def source_quota_sample(docs: DataFrame, quota: int = SOURCE_QUOTA) -> DataFrame:
+def source_quota_sample(docs: DataFrame) -> DataFrame:
     """(doc_id, source) — cap each source (domain/crawl feed) at
-    ``quota`` documents, keeping a deterministic uniform subset: docs
+    ``SOURCE_QUOTA`` documents, keeping a deterministic uniform subset: docs
     rank within their source by the same Knuth multiplicative hash as
     ``stratified_sample`` (id-stable, engine-portable), so re-runs and
     incremental refreshes keep the SAME representatives. This is the
@@ -586,12 +575,12 @@ def source_quota_sample(docs: DataFrame, quota: int = SOURCE_QUOTA) -> DataFrame
     return (
         docs.select("doc_id", "source")
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= quota)
+        .filter(F.col("rn") <= SOURCE_QUOTA)
         .select("doc_id", "source")
     )
 
 
-def source_quota_sql(quota: int = SOURCE_QUOTA) -> str:
+def source_quota_sql() -> str:
     return f"""SELECT doc_id, source FROM (
     SELECT doc_id, source,
            ROW_NUMBER() OVER (
@@ -600,7 +589,7 @@ def source_quota_sql(quota: int = SOURCE_QUOTA) -> str:
                         % {SAMPLE_MOD}, doc_id
            ) AS rn
     FROM documents
-) WHERE rn <= {quota}"""
+) WHERE rn <= {SOURCE_QUOTA}"""
 
 
 # ---- PII scrub -------------------------------------------------------
@@ -709,9 +698,7 @@ PMI_MIN_PAIR = 5   # ignore bigrams rarer than this (PMI is noise there)
 PMI_TOP_K = 50
 
 
-def collocations_pmi(
-    docs: DataFrame, min_pair: int = PMI_MIN_PAIR, top_k: int = PMI_TOP_K
-) -> DataFrame:
+def collocations_pmi(docs: DataFrame, min_pair: int = PMI_MIN_PAIR) -> DataFrame:
     """(w1, w2, n_pair, pmi) — top-k adjacent-token collocations by
     pointwise mutual information ln(p(w1,w2)/(p(w1)p(w2))): the phrase
     candidates a tokenizer/vocab builder promotes to merges. Rank is on
@@ -771,10 +758,10 @@ def collocations_pmi(
         )
         .select("w1", "w2", "n_pair", pmi.alias("pmi"))
     )
-    return scored.orderBy(F.desc("pmi"), "w1", "w2").limit(top_k)
+    return scored.orderBy(F.desc("pmi"), "w1", "w2").limit(PMI_TOP_K)
 
 
-def collocations_sql(min_pair: int = PMI_MIN_PAIR, top_k: int = PMI_TOP_K) -> str:
+def collocations_sql() -> str:
     """DuckDB twin (composes after DOC_TOK_SQL)."""
     return f"""SELECT w1, w2, n_pair,
        ROUND(ln((n_pair / (SELECT SUM(len(t) - 1) FROM doc_tok WHERE len(t) >= 2)::DOUBLE)
@@ -784,13 +771,13 @@ FROM (
     SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n_pair
     FROM (SELECT t[i] AS w1, t[i + 1] AS w2
           FROM doc_tok, UNNEST(generate_series(1, len(t) - 1)) AS g(i))
-    GROUP BY 1, 2 HAVING COUNT(*) >= {min_pair}
+    GROUP BY 1, 2 HAVING COUNT(*) >= {PMI_MIN_PAIR}
 ) p
 JOIN (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1 FROM
       (SELECT unnest(t) AS w FROM doc_tok) GROUP BY 1) u1 ON p.w1 = u1.w
 JOIN (SELECT w AS wb, CAST(COUNT(*) AS BIGINT) AS c2 FROM
       (SELECT unnest(t) AS w FROM doc_tok) GROUP BY 1) u2 ON p.w2 = u2.wb
-ORDER BY pmi DESC, w1, w2 LIMIT {top_k}"""
+ORDER BY pmi DESC, w1, w2 LIMIT {PMI_TOP_K}"""
 
 
 # ---- quality filter suite (Gopher/C4-style rules) --------------------
@@ -950,16 +937,14 @@ SKIPGRAM_WINDOW = 3
 SKIPGRAM_TOP_K = 100
 
 
-def skipgram_pairs(
-    docs: DataFrame, window: int = SKIPGRAM_WINDOW, top_k: int = SKIPGRAM_TOP_K
-) -> DataFrame:
+def skipgram_pairs(docs: DataFrame) -> DataFrame:
     # bind the token array in a lower projection: split() inside the
     # nested lambda would be re-evaluated per (i, j) pair (O(len^2)
     # per doc; measured 8.5s -> ~0.5s at sf0.1)
     pairs = (
         "CASE WHEN size(t) >= 2 THEN "
         "flatten(transform(sequence(1, size(t) - 1), "
-        f"i -> transform(sequence(i + 1, least(i + {window}, size(t))), "
+        f"i -> transform(sequence(i + 1, least(i + {SKIPGRAM_WINDOW}, size(t))), "
         "j -> struct(element_at(t, i) AS w1, element_at(t, j) AS w2)))) "
         "ELSE array() END"
     )
@@ -970,13 +955,11 @@ def skipgram_pairs(
         .groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("n_pairs"))
         .orderBy(F.desc("n_pairs"), "w1", "w2")
-        .limit(top_k)
+        .limit(SKIPGRAM_TOP_K)
     )
 
 
-def skipgram_sql(
-    window: int = SKIPGRAM_WINDOW, top_k: int = SKIPGRAM_TOP_K
-) -> str:
+def skipgram_sql() -> str:
     """DuckDB twin (composes after DOC_TOK_SQL)."""
     return f"""SELECT sub.p.w1 AS w1, sub.p.w2 AS w2,
        CAST(COUNT(*) AS BIGINT) AS n_pairs
@@ -984,11 +967,11 @@ FROM (
     SELECT unnest(flatten(list_transform(
         generate_series(1, len(t) - 1),
         i -> list_transform(
-            generate_series(i + 1, least(i + {window}, len(t))),
+            generate_series(i + 1, least(i + {SKIPGRAM_WINDOW}, len(t))),
             j -> {{'w1': t[i], 'w2': t[j]}})))) AS p
     FROM doc_tok WHERE len(t) >= 2
 ) sub GROUP BY 1, 2
-ORDER BY n_pairs DESC, w1, w2 LIMIT {top_k}"""
+ORDER BY n_pairs DESC, w1, w2 LIMIT {SKIPGRAM_TOP_K}"""
 
 
 # ---- Zipf fit --------------------------------------------------------
@@ -1069,7 +1052,7 @@ FROM (
 # broadcast back — no data-sized collect, no second scan.
 
 
-def mixture_weights(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def mixture_weights(docs: DataFrame) -> DataFrame:
     per = docs.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum(F.size(_tokens())).cast("long").alias("n_tokens"),
@@ -1085,21 +1068,21 @@ def mixture_weights(docs: DataFrame, round_to: int = 6) -> DataFrame:
             "source",
             "n_docs",
             "n_tokens",
-            F.round(share, round_to).alias("natural_share"),
-            F.round(target, round_to).alias("target_share"),
+            F.round(share, ROUND_TO).alias("natural_share"),
+            F.round(target, ROUND_TO).alias("target_share"),
             F.round(
-                F.least(F.lit(1.0), target / share), round_to
+                F.least(F.lit(1.0), target / share), ROUND_TO
             ).alias("sample_rate"),
         )
     )
 
 
-def mixture_weights_sql(round_to: int = 6) -> str:
+def mixture_weights_sql() -> str:
     """DuckDB twin (composes after DOC_TOK_SQL)."""
     return f"""SELECT source, n_docs, n_tokens,
-       ROUND(n_tokens / __t, {round_to}) AS natural_share,
-       ROUND(1.0 / __s, {round_to}) AS target_share,
-       ROUND(LEAST(1.0, (1.0 / __s) / (n_tokens / __t)), {round_to})
+       ROUND(n_tokens / __t, {ROUND_TO}) AS natural_share,
+       ROUND(1.0 / __s, {ROUND_TO}) AS target_share,
+       ROUND(LEAST(1.0, (1.0 / __s) / (n_tokens / __t)), {ROUND_TO})
            AS sample_rate
 FROM (
     SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1134,9 +1117,7 @@ CROSS JOIN (
 TOKEN_BUDGET = 10_000
 
 
-def token_budget_select(
-    docs: DataFrame, budget: int = TOKEN_BUDGET, round_to: int = 6
-) -> DataFrame:
+def token_budget_select(docs: DataFrame, budget: int = TOKEN_BUDGET) -> DataFrame:
     """(doc_id, quality, n_tokens) of the selected docs."""
     from pyspark.sql import Window
 
@@ -1152,7 +1133,7 @@ def token_budget_select(
                 - F.expr(f"size(filter(t, x -> x in ({_STOP_IN})))")
                 / F.expr("size(t)")
             ),
-            round_to,
+            ROUND_TO,
         ).alias("quality"),
     )
     levels = scored.groupBy("quality").agg(
@@ -1185,12 +1166,7 @@ def token_budget_select(
     )
 
 
-def token_budget_sql(
-    budget: int = TOKEN_BUDGET,
-    round_to: int = 6,
-    src_cte: str = "doc_tok",
-    prefix: str = "",
-) -> tuple[str, str]:
+def token_budget_sql(src_cte: str = "doc_tok", prefix: str = "") -> tuple[str, str]:
     """(CTE text, final SELECT) — DuckDB twin. ``src_cte`` must expose
     (doc_id, t); ``prefix`` namespaces the internal CTEs so the block
     can be embedded in larger chains (pretrain funnel)."""
@@ -1198,7 +1174,7 @@ def token_budget_sql(
     SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
            ROUND(0.7 * (len(list_distinct(t)) / len(t))
                  + 0.3 * (1.0 - len(list_filter(t, x -> x IN ({_STOP_IN})))
-                                / len(t)), {round_to}) AS quality
+                                / len(t)), {ROUND_TO}) AS quality
     FROM {src_cte}
 ),
 {prefix}lv AS MATERIALIZED (
@@ -1211,7 +1187,7 @@ def token_budget_sql(
 )"""
     final = f"""SELECT s.doc_id, s.n_tokens, s.quality
 FROM {prefix}scored s JOIN {prefix}lv lv ON s.quality = lv.quality
-WHERE lv.cum <= {budget}
+WHERE lv.cum <= {TOKEN_BUDGET}
 UNION ALL
 SELECT doc_id, n_tokens, quality FROM (
     SELECT s.doc_id, s.n_tokens, s.quality,
@@ -1219,9 +1195,9 @@ SELECT doc_id, n_tokens, quality FROM (
                + SUM(s.n_tokens) OVER (
                    PARTITION BY s.quality ORDER BY s.doc_id) AS run_tot
     FROM {prefix}scored s JOIN {prefix}lv lv ON s.quality = lv.quality
-    WHERE lv.cum > {budget} AND lv.prev_cum < {budget}
+    WHERE lv.cum > {TOKEN_BUDGET} AND lv.prev_cum < {TOKEN_BUDGET}
 )
-WHERE run_tot <= {budget}"""
+WHERE run_tot <= {TOKEN_BUDGET}"""
     return ctes, final
 
 
@@ -1234,7 +1210,7 @@ WHERE run_tot <= {budget}"""
 # scan, one small exchange.
 
 
-def corpus_report(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def corpus_report(docs: DataFrame) -> DataFrame:
     n_tok = F.expr("size(t)")
     quality = F.lit(0.7) * (
         F.expr("size(array_distinct(t))") / n_tok
@@ -1253,12 +1229,12 @@ def corpus_report(docs: DataFrame, round_to: int = 6) -> DataFrame:
     return per_doc.groupBy("source", "lang").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("n_tok").cast("long").alias("n_tokens"),
-        F.round(F.avg("q"), round_to).alias("mean_quality"),
-        F.round(F.avg("k"), round_to).alias("keep_rate"),
+        F.round(F.avg("q"), ROUND_TO).alias("mean_quality"),
+        F.round(F.avg("k"), ROUND_TO).alias("keep_rate"),
     )
 
 
-def corpus_report_sql(round_to: int = 6) -> str:
+def corpus_report_sql() -> str:
     """DuckDB twin (composes after DOC_TOK_SQL; joins back to documents
     for source/lang)."""
     return f"""SELECT source, lang,
@@ -1266,8 +1242,8 @@ def corpus_report_sql(round_to: int = 6) -> str:
        CAST(SUM(len(t)) AS BIGINT) AS n_tokens,
        ROUND(AVG(0.7 * (len(list_distinct(t)) / len(t))
                  + 0.3 * (1.0 - len(list_filter(t, x -> x IN ({_STOP_IN})))
-                                / len(t))), {round_to}) AS mean_quality,
-       ROUND(AVG(CAST({qf_keep_expr_sql()} AS INT)), {round_to})
+                                / len(t))), {ROUND_TO}) AS mean_quality,
+       ROUND(AVG(CAST({qf_keep_expr_sql()} AS INT)), {ROUND_TO})
            AS keep_rate
 FROM doc_tok dt JOIN documents d USING (doc_id)
 GROUP BY 1, 2"""
@@ -1284,9 +1260,7 @@ GROUP BY 1, 2"""
 # bounded aggregation, no new scale shapes.
 
 
-def pretrain_funnel(
-    docs_with_dups: DataFrame, budget: int = TOKEN_BUDGET
-) -> DataFrame:
+def pretrain_funnel(docs_with_dups: DataFrame) -> DataFrame:
     """(stage, name, n_docs, n_tokens) — 4 rows, ordered by stage."""
     def _stats(df, stage, name):
         return df.agg(
@@ -1313,7 +1287,7 @@ def pretrain_funnel(
         .select("doc_id", "text")
         .localCheckpoint(eager=True)
     )
-    sel = token_budget_select(deduped, budget)
+    sel = token_budget_select(deduped, TOKEN_BUDGET)
     sel_stats = sel.agg(
         F.lit(3).cast("long").alias("stage"),
         F.lit("budget").alias("name"),
@@ -1329,13 +1303,9 @@ def pretrain_funnel(
     )
 
 
-def pretrain_funnel_sql(
-    budget: int = TOKEN_BUDGET, round_to: int = 6
-) -> tuple[str, ...]:
+def pretrain_funnel_sql() -> tuple[str, ...]:
     """CTE chain + final SELECT — composes after DD_SQL."""
-    budget_ctes, budget_final = token_budget_sql(
-        budget, round_to, src_cte="pf_dedup", prefix="pf_"
-    )
+    budget_ctes, budget_final = token_budget_sql(src_cte="pf_dedup", prefix="pf_")
     keep = qf_keep_expr_sql()
     ctes = (
         f"""pf_keep AS MATERIALIZED (
@@ -1386,9 +1356,7 @@ VOCAB_TOP_V = 16  # the synthetic corpus has a 31-word vocabulary; a
 # realistic run uses 2^15..2^17 — the plan shape is V-independent
 
 
-def vocab_coverage(
-    docs: DataFrame, top_v: int = VOCAB_TOP_V, round_to: int = 6
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, top_v: int = VOCAB_TOP_V) -> DataFrame:
     """(source, n_tokens, n_oov, oov_rate) — OOV rate per source against
     the corpus-global top-``top_v`` vocabulary (count DESC, token ASC
     tie-break, so the cutoff is deterministic)."""
@@ -1407,27 +1375,25 @@ def vocab_coverage(
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
             oov.cast("long").alias("n_oov"),
-            F.round(oov / F.count("*"), round_to).alias("oov_rate"),
+            F.round(oov / F.count("*"), ROUND_TO).alias("oov_rate"),
         )
     )
 
 
-def vocab_coverage_sql(
-    top_v: int = VOCAB_TOP_V, round_to: int = 6
-) -> tuple[str, str]:
+def vocab_coverage_sql() -> tuple[str, str]:
     """(CTEs, final SELECT) DuckDB twin."""
     ctes = f"""vc_tok AS MATERIALIZED (
   SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents),
 vc_vocab AS MATERIALIZED (
   SELECT tok FROM (
     SELECT tok, COUNT(*) AS cnt FROM vc_tok GROUP BY 1)
-  ORDER BY cnt DESC, tok ASC LIMIT {top_v})"""
+  ORDER BY cnt DESC, tok ASC LIMIT {VOCAB_TOP_V})"""
     final = f"""SELECT source,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
        CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT)
            AS n_oov,
        ROUND(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) * 1.0
-             / COUNT(*), {round_to}) AS oov_rate
+             / COUNT(*), {ROUND_TO}) AS oov_rate
 FROM vc_tok t LEFT JOIN vc_vocab v ON t.tok = v.tok
 GROUP BY 1"""
     return ctes, final
@@ -1450,19 +1416,17 @@ BLOOM_M = 256  # bits
 BLOOM_K = 3  # hash functions
 
 
-def bloom_bits(
-    tokens: tuple[str, ...] = BLOCKLIST, m: int = BLOOM_M, k: int = BLOOM_K
-) -> list[int]:
+def bloom_bits() -> list[int]:
     """Set-bit positions of the fitted filter (driver-side fit)."""
     import hashlib
 
     from .hashing import MINHASH_A, MINHASH_B, MINHASH_P
 
     bits = set()
-    for t in tokens:
+    for t in BLOCKLIST:
         h = int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-        for j in range(k):
-            bits.add(((MINHASH_A[j] * h + MINHASH_B[j]) % MINHASH_P) % m)
+        for j in range(BLOOM_K):
+            bits.add(((MINHASH_A[j] * h + MINHASH_B[j]) % MINHASH_P) % BLOOM_M)
     return sorted(bits)
 
 
@@ -1479,12 +1443,7 @@ def _bloom_pred_sql(hcol: str, m: int, k: int, bits: list[int]) -> str:
     )
 
 
-def bloom_blocklist(
-    docs: DataFrame,
-    blocklist: tuple[str, ...] = BLOCKLIST,
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-) -> DataFrame:
+def bloom_blocklist(docs: DataFrame) -> DataFrame:
     """(source, n_docs, candidate_docs, flagged_docs, bloom_fp_docs) —
     Bloom-candidate vs exactly-confirmed blocklisted docs per source.
 
@@ -1493,17 +1452,17 @@ def bloom_blocklist(
     the k probe positions are cheap affine transforms above it."""
     from .hashing import h32
 
-    bits = bloom_bits(blocklist, m, k)
+    bits = bloom_bits()
     toks = docs.select(
         "source",
         "doc_id",
         F.explode(F.array_distinct(_tokens())).alias("tok"),
     ).withColumn("h", h32(F.col("tok")))
-    block_in = ", ".join(f"'{t}'" for t in blocklist)
+    block_in = ", ".join(f"'{t}'" for t in BLOCKLIST)
     flags = toks.select(
         "source",
         "doc_id",
-        F.expr(_bloom_pred_sql("h", m, k, bits)).cast("int").alias("cand"),
+        F.expr(_bloom_pred_sql("h", BLOOM_M, BLOOM_K, bits)).cast("int").alias("cand"),
         F.expr(f"tok IN ({block_in})").cast("int").alias("ex"),
     )
     per_doc = flags.groupBy("source", "doc_id").agg(
@@ -1521,16 +1480,12 @@ def bloom_blocklist(
     )
 
 
-def bloom_blocklist_sql(
-    blocklist: tuple[str, ...] = BLOCKLIST,
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-) -> tuple[str, str]:
+def bloom_blocklist_sql() -> tuple[str, str]:
     """(CTEs, final SELECT) DuckDB twin of :func:`bloom_blocklist`."""
     from .hashing import h32_sql
 
-    bits = bloom_bits(blocklist, m, k)
-    block_in = ", ".join(f"'{t}'" for t in blocklist)
+    bits = bloom_bits()
+    block_in = ", ".join(f"'{t}'" for t in BLOCKLIST)
     ctes = f"""bl_h AS MATERIALIZED (
   SELECT source, doc_id, tok, {h32_sql('tok')} AS h FROM (
     SELECT source, doc_id,
@@ -1538,7 +1493,7 @@ def bloom_blocklist_sql(
     FROM documents)),
 bl_doc AS MATERIALIZED (
   SELECT source, doc_id,
-         MAX(CASE WHEN {_bloom_pred_sql('h', m, k, bits)}
+         MAX(CASE WHEN {_bloom_pred_sql('h', BLOOM_M, BLOOM_K, bits)}
              THEN 1 ELSE 0 END) AS cand,
          MAX(CASE WHEN tok IN ({block_in}) THEN 1 ELSE 0 END) AS ex
   FROM bl_h GROUP BY 1, 2)"""
@@ -1554,7 +1509,7 @@ FROM bl_doc GROUP BY 1"""
 
 # ---- token entropy ---------------------------------------------------
 
-def token_entropy(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """(source, n_tokens, n_types, entropy_bits) — Shannon entropy of
     each source's token distribution (the information-density /
     degenerate-text screen: collapsed or templated sources score low).
@@ -1575,7 +1530,7 @@ def token_entropy(docs: DataFrame, round_to: int = 6) -> DataFrame:
     return per_cell.groupBy("source").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.count("*").cast("long").alias("n_types"),
-        F.round(F.sum("h_term"), round_to).alias("entropy_bits"),
+        F.round(F.sum("h_term"), ROUND_TO).alias("entropy_bits"),
     )
 
 
@@ -1607,10 +1562,8 @@ GROUP BY 1"""
 WSAMPLE_K = 64
 
 
-def weighted_sample(
-    docs: DataFrame, k: int = WSAMPLE_K, round_to: int = 6
-) -> DataFrame:
-    """(doc_id, n_tokens, key) — top-``k`` token-count-weighted sample
+def weighted_sample(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, key) — top-``WSAMPLE_K`` token-count-weighted sample
     (longer docs proportionally likelier; swap the weight column for
     quality/temperature mixing in a real run)."""
     from .hashing import MINHASH_A, MINHASH_B, MINHASH_P, h32
@@ -1626,12 +1579,12 @@ def weighted_sample(
             (F.log(u) / w).alias("__key"),
         )
         .orderBy(F.desc("__key"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "n_tokens", F.round("__key", round_to).alias("key"))
+        .limit(WSAMPLE_K)
+        .select("doc_id", "n_tokens", F.round("__key", ROUND_TO).alias("key"))
     )
 
 
-def weighted_sample_sql(k: int = WSAMPLE_K, round_to: int = 6) -> str:
+def weighted_sample_sql() -> str:
     from .hashing import MINHASH_A, MINHASH_B, MINHASH_P, h32_sql
 
     h = h32_sql("CAST(doc_id AS VARCHAR)")
@@ -1641,10 +1594,10 @@ def weighted_sample_sql(k: int = WSAMPLE_K, round_to: int = 6) -> str:
     )
     return f"""SELECT doc_id,
        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       ROUND(ln({u}) / len(string_split(text, ' ')), {round_to}) AS key
+       ROUND(ln({u}) / len(string_split(text, ' ')), {ROUND_TO}) AS key
 FROM documents
 ORDER BY ln({u}) / len(string_split(text, ' ')) DESC, doc_id ASC
-LIMIT {k}"""
+LIMIT {WSAMPLE_K}"""
 
 
 def langid_confusion(spark, docs: DataFrame) -> DataFrame:
@@ -1681,7 +1634,7 @@ SPLIT_VAL_PCT = 10
 SPLIT_TEST_PCT = 10
 
 
-def train_val_test_split(docs: DataFrame, round_to: int = 6) -> DataFrame:
+def train_val_test_split(docs: DataFrame) -> DataFrame:
     """(source, split, n_docs, n_tokens, doc_frac) — the canonical
     80/10/10 assignment, stratified per source by the same Knuth-hash
     bucket arithmetic as stratified_sample: deterministic, resumable,
@@ -1706,7 +1659,7 @@ def train_val_test_split(docs: DataFrame, round_to: int = 6) -> DataFrame:
         )
         .withColumn(
             "doc_frac",
-            F.round(F.col("n_docs") / F.sum("n_docs").over(tot), round_to),
+            F.round(F.col("n_docs") / F.sum("n_docs").over(tot), ROUND_TO),
         )
     )
 

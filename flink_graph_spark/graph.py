@@ -70,7 +70,6 @@ class Graph:
         self,
         vertices: DataFrame,
         edges: DataFrame,
-        src_partitioned: bool = False,
         distinct_edges: bool = False,
         canonical_edges: bool = False,
     ):
@@ -82,10 +81,6 @@ class Graph:
             raise InvalidGraphError(f"edges must have 'src' and 'dst' columns, got {ecols}")
         self._vertices = vertices
         self._edges = edges
-        #: edges are already cached, hash-partitioned by an endpoint (the
-        #: builders' posture), so the mode-vote loop (LPA) must not
-        #: re-shuffle or re-cache them.
-        self.src_partitioned = src_partitioned
         #: construction-time guarantee that no (src, dst) edge row is
         #: duplicated (e.g. the edge table is a groupBy output). Lets
         #: multigraph-guarded consumers (the triangle family) skip
@@ -133,7 +128,7 @@ class Graph:
         return Graph(vertices, edges)
 
     @staticmethod
-    def from_edges(edges: DataFrame, vertex_value: Column | None = None) -> "Graph":
+    def from_edges(edges: DataFrame) -> "Graph":
         """Derive the vertex set as the distinct edge endpoints.
 
         Reference: Graph.create(DataSet<Edge>, env), Graph.java ~L100-130.
@@ -145,8 +140,7 @@ class Graph:
             .unionByName(edges.select(F.col("dst").alias("id")))
             .distinct()
         )
-        value = vertex_value if vertex_value is not None else F.col("id")
-        return Graph(ids.select("id", value.alias("value")), edges)
+        return Graph(ids.select("id", F.col("id").alias("value")), edges)
 
     @staticmethod
     def from_collection(
@@ -267,15 +261,15 @@ class Graph:
             )
         )
 
-    def translate_vertex_values(self, fn, value_col: str = "value") -> "Graph":
+    def translate_vertex_values(self, fn) -> "Graph":
         """Gelly TranslateVertexValues — :meth:`map_vertices` with the
         translator applied to the current value column."""
-        return self.map_vertices(fn(F.col(value_col)), out_col=value_col)
+        return self.map_vertices(fn(F.col("value")), out_col="value")
 
-    def translate_edge_values(self, fn, value_col: str = "value") -> "Graph":
+    def translate_edge_values(self, fn) -> "Graph":
         """Gelly TranslateEdgeValues — :meth:`map_edges` with the
         translator applied to the current value column."""
-        return self.map_edges(fn(F.col(value_col)), out_col=value_col)
+        return self.map_edges(fn(F.col("value")), out_col="value")
 
     def reverse(self) -> "Graph":
         """Swap src/dst of every edge (reverse ~L380-400)."""
@@ -354,10 +348,7 @@ class Graph:
     # ------------------------------------------------------------------
 
     def join_with_vertices(
-        self,
-        other: DataFrame,
-        merge: Callable[[Column, Column], Column],
-        value_col: str = "value",
+        self, other: DataFrame, merge: Callable[[Column, Column], Column]
     ) -> "Graph":
         """vertices ⟕ other(id, <t>) — on match value' = merge(value, t),
         else keep old value (joinWithVertices ~L405-445).
@@ -371,15 +362,15 @@ class Graph:
             F.col(tcol).alias("__t"),
             F.lit(True).alias("__matched"),
         )
-        keep = [c for c in self._vertices.columns if c not in ("id", value_col)]
+        keep = [c for c in self._vertices.columns if c not in ("id", "value")]
         merged = (
             self._vertices.join(o, self._vertices["id"] == o["__jid"], "left")
             .select(
                 "id",
                 *keep,
-                F.when(F.col("__matched").isNotNull(), merge(F.col(value_col), F.col("__t")))
-                .otherwise(F.col(value_col))
-                .alias(value_col),
+                F.when(F.col("__matched").isNotNull(), merge(F.col("value"), F.col("__t")))
+                .otherwise(F.col("value"))
+                .alias("value"),
             )
         )
         return self._count_preserved(
@@ -508,69 +499,13 @@ class Graph:
         """
         return self._edges_keyed(direction).groupBy("id").agg(*aggs)
 
-    def reduce_on_neighbors(
-        self,
-        aggs: Sequence[Column],
-        direction: EdgeDirection = EdgeDirection.OUT,
-        neighbor_prefix: str = "nbr_",
-    ) -> DataFrame:
-        """Group (edge, neighbor-vertex) pairs per vertex and aggregate
-        (reduceOnNeighbors ~L560-640) — edges ⋈ vertices then hash agg.
-
-        Neighbor vertex value columns are exposed as ``nbr_<col>`` to the
-        agg expressions. OUT: owner=src, neighbor=dst; IN: owner=dst,
-        neighbor=src; ALL: both (single explode pass).
-        """
+    def _neighbor_pairs(self, direction: EdgeDirection) -> DataFrame:
+        """(id, __nid, edge values, nbr_<vertex value>) — one row per
+        (owner, edge, neighbor). OUT: owner=src, neighbor=dst; IN:
+        owner=dst, neighbor=src; ALL: both (single explode pass)."""
         nbr = self._vertices.select(
             F.col("id").alias("__nid"),
-            *[
-                F.col(c).alias(f"{neighbor_prefix}{c}")
-                for c in self._schema.vertex_value_cols
-            ],
-        )
-        e = self._edges
-        if direction == EdgeDirection.OUT:
-            pairs = e.select(F.col("src").alias("id"), F.col("dst").alias("__nid"), *self._schema.edge_value_cols)
-        elif direction == EdgeDirection.IN:
-            pairs = e.select(F.col("dst").alias("id"), F.col("src").alias("__nid"), *self._schema.edge_value_cols)
-        else:
-            pairs = e.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("src").alias("id"), F.col("dst").alias("__nid")),
-                        F.struct(F.col("dst").alias("id"), F.col("src").alias("__nid")),
-                    )
-                ).alias("__p"),
-                *self._schema.edge_value_cols,
-            ).select("__p.id", "__p.__nid", *self._schema.edge_value_cols)
-        return (
-            pairs.join(nbr, "__nid")
-            .groupBy("id")
-            .agg(*aggs)
-        )
-
-    def reduce_on_neighbors_udf(
-        self,
-        func,
-        schema: str,
-        direction: EdgeDirection = EdgeDirection.OUT,
-        neighbor_prefix: str = "nbr_",
-    ) -> DataFrame:
-        """Arbitrary-Python neighborhood reduce — the escape hatch for
-        logic Column expressions can't say (reference UDF surface:
-        NeighborsFunction with arbitrary Java code; SURVEY §2.10).
-
-        ``func(pdf) -> pdf`` runs per vertex group via Arrow-batched
-        ``applyInPandas`` over the (owner id, edge values, nbr_* values)
-        frame. Use native aggs (``reduce_on_neighbors``) whenever
-        possible — this path ships the group through Python.
-        """
-        nbr = self._vertices.select(
-            F.col("id").alias("__nid"),
-            *[
-                F.col(c).alias(f"{neighbor_prefix}{c}")
-                for c in self._schema.vertex_value_cols
-            ],
+            *[F.col(c).alias(f"nbr_{c}") for c in self._schema.vertex_value_cols],
         )
         e = self._edges
         evals = self._schema.edge_value_cols
@@ -588,8 +523,33 @@ class Graph:
                 ).alias("__p"),
                 *evals,
             ).select("__p.id", "__p.__nid", *evals)
+        return pairs.join(nbr, "__nid")
+
+    def reduce_on_neighbors(
+        self, aggs: Sequence[Column], direction: EdgeDirection = EdgeDirection.OUT
+    ) -> DataFrame:
+        """Group (edge, neighbor-vertex) pairs per vertex and aggregate
+        (reduceOnNeighbors ~L560-640) — edges ⋈ vertices then hash agg.
+
+        Neighbor vertex value columns are exposed as ``nbr_<col>`` to the
+        agg expressions (see :meth:`_neighbor_pairs` for the directions).
+        """
+        return self._neighbor_pairs(direction).groupBy("id").agg(*aggs)
+
+    def reduce_on_neighbors_udf(
+        self, func, schema: str, direction: EdgeDirection = EdgeDirection.OUT
+    ) -> DataFrame:
+        """Arbitrary-Python neighborhood reduce — the escape hatch for
+        logic Column expressions can't say (reference UDF surface:
+        NeighborsFunction with arbitrary Java code; SURVEY §2.10).
+
+        ``func(pdf) -> pdf`` runs per vertex group via Arrow-batched
+        ``applyInPandas`` over the (owner id, edge values, nbr_* values)
+        frame. Use native aggs (``reduce_on_neighbors``) whenever
+        possible — this path ships the group through Python.
+        """
         return (
-            pairs.join(nbr, "__nid")
+            self._neighbor_pairs(direction)
             .drop("__nid")
             .groupBy("id")
             .applyInPandas(func, schema)
@@ -608,16 +568,13 @@ class Graph:
         return self._vertices.join(grouped, "id", "left")
 
     def reduce_on_neighbors_with_vertex_value(
-        self,
-        aggs: Sequence[Column],
-        direction: EdgeDirection = EdgeDirection.OUT,
-        neighbor_prefix: str = "nbr_",
+        self, aggs: Sequence[Column], direction: EdgeDirection = EdgeDirection.OUT
     ) -> DataFrame:
         """reduceOnNeighbors with the owning vertex's value
         (NeighborsFunctionWithVertexValue): neighbor-side join + agg,
         then LEFT join back to the owner's row.
         """
-        grouped = self.reduce_on_neighbors(aggs, direction, neighbor_prefix)
+        grouped = self.reduce_on_neighbors(aggs, direction)
         return self._vertices.join(grouped, "id", "left")
 
     def aggregate_messages(
@@ -818,16 +775,16 @@ class Graph:
         )
         return Graph(v, e)
 
-    def remove_edge(self, src, dst, value=None, value_col: str = "value") -> "Graph":
+    def remove_edge(self, src, dst, value=None) -> "Graph":
         """Drop matching (src,dst[,value]) edges (removeEdge ~L865-890)."""
         cond = (F.col("src") == F.lit(src)) & (F.col("dst") == F.lit(dst))
         if value is not None:
-            cond = cond & (F.col(value_col) == F.lit(value))
+            cond = cond & (F.col("value") == F.lit(value))
         return self._count_preserved(
             Graph(self._vertices, self._edges.filter(~cond))
         )
 
-    def intersect(self, other: "Graph", distinct_edges: bool = True) -> "Graph":
+    def intersect(self, other: "Graph") -> "Graph":
         """Edges present in BOTH graphs (matched on src, dst and every
         edge value column); vertices = ids present in both, keeping this
         graph's values.
@@ -839,9 +796,7 @@ class Graph:
         """
         e = self._edges.join(
             other._edges, on=list(self._edges.columns), how="left_semi"
-        )
-        if distinct_edges:
-            e = e.dropDuplicates()
+        ).dropDuplicates()
         v = self._vertices.join(other._vertices.select("id"), "id", "left_semi")
         return Graph(v, e)
 

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..operators.iterate import waves
 from ..plans.checkpoints import scratch_scope
+from ..rounding import ROUND_TO
 
 
 @scratch_scope
@@ -95,7 +96,7 @@ def _degrees_and_orientation(
 
 
 @scratch_scope
-def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
+def adamic_adar(graph: Graph, round_to: int | None = ROUND_TO) -> DataFrame:
     """Returns (src, dst, aa) for every edge; neighborhoods over the
     undirected view, 0.0 when the endpoints share no neighbor."""
     e = graph.edges.select("src", "dst")
@@ -257,7 +258,7 @@ def adamic_adar(graph: Graph, round_to: int = 6) -> DataFrame:
     )
 
 
-def oracle_ctes(edges_cte: str, round_to: int = 6) -> tuple[str, str]:
+def oracle_ctes(edges_cte: str) -> tuple[str, str]:
     """(CTE text, final SELECT); same shape as jaccard.oracle_ctes."""
     ctes = [
         f"""aa_adj AS MATERIALIZED (
@@ -277,7 +278,7 @@ def oracle_ctes(edges_cte: str, round_to: int = 6) -> tuple[str, str]:
 )""",
     ]
     final = f"""SELECT e.src, e.dst,
-       ROUND(COALESCE(c.s, 0.0), {round_to}) AS aa
+       ROUND(COALESCE(c.s, 0.0), {ROUND_TO}) AS aa
 FROM {edges_cte} e
 LEFT JOIN aa_s c ON c.src = e.src AND c.dst = e.dst"""
     return ",\n".join(ctes), final

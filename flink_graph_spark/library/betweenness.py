@@ -26,35 +26,24 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.checkpoints import scratch_scope
+from ..rounding import ROUND_TO
 
 
 @scratch_scope
-def betweenness(
-    graph: Graph,
-    max_depth: int,
-    seeds: tuple[int, ...] | None = None,
-    round_to: int = 6,
-) -> DataFrame:
-    """(id, betweenness) over the undirected view of ``graph``.
+def betweenness(graph: Graph, max_depth: int) -> DataFrame:
+    """(id, betweenness) over the undirected view of ``graph``, with
+    every vertex a source.
 
-    ``max_depth`` bounds the BFS (the graph diameter for exact results);
-    ``seeds`` restricts sources for the sampled estimator (None = all
-    vertices = exact).
+    ``max_depth`` bounds the BFS (the graph diameter for exact results).
     """
     sym = graph.symmetrized_edges().localCheckpoint(eager=True)
     v = graph.vertices.select("id")
-    if seeds is None:
-        seed_df = v
-    else:
-        seed_df = v.sparkSession.createDataFrame(
-            [(s,) for s in seeds], "id long"
-        )
     # ---- forward sweep: dist + path counts, all sources at once ----
     # One checkpoint per level (the frontier). The seen-set for the
     # anti-join is the union of checkpointed level frames — no second
     # materialization job per round.
     levels: list[DataFrame] = [
-        seed_df.select(
+        v.select(
             F.col("id").alias("s"),
             F.col("id").alias("v"),
             F.lit(1).cast("long").alias("sigma"),
@@ -124,13 +113,13 @@ def betweenness(
         .agg(F.sum("dep").alias("bc"))
     )
     return v.join(bc, v["id"] == bc["v"], "left").select(
-        "id", F.round(F.coalesce(F.col("bc"), F.lit(0.0)), round_to).alias(
+        "id", F.round(F.coalesce(F.col("bc"), F.lit(0.0)), ROUND_TO).alias(
             "betweenness"
         )
     )
 
 
-def grid_oracle_sql(rows: int, cols: int, round_to: int = 6) -> str:
+def grid_oracle_sql(rows: int, cols: int) -> str:
     """DuckDB oracle for exact betweenness on the undirected rows×cols
     grid: enumerate every simple walk up to the grid diameter, keep the
     shortest per ordered pair, count pass-throughs — the definition,
@@ -170,5 +159,5 @@ gb_bc AS (
   SELECT th.v, SUM(th.cnt * 1.0 / sg.sig) AS bc
   FROM gb_through th JOIN gb_sigma sg ON sg.s = th.s AND sg.t = th.t
   GROUP BY 1)
-SELECT i AS id, ROUND(COALESCE(bc, 0.0), {round_to}) AS betweenness
+SELECT i AS id, ROUND(COALESCE(bc, 0.0), {ROUND_TO}) AS betweenness
 FROM generate_series(0, {n - 1}) g(i) LEFT JOIN gb_bc ON gb_bc.v = g.i"""

@@ -28,9 +28,7 @@ PROJ_CAP = 64
 PROJ_TOP_K = 1000
 
 
-def project_top(
-    graph: Graph, cap: int = PROJ_CAP, top_k: int = PROJ_TOP_K
-) -> DataFrame:
+def project_top(graph: Graph, cap: int = PROJ_CAP) -> DataFrame:
     """(u, v, shared) — top-side pairs (u < v, both sources) sharing at
     least one target, weight = number of shared (capped) targets;
     deterministic top-k by (shared DESC, u, v)."""
@@ -51,13 +49,11 @@ def project_top(
         .groupBy("u", "v")
         .agg(F.count("*").cast("long").alias("shared"))
         .orderBy(F.desc("shared"), "u", "v")
-        .limit(top_k)
+        .limit(PROJ_TOP_K)
     )
 
 
-def project_top_sql(
-    edges_cte: str, cap: int = PROJ_CAP, top_k: int = PROJ_TOP_K
-) -> str:
+def project_top_sql(edges_cte: str) -> str:
     """DuckDB twin over an (src, dst) edges CTE."""
     return f"""SELECT a.src AS u, b.src AS v,
        CAST(COUNT(*) AS BIGINT) AS shared
@@ -66,14 +62,14 @@ FROM (
         SELECT src, dst,
                ROW_NUMBER() OVER (PARTITION BY dst ORDER BY src) AS rn
         FROM {edges_cte}
-    ) WHERE rn <= {cap}
+    ) WHERE rn <= {PROJ_CAP}
 ) a
 JOIN (
     SELECT src, dst FROM (
         SELECT src, dst,
                ROW_NUMBER() OVER (PARTITION BY dst ORDER BY src) AS rn
         FROM {edges_cte}
-    ) WHERE rn <= {cap}
+    ) WHERE rn <= {PROJ_CAP}
 ) b ON a.dst = b.dst AND a.src < b.src
 GROUP BY 1, 2
-ORDER BY shared DESC, u, v LIMIT {top_k}"""
+ORDER BY shared DESC, u, v LIMIT {PROJ_TOP_K}"""

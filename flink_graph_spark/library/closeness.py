@@ -24,13 +24,11 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..operators.pregel import pregel
+from ..rounding import ROUND_TO
 
 
 def closeness_sample(
-    graph: Graph,
-    seeds: tuple[int, ...],
-    max_iter: int = 6,
-    round_to: int = 6,
+    graph: Graph, seeds: tuple[int, ...], max_iter: int = 6
 ) -> DataFrame:
     """(id, n_reached, closeness) for every vertex: harmonic closeness
     over hop distances FROM each seed (edges followed src→dst and
@@ -83,18 +81,14 @@ def closeness_sample(
                     ),
                     F.lit(0.0),
                 ),
-                round_to,
+                ROUND_TO,
             ).alias("closeness"),
         )
     )
 
 
 def oracle_ctes(
-    edges_cte: str,
-    vertices_cte: str,
-    seeds: tuple[int, ...],
-    max_iter: int = 6,
-    round_to: int = 6,
+    edges_cte: str, vertices_cte: str, seeds: tuple[int, ...], max_iter: int = 6
 ) -> tuple[str, str]:
     """(CTE text, final SELECT) — unrolled min-propagation over the
     seed-replicated encoded graph (same encoding as the Spark side)."""
@@ -130,7 +124,7 @@ def oracle_ctes(
     final = f"""SELECT id // {k} AS id,
        CAST(COUNT(dist) AS BIGINT) AS n_reached,
        ROUND(COALESCE(SUM(CASE WHEN dist > 0 THEN 1.0 / dist END), 0.0),
-             {round_to}) AS closeness
+             {ROUND_TO}) AS closeness
 FROM cl_d{max_iter}
 GROUP BY 1"""
     return ",\n".join(ctes), final

@@ -37,9 +37,12 @@ from pyspark.sql import functions as F
 from ..graph import Graph, GraphAlgorithm
 from ..operators.iterate import iterate
 from ..plans.reuse import reuse_leaf
+from ..rounding import ROUND_TO
 
 
-def hits(graph: Graph, max_iter: int = 5, round_to: int | None = 6) -> DataFrame:
+def hits(
+    graph: Graph, max_iter: int = 5, round_to: int | None = ROUND_TO
+) -> DataFrame:
     """Returns (id, hub, auth), both L1-normalized, after ``max_iter``
     full (auth then hub) iterations."""
 
@@ -96,10 +99,7 @@ def hits(graph: Graph, max_iter: int = 5, round_to: int | None = 6) -> DataFrame
 
 
 def oracle_ctes(
-    edges_cte: str,
-    vertices_cte: str,
-    max_iter: int = 5,
-    round_to: int = 6,
+    edges_cte: str, vertices_cte: str, max_iter: int = 5
 ) -> tuple[str, str]:
     """(extra CTE text, final SELECT) — unrolled HITS with the same
     deferred-normalization semantics, composable by the caller exactly
@@ -135,9 +135,9 @@ def oracle_ctes(
     final = (
         f"SELECT id,"
         f" ROUND(hub / NULLIF((SELECT SUM(hub) FROM ha{max_iter}), 0.0),"
-        f" {round_to}) AS hub,"
+        f" {ROUND_TO}) AS hub,"
         f" ROUND(auth / NULLIF((SELECT SUM(auth) FROM ha{max_iter}), 0.0),"
-        f" {round_to}) AS auth"
+        f" {ROUND_TO}) AS auth"
         f" FROM ha{max_iter}"
     )
     return ",\n".join(ctes), final

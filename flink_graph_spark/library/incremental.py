@@ -39,6 +39,8 @@ from ..graph import Graph
 from ..operators.iterate import iterate
 from ..operators.pregel import pregel
 from ..plans.checkpoints import scratch_scope
+from ..rounding import ROUND_TO
+from .pagerank import BETA, page_rank
 
 
 def incremental_sssp_remove_edge(
@@ -109,14 +111,16 @@ def incremental_sssp_remove_edge(
 
 # ---- incremental PageRank (warm restart under edge insertion) --------
 
+INCR_PRE_ITER = 6
+INCR_POST_ITER = 3
+
+
 @scratch_scope
 def incremental_pagerank(
     graph: Graph,
     added_edges: DataFrame,
-    pre_iter: int = 6,
-    post_iter: int = 3,
-    beta: float = 0.85,
-    round_to: int = 6,
+    pre_iter: int = INCR_PRE_ITER,
+    post_iter: int = INCR_POST_ITER,
 ) -> DataFrame:
     """(id, rank) — PageRank maintained under edge insertion: run
     ``pre_iter`` supersteps on the base graph, add the edges, then
@@ -127,9 +131,7 @@ def incremental_pagerank(
     the PageRank face of the same incremental-maintenance contract as
     :func:`incremental_sssp_remove_edge`. The oracle replays both
     phases unrolled."""
-    from ..library import pagerank as pr_mod
-
-    r = pr_mod.page_rank(graph, beta, pre_iter, round_to=None)
+    r = page_rank(graph, BETA, pre_iter, round_to=None)
     e2 = graph.edges.unionByName(
         added_edges.select(*graph.edges.columns)
     ).localCheckpoint(eager=True)
@@ -140,7 +142,7 @@ def incremental_pagerank(
     if n == 0:
         # empty base graph: page_rank already returned the empty
         # ranking; no resume phase to run (1/n teleport is undefined)
-        return r.select("id", F.round("rank", round_to).alias("rank"))
+        return r.select("id", F.round("rank", ROUND_TO).alias("rank"))
 
     def superstep(r: DataFrame, _it: int) -> DataFrame:
         contrib = (
@@ -152,22 +154,16 @@ def incremental_pagerank(
         return graph.vertices.select("id").join(contrib, "id", "left").select(
             "id",
             (
-                F.lit((1.0 - beta) / n) + F.lit(beta) * F.coalesce("s", F.lit(0.0))
+                F.lit((1.0 - BETA) / n) + F.lit(BETA) * F.coalesce("s", F.lit(0.0))
             ).alias("rank"),
         )
 
     r, _, _ = iterate(r, superstep, post_iter)
-    return r.select("id", F.round("rank", round_to).alias("rank"))
+    return r.select("id", F.round("rank", ROUND_TO).alias("rank"))
 
 
 def incr_pagerank_oracle(
-    edges_cte: str,
-    vertices_cte: str,
-    added_values: str,
-    pre_iter: int = 6,
-    post_iter: int = 3,
-    beta: float = 0.85,
-    round_to: int = 6,
+    edges_cte: str, vertices_cte: str, added_values: str
 ) -> tuple[str, str]:
     """(CTEs, final SELECT): phase-1 unrolled PR on the base edges,
     phase-2 resumed on base ∪ ``added_values`` (SQL VALUES rows of
@@ -184,8 +180,8 @@ def incr_pagerank_oracle(
             ctes.append(
                 f"""{prefix}_r{i} AS MATERIALIZED (
   SELECT v.id,
-         (1.0 - {beta!r}) / (SELECT COUNT(*) FROM {vertices_cte})
-           + {beta!r} * COALESCE(m.s, 0.0) AS rank
+         (1.0 - {BETA!r}) / (SELECT COUNT(*) FROM {vertices_cte})
+           + {BETA!r} * COALESCE(m.s, 0.0) AS rank
   FROM {vertices_cte} v
   LEFT JOIN (
     SELECT e.dst AS id, SUM(r.rank / d.outdeg) AS s
@@ -207,7 +203,7 @@ def incr_pagerank_oracle(
   UNION ALL
   SELECT * FROM (VALUES {added_values}) t(src, dst, value))""",
     ]
-    p1, last1 = phase("ip_a", edges_cte, pre_iter, "ip_r0")
-    p2, last2 = phase("ip_b", "ip_e2", post_iter, last1)
-    final = f"SELECT id, ROUND(rank, {round_to}) AS rank FROM {last2}"
+    p1, last1 = phase("ip_a", edges_cte, INCR_PRE_ITER, "ip_r0")
+    p2, last2 = phase("ip_b", "ip_e2", INCR_POST_ITER, last1)
+    final = f"SELECT id, ROUND(rank, {ROUND_TO}) AS rank FROM {last2}"
     return ",\n".join(base + p1 + p2), final

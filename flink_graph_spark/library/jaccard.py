@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..operators.iterate import waves
 from ..plans.checkpoints import scratch_scope
+from ..rounding import ROUND_TO
 
 #: Sizing itself must not add driver actions to small queries: the
 #: payload agg only runs when the edge count is known (the graph's
@@ -61,11 +62,7 @@ def _adjacency_payload_bytes(adj: DataFrame) -> int:
 
 
 @scratch_scope
-def jaccard_similarity(
-    graph: Graph,
-    round_to: int = 6,
-    n_edges_hint: int | None = None,
-) -> DataFrame:
+def jaccard_similarity(graph: Graph, n_edges_hint: int | None = None) -> DataFrame:
     """Returns (src, dst, jaccard) for every edge. Neighborhoods are over
     the undirected view, neighbor sets are distinct ids.
 
@@ -129,7 +126,7 @@ def jaccard_similarity(
                 F.round(
                     F.col("common")
                     / (F.size("na") + F.size("nb") - F.col("common")),
-                    round_to,
+                    ROUND_TO,
                 ).alias("jaccard"),
             )
         )
@@ -165,7 +162,7 @@ def jaccard_similarity(
     return waves(e, lambda w: _attach(w, adj), n_waves, ("src", "dst"))
 
 
-def oracle_ctes(edges_cte: str, round_to: int = 6) -> tuple[str, str]:
+def oracle_ctes(edges_cte: str) -> tuple[str, str]:
     ctes = [
         f"""jc_adj AS MATERIALIZED (
   SELECT src AS id, dst AS nbr FROM {edges_cte}
@@ -183,7 +180,7 @@ def oracle_ctes(edges_cte: str, round_to: int = 6) -> tuple[str, str]:
     ]
     final = f"""SELECT e.src, e.dst,
        ROUND(CAST(COALESCE(c.common, 0) AS DOUBLE)
-             / (ds.deg + dd.deg - COALESCE(c.common, 0)), {round_to}) AS jaccard
+             / (ds.deg + dd.deg - COALESCE(c.common, 0)), {ROUND_TO}) AS jaccard
 FROM {edges_cte} e
 JOIN jc_deg ds ON ds.id = e.src
 JOIN jc_deg dd ON dd.id = e.dst

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..plans.checkpoints import release_local_checkpoint
 from ..plans.reuse import reuse_leaf
+from ..rounding import ROUND_TO
 
 
 def k_core(graph: Graph, k: int = 3, max_iter: int = 8) -> DataFrame:
@@ -118,9 +119,7 @@ class KCore:
 RICH_CLUB_KS = (2, 4, 8, 16, 32, 64)
 
 
-def rich_club(
-    graph: Graph, ks: tuple[int, ...] = RICH_CLUB_KS, round_to: int = 6
-) -> DataFrame:
+def rich_club(graph: Graph, ks: tuple[int, ...] = RICH_CLUB_KS) -> DataFrame:
     """(k, n_rich, e_rich, phi) — rich-club coefficient φ(k) =
     2·E_k / (N_k·(N_k−1)) over the hub ladder ``ks`` (Colizza et al.
     2006): do high-degree vertices preferentially interconnect?
@@ -171,15 +170,13 @@ def rich_club(
                 F.lit(2.0)
                 * F.col("e_rich")
                 / (F.col("n_rich") * (F.col("n_rich") - 1)),
-                round_to,
+                ROUND_TO,
             ),
         ).alias("phi"),
     )
 
 
-def rich_club_ctes(
-    edges_cte: str, ks: tuple[int, ...] = RICH_CLUB_KS, round_to: int = 6
-) -> tuple[str, str]:
+def rich_club_ctes(edges_cte: str) -> tuple[str, str]:
     """(CTEs, final SELECT) DuckDB twin of :func:`rich_club`."""
     ctes = f"""rc_deg AS MATERIALIZED (
   SELECT id, COUNT(*) AS deg FROM (
@@ -191,7 +188,7 @@ rc_md AS MATERIALIZED (
   JOIN rc_deg d1 ON e.src = d1.id
   JOIN rc_deg d2 ON e.dst = d2.id)"""
     selects = []
-    for k in ks:
+    for k in RICH_CLUB_KS:
         selects.append(
             f"""SELECT CAST({k} AS BIGINT) AS k,
        CAST((SELECT COUNT(*) FROM rc_deg WHERE deg > {k}) AS BIGINT)
@@ -202,7 +199,7 @@ rc_md AS MATERIALIZED (
     union = "\nUNION ALL\n".join(selects)
     final = f"""SELECT k, n_rich, e_rich,
        CASE WHEN n_rich > 1
-            THEN ROUND(2.0 * e_rich / (n_rich * (n_rich - 1)), {round_to})
+            THEN ROUND(2.0 * e_rich / (n_rich * (n_rich - 1)), {ROUND_TO})
        END AS phi
 FROM ({union})"""
     return ctes, final

@@ -22,6 +22,7 @@ from ..graph import Graph, GraphAlgorithm
 from ..operators.iterate import iterate
 
 CHECKPOINT_EVERY = 2  # see the cadence table in operators/iterate.py
+UNLABELED = -1  # label_spread's label of a vertex no seed has reached yet
 
 
 def _mode_vote_loop(
@@ -39,9 +40,10 @@ def _mode_vote_loop(
     # Loop-invariant edges: project, pre-partition by the join key (src)
     # and persist ONCE — every superstep's message join then reuses the
     # cached partitioning and only the small label frame shuffles. A
-    # graph whose edges the builders cached (``src_partitioned``) is used
-    # as-is; its shared cache must survive this call.
-    owns_edge_cache = not graph.src_partitioned
+    # graph whose edges are already persisted (a builder's shared cache)
+    # is used as-is; that cache must survive this call.
+    lvl = graph.edges.storageLevel
+    owns_edge_cache = not (lvl.useMemory or lvl.useDisk)
     edges = graph.edges.select("src", "dst")
     if owns_edge_cache:
         edges = edges.repartition("src").persist()
@@ -80,11 +82,11 @@ def _mode_vote_loop(
     return labels
 
 
-def label_propagation(graph: Graph, max_iter: int = 10, label_col: str = "value") -> DataFrame:
+def label_propagation(graph: Graph, max_iter: int = 10) -> DataFrame:
     """Returns (id, label). Initial label = vertex value."""
     return _mode_vote_loop(
         graph,
-        graph.vertices.select("id", F.col(label_col).alias("label")),
+        graph.vertices.select("id", F.col("value").alias("label")),
         max_iter,
         F.coalesce("new_label", "label"),
     )
@@ -126,46 +128,34 @@ class LabelPropagation(GraphAlgorithm):
         return Graph(labels.withColumnRenamed("label", "value"), graph.edges)
 
 
-def label_spread(
-    graph: Graph,
-    max_iter: int = 3,
-    label_col: str = "value",
-    seed_col: str = "seed",
-    unlabeled: int = -1,
-) -> DataFrame:
+def label_spread(graph: Graph, max_iter: int = 3) -> DataFrame:
     """Semi-supervised label SPREADING (Zhu & Ghahramani-style, mode
-    vote): seed vertices are CLAMPED to their label; unlabeled vertices
-    (label = ``unlabeled``) adopt the most frequent label among their
-    LABELED in-neighbors each round (ties → max label), keeping
-    ``unlabeled`` while no labeled neighbor exists. The sparse-labels →
+    vote) over vertices (id, value, seed): seed vertices are CLAMPED to
+    their label; unlabeled vertices (value = ``UNLABELED``) adopt the
+    most frequent label among their LABELED in-neighbors each round
+    (ties → max label), keeping ``UNLABELED`` while no labeled neighbor
+    exists. The sparse-labels →
     similarity-graph → full-labels pattern used to extend a small
     human-labeled set over a corpus. The ``label_propagation`` superstep
     with a labeled-sender filter (it only shrinks the message frame) and
     the seed clamp."""
     labels = _mode_vote_loop(
         graph,
-        graph.vertices.select(
-            "id", F.col(label_col).alias("label"), F.col(seed_col).alias("seed")
-        ),
+        graph.vertices.select("id", F.col("value").alias("label"), "seed"),
         max_iter,
         F.when(F.col("seed"), F.col("label")).otherwise(F.coalesce("new_label", "label")),
-        sender_filter=F.col("label") != unlabeled,
+        sender_filter=F.col("label") != UNLABELED,
     )
     return labels.select("id", "label")
 
 
 def spread_oracle_ctes(
-    edges_cte: str,
-    vertices_cte: str,
-    max_iter: int = 3,
-    label_expr: str = "value",
-    seed_expr: str = "seed",
-    unlabeled: int = -1,
+    edges_cte: str, vertices_cte: str, max_iter: int = 3
 ) -> tuple[str, str]:
     """(CTE text, final SELECT) — unrolled clamped label spreading."""
     ctes = [
-        f"sp0 AS MATERIALIZED (SELECT id, {label_expr} AS label,"
-        f" {seed_expr} AS seed FROM {vertices_cte})"
+        f"sp0 AS MATERIALIZED (SELECT id, value AS label,"
+        f" seed AS seed FROM {vertices_cte})"
     ]
     for i in range(1, max_iter + 1):
         ctes.append(
@@ -183,7 +173,7 @@ def spread_oracle_ctes(
       FROM (
         SELECT e.dst AS id, s.label, COUNT(*) AS cnt
         FROM sp{i - 1} s JOIN {edges_cte} e ON s.id = e.src
-        WHERE s.label <> {unlabeled}
+        WHERE s.label <> {UNLABELED}
         GROUP BY 1, 2
       )
     ) WHERE rn = 1

@@ -52,10 +52,12 @@ def _jump(ptr: DataFrame, _it: int) -> DataFrame:
     )
 
 
+BORUVKA_ROUNDS = 3
+BORUVKA_JUMPS = 5
+
+
 @scratch_scope
-def boruvka_mst(
-    graph: Graph, rounds: int = 3, jumps: int = 5
-) -> DataFrame:
+def boruvka_mst(graph: Graph) -> DataFrame:
     """(src, dst, w) — minimum-spanning-forest edges over the
     undirected view, weights = portable hash of the canonical pair."""
     canon = (
@@ -132,7 +134,7 @@ def boruvka_mst(
         # pointer jumps, stopped by the first that moves no pointer:
         # all sit on roots then, and the oracle's extra jumps are no-ops
         ptr, _, converged = iterate(
-            ptr, _jump, jumps, changed=F.col("p") != F.col("q")
+            ptr, _jump, BORUVKA_JUMPS, changed=F.col("p") != F.col("q")
         )
         # Convergence guard: every pointer must now reach a root
         # (p == p∘p). The oracle unrolls the SAME fixed jump count, so
@@ -147,8 +149,9 @@ def boruvka_mst(
         if stale:
             raise RuntimeError(
                 f"boruvka_mst: {stale} component pointers unconverged "
-                f"after {jumps} jumps (merge chain > 2^{jumps} labels); "
-                "raise `jumps` — the DuckDB oracle unrolls the same "
+                f"after {BORUVKA_JUMPS} jumps (merge chain > "
+                f"2^{BORUVKA_JUMPS} labels); "
+                "raise `BORUVKA_JUMPS` — the DuckDB oracle unrolls the same "
                 "count, so both sides must use the larger value"
             )
         ptrs[:] = [ptr]
@@ -169,7 +172,7 @@ def boruvka_mst(
         before the final selection runs; ``chosen`` is returned so that
         it keeps the selections."""
         labels, _, converged = iterate(
-            labels, merge, rounds - 1, changed=F.col("comp") != F.col("__old")
+            labels, merge, BORUVKA_ROUNDS - 1, changed=F.col("comp") != F.col("__old")
         )
         return labels, converged, chosen
 
@@ -188,9 +191,7 @@ def boruvka_mst(
     ).distinct()
 
 
-def grid_oracle_sql(
-    rows: int, cols: int, rounds: int = 3, jumps: int = 5
-) -> str:
+def grid_oracle_sql(rows: int, cols: int, rounds: int = BORUVKA_ROUNDS) -> str:
     """DuckDB twin on the undirected rows×cols grid — same rounds,
     unrolled."""
     n = rows * cols
@@ -248,7 +249,7 @@ def grid_oracle_sql(
   FROM ptr_{r}_0 t JOIN ptr_{r}_0 q ON t.p = q.comp)"""
         )
         prev = f"ptr_{r}_c"
-        for j in range(1, jumps + 1):
+        for j in range(1, BORUVKA_JUMPS + 1):
             ctes.append(
                 f"""ptr_{r}_{j} AS MATERIALIZED (
   SELECT t.comp, q.p

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h32, h32_sql
 from ..graph import Graph
 from ..operators.iterate import iterate
+from ..rounding import ROUND_TO
 
 NF_M = 16  # registers per vertex (2^4 buckets)
 NF_REST_BITS = 28  # 32-bit hash minus 4 bucket bits
@@ -50,7 +51,7 @@ def _init_registers(vertices: DataFrame) -> DataFrame:
     )
 
 
-def _estimates(reg: DataFrame, r: int, round_to: int) -> DataFrame:
+def _estimates(reg: DataFrame, r: int) -> DataFrame:
     """One row: (r, avg_ball_est) from the register rows."""
     per_v = reg.groupBy("id").agg(
         F.count("*").alias("present"),
@@ -71,19 +72,17 @@ def _estimates(reg: DataFrame, r: int, round_to: int) -> DataFrame:
     ).otherwise(raw)
     return per_v.agg(
         F.lit(r).cast("long").alias("r"),
-        F.round(F.avg(est), round_to).alias("avg_ball_est"),
+        F.round(F.avg(est), ROUND_TO).alias("avg_ball_est"),
     )
 
 
-def neighborhood_function(
-    graph: Graph, max_r: int = 2, round_to: int = 6
-) -> DataFrame:
+def neighborhood_function(graph: Graph, max_r: int = 2) -> DataFrame:
     """(r, avg_ball_est) for r = 0..max_r over the undirected view."""
     sym = graph.edges.select("src", "dst").unionByName(
         graph.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     reg = _init_registers(graph.vertices).localCheckpoint(eager=True)
-    out = [_estimates(reg, 0, round_to)]
+    out = [_estimates(reg, 0)]
     for r in range(1, max_r + 1):
         from_nbrs = (
             sym.join(reg.withColumnRenamed("id", "src"), "src")
@@ -95,19 +94,14 @@ def neighborhood_function(
             .agg(F.max("rho").alias("rho"))
             .localCheckpoint(eager=True)
         )
-        out.append(_estimates(reg, r, round_to))
+        out.append(_estimates(reg, r))
     res = out[0]
     for df in out[1:]:
         res = res.unionByName(df)
     return res
 
 
-def oracle_ctes(
-    edges_cte: str,
-    vertices_cte: str,
-    max_r: int = 2,
-    round_to: int = 6,
-) -> tuple[str, str]:
+def oracle_ctes(edges_cte: str, vertices_cte: str, max_r: int = 2) -> tuple[str, str]:
     """(CTE text, final SELECT) — same register arithmetic, unrolled."""
     h = h32_sql("CAST(v.id AS VARCHAR)")
     ctes = [
@@ -141,7 +135,7 @@ def oracle_ctes(
                        AND ({float(NF_M)} - present) > 0
                  THEN {float(NF_M)}
                       * ln({float(NF_M)} / ({float(NF_M)} - present))
-                 ELSE raw END), {round_to}) AS avg_ball_est
+                 ELSE raw END), {ROUND_TO}) AS avg_ball_est
 FROM (
     SELECT id, present, psum,
            {NF_ALPHA} * {NF_M} * {NF_M}
@@ -157,21 +151,22 @@ FROM (
     return ",\n".join(ctes), final
 
 
-def effective_diameter(
-    graph: Graph, max_r: int = 4, frac: float = 0.9, round_to: int = 6
-) -> DataFrame:
+DIAMETER_FRAC = 0.9
+
+
+def effective_diameter(graph: Graph, max_r: int = 4) -> DataFrame:
     """(eff_diameter, reach_est) — the smallest radius whose average
-    ball size reaches ``frac`` of the radius-``max_r`` ball (the
+    ball size reaches ``DIAMETER_FRAC`` of the radius-``max_r`` ball (the
     standard HyperANF effective-diameter readout; Boldi et al. use the
     same 90% rule). One row. The comparison runs on the ROUNDED curve
     in both engines, so the oracle boundary is bit-identical."""
-    nf = neighborhood_function(graph, max_r, round_to)
+    nf = neighborhood_function(graph, max_r)
     nmax = nf.filter(F.col("r") == max_r).select(
         F.col("avg_ball_est").alias("nmax")
     )
     return (
         nf.crossJoin(nmax)
-        .filter(F.col("avg_ball_est") >= F.lit(frac) * F.col("nmax"))
+        .filter(F.col("avg_ball_est") >= F.lit(DIAMETER_FRAC) * F.col("nmax"))
         .agg(
             F.min("r").cast("long").alias("eff_diameter"),
             F.max("nmax").alias("reach_est"),
@@ -180,20 +175,16 @@ def effective_diameter(
 
 
 def effective_diameter_oracle(
-    edges_cte: str,
-    vertices_cte: str,
-    max_r: int = 4,
-    frac: float = 0.9,
-    round_to: int = 6,
+    edges_cte: str, vertices_cte: str, max_r: int = 4
 ) -> tuple[str, str, str]:
     """(NF CTEs, curve CTE, final SELECT) for :func:`effective_diameter`."""
-    ctes, final = oracle_ctes(edges_cte, vertices_cte, max_r, round_to)
+    ctes, final = oracle_ctes(edges_cte, vertices_cte, max_r)
     curve = f"nf_curve AS MATERIALIZED ({final})"
     sel = f"""SELECT CAST(MIN(r) AS BIGINT) AS eff_diameter,
        MAX(nmax) AS reach_est
 FROM nf_curve, (SELECT avg_ball_est AS nmax FROM nf_curve
                 WHERE r = {max_r})
-WHERE avg_ball_est >= {frac} * nmax"""
+WHERE avg_ball_est >= {DIAMETER_FRAC} * nmax"""
     return ctes, curve, sel
 
 
@@ -259,9 +250,10 @@ TWO_HOP_SYM_SQL_TMPL = """th_sym AS MATERIALIZED (
     UNION ALL SELECT dst AS src, src AS dst FROM {edges}))"""
 
 
-def spectral_radius(
-    graph: Graph, rounds: int = 5, round_to: int = 6
-) -> DataFrame:
+SPECTRAL_ROUNDS = 5
+
+
+def spectral_radius(graph: Graph) -> DataFrame:
     """One row (lambda_1_est) — largest adjacency eigenvalue of the
     undirected view via power iteration (the expansion / epidemic-
     threshold measure; λ₁ ≥ avg degree, ≤ max degree).
@@ -297,7 +289,7 @@ def spectral_radius(
         )
 
     # sym stays past the loop — the lazy Rayleigh readout below reads it
-    x, _, _ = iterate(x, round_, rounds)
+    x, _, _ = iterate(x, round_, SPECTRAL_ROUNDS)
     # Rayleigh quotient x'Ax / x'x (x already unit-norm up to the
     # isolated-vertex zeros)
     ax = (
@@ -313,12 +305,12 @@ def spectral_radius(
     )
     den = x.agg(F.sum(F.col("x") * F.col("x")).alias("den"))
     return num.crossJoin(den).select(
-        F.round(F.col("num") / F.col("den"), round_to).alias("lambda_1_est")
+        F.round(F.col("num") / F.col("den"), ROUND_TO).alias("lambda_1_est")
     )
 
 
 def spectral_oracle_ctes(
-    edges_cte: str, vertices_cte: str, rounds: int = 5, round_to: int = 6
+    edges_cte: str, vertices_cte: str, rounds: int = SPECTRAL_ROUNDS
 ) -> tuple[str, str]:
     """(CTEs, final SELECT) DuckDB twin of :func:`spectral_radius`."""
     ctes = [
@@ -348,5 +340,5 @@ def spectral_oracle_ctes(
       SELECT e.src AS id, SUM(t.x) AS ax
       FROM sp_sym e JOIN sp_x{rounds} t ON t.id = e.dst GROUP BY 1) a
     ON s.id = a.id)
-  / (SELECT SUM(x * x) FROM sp_x{rounds}), {round_to}) AS lambda_1_est"""
+  / (SELECT SUM(x * x) FROM sp_x{rounds}), {ROUND_TO}) AS lambda_1_est"""
     return ",\n".join(ctes), final

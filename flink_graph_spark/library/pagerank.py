@@ -16,10 +16,16 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph, GraphAlgorithm
 from ..operators.pregel import pregel
+from ..rounding import ROUND_TO
+
+BETA = 0.85  # damping factor
 
 
 def page_rank(
-    graph: Graph, beta: float = 0.85, max_iter: int = 10, round_to: int | None = 6
+    graph: Graph,
+    beta: float = BETA,
+    max_iter: int = 10,
+    round_to: int | None = ROUND_TO,
 ) -> DataFrame:
     """Returns (id, rank). Scale: the out-degree normalization lives in
     the VERTEX STATE (a (rank, od) struct, od loop-invariant) rather than
@@ -68,11 +74,7 @@ def page_rank(
 
 
 def oracle_ctes(
-    edges_cte: str,
-    vertices_cte: str,
-    beta: float = 0.85,
-    max_iter: int = 10,
-    round_to: int = 6,
+    edges_cte: str, vertices_cte: str, beta: float = BETA, max_iter: int = 10
 ) -> tuple[str, str]:
     """(extra CTE text, final SELECT) for composition by the caller."""
     ctes = [
@@ -97,24 +99,24 @@ def oracle_ctes(
   ) m ON v.id = m.id
 )"""
         )
-    final = f"SELECT id, ROUND(rank, {round_to}) AS rank FROM r{max_iter}"
+    final = f"SELECT id, ROUND(rank, {ROUND_TO}) AS rank FROM r{max_iter}"
     return ",\n".join(ctes), final
 
 
 class PageRank(GraphAlgorithm):
-    """GraphAlgorithm packaging (reference PageRank.java ctor (beta, maxIter))."""
+    """GraphAlgorithm packaging (reference PageRank.java ctor (beta,
+    maxIter)); beta is the module's ``BETA``."""
 
-    def __init__(self, beta: float = 0.85, max_iter: int = 10):
-        self.beta = beta
+    def __init__(self, max_iter: int = 10):
         self.max_iter = max_iter
 
     def run(self, graph: Graph) -> Graph:
-        ranks = page_rank(graph, self.beta, self.max_iter, round_to=None)
+        ranks = page_rank(graph, BETA, self.max_iter, round_to=None)
         return Graph(ranks.withColumnRenamed("rank", "value"), graph.edges)
 
 
 def weighted_page_rank(
-    graph: Graph, beta: float = 0.85, max_iter: int = 10, round_to: int | None = 6
+    graph: Graph, beta: float = BETA, max_iter: int = 10
 ) -> DataFrame:
     """Edge-weighted PageRank: each superstep a vertex distributes
     ``rank * w(e) / Σ_out w`` along its out-edges (the uniform variant is
@@ -156,17 +158,11 @@ def weighted_page_rank(
         state_col="st",
     )
     out = res.vertices.select("id", F.col("st")["rank"].alias("rank"))
-    if round_to is not None:
-        out = out.select("id", F.round("rank", round_to).alias("rank"))
-    return out
+    return out.select("id", F.round("rank", ROUND_TO).alias("rank"))
 
 
 def weighted_oracle_ctes(
-    edges_cte: str,
-    vertices_cte: str,
-    beta: float = 0.85,
-    max_iter: int = 10,
-    round_to: int = 6,
+    edges_cte: str, vertices_cte: str, beta: float = BETA, max_iter: int = 10
 ) -> tuple[str, str]:
     """(extra CTE text, final SELECT) — unrolled weighted PageRank."""
     ctes = [
@@ -192,16 +188,12 @@ def weighted_oracle_ctes(
   ) m ON v.id = m.id
 )"""
         )
-    final = f"SELECT id, ROUND(rank, {round_to}) AS rank FROM w{max_iter}"
+    final = f"SELECT id, ROUND(rank, {ROUND_TO}) AS rank FROM w{max_iter}"
     return ",\n".join(ctes), final
 
 
 def personalized_page_rank(
-    graph: Graph,
-    seeds: tuple[int, ...],
-    beta: float = 0.85,
-    max_iter: int = 10,
-    round_to: int | None = 6,
+    graph: Graph, seeds: tuple[int, ...], beta: float = BETA, max_iter: int = 10
 ) -> DataFrame:
     """Personalized PageRank: teleport mass returns to the SEED SET
     uniformly instead of to all vertices — the standard seed-relative
@@ -248,18 +240,15 @@ def personalized_page_rank(
         state_col="st",
     )
     out = res.vertices.select("id", F.col("st")["rank"].alias("rank"))
-    if round_to is not None:
-        out = out.select("id", F.round("rank", round_to).alias("rank"))
-    return out
+    return out.select("id", F.round("rank", ROUND_TO).alias("rank"))
 
 
 def personalized_oracle_ctes(
     edges_cte: str,
     vertices_cte: str,
     seeds: tuple[int, ...],
-    beta: float = 0.85,
+    beta: float = BETA,
     max_iter: int = 10,
-    round_to: int = 6,
 ) -> tuple[str, str]:
     """(extra CTE text, final SELECT) — unrolled PPR power iteration."""
     s = float(len(seeds))
@@ -289,5 +278,5 @@ def personalized_oracle_ctes(
   ) m ON v.id = m.id
 )"""
         )
-    final = f"SELECT id, ROUND(rank, {round_to}) AS rank FROM p{max_iter}"
+    final = f"SELECT id, ROUND(rank, {ROUND_TO}) AS rank FROM p{max_iter}"
     return ",\n".join(ctes), final

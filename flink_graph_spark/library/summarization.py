@@ -94,14 +94,11 @@ class Summarization(GraphAlgorithm):
     """GraphAlgorithm packaging: the summary graph itself — vertex value
     := struct(group_value, n_vertices), edge value := n_edges."""
 
-    def __init__(self, include_edge_value: bool = False):
-        self.include_edge_value = include_edge_value
-
     def run(self, graph: Graph) -> Graph:
         v = summarize_vertices(graph).select(
             "id", F.struct("group_value", "n_vertices").alias("value")
         )
-        e = summarize_edges(graph, self.include_edge_value).select(
+        e = summarize_edges(graph).select(
             "src", "dst", F.col("n_edges").alias("value")
         )
         return Graph(v, e)

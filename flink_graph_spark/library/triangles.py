@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..operators.iterate import iterate, waves
 from ..plans.checkpoints import release_local_checkpoint, scratch_scope
+from ..rounding import ROUND_TO
 
 #: Disk-bounded wave sizing for the enumeration's one big shuffle (the
 #: by-b redistribution of the na-carrying stream, 8 B x sum(out^2)
@@ -254,7 +255,7 @@ def triangles_per_vertex(graph: Graph) -> DataFrame:
     return corners.groupBy("id").agg(F.count("*").cast("long").alias("n_triangles"))
 
 
-def clustering_coefficient(graph: Graph, round_to: int = 6) -> DataFrame:
+def clustering_coefficient(graph: Graph) -> DataFrame:
     """Local clustering coefficient: (id, degree, coeff) for every
     vertex, coeff = 2·tri(v) / (deg(v)·(deg(v)−1)), 0.0 below degree 2.
 
@@ -293,7 +294,7 @@ def clustering_coefficient(graph: Graph, round_to: int = 6) -> DataFrame:
             F.round(
                 F.when(F.col("degree") >= 2, 2.0 * t / (d * (d - 1.0)))
                 .otherwise(F.lit(0.0)),
-                round_to,
+                ROUND_TO,
             ).alias("coeff"),
         )
     )
@@ -308,7 +309,7 @@ JOIN (SELECT DISTINCT src, dst FROM {edges_cte}) ac
   ON ac.src = ab.src AND ac.dst = bc.dst"""
 
 
-def clustering_sql(edges_cte: str, round_to: int = 6) -> tuple[str, str]:
+def clustering_sql(edges_cte: str) -> tuple[str, str]:
     """(CTE text, final SELECT) DuckDB twin of clustering_coefficient
     over a canonical (src<dst) edges CTE; the DISTINCT CTE mirrors the
     Spark side's multigraph guard."""
@@ -317,7 +318,7 @@ def clustering_sql(edges_cte: str, round_to: int = 6) -> tuple[str, str]:
        ROUND(CASE WHEN d.degree >= 2
              THEN 2.0 * COALESCE(t.n_triangles, 0)
                   / (d.degree * (d.degree - 1.0))
-             ELSE 0.0 END, {round_to}) AS coeff
+             ELSE 0.0 END, {ROUND_TO}) AS coeff
 FROM (
   SELECT id, CAST(COUNT(*) AS BIGINT) AS degree FROM (
     SELECT src AS id FROM cl_de

@@ -27,9 +27,12 @@ from ..operators.iterate import iterate
 from ..plans.checkpoints import scratch_scope
 
 
+WL_ROUNDS = 3
+
+
 @scratch_scope
-def wl_color_classes(graph: Graph, rounds: int = 3) -> DataFrame:
-    """(color, n) — 1-WL color-class histogram after ``rounds``
+def wl_color_classes(graph: Graph) -> DataFrame:
+    """(color, n) — 1-WL color-class histogram after ``WL_ROUNDS``
     refinement rounds over the undirected view (initial color =
     degree)."""
     sym = graph.symmetrized_edges().localCheckpoint(eager=True)
@@ -67,7 +70,7 @@ def wl_color_classes(graph: Graph, rounds: int = 3) -> DataFrame:
             ).alias("c"),
         )
 
-    state, _, _ = iterate(state, round_, rounds)
+    state, _, _ = iterate(state, round_, WL_ROUNDS)
     return state.groupBy(F.col("c").alias("color")).agg(
         F.count("*").cast("long").alias("n")
     )

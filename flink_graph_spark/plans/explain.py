@@ -6,12 +6,17 @@ initial plan (``AdaptiveSparkPlan isFinalPlan=false``), with none of the
 join strategies, stage reuse or codegen spans AQE chose at run time.
 ``run_plan`` executes the DataFrame's own QueryExecution instead, so the
 plan it returns is the final one.
+
+A loop's result frame is a projection of its last checkpoint, so its
+plan shows none of the supersteps; ``superstep_plans`` records the plan
+each loop checkpoint ran.
 """
 
 from __future__ import annotations
 
 import re
 from collections import Counter
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -123,3 +128,36 @@ def duplicate_stages(plan) -> int:
     ran twice because it could not prove them equal."""
     seen = Counter((cls, key) for cls, key, reused in exchange_stages(plan) if not reused)
     return sum(n - 1 for n in seen.values())
+
+
+def shuffle_stages(plan) -> int:
+    """Shuffle query stages a final adaptive plan ran (reused ones
+    excluded)."""
+    return sum(
+        cls == "ShuffleQueryStageExec" and not reused
+        for cls, _, reused in exchange_stages(plan)
+    )
+
+
+@contextmanager
+def superstep_plans():
+    """Yield a list that collects, while the block runs, the final
+    physical plan of every loop checkpoint ``operators.iterate``
+    writes: one per checkpointed superstep of ``iterate`` (and so of
+    ``pregel``)."""
+    from ..operators import iterate as iterate_mod
+    from .layout import final_plan
+
+    plans: list = []
+    written = iterate_mod.checkpoint
+
+    def record(df, *args, **kwargs):
+        out = written(df, *args, **kwargs)
+        plans.append(final_plan(df))
+        return out
+
+    iterate_mod.checkpoint = record
+    try:
+        yield plans
+    finally:
+        iterate_mod.checkpoint = written

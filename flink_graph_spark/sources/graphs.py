@@ -99,7 +99,7 @@ def customer_supplier_graph(spark: SparkSession, sf_dir: str) -> Graph:
     # it's tiny relative to the edges, and every consumer (counts, pregel
     # init, degree joins) otherwise re-runs the union+distinct shuffle
     return Graph(
-        g.vertices.persist(), g.edges, src_partitioned=True,
+        g.vertices.persist(), g.edges,
         # groupBy output: one row per (src, dst) by construction
         distinct_edges=True,
     )
@@ -149,7 +149,7 @@ def customer_supplier_undirected_graph(spark: SparkSession, sf_dir: str) -> Grap
     return g._count_preserved(
         # distinct forward pairs ∪ their reverses over disjoint id spaces:
         # no duplicate rows in the symmetrized table
-        Graph(v, ue, src_partitioned=True, distinct_edges=True)
+        Graph(v, ue, distinct_edges=True)
     )
 
 
@@ -176,11 +176,8 @@ def customer_supplier_bucketed_graph(spark: SparkSession, sf_dir: str) -> Graph:
         g, table, buckets=32, path=f"/tmp/spark_graft_bucketed/{table}"
     )
     e = read_edges_bucketed(spark, table)
-    # src_partitioned=True: LPA must NOT re-shuffle/re-cache — the
-    # bucketed scan IS the partitioning; count memo shared (same set)
-    return g._count_preserved(
-        Graph(g.vertices, e, src_partitioned=True, distinct_edges=g.distinct_edges)
-    )
+    # count memo shared (same vertex set)
+    return g._count_preserved(Graph(g.vertices, e, distinct_edges=g.distinct_edges))
 
 
 # --- C.2 user–user co-occurrence graph --------------------------------
@@ -210,15 +207,13 @@ uu_edges AS MATERIALIZED (
 
 
 @_memo_graph("uu")
-def user_cooccurrence_graph(
-    spark: SparkSession, sf_dir: str, cell_cap: int = UU_CELL_CAP
-) -> Graph:
+def user_cooccurrence_graph(spark: SparkSession, sf_dir: str) -> Graph:
     """Edges between users co-occurring on the same event_type within the
     same hour bucket; weight = number of co-occurring (type, hour) cells.
     src < dst (undirected-canonical form).
 
     Hot-cell guard: each (event_type, hour) cell is capped to its first
-    ``cell_cap`` members (deterministic: lowest user_id) BEFORE the
+    ``UU_CELL_CAP`` members (deterministic: lowest user_id) BEFORE the
     self-join — a cell with m members otherwise contributes m² join
     rows, so one viral cell (every user firing the same event in the
     same hour) turns the build quadratic at real event volumes. The cap
@@ -237,7 +232,7 @@ def user_cooccurrence_graph(
         )
         .distinct()
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= cell_cap)
+        .filter(F.col("rn") <= UU_CELL_CAP)
         .drop("rn")
     )
     a = base.alias("a")
@@ -260,7 +255,7 @@ def user_cooccurrence_graph(
     # it's tiny relative to the edges, and every consumer (counts, pregel
     # init, degree joins) otherwise re-runs the union+distinct shuffle
     return Graph(
-        g.vertices.persist(), g.edges, src_partitioned=True,
+        g.vertices.persist(), g.edges,
         # groupBy output over src < dst pairs: canonical undirected form
         distinct_edges=True, canonical_edges=True,
     )
@@ -302,7 +297,7 @@ def part_copurchase_graph(spark: SparkSession, sf_dir: str) -> Graph:
     # it's tiny relative to the edges, and every consumer (counts, pregel
     # init, degree joins) otherwise re-runs the union+distinct shuffle
     return Graph(
-        g.vertices.persist(), g.edges, src_partitioned=True,
+        g.vertices.persist(), g.edges,
         # groupBy output over l_partkey < l_partkey pairs: canonical form
         distinct_edges=True, canonical_edges=True,
     )

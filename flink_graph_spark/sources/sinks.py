@@ -15,21 +15,17 @@ from pyspark.sql import SparkSession
 from ..graph import Graph
 
 
-def write_graph_parquet(graph: Graph, path: str, mode: str = "overwrite") -> None:
+def write_graph_parquet(graph: Graph, path: str) -> None:
     """vertices/ and edges/ as Parquet. Edges are written bucketed-style
     (repartitioned by src) so a re-read starts co-located for the
     src-keyed joins every neighborhood op and Pregel superstep performs.
     """
-    graph.vertices.write.mode(mode).parquet(f"{path}/vertices")
-    graph.edges.repartition("src").write.mode(mode).parquet(f"{path}/edges")
+    graph.vertices.write.mode("overwrite").parquet(f"{path}/vertices")
+    graph.edges.repartition("src").write.mode("overwrite").parquet(f"{path}/edges")
 
 
 def write_edges_bucketed(
-    graph: Graph,
-    table: str,
-    buckets: int = 32,
-    mode: str = "overwrite",
-    path: str | None = None,
+    graph: Graph, table: str, buckets: int = 32, path: str | None = None
 ) -> None:
     """Persist the edge table BUCKETED by src (Hive-style bucketing via
     ``bucketBy`` + ``saveAsTable`` — plain ``.parquet(path)`` cannot
@@ -43,7 +39,7 @@ def write_edges_bucketed(
     bucketed-bucketed self-join).
     """
     w = (
-        graph.edges.write.mode(mode)
+        graph.edges.write.mode("overwrite")
         .format("parquet")
         .bucketBy(buckets, "src")
         .sortBy("src")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import _qf_bound, qf_keep_expr_spark
+from .events import FILES_PER_TRIGGER
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -44,12 +45,10 @@ def _stage_docs_dir(sf_dir: str) -> str:
     return stage
 
 
-def read_docs_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
         .parquet(_stage_docs_dir(sf_dir))
     )
 

@@ -75,16 +75,17 @@ def _ts_micros_expr(sf_dir: str):
     return F.expr(to_us[unit])
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+FILES_PER_TRIGGER = 1
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream over the events parquet with the raw-int64→timestamp
     normalization of ``sources.tables.load_table`` applied streaming-side.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
         .parquet(_stage_dir(sf_dir))
     )
     # watermarks require TIMESTAMP (not NTZ); session tz is pinned UTC so
@@ -92,16 +93,17 @@ def read_events_stream(
     return raw.withColumn("ts", F.timestamp_micros(_ts_micros_expr(sf_dir)))
 
 
-def streaming_hourly_rollup(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
+ROLLUP_WATERMARK = "1 hour"
+
+
+def streaming_hourly_rollup(events: DataFrame) -> DataFrame:
     """Tumbling 1h window per event_type — the incremental twin of
     ``functions.sessions.hourly_rollup``. Watermark bounds window state;
     approx_count_distinct replaces exact distinct (exact per-key distinct
     over an unbounded stream would hold every user id in state).
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", ROLLUP_WATERMARK)
         .groupBy("event_type", F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
@@ -115,23 +117,24 @@ def streaming_hourly_rollup(
     )
 
 
-def streaming_sessionize(
-    events: DataFrame, gap: str = SESSION_GAP, watermark: str = "1 hour"
-) -> DataFrame:
+SESSION_WATERMARK = "1 hour"
+
+
+def streaming_sessionize(events: DataFrame) -> DataFrame:
     """Gap-based session windows per user (state-store merged) — the
     incremental twin of ``functions.sessions.sessionize``.
 
     Watermark contract (standard streaming semantics, probed): the
     snapshot equals the batch sessionizer only while event-time
-    disorder stays within ``watermark``. An event older than
+    disorder stays within ``SESSION_WATERMARK``. An event older than
     max(seen ts) − watermark arriving in a later micro-batch is late
     data and is dropped by design — a probe with a 2250-era event
     followed by 1969-era events loses exactly the pre-epoch session.
     The batch twin has no watermark and keeps it.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("sw"))
+        events.withWatermark("ts", SESSION_WATERMARK)
+        .groupBy("user_id", F.session_window("ts", SESSION_GAP).alias("sw"))
         .agg(
             F.count("*").alias("n_events"),
             F.min("ts").alias("start_ts"),
@@ -187,7 +190,10 @@ def run_available_now(
     return spark.table(name)
 
 
-def streaming_dedup_keys(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+DEDUP_WATERMARK = "2 hours"
+
+
+def streaming_dedup_keys(events: DataFrame) -> DataFrame:
     """Stateful streaming exact-dedup: emit each (user_id, event_type)
     key once, on first sight — the streaming twin of batch
     ``SELECT DISTINCT``. Only the KEYS are emitted (not the winning
@@ -202,20 +208,20 @@ def streaming_dedup_keys(events: DataFrame, watermark: str = "2 hours") -> DataF
     state. Dedup here is exact within the run.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", DEDUP_WATERMARK)
         .select("user_id", "event_type", "ts")
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
 
 
-def streaming_click_purchase_join(
-    events: DataFrame,
-    horizon: str = "6 hours",
-    watermark: str = "12 hours",
-) -> DataFrame:
+CLICK_PURCHASE_HORIZON = "6 hours"
+CLICK_PURCHASE_WATERMARK = "12 hours"
+
+
+def streaming_click_purchase_join(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each click event joins the SAME
-    user's purchase events landing within ``horizon`` after it — the
+    user's purchase events landing within ``CLICK_PURCHASE_HORIZON`` after it — the
     Structured Streaming twin of Flink's DataStream interval join (the
     reference prototype is batch-only; this is the §2.10 streaming
     surface's join coverage).
@@ -238,7 +244,7 @@ def streaming_click_purchase_join(
             F.col("user_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", CLICK_PURCHASE_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -248,13 +254,16 @@ def streaming_click_purchase_join(
             F.col("ts").alias("purchase_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("purchase_cents"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", CLICK_PURCHASE_WATERMARK)
     )
     return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (
+            F.col("purchase_ts")
+            <= F.col("click_ts") + F.expr(f"INTERVAL {CLICK_PURCHASE_HORIZON}")
+        ),
     ).select(
         "user_id", "click_id", "purchase_id",
         "click_ts", "purchase_ts", "purchase_cents",

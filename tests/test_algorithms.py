@@ -22,6 +22,7 @@ from flink_graph_spark.library.label_propagation import label_propagation
 from flink_graph_spark.library.pagerank import PageRank, page_rank
 from flink_graph_spark.library.sssp import SingleSourceShortestPaths, shortest_paths
 from flink_graph_spark.operators.pregel import pregel
+from flink_graph_spark.plans.explain import superstep_plans
 
 
 def test_sssp_exact_distances(golden):
@@ -120,7 +121,7 @@ def test_incremental_pagerank_empty_base_graph(spark):
 
 
 def test_pagerank_algorithm_packaging(golden):
-    g = golden.run(PageRank(0.85, 5))
+    g = golden.run(PageRank(max_iter=5))
     assert g.vertices.count() == 5
 
 
@@ -245,24 +246,6 @@ def test_pregel_superstep_job_shape(spark, golden):
         v.unpersist()
 
 
-def _superstep_plans(monkeypatch, run) -> list:
-    """The final physical plans of the loop checkpoints ``run()`` writes."""
-    import flink_graph_spark.operators.iterate as imod
-    from flink_graph_spark.plans.layout import final_plan
-
-    plans = []
-    written = imod.checkpoint
-
-    def record(df, *a, **kw):
-        out = written(df, *a, **kw)
-        plans.append(final_plan(df))
-        return out
-
-    monkeypatch.setattr(imod, "checkpoint", record)
-    run()
-    return plans
-
-
 def _nodes(plan) -> list:
     """The physical operators of ``plan``, inside its result stage but
     not inside any other query stage (a cache scan's build plan, a
@@ -278,7 +261,7 @@ def _nodes(plan) -> list:
     return out
 
 
-def test_cc_cs_superstep_moves_no_row_but_the_broadcast(spark, monkeypatch):
+def test_cc_cs_superstep_moves_no_row_but_the_broadcast(spark):
     # the cs_und layout (edges by dst, vertices by id) makes a cc_cs
     # superstep the state broadcast plus exchange-free joins and groups
     from flink_graph_spark.sources.graphs import (
@@ -286,10 +269,8 @@ def test_cc_cs_superstep_moves_no_row_but_the_broadcast(spark, monkeypatch):
     )
 
     und = customer_supplier_undirected_graph(spark, SF_DIR)
-    plans = _superstep_plans(
-        monkeypatch,
-        lambda: connected_components(und, max_iter=3, symmetrized_edges=True).collect(),
-    )
+    with superstep_plans() as plans:
+        connected_components(und, max_iter=3, symmetrized_edges=True).collect()
     assert plans
     for plan in plans:
         kinds = [n.getClass().getSimpleName() for n in _nodes(plan)]
@@ -421,13 +402,12 @@ def test_pregel_without_a_visible_layout_matches_the_pull(spark, monkeypatch):
         v.unpersist()
 
 
-def test_pagerank_superstep_aggregates_messages_only(spark, golden, monkeypatch):
+def test_pagerank_superstep_aggregates_messages_only(spark, golden):
     # the (rank, od) struct state rides the update join; the superstep's
     # aggregate groups the messages alone, as a hash aggregate (a struct
     # in an aggregation buffer would make it a sort or object aggregate)
-    plans = _superstep_plans(
-        monkeypatch, lambda: page_rank(golden, max_iter=2).collect()
-    )
+    with superstep_plans() as plans:
+        page_rank(golden, max_iter=2).collect()
     assert len(plans) == 2
     for plan in plans:
         nodes = _nodes(plan)

@@ -158,7 +158,7 @@ def test_dedup_exact_stats(docs):
 
 
 def test_ngram_jaccard_ranks_near_dup_first(docs):
-    top = dedup_mod.dedup_ngram_topk(docs, k=3).collect()
+    top = dedup_mod.dedup_ngram_topk(docs).collect()
     assert {top[0]["da"], top[0]["db"]} == {1, 4}  # identical → jaccard 1.0
     assert top[0]["jaccard"] == pytest.approx(1.0)
     assert {top[1]["da"], top[1]["db"]} <= {1, 2, 4}  # near-dup pair next
@@ -644,7 +644,7 @@ def test_contamination_check_flags_overlap(spark):
 
     d = spark.createDataFrame(
         [
-            (0, "alpha beta gamma delta"),        # held out (0 % 3 == 0)
+            (0, "alpha beta gamma delta"),        # held out (0 % 37 == 0)
             (1, "alpha beta gamma epsilon"),      # shares shingle "alpha beta gamma"
             (2, "zeta eta theta iota"),           # no overlap
         ],
@@ -652,7 +652,7 @@ def test_contamination_check_flags_overlap(spark):
     )
     got = {
         r["doc_id"]: (r["shared_ngrams"], r["contamination_score"])
-        for r in contamination_check(d, holdout_mod=3).collect()
+        for r in contamination_check(d).collect()
     }
     assert set(got) == {1, 2}          # held-out doc not scored
     assert got[1][0] == 1 and got[1][1] == 0.5
@@ -702,7 +702,7 @@ def test_pack_sequences_next_fit(spark):
         ],
         "doc_id long, lang string, text string",
     )
-    got = {r["doc_id"]: r["bin_id"] for r in pack_sequences(d, budget=256).collect()}
+    got = {r["doc_id"]: r["bin_id"] for r in pack_sequences(d).collect()}
     assert got[1] == 0 and got[2] == 0
     assert got[3] == 1
     assert got[4] == 2
@@ -807,7 +807,7 @@ def test_boilerplate_flags_hand_computed(spark):
     )
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_boiler"], r["boiler_frac"], r["flagged"])
-        for r in boilerplate_flags(docs, min_df=2, frac=0.5).collect()
+        for r in boilerplate_flags(docs, min_df=2).collect()
     }
     # "a b c" appears in docs 1+2 (df=2 → boilerplate); each of their
     # 2-shingle sets is half boilerplate → flagged at frac=0.5
@@ -820,17 +820,17 @@ def test_boilerplate_flags_hand_computed(spark):
 
 def test_source_quota_sample_binds_and_is_deterministic(spark):
     from conftest import SF_DIR
-    from flink_graph_spark.functions.text import source_quota_sample
+    from flink_graph_spark.functions.text import SOURCE_QUOTA, source_quota_sample
     from flink_graph_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    got = source_quota_sample(docs, quota=3).collect()
+    got = source_quota_sample(docs).collect()
     per_src: dict[str, int] = {}
     for r in got:
         per_src[r["source"]] = per_src.get(r["source"], 0) + 1
     n_sources = docs.select("source").distinct().count()
-    assert set(per_src.values()) == {3} and len(per_src) == n_sources
-    again = {(r["doc_id"], r["source"]) for r in source_quota_sample(docs, quota=3).collect()}
+    assert set(per_src.values()) == {SOURCE_QUOTA} and len(per_src) == n_sources
+    again = {(r["doc_id"], r["source"]) for r in source_quota_sample(docs).collect()}
     assert again == {(r["doc_id"], r["source"]) for r in got}
 
 
@@ -846,7 +846,7 @@ def test_collocations_pmi_hand_computed(spark):
     )
     got = {
         (r["w1"], r["w2"]): (r["n_pair"], r["pmi"])
-        for r in collocations_pmi(docs, min_pair=2, top_k=10).collect()
+        for r in collocations_pmi(docs, min_pair=2).collect()
     }
     assert got == {("x", "y"): (2, round(log((2 / 4) / ((2 / 6) ** 2)), 6))}
 
@@ -1093,7 +1093,7 @@ def test_pretrain_funnel_monotone_stages(spark):
         "doc_id long, text string",
     )
     rows = {r["stage"]: r for r in
-            text_mod.pretrain_funnel(docs2, budget=1000).collect()}
+            text_mod.pretrain_funnel(docs2).collect()}
     assert [rows[i]["name"] for i in range(4)] == [
         "raw", "quality", "dedup", "budget"
     ]
@@ -1268,11 +1268,11 @@ def test_ngram_containment_detects_subset(spark):
         [(1, long), (2, sub), (3, "x1 x2 x3 x4 x5")],
         "doc_id long, text string",
     )
-    rows = dedup_mod.ngram_containment_topk(d, k=5).collect()
+    rows = dedup_mod.ngram_containment_topk(d).collect()
     top = rows[0]
     assert (top["da"], top["db"]) == (1, 2)
     assert top["containment"] == 1.0
-    jac = dedup_mod.dedup_ngram_topk(d, k=5).collect()[0]
+    jac = dedup_mod.dedup_ngram_topk(d).collect()[0]
     assert jac["jaccard"] < 0.5
 
 
@@ -1406,14 +1406,14 @@ def test_weighted_sample_prefers_heavy_docs(spark):
     """With an extreme weight skew the heavy doc is (near-)always in a
     small sample: key = ln(u)/w -> as w -> inf, key -> 0- (the max)."""
     rows = [(1, " ".join(["w"] * 500))] + [
-        (i, "a b") for i in range(2, 40)
+        (i, "a b") for i in range(2, 400)
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    top = text_mod.weighted_sample(d, k=5).collect()
+    top = text_mod.weighted_sample(d).collect()
     assert 1 in {r["doc_id"] for r in top}
     assert all(r["key"] <= 0.0 for r in top)
     # deterministic: same input -> same sample set
-    again = {r["doc_id"] for r in text_mod.weighted_sample(d, k=5).collect()}
+    again = {r["doc_id"] for r in text_mod.weighted_sample(d).collect()}
     assert again == {r["doc_id"] for r in top}
 
 
@@ -1422,14 +1422,14 @@ def test_pq_codes_shape_and_self_consistency(spark):
     centroid-seed vector assigned to its own centroid in round 1 keeps
     a valid code after the final round."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    out = sim_mod.pq_codes(emb, subs=4, k=4, rounds=2).collect()
+    out = sim_mod.pq_codes(emb).collect()
     n_vec = emb.count()
-    assert len(out) == n_vec * 4
-    assert all(0 <= r["code"] < 4 for r in out)
+    assert len(out) == n_vec * sim_mod.PQ_SUBS
+    assert all(0 <= r["code"] < sim_mod.PQ_K for r in out)
     per_vec = {}
     for r in out:
         per_vec.setdefault(r["vec_id"], set()).add(r["sub"])
-    assert all(subs == {0, 1, 2, 3} for subs in per_vec.values())
+    assert all(subs == set(range(sim_mod.PQ_SUBS)) for subs in per_vec.values())
 
 
 def test_pq_codes_one_subspace_equals_kmeans_clusters(spark):
@@ -1439,10 +1439,10 @@ def test_pq_codes_one_subspace_equals_kmeans_clusters(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     codes = {
         r["vec_id"]: r["code"]
-        for r in sim_mod.pq_codes(emb, subs=1, k=8, rounds=2).collect()
+        for r in sim_mod.pq_codes(emb, subs=1, k=sim_mod.KMEANS_K).collect()
     }
     clusters = rows_as_dict(
-        sim_mod.kmeans_clusters(emb, k=8, rounds=2), "vec_id", "cluster"
+        sim_mod.kmeans_clusters(emb), "vec_id", "cluster"
     )
     assert len(clusters) == emb.count()
     assert len(set(clusters.values())) > 1
@@ -1498,7 +1498,7 @@ def test_bpe_merges_hand_computed_with_overlap_run(spark):
     d = spark.createDataFrame(
         [(1, "aaaa aaaa ab")], "doc_id long, text string"
     )
-    out = {r["round"]: r.asDict() for r in bpe_merges(d, rounds=4).collect()}
+    out = {r["round"]: r.asDict() for r in bpe_merges(d).collect()}
     assert (out[1]["left"], out[1]["right"], out[1]["pair_count"]) == ("a", "a", 6)
     assert out[2]["merged"] == "aaaa" and out[2]["pair_count"] == 2
     assert (out[3]["left"], out[3]["right"]) == ("a", "b")
@@ -1534,9 +1534,9 @@ def test_gram_matrix_hand_computed(spark):
 
 def test_knn_confusion_is_complete_and_label_valued(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    out = sim_mod.knn_confusion(emb, n_queries=50, k=10).collect()
+    out = sim_mod.knn_confusion(emb).collect()
     total = sum(r["n"] for r in out)
-    assert total == 50  # one prediction per query
+    assert total == sim_mod.CONFUSION_QUERIES  # one prediction per query
     labels = {r["label"] for r in emb.select("label").distinct().collect()}
     for r in out:
         assert r["true_label"] in labels and r["pred_label"] in labels
@@ -1702,13 +1702,12 @@ def test_feature_propagation_contracts_toward_neighborhood_mean(spark):
     ]
     after = [
         r["val"]
-        for r in sim_mod.feature_propagation(emb, out_dims=1).collect()
+        for r in sim_mod.feature_propagation(emb).collect()
+        if r["dim"] == 1
     ]
     assert statistics.pvariance(after) < statistics.pvariance(before)
-    ident = sim_mod.feature_propagation(
-        emb, alpha=0.0, rounds=1, out_dims=1
-    )
-    got = {r["vec_id"]: r["val"] for r in ident.collect()}
+    ident = sim_mod.feature_propagation(emb, alpha=0.0)
+    got = {r["vec_id"]: r["val"] for r in ident.collect() if r["dim"] == 1}
     want = {
         r["vec_id"]: round(float(r["embedding"][0]), 6)
         for r in emb.select("vec_id", "embedding").collect()

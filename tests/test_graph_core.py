@@ -337,16 +337,12 @@ def test_difference_removes_vertices_and_incident_edges(spark, golden):
     assert rows_as_set(got.edges) == {(1, 2, 12), (4, 5, 45), (5, 1, 51)}
 
 
-# --- shared src-partitioned cache semantics ---------------------------
+# --- shared persisted edge cache semantics ----------------------------
 
 def test_pregel_preserves_shared_edge_cache(spark, golden):
     from flink_graph_spark.operators.pregel import pregel
 
-    g = Graph(
-        golden.vertices,
-        golden.edges.repartition("src").persist(),
-        src_partitioned=True,
-    )
+    g = Graph(golden.vertices, golden.edges.repartition("src").persist())
     res = pregel(
         g,
         initial=F.col("id").cast("long"),
@@ -366,9 +362,7 @@ def test_label_propagation_preserves_shared_edge_cache(spark, golden):
     from flink_graph_spark.library.label_propagation import label_propagation
 
     und = golden.get_undirected()
-    g = Graph(
-        und.vertices, und.edges.repartition("src").persist(), src_partitioned=True
-    )
+    g = Graph(und.vertices, und.edges.repartition("src").persist())
     label_propagation(g, max_iter=2).count()
     assert g.edges.storageLevel.useMemory
     g.edges.unpersist()

@@ -588,9 +588,10 @@ def test_cadence_table_names_every_checkpointing_loop():
 
 
 #: Public names that nothing outside the tests reaches and that stay
-#: anyway: the GraphAlgorithm packaging classes and the validator keep
-#: reference API parity, and the three generators are test fixtures
-#: mirroring Gelly's ``graph.generator`` package.
+#: anyway: the GraphAlgorithm packaging classes, the validator and the
+#: Graph methods keep reference API parity (Gelly's ``Graph``), and the
+#: three generators are test fixtures mirroring Gelly's
+#: ``graph.generator`` package.
 SURFACE_ALLOWED = {
     "AdamicAdar",
     "CommunityDetection",
@@ -600,34 +601,77 @@ SURFACE_ALLOWED = {
     "MaximalIndependentSet",
     "StronglyConnectedComponents",
     "Summarization",
+    "add_edge",
     "complete_graph",
+    "create",
     "cycle_graph",
+    "edge_ids",
+    "num_edges",
+    "num_vertices",
+    "reduce_on_neighbors_udf",
     "star_graph",
+    "translate_vertex_values",
+    "validate",
+    "vertex_ids",
 }
 
 
-def test_public_surface_is_reached_outside_tests():
-    """Every module-level public ``def`` or ``class`` in the package is a
-    registered query (``@_register``) or is referenced, outside its own
-    body, from non-test code: the package, ``tools/``, ``bench.py`` or
-    ``__spark_entry__.py``. A reference is an AST ``Name``, an
-    ``Attribute`` or an import alias; a docstring or comment mention is
-    none. Names are matched by spelling, not resolved to modules. The
-    allow-list is checked both ways: an allowed name that is gone or is
-    now reached fails too."""
-    import ast
+def _package_root():
     import pathlib
 
     import flink_graph_spark
 
-    root = pathlib.Path(flink_graph_spark.__file__).parent
+    return pathlib.Path(flink_graph_spark.__file__).parent
+
+
+def _non_test_paths() -> list:
+    """The package, ``tools/``, ``perfbench/``, ``bench.py`` and
+    ``__spark_entry__.py``: every caller that is not a test."""
+    root = _package_root()
     repo = root.parent
-    non_test = [
+    return [
         *root.rglob("*.py"),
         *(repo / "tools").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
         repo / "bench.py",
         repo / "__spark_entry__.py",
     ]
+
+
+def _public_defs():
+    """(path, qualified name, def node, bound) for every public
+    module-level function and every public method (and ``__init__``)
+    of a public module-level class in the package."""
+    import ast
+
+    for path in _package_root().rglob("*.py"):
+        for node in ast.parse(path.read_text()).body:
+            if getattr(node, "name", "_").startswith("_"):
+                continue
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield path, node.name, node, False
+            elif isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
+                        not m.name.startswith("_") or m.name == "__init__"
+                    ):
+                        static = any(
+                            getattr(d, "id", None) == "staticmethod"
+                            for d in m.decorator_list
+                        )
+                        yield path, f"{node.name}.{m.name}", m, not static
+
+
+def test_public_surface_is_reached_outside_tests():
+    """Every public module-level ``def`` or ``class`` in the package, and
+    every public method of a public class, is a registered query
+    (``@_register``) or is referenced, outside its own body, from
+    non-test code (``_non_test_paths``). A reference is an AST ``Name``,
+    an ``Attribute`` or an import alias; a docstring or comment mention
+    is none. Names are matched by spelling, not resolved to modules. The
+    allow-list is checked both ways: an allowed name that is gone or is
+    now reached fails too."""
+    import ast
 
     def registered(node) -> bool:
         for d in node.decorator_list:
@@ -637,37 +681,165 @@ def test_public_surface_is_reached_outside_tests():
         return False
 
     public: dict[str, set] = {}  # name -> files defining it
-    for path in root.rglob("*.py"):
+    for path, qual, node, _ in _public_defs():
+        name = qual.rsplit(".", 1)[-1]
+        if name != "__init__" and not registered(node):
+            public.setdefault(name, set()).add(path)
+    for path in _package_root().rglob("*.py"):
         for node in ast.parse(path.read_text()).body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not node.name.startswith("_")
-                and not registered(node)
-            ):
+            if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
                 public.setdefault(node.name, set()).add(path)
 
     reached: set[str] = set()
-    for path in non_test:
-        for top in ast.parse(path.read_text()).body:
-            own = getattr(top, "name", None)
-            for n in ast.walk(top):
-                if isinstance(n, ast.Name):
-                    name = n.id
-                elif isinstance(n, ast.Attribute):
-                    name = n.attr
-                elif isinstance(n, ast.alias):
-                    name = n.name.rsplit(".", 1)[-1]
-                else:
-                    continue
-                if name == own and path in public.get(name, ()):
-                    continue  # a reference inside its own body
-                reached.add(name)
+
+    def visit(node, path, enclosing):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            enclosing = enclosing | {node.name}
+        if isinstance(node, ast.Name):
+            name = node.id
+        elif isinstance(node, ast.Attribute):
+            name = node.attr
+        elif isinstance(node, ast.alias):
+            name = node.name.rsplit(".", 1)[-1]
+        else:
+            name = None
+        if name is not None and not (name in enclosing and path in public.get(name, ())):
+            reached.add(name)  # not a reference inside its own body
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, enclosing)
+
+    for path in _non_test_paths():
+        visit(ast.parse(path.read_text()), path, frozenset())
 
     unreached = {name for name in public if name not in reached}
     dead = sorted(unreached - SURFACE_ALLOWED)
     assert not dead, f"public names reached only from tests or nothing: {dead}"
     stale = sorted(SURFACE_ALLOWED - unreached)
     assert not stale, f"allow-listed names that are gone or now reached: {stale}"
+
+
+#: Defaulted parameters of public functions and methods that no caller
+#: outside the tests passes, and that stay, as
+#: ``path-in-package::Qualified.name::parameter``. Each names why: the
+#: Gelly API, or the test that needs a value other than the default.
+PARAMS_ALLOWED = {
+    # Gelly API: every GraphAlgorithm's iteration bound
+    "library/community.py::CommunityDetection.__init__::max_iter",
+    "library/connected_components.py::ConnectedComponents.__init__::max_iter",
+    "library/hits.py::HITS.__init__::max_iter",
+    "library/kcore.py::KCore.__init__::max_iter",
+    "library/label_propagation.py::LabelPropagation.__init__::max_iter",
+    "library/mis.py::MaximalIndependentSet.__init__::max_iter",
+    "library/pagerank.py::PageRank.__init__::max_iter",
+    "library/scc.py::StronglyConnectedComponents.__init__::max_iter",
+    "library/sssp.py::SingleSourceShortestPaths.__init__::max_iter",
+    # Gelly API: Graph.fromCollection's types (test_generic_types),
+    # reduceOnNeighbors' direction (test_reduce_on_neighbors_udf_median),
+    # removeEdge's edge value (test_remove_edge), and the summary's
+    # edge-value grouping (test_summarize_edges_with_edge_value)
+    "graph.py::Graph.from_collection::vertex_schema",
+    "graph.py::Graph.from_collection::edge_schema",
+    "graph.py::Graph.reduce_on_neighbors_udf::direction",
+    "graph.py::Graph.remove_edge::value",
+    "library/summarization.py::summarize_edges::include_edge_value",
+    # GraphAlgorithm parameters: a 2-core exists on the golden graph
+    # (test_round2_algorithm_packaging); three peel rounds
+    # (test_scc_algorithm_packaging)
+    "library/kcore.py::KCore.__init__::k",
+    "library/scc.py::StronglyConnectedComponents.__init__::max_rounds",
+    # test harness hooks: the session conftest builds, and the drain's
+    # injected clock, allocator and GC (test_drain_engage_predicate)
+    "plans/session.py::get_spark::master",
+    "plans/session.py::get_spark::shuffle_partitions",
+    "plans/checkpoints.py::drain_shuffle_scratch::_free",
+    "plans/checkpoints.py::drain_shuffle_scratch::_sleep",
+    "plans/checkpoints.py::drain_shuffle_scratch::_system_gc",
+    # per-key state expiry for unbounded key spaces; its eviction path
+    # is tested through ``_update`` (test_stateful_update_*)
+    "streaming/stateful.py::running_user_totals::ttl_minutes",
+    # one file per micro-batch (test_streaming_degrees_accumulates_across_batches)
+    "streaming/graph_stream.py::read_edges_stream::max_files_per_trigger",
+    # warm-start equals a full recompute (test_incremental_pagerank_converges_to_full_recompute)
+    "library/incremental.py::incremental_pagerank::pre_iter",
+    "library/incremental.py::incremental_pagerank::post_iter",
+    # the waved path on a small graph (test_jaccard_waved_attach_matches_single_wave)
+    "library/jaccard.py::jaccard_similarity::n_edges_hint",
+    # hand-computed fixtures smaller than the production value
+    "library/bipartite.py::project_top::cap",  # test_bipartite_projection_cap_bounds_hub
+    "library/kcore.py::rich_club::ks",  # test_rich_club_clique_plus_pendants
+    "functions/text.py::boilerplate_flags::min_df",  # test_boilerplate_flags_hand_computed
+    "functions/text.py::collocations_pmi::min_pair",  # test_collocations_pmi_hand_computed
+    "functions/text.py::vocab_coverage::top_v",  # test_vocab_coverage_oov_rate
+    "functions/similarity.py::embedding_outliers::k",  # test_embedding_outliers_flags_flipped_vector
+    "functions/similarity.py::kmeans_clusters::k",  # test_kmeans_clusters_separates_two_blobs
+    "functions/sketch.py::histogram_quantiles::quantiles",  # test_histogram_quantiles_interpolation
+    "functions/retrieval.py::bm25_search::query_terms",  # test_bm25_rare_term_dominates
+    # a property that needs another value
+    "functions/text.py::corpus_prep::min_quality",  # keep all / keep none: test_corpus_prep_pipeline
+    "functions/bpe.py::bpe_compression::rounds",  # zero merges: test_bpe_compression_improves_with_merges
+    "functions/entity.py::entity_matches::window",  # unwindowed: test_entity_resolution_window_caps_adversarial_block
+    "functions/sketch.py::count_min_estimates::width",  # collisions: test_count_min_never_underestimates_and_is_tight_when_wide
+    "functions/similarity.py::feature_propagation::alpha",  # identity: test_feature_propagation_contracts_toward_neighborhood_mean
+    "functions/similarity.py::pq_codes::subs",  # one subspace is k-means: test_pq_codes_one_subspace_equals_kmeans_clusters
+    "functions/similarity.py::pq_codes::k",  # same
+    "functions/similarity.py::ann_topk_ivf::train_iters",  # trained recall: test_kmeans_centroids_deterministic_and_stable
+    "functions/similarity.py::semantic_near_dup_pairs_lsh::bits",  # test_explicit_bits_does_not_force_corpus_broadcast
+    # every candidate pair (test_minhash_shuffle_join_path_matches_broadcast)
+    "functions/dedup.py::dedup_minhash_lsh::threshold",
+    "functions/dedup.py::dedup_ngram_topk::k",  # every pair: test_containment_at_least_jaccard
+    "functions/dedup.py::ngram_containment_topk::k",  # same
+}
+
+
+def test_defaulted_parameters_are_passed_outside_tests():
+    """Every defaulted parameter of a public function or method in the
+    package is passed by some non-test caller (``_non_test_paths``), or
+    is on ``PARAMS_ALLOWED``. A call is matched to a definition by the
+    called name's spelling (``f(...)``, ``x.f(...)``,
+    ``functools.partial(f, ...)``); a call of a class is a call of its
+    ``__init__``. Positional arguments pass the parameters they fill,
+    ``*args`` passes every positional parameter and ``**kwargs`` every
+    defaulted one. The allow-list is checked both ways: an allowed
+    parameter that is gone or is now passed fails too."""
+    import ast
+    import collections
+
+    calls = collections.defaultdict(list)  # called name -> (args, keywords)
+    for path in _non_test_paths():
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, ast.Call):
+                continue
+            name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+            if name == "partial" and n.args:
+                target = n.args[0]
+                inner = getattr(target, "id", None) or getattr(target, "attr", None)
+                calls[inner].append((n.args[1:], n.keywords))
+            if name:
+                calls[name].append((n.args, n.keywords))
+
+    root = _package_root()
+    unpassed = set()
+    for path, qual, fn, bound in _public_defs():
+        a = fn.args
+        positional = [p.arg for p in a.posonlyargs + a.args][1 if bound else 0 :]
+        defaulted = positional[len(positional) - len(a.defaults) :] if a.defaults else []
+        defaulted += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        called = qual.split(".")[0] if qual.endswith(".__init__") else qual.rsplit(".", 1)[-1]
+        passed = set()
+        for args, keywords in calls[called]:
+            if any(isinstance(x, ast.Starred) for x in args):
+                passed.update(positional)
+            else:
+                passed.update(positional[: len(args)])
+            for k in keywords:
+                passed.update(defaulted if k.arg is None else [k.arg])
+        rel = path.relative_to(root).as_posix()
+        unpassed.update(f"{rel}::{qual}::{p}" for p in defaulted if p not in passed)
+
+    dead = sorted(unpassed - PARAMS_ALLOWED)
+    assert not dead, f"defaulted parameters no non-test caller passes: {dead}"
+    stale = sorted(PARAMS_ALLOWED - unpassed)
+    assert not stale, f"allow-listed parameters that are gone or now passed: {stale}"
 
 
 @pytest.mark.parametrize(
@@ -679,7 +851,7 @@ def test_public_surface_is_reached_outside_tests():
         ("pq_codes", 1),
         ("kmeans_centroids", 1),
         ("bpe_compression", 1),
-        ("bpe_merges", 3),
+        ("bpe_merges", 4),
     ],
 )
 def test_functions_loops_keep_only_result_checkpoints(spark, op, kept):
@@ -704,7 +876,7 @@ def test_functions_loops_keep_only_result_checkpoints(spark, op, kept):
             sim_mod.with_norm(emb), nlist=8, iters=3
         ),
         "bpe_compression": lambda: bpe_mod.bpe_compression(docs),
-        "bpe_merges": lambda: bpe_mod.bpe_merges(docs, rounds=3),
+        "bpe_merges": lambda: bpe_mod.bpe_merges(docs),
     }[op]
     jmap = spark.sparkContext._jsc.getPersistentRDDs
     before = set(jmap().keySet().toArray())
@@ -782,7 +954,7 @@ def test_library_loops_keep_only_result_checkpoints(spark, op, kept):
         "scc": lambda: scc(
             graph([(1, 2), (2, 1), (2, 3), (3, 4), (4, 3), (4, 5)]), 3, 5
         ),
-        "wl_color_classes": lambda: wl_color_classes(grid_graph(spark, 2, 3), 2),
+        "wl_color_classes": lambda: wl_color_classes(grid_graph(spark, 2, 3)),
         "color_graph": lambda: color_graph(grid_graph(spark, 2, 3), 3),
         "dag_longest_path": lambda: dag_longest_path(weighted_grid_dag(spark, 2, 3), 3),
         "random_walks": lambda: random_walks(grid_graph(spark, 2, 3), 2),

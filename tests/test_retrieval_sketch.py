@@ -47,7 +47,7 @@ def test_tfidf_math(spark, docs):
 def test_bm25_rare_term_dominates(spark, docs):
     # query = {cherry}: doc 3 (tf=3) must outrank doc 2 (tf=1); doc 1
     # (no cherry) absent
-    out = ret.bm25_search(docs, query_terms=("cherry",), k=10).collect()
+    out = ret.bm25_search(docs, query_terms=("cherry",)).collect()
     assert [r.doc_id for r in out] == [3, 2]
     # manual check for doc 2: N=3 df=2 dl=2 avgdl=3
     idf = math.log(1 + (3 - 2 + 0.5) / (2 + 0.5))

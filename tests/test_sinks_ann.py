@@ -255,7 +255,7 @@ def test_ann_at_rest_probe_matches_inline_and_avoids_exchange(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     tag = uuid.uuid4().hex[:8]
     sig_t, vec_t = f"sigs_{tag}", f"vecs_{tag}"
-    write_ann_at_rest(emb, sig_t, vec_t, buckets=4)
+    write_ann_at_rest(emb, sig_t, vec_t)
     try:
         inline = sim_mod.ann_topk_lsh(emb, 5, 10)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -293,7 +293,7 @@ def test_ann_at_rest_sig_scan_reads_only_signature_columns(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     tag = uuid.uuid4().hex[:8]
     sig_t, vec_t = f"sigs_{tag}", f"vecs_{tag}"
-    write_ann_at_rest(emb, sig_t, vec_t, buckets=4)
+    write_ann_at_rest(emb, sig_t, vec_t)
     try:
         import re
 
@@ -494,7 +494,7 @@ def test_semantic_lsh_at_rest_matches_inline_with_zero_table_exchange(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     tag = uuid.uuid4().hex[:8]
     sig_t, vec_t = f"sigs_{tag}", f"vecs_{tag}"
-    write_ann_at_rest(emb, sig_t, vec_t, buckets=4)
+    write_ann_at_rest(emb, sig_t, vec_t)
     try:
         inline = sim_mod.semantic_near_dup_pairs_lsh(emb, 0.4, multi_probe=True)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -4,7 +4,10 @@ headline queries and greps them for the scale-critical properties
 whole-stage codegen coverage, no cartesian products on big sides,
 and exchanges AQE ran twice (``duplicate_stages``: non-reused shuffle
 and broadcast stages whose canonical plan equals another's, see
-``flink_graph_spark.plans.explain``).
+``flink_graph_spark.plans.explain``). A loop query also gets a line
+with the shuffle stages each loop checkpoint's plan ran
+(``explain.superstep_plans``; one checkpoint per superstep at cadence
+1), which its result plan cannot show.
 
     python tools/explain_audit.py [sf_dir] [query ...] [-v]
 
@@ -41,6 +44,9 @@ AUDIT = [
     "skipgram_pairs",
     "edge_support_uu",
     "closeness_sample_uu",
+    # pregel loops: a superstep is a broadcast and no shuffle
+    "cc_cs",
+    "pagerank_cs",
 ]
 
 
@@ -53,11 +59,12 @@ def main() -> int:
     spark = get_spark("explain-audit")
     qs = entrymod.queries()
     for name in names:
-        df = qs[name](spark, sf_dir)
-        # Execute first: with AQE the pre-execution plan is
-        # isFinalPlan=false and hides codegen spans / final join
-        # strategies; the post-execution formatted plan is the real one.
-        final = explain.run_plan(df)
+        with explain.superstep_plans() as steps:
+            df = qs[name](spark, sf_dir)
+            # Execute first: with AQE the pre-execution plan is
+            # isFinalPlan=false and hides codegen spans / final join
+            # strategies; the post-execution formatted plan is the real one.
+            final = explain.run_plan(df)
         plan = explain.formatted(df)
         n_codegen = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
         n_exchange = plan.count("Exchange")
@@ -76,6 +83,12 @@ def main() -> int:
             f"nested_loop_or_cartesian={cartesian} "
             f"duplicate_stages={explain.duplicate_stages(final)}"
         )
+        if steps:
+            shuffles = [explain.shuffle_stages(step) for step in steps]
+            print(
+                f"{name}: loop_checkpoints={len(steps)} "
+                f"shuffles_per_checkpoint={shuffles}"
+            )
         if verbose:
             print(plan)
     spark.stop()
